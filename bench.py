@@ -117,7 +117,6 @@ def run_crawl(spark, n_pages: int) -> dict:
                 storage_json(n_hosts),
                 state_dir,
                 default_budget=budget,
-                use_bloom=True,
             )
             calib = cpu_calibration(50_000)  # per-run box-speed marker
             t0 = time.monotonic()

@@ -7,6 +7,7 @@ import pytest
 
 from uniparser_spark import JSONRuleStorage, testgen
 from uniparser_spark.crawl import CrawlEngine, simulate_crawl
+from uniparser_spark.crawl import engine as crawl_engine
 from uniparser_spark.urls import canonicalize_url
 
 
@@ -112,30 +113,34 @@ def test_crawl_rule_miss_and_fetch_miss(spark, tmp_path):
     assert children[2].startswith("RuleNotFoundError")
 
 
-def test_crawl_adaptive_paths_agree(spark, corpus, tmp_path):
+def test_crawl_adaptive_paths_agree(spark, corpus, tmp_path, monkeypatch):
     """The adaptive strategy switches (bloom seen-filter engaged,
     shuffle fetch forced instead of broadcast) must not change any
     output: records, seen set, and final results are identical."""
     pages, storage_json, store = corpus
     seeds = [testgen.list_url(testgen.host_name(i)) for i in range(3)]
 
+    # name -> (constructor kwargs, crawl.engine constants patched for the run)
     variants = {
-        "default": {},
-        "bloom": {"bloom_min_seen": 0},
-        "shuffle_fetch": {"broadcast_fetch_max": 0},
+        "default": ({}, {}),
+        "bloom": ({"bloom_min_seen": 0}, {}),
+        "shuffle_fetch": ({}, {"BROADCAST_FETCH_MAX": 0}),
     }
     outputs = {}
-    for name, kwargs in variants.items():
-        eng = CrawlEngine(
-            spark,
-            pages,
-            storage_json,
-            tmp_path / f"state_{name}",
-            state_partitions=4,
-            **kwargs,
-        )
-        eng.seed(seeds)
-        eng.run(max_rounds=10)
+    for name, (kwargs, consts) in variants.items():
+        with monkeypatch.context() as mp:
+            for const, value in consts.items():
+                mp.setattr(crawl_engine, const, value)
+            eng = CrawlEngine(
+                spark,
+                pages,
+                storage_json,
+                tmp_path / f"state_{name}",
+                state_partitions=4,
+                **kwargs,
+            )
+            eng.seed(seeds)
+            eng.run(max_rounds=10)
         recs = {
             (r["url"], r["rule_name"], r["result"], r["error"])
             for r in eng.records().collect()

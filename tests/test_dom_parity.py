@@ -1,14 +1,16 @@
-"""Fast-tokenizer ↔ stdlib-tokenizer parity.
+"""Fused-scanner ↔ stdlib-builder parity.
 
-The fast scanner (dom.fasthtml) must build the identical DOM to the
-stdlib html.parser bridge for everything the engine can encounter:
-the golden-fixture corpus, the synthetic crawl corpus, and adversarial
-edge strings.  Identity is checked structurally (tag/attrs/text tree),
-not just serialization."""
+The fused scanner behind ``parse_html`` must build the identical DOM to
+the stdlib html.parser builder (``_parse_std``) for everything the
+engine can encounter: the golden-fixture corpus, the synthetic crawl
+corpus, and adversarial edge strings — including unterminated tails
+under nested open elements, where the scanner hands its live stack to
+the stdlib builder.  Identity is checked structurally (tag/attrs/text
+tree), not just serialization."""
 
 import pytest
 
-from uniparser_spark.dom.html import parse_html
+from uniparser_spark.dom.html import _parse_std, parse_html
 from uniparser_spark.dom.nodes import Comment, Element, Text
 from uniparser_spark.testgen import detail_html, host_name, list_html
 
@@ -55,19 +57,24 @@ EDGES = [
     "<p>trailing <",
     "<p>lone </ bogus end>tail</p>",
     "<td rowspan=2 colspan='3'>cell</td>",
+    # EOF tails handed to the stdlib builder with nested open elements
+    "<table><tr><td>1<td>2<!-- open",
+    "<ul><li>a<li>b<a href='x",
+    "<div><p>x<p>y<![0",
+    "<div><section><p>deep <b>bold<?pi",
+    "<ol><li><span>s</span><li><em>e<!DOCTYPE",
+    "<div><dl><dt>t<dd>d</x junk",
 ]
 
 
-def _three_way(markup):
-    ref = tree(parse_html(markup, engine="std"))
-    assert tree(parse_html(markup, engine="fast")) == ref  # fused engine
-    assert tree(parse_html(markup, engine="scan")) == ref  # callback scanner
+def _parity(markup):
+    assert tree(parse_html(markup)) == tree(_parse_std(markup))
 
 
 _MARKED_EDGES = [
     # _markupbase crash modes (AssertionError on '<![0', unknown-keyword
     # error paths) and the ']]>'-vs-']>' close divergence — all pinned
-    # by MarkedSectionSafe to the fast engine's ']>' rule
+    # by the stdlib builder's parse_marked_section to the scanner's ']>' rule
     "<![0",
     "<![",
     "<![CDATA[x",
@@ -82,23 +89,23 @@ _MARKED_EDGES = [
 
 @pytest.mark.parametrize("markup", _MARKED_EDGES)
 def test_marked_section_edges_never_crash(markup):
-    _three_way(markup)
+    _parity(markup)
 
 
 @pytest.mark.parametrize("markup", EDGES)
 def test_edges_parity(markup):
-    _three_way(markup)
+    _parity(markup)
 
 
 def test_golden_fixture_parity():
-    _three_way(GOLDEN_HTML)
+    _parity(GOLDEN_HTML)
 
 
 def test_synthetic_corpus_parity():
     host = host_name(0)
     for k in range(25):
-        _three_way(detail_html(host, k))
-    _three_way(list_html(host, 40))
+        _parity(detail_html(host, k))
+    _parity(list_html(host, 40))
 
 
 def test_selection_on_fast_dom():
@@ -135,7 +142,7 @@ try:
     @settings(max_examples=300, deadline=None)
     @given(_soup)
     def test_fuzz_tokenizer_parity(markup):
-        _three_way(markup)
+        _parity(markup)
 
 except ImportError:  # pragma: no cover
     pass

@@ -82,6 +82,14 @@ _META_COLS = ["url", "url_canon", "url_hash", "host", "priority", "depth", "pare
 SEEN_SCHEMA = "url_hash long, url_canon string, crawled_round int"
 _RECORDS_EXPAND_SCHEMA = "url string, depth int, requests array<string>"
 
+# seen-set Bloom filter width (buckets of the bit array)
+BLOOM_BUCKETS = 64
+# fetch strategy by pending-batch size: up to ISIN_FETCH_MAX URLs are
+# pushed into the pages scan as an In filter; up to BROADCAST_FETCH_MAX
+# the batch is broadcast-joined; beyond that the join shuffles
+ISIN_FETCH_MAX = 512
+BROADCAST_FETCH_MAX = 5_000_000
+
 
 class CrawlEngine:
     def __init__(
@@ -94,11 +102,7 @@ class CrawlEngine:
         robots: Optional[DataFrame] = None,
         default_budget: int = 100000,
         salt_buckets: int = 16,
-        use_bloom: bool = True,
-        bloom_buckets: int = 64,
         bloom_min_seen: int = 1_000_000,
-        broadcast_fetch_max: int = 5_000_000,
-        isin_fetch_max: int = 512,
         state_partitions: Optional[int] = None,
         text_col: str = "text",
         html_col: Optional[str] = None,
@@ -147,10 +151,8 @@ class CrawlEngine:
         self.honor_nofollow = honor_nofollow
         self.default_budget = default_budget
         self.salt_buckets = salt_buckets
-        self.bloom = BloomSeenFilter(n_buckets=bloom_buckets) if use_bloom else None
+        self.bloom = BloomSeenFilter(n_buckets=BLOOM_BUCKETS)
         self.bloom_min_seen = bloom_min_seen
-        self.broadcast_fetch_max = broadcast_fetch_max
-        self.isin_fetch_max = isin_fetch_max
         self.state_partitions = state_partitions or spark.sparkContext.defaultParallelism
         self.text_col = text_col
         self.html_col = html_col
@@ -384,7 +386,7 @@ class CrawlEngine:
             ).drop("fetch_error")
         else:
             pages_proj = self.pages.select(*page_cols)
-            if n_pending is not None and n_pending <= self.isin_fetch_max:
+            if n_pending is not None and n_pending <= ISIN_FETCH_MAX:
                 # tiny batch (typically the seed round): push the URL list
                 # into the parquet scan as an In filter — row groups whose
                 # url min/max excludes the batch are never decompressed.
@@ -396,7 +398,7 @@ class CrawlEngine:
                 # buys nothing over the broadcast join below anyway.
                 urls = [r["url"] for r in scheduled.select("url").collect()]
                 pages_proj = pages_proj.filter(F.col("url").isin(urls))
-            if n_pending is not None and n_pending <= self.broadcast_fetch_max:
+            if n_pending is not None and n_pending <= BROADCAST_FETCH_MAX:
                 hits = pages_proj.join(F.broadcast(scheduled), "url", "inner")
                 misses = scheduled.join(
                     F.broadcast(pages_proj.select("url").join(
@@ -563,7 +565,7 @@ class CrawlEngine:
         # and only engaged once the seen set is big enough to repay its
         # build+probe stages — below the threshold a plain anti-join is
         # strictly cheaper.
-        use_bloom = self.bloom is not None and seen_total >= self.bloom_min_seen
+        use_bloom = seen_total >= self.bloom_min_seen
         bloom_df = (
             self.bloom.build(seen_next, expected_total=seen_total) if use_bloom else None
         )

@@ -1,4 +1,12 @@
-"""HTML parsing to the mini-DOM, built on stdlib ``html.parser``.
+"""HTML parsing to the mini-DOM.
+
+Two paths build the same tree.  ``_fused_parse`` is the production
+scanner: one loop that tokenizes and builds the DOM with no per-node
+callbacks.  ``_StdBuilder`` drives stdlib ``html.parser`` and builds the
+tree in its handlers; it is the behavioral reference that
+tests/test_dom_parity.py compares the scanner against, and it finishes
+any unterminated construct the scanner meets at EOF, so every EOF flush
+quirk matches stdlib exactly.
 
 Behavioral contract: the golden values of the reference CSS/selectolax
 parser tests (/root/reference/test_parsers.py:170-305) — attribute
@@ -8,11 +16,11 @@ comments, implied end tags for the common block/table/list cases.
 
 from __future__ import annotations
 
-import os
+import re
+from html import unescape
 from html.parser import HTMLParser as _StdHTMLParser
 from typing import List, Optional, Tuple
 
-from . import fasthtml
 from .nodes import Comment, Element, Text
 
 VOID_ELEMENTS = frozenset(
@@ -38,6 +46,26 @@ _SIBLING_CLOSERS = {
     "option": frozenset({"option"}),
 }
 
+_TAG_RE = re.compile(
+    r"<([a-zA-Z][-.:0-9a-zA-Z]*)"  # tag name
+    r"((?:\s+[^\s/>=]+(?:\s*=\s*(?:\"[^\"]*\"|'[^']*'|[^\s>]*))?)*)"  # attrs
+    r"\s*(/?)\s*>"
+)
+_ATTR_RE = re.compile(
+    r"([^\s/>=]+)(?:\s*=\s*(?:\"([^\"]*)\"|'([^']*)'|([^\s>]*)))?"
+)
+_END_RE = re.compile(r"</\s*([a-zA-Z][-.:_0-9a-zA-Z]*)\s*>")
+_TOLERANT_NAME = re.compile(r"([a-zA-Z][-.:_0-9a-zA-Z]*)")
+
+# script/style content is raw text: scan for the closing tag literally
+_RAW_END = {
+    tag: re.compile(rf"</\s*{tag}(?=[\s/>])|</\s*{tag}\s*>", re.IGNORECASE)
+    for tag in ("script", "style")
+}
+
+# stdlib allows whitespace between the closing dashes and '>'
+_COMMENT_CLOSE = re.compile(r"--\s*>")
+
 
 class HtmlElement(Element):
     __slots__ = ()
@@ -54,20 +82,26 @@ class HtmlDocument(HtmlElement):
         return self.inner()
 
 
-class _TreeBuilder:
-    """Parser-agnostic DOM builder: both the fast scanner tokenizer
-    (dom.fasthtml) and the stdlib bridge drive these callbacks."""
+class _StdBuilder(_StdHTMLParser):
+    """stdlib tokenizer building the DOM onto ``stack`` (its open
+    elements, ``stack[0]`` the root).  A fresh stack makes it the parity
+    reference; the fused parse's live stack makes it that parse's EOF
+    tail."""
 
-    def __init__(self):
-        self.root = HtmlDocument("[document]")
-        self.stack: List[HtmlElement] = [self.root]
+    def __init__(self, stack: List[HtmlElement]):
+        super().__init__(convert_charrefs=True)
+        self.stack = stack
 
-    @property
-    def top(self) -> HtmlElement:
-        return self.stack[-1]
+    def parse_marked_section(self, i: int, report: int = 1) -> int:
+        # CPython's _markupbase raises on '<![' with no valid section name
+        # ('<![0', real-web garbage) or an unknown keyword, and closes on
+        # the looser ']\s*]\s*>'.  Use the scanner's rule instead: consume
+        # to the next ']>' emitting nothing, drop an unterminated section.
+        j = self.rawdata.find("]>", i + 3)
+        return len(self.rawdata) if j < 0 else j + 2
 
     def _implied_end(self, tag: str) -> None:
-        cur = self.top.tag
+        cur = self.stack[-1].tag
         if tag in _P_CLOSING and cur == "p":
             self.stack.pop()
         else:
@@ -77,7 +111,6 @@ class _TreeBuilder:
 
     def handle_starttag(self, tag: str, attrs: List[Tuple[str, Optional[str]]]):
         self._implied_end(tag)
-        # both tokenizers hand over a freshly built attrs list — owned here
         el = HtmlElement(tag, attrs)
         self.stack[-1].append(el)
         if tag not in VOID_ELEMENTS:
@@ -95,69 +128,50 @@ class _TreeBuilder:
         # stray end tag: ignored
 
     def handle_data(self, data: str):
-        self.top.append(Text(data))
+        self.stack[-1].append(Text(data))
 
     def handle_comment(self, data: str):
-        self.top.append(Comment(data))
+        self.stack[-1].append(Comment(data))
 
 
-class _StdBridge(fasthtml.MarkedSectionSafe, _StdHTMLParser):
-    """stdlib tokenizer → builder callbacks (the reference engine for
-    the parity tests; also the fallback via UNIPARSER_SPARK_HTML_ENGINE=std).
-    MarkedSectionSafe keeps malformed ``<![`` from crashing the stdlib
-    tokenizer and pins the ``]>`` close rule to the fast engine's."""
+def _std_feed(markup: str, stack: List[HtmlElement]) -> HtmlElement:
+    """Parse ``markup`` with the stdlib builder onto ``stack``; returns
+    the root."""
+    builder = _StdBuilder(stack)
+    builder.feed(markup)
+    builder.close()
+    return stack[0]
 
-    def __init__(self, builder: _TreeBuilder):
-        super().__init__(convert_charrefs=True)
-        self._b = builder
 
-    def handle_starttag(self, tag, attrs):
-        self._b.handle_starttag(tag, attrs)
-
-    def handle_startendtag(self, tag, attrs):
-        self._b.handle_startendtag(tag, attrs)
-
-    def handle_endtag(self, tag):
-        self._b.handle_endtag(tag)
-
-    def handle_data(self, data):
-        self._b.handle_data(data)
-
-    def handle_comment(self, data):
-        self._b.handle_comment(data)
+def _parse_std(markup: str) -> HtmlDocument:
+    """The stdlib reference parse that the fused scanner must match."""
+    return _std_feed(markup, [HtmlDocument("[document]")])
 
 
 def _fused_parse(markup: str) -> HtmlDocument:
     """Fused tokenizer + tree builder: one scan loop constructing the
-    DOM directly, with no per-node callback dispatch.  ~1.5× faster
-    than fasthtml.feed + _TreeBuilder (the builder path costs ~6 Python
-    calls per node; a 20 KB page has ~800 nodes).  Token-for-token the
-    same state machine as fasthtml.feed and node-for-node the same tree
-    as _TreeBuilder — parity pinned by tests/test_dom_parity.py across
-    all three engines on the golden corpus, edges, and fuzz strings."""
+    DOM directly, with no per-node callback dispatch (a callback builder
+    costs ~6 Python calls per node; a 20 KB page has ~800 nodes).
+    Node-for-node the same tree as ``_parse_std`` — parity pinned by
+    tests/test_dom_parity.py on the golden corpus, edges, and fuzz
+    strings.  An unterminated construct at EOF is handed, with the live
+    stack, to the stdlib builder (at most once, on a tiny tail)."""
     root = HtmlDocument("[document]")
     stack: List[HtmlElement] = [root]
 
     # hot-loop locals (LOAD_FAST beats LOAD_GLOBAL ~2×)
-    unescape_ = fasthtml.unescape
+    unescape_ = unescape
     Text_, Comment_, El_ = Text, Comment, HtmlElement
     void = VOID_ELEMENTS
     p_closing = _P_CLOSING
     sib_get = _SIBLING_CLOSERS.get
-    tag_match = fasthtml._TAG_RE.match
-    attr_finditer = fasthtml._ATTR_RE.finditer
-    end_match = fasthtml._END_RE.match
-    comment_close = fasthtml._COMMENT_CLOSE.search
-    raw_get = fasthtml._RAW_END.get
-    tolerant_match = fasthtml._TOLERANT_NAME.match
+    tag_match = _TAG_RE.match
+    attr_finditer = _ATTR_RE.finditer
+    end_match = _END_RE.match
+    comment_close = _COMMENT_CLOSE.search
+    raw_get = _RAW_END.get
+    tolerant_match = _TOLERANT_NAME.match
     find = markup.find
-
-    def tail(frag: str) -> None:
-        # EOF quirks: delegate to the stdlib tokenizer through a builder
-        # sharing this parse's stack (runs at most once, on tiny tails)
-        b = _TreeBuilder.__new__(_TreeBuilder)
-        b.root, b.stack = root, stack
-        fasthtml._std_tail(frag, b)
 
     i, n = 0, len(markup)
     while i < n:
@@ -176,7 +190,7 @@ def _fused_parse(markup: str) -> HtmlDocument:
             if markup.startswith("<!--", lt):
                 m = comment_close(markup, lt + 4)
                 if m is None:
-                    tail(markup[lt:])
+                    _std_feed(markup[lt:], stack)
                     break
                 cur = stack[-1]
                 cur.children.append(Comment_(markup[lt + 4 : m.start()], cur))
@@ -184,19 +198,19 @@ def _fused_parse(markup: str) -> HtmlDocument:
             elif markup[lt : lt + 9].lower() == "<!doctype":
                 gt = find(">", lt)
                 if gt < 0:
-                    tail(markup[lt:])
+                    _std_feed(markup[lt:], stack)
                     break
                 i = gt + 1
             elif markup.startswith("<![", lt):
                 end = find("]>", lt + 3)
                 if end < 0:
-                    tail(markup[lt:])
+                    _std_feed(markup[lt:], stack)
                     break
                 i = end + 2
             else:
                 gt = find(">", lt)
                 if gt < 0:
-                    tail(markup[lt:])
+                    _std_feed(markup[lt:], stack)
                     break
                 cur = stack[-1]
                 cur.children.append(Comment_(markup[lt + 2 : gt], cur))
@@ -215,7 +229,7 @@ def _fused_parse(markup: str) -> HtmlDocument:
             else:
                 gt = find(">", lt)
                 if gt < 0:
-                    tail(markup[lt:])
+                    _std_feed(markup[lt:], stack)
                     break
                 nm = tolerant_match(markup, lt + 2)
                 if nm:
@@ -233,14 +247,14 @@ def _fused_parse(markup: str) -> HtmlDocument:
         elif nxt == "?":
             gt = find(">", lt)
             if gt < 0:
-                tail(markup[lt:])
+                _std_feed(markup[lt:], stack)
                 break
             i = gt + 1
         else:
             m = tag_match(markup, lt)
             if m is None:
                 if nxt.isalpha():
-                    tail(markup[lt:])
+                    _std_feed(markup[lt:], stack)
                     break
                 cur = stack[-1]
                 cur.children.append(Text_("<", cur))
@@ -300,21 +314,6 @@ def _fused_parse(markup: str) -> HtmlDocument:
     return root
 
 
-def parse_html(markup: str, engine: Optional[str] = None) -> HtmlDocument:
-    """markup → DOM.  engine: 'fast' (default; fused scanner+builder,
-    ~6× stdlib), 'scan' (scanner tokenizer driving the callback
-    builder — the fused engine's structural twin), or 'std' (stdlib
-    html.parser — the behavioral reference both are parity-tested
-    against)."""
-    if engine is None:
-        engine = os.environ.get("UNIPARSER_SPARK_HTML_ENGINE", "fast")
-    if engine == "fast":
-        return _fused_parse(markup)
-    builder = _TreeBuilder()
-    if engine == "std":
-        bridge = _StdBridge(builder)
-        bridge.feed(markup)
-        bridge.close()
-    else:
-        fasthtml.feed(markup, builder)
-    return builder.root
+def parse_html(markup: str) -> HtmlDocument:
+    """markup → DOM (the fused scanner, ~6× stdlib ``html.parser``)."""
+    return _fused_parse(markup)
