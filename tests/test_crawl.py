@@ -115,15 +115,19 @@ def test_crawl_rule_miss_and_fetch_miss(spark, tmp_path):
 
 def test_crawl_adaptive_paths_agree(spark, corpus, tmp_path, monkeypatch):
     """The adaptive strategy switches (bloom seen-filter engaged,
-    shuffle fetch forced instead of broadcast) must not change any
-    output: records, seen set, and final results are identical."""
+    broadcast fetch without the In-list pushdown, shuffle fetch) must not
+    change any output: records, seen set, and final results are
+    identical.  One seed is absent from the pages table, so every fetch
+    path also carries a miss."""
     pages, storage_json, store = corpus
     seeds = [testgen.list_url(testgen.host_name(i)) for i in range(3)]
+    seeds.append(f"https://{testgen.host_name(0)}/item-999999/")
 
     # name -> (constructor kwargs, crawl.engine constants patched for the run)
     variants = {
         "default": ({}, {}),
         "bloom": ({"bloom_min_seen": 0}, {}),
+        "broadcast_fetch": ({}, {"ISIN_FETCH_MAX": 0}),
         "shuffle_fetch": ({}, {"BROADCAST_FETCH_MAX": 0}),
     }
     outputs = {}
@@ -149,7 +153,8 @@ def test_crawl_adaptive_paths_agree(spark, corpus, tmp_path, monkeypatch):
         outputs[name] = (recs, seen, eng.assemble_results(seeds))
 
     base = outputs["default"]
-    for name in ("bloom", "shuffle_fetch"):
+    assert any(err and err.startswith("FetchMiss") for *_, err in base[0])
+    for name in ("bloom", "broadcast_fetch", "shuffle_fetch"):
         assert outputs[name] == base, f"{name} diverged from default"
 
 

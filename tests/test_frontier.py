@@ -41,9 +41,31 @@ def test_bloom_filter_new(spark):
     )
     bloom = BloomSeenFilter(n_buckets=8)
     bloom_df = bloom.build(seen)
-    fresh = bloom.filter_new(cand, seen, bloom_df)
     exact = cand.join(seen.select("url_hash"), "url_hash", "left_anti")
-    assert sorted(r["url"] for r in fresh.collect()) == sorted(r["url"] for r in exact.collect())
+    want = sorted(r["url"] for r in exact.collect())
+    fresh = bloom.filter_new(cand, seen, bloom_df)
+    assert sorted(r["url"] for r in fresh.collect()) == want
+    # the crawl engine's form: both branches of the split read one cached
+    # probe, so the probe's Python pass runs once, inside the cache
+    flagged = bloom.probe(cand, bloom_df).cache()
+    fresh = bloom.filter_probed(flagged, seen)
+    assert sorted(r["url"] for r in fresh.collect()) == want
+    ops = _operators(fresh._jdf.queryExecution().executedPlan())
+    flagged.unpersist()
+    assert "MapInPandasExec" not in ops, ops
+    assert ops.count("TableCacheQueryStageExec") == 2, ops
+
+
+def _operators(plan):
+    """Operator class names of an executed adaptive plan, descending into
+    its query stages but not into cached relations."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _operators(plan.executedPlan())
+    if name.endswith("QueryStageExec") and name != "TableCacheQueryStageExec":
+        return [name] + _operators(plan.plan())
+    kids = plan.children()
+    return [name] + [op for i in range(kids.size()) for op in _operators(kids.apply(i))]
 
 
 def test_bloom_probe_rates(spark):

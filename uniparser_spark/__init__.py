@@ -10,6 +10,10 @@ DataFrame API.
 
 __version__ = "0.1.0"
 
+from . import _zipcache
+
+_zipcache.install()
+
 from .chains import run_chain, run_crawler_rule, run_parse_rule, run_rule
 from .exceptions import InvalidSchemaError, RuleNotFoundError, UnknownParserNameError
 from .operators import OPERATORS, apply_operator

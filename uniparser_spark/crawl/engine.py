@@ -1,11 +1,14 @@
 """Round-based distributed crawl: frontier → schedule → fetch → extract.
 
-Each scheduling round is one Spark job over checkpointed parquet state
-(SURVEY.md §3 EP1 mapping).  The reference's recursive thread fan-out
-(crawler.py:156-189) becomes breadth-first rounds; result nesting is
-restored from (parent_url, list_index) so the final output is
-order-identical to the reference's DFS (verified against
-crawl.simulator).
+Each scheduling round runs three Spark actions over checkpointed
+parquet state: the records, seen-delta and frontier writes, plus a URL
+collect when the batch is fetched by In-list (SURVEY.md §3 EP1
+mapping).  Broadcasts and AQE stages split those actions into more
+Spark jobs: about 13 a round on the 400-page ``crawl_polite`` benchmark.
+The reference's recursive thread fan-out (crawler.py:156-189) becomes
+breadth-first rounds; result nesting is restored from (parent_url,
+list_index) so the final output is order-identical to the reference's
+DFS (verified against crawl.simulator).
 
 State layout under ``state_dir`` (Iceberg-style: immutable per-round
 dirs + an atomically swapped manifest):
@@ -322,7 +325,8 @@ class CrawlEngine:
     # --------------------------------------------------------------- rounds
     def run_round(self) -> Dict[str, int]:
         """One scheduling round in exactly THREE Spark actions (records
-        write, seen write, frontier write) — per-round stats ride on the
+        write, seen write, frontier write; an In-list fetch adds a
+        collect of the batch's URLs) — per-round stats ride on the
         writes via ``Observation`` instead of separate count() jobs, and
         frontier metadata is carried through the extraction UDF instead
         of re-joined, so nothing in the round is computed twice."""
@@ -386,7 +390,8 @@ class CrawlEngine:
             ).drop("fetch_error")
         else:
             pages_proj = self.pages.select(*page_cols)
-            if n_pending is not None and n_pending <= ISIN_FETCH_MAX:
+            isin_fetch = n_pending is not None and n_pending <= ISIN_FETCH_MAX
+            if isin_fetch:
                 # tiny batch (typically the seed round): push the URL list
                 # into the parquet scan as an In filter — row groups whose
                 # url min/max excludes the batch are never decompressed.
@@ -407,6 +412,14 @@ class CrawlEngine:
                     "url",
                     "left_anti",
                 )
+                if isin_fetch:
+                    # a batch of <= ISIN_FETCH_MAX rows: the pruned scan
+                    # still spans every file split of the pages table, and
+                    # the misses (nearly always none) every scheduled
+                    # partition.  One wave of extraction tasks, plus one
+                    # for the misses, not one per split and partition.
+                    hits = hits.coalesce(self.state_partitions)
+                    misses = misses.coalesce(1)
                 for c in body_cols:
                     misses = misses.withColumn(c, F.lit(None).cast(pages_proj.schema[c].dataType))
                 fetched = hits.select(*scheduled.columns, *body_cols).unionByName(
@@ -565,15 +578,15 @@ class CrawlEngine:
         # and only engaged once the seen set is big enough to repay its
         # build+probe stages — below the threshold a plain anti-join is
         # strictly cheaper.
-        use_bloom = seen_total >= self.bloom_min_seen
-        bloom_df = (
-            self.bloom.build(seen_next, expected_total=seen_total) if use_bloom else None
-        )
-        fresh = (
-            self.bloom.filter_new(candidates, seen_next, bloom_df)
-            if use_bloom
-            else candidates.join(seen_next.select("url_hash"), "url_hash", "left_anti")
-        )
+        flagged = None
+        if seen_total >= self.bloom_min_seen:
+            bloom_df = self.bloom.build(seen_next, expected_total=seen_total)
+            # cached: both branches of the definite-new/suspects split
+            # read it, and the probe's Python pass runs once
+            flagged = self.bloom.probe(candidates, bloom_df).cache()
+            fresh = self.bloom.filter_probed(flagged, seen_next)
+        else:
+            fresh = candidates.join(seen_next.select("url_hash"), "url_hash", "left_anti")
         if deferred is not None:
             fresh = fresh.join(deferred.select("url_hash"), "url_hash", "left_anti")
             next_frontier = deferred.unionByName(fresh.select(*_META_COLS))
@@ -592,6 +605,8 @@ class CrawlEngine:
         )
         n_pending_next = int(obs_front.get["n"])
         n_fresh = int(obs_front.get["fresh"] or 0)
+        if flagged is not None:
+            flagged.unpersist()
 
         stats = {
             "round": rnd,

@@ -16,7 +16,9 @@ the north rule adds one at 10^10-URL scale.  Design:
 - **probe**: candidates ⟖ bloom (bucket equi-join) → vectorized bit
   tests in numpy → definite-new rows skip the expensive exact check;
   only bloom-positives anti-join the exact seen table (false-positive
-  rate ~1%, so the exact anti-join sees ~1% of candidate volume).
+  rate ~1%, so the exact anti-join sees ~1% of candidate volume).  Both
+  branches read the probe's output; the crawl engine caches it, so the
+  probe's Python pass runs once a round.
 
 The exact table keeps (url_hash) and is the source of truth; bloom is a
 rebuildable accelerator, so checkpoint/resume only persists the exact
@@ -210,11 +212,17 @@ class BloomSeenFilter:
         return joined.mapInPandas(check, schema=out_schema)
 
     def filter_new(self, candidates: DataFrame, seen: DataFrame, bloom: Optional[DataFrame] = None) -> DataFrame:
-        """candidates minus seen.  With bloom: definite-new pass straight
-        through; only bloom-positives pay the exact anti-join."""
+        """candidates minus seen.  With bloom: probe, then
+        ``filter_probed``."""
         if bloom is None:
             return candidates.join(seen.select("url_hash"), "url_hash", "left_anti")
-        flagged = self.probe(candidates, bloom)
+        return self.filter_probed(self.probe(candidates, bloom), seen)
+
+    @staticmethod
+    def filter_probed(flagged: DataFrame, seen: DataFrame) -> DataFrame:
+        """``probe`` output minus seen: definite-new rows pass straight
+        through; only bloom-positives pay the exact anti-join.  Both
+        branches read ``flagged``: cache it, or the probe runs twice."""
         definite_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
         suspects = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
         verified_new = suspects.join(seen.select("url_hash"), "url_hash", "left_anti")
