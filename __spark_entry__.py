@@ -1,10 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship compiled-rule extraction over the
-sf0.001 documents table; ``queries()``/``oracle_sql()`` expose the full
-operator suite (relational skeleton, rule engine, text analysis, dedup,
-similarity, multimodal plumbing) with DuckDB oracle twins — see
-``uniparser_spark/suite.py`` for the implementations.
+sf0.001 documents table.  ``queries()`` and ``oracle_sql()`` expose the
+suite registry of ``uniparser_spark/suite.py``: every query is declared
+there with ``@query(oracle_sql)``, so both dicts have the same keys, in
+declaration order, and each query's DuckDB oracle sits beside it.
 """
 
 from __future__ import annotations

@@ -9,36 +9,86 @@ row-at-a-time Python UDF (BatchEvalPython — Arrow-batched
 ArrowEvalPython/MapInPandas are the sanctioned Python paths) or an
 unbounded CartesianProduct (broadcast nested-loop against a small
 side is the accepted form) — the two anti-patterns that silently
-stop surviving a 100x scale-up."""
+stop surviving a 100x scale-up.
 
-import duckdb
+The oracle lane then runs the full value comparison of
+``tools/check_oracle.py`` on a fixed sample of queries, so oracle drift
+fails here and not only in the full sweep."""
+
+import inspect
+
+import pytest
+
+from test_plan_shape import SF_A as SF_DIR  # the sf0.001 test tables
+from tools.check_oracle import check, oracle_connection
+
+# Oracles shared with or built from another query's (the _xx twins and
+# the dedup_clusters, links, regex and loader aliases), oracles spliced
+# from shared fragments (_IPS_SQL, _GRAPH_SQL, _PAGE_SQL, _NORM, the PSL
+# list), and one query per family.
+ORACLE_LANE = (
+    "pricing_summary rule_first3 token_stats c4_line_filter pii_redact "
+    "dedup_exact multimodal_features spam_mass asn_tag ip_politeness "
+    "dedup_verified_pairs_xx minhash_lsh_pairs_xx dedup_clusters_star "
+    "dedup_clusters_hashmin stream_links stream_extract stream_host_rates "
+    "rule_loader_toml registrable_domains phrase_search"
+).split()
 
 
 def test_suite_contract(spark):
     import __spark_entry__ as entry
 
     qs, oracles = entry.queries(), entry.oracle_sql()
-    assert set(oracles) <= set(qs)
+    assert set(oracles) == set(qs)
 
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '/root/testdata/sf0.001/{t}.parquet'"
-        )
+    con = oracle_connection(SF_DIR)
     for name, fn in qs.items():
-        df = fn(spark, "/root/testdata/sf0.001")
+        df = fn(spark, SF_DIR)
         s_cols = df.columns
         assert s_cols, name
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF"
         assert "CartesianProduct" not in plan, f"{name}: unbounded cartesian"
-        if name in oracles:
-            d_cols = [
-                d[0]
-                for d in con.execute(
-                    f"SELECT * FROM ({oracles[name]}) LIMIT 0"
-                ).description
-            ]
-            assert sorted(s_cols) == sorted(d_cols), name
+        d_cols = [
+            d[0]
+            for d in con.execute(
+                f"SELECT * FROM ({oracles[name]}) LIMIT 0"
+            ).description
+        ]
+        assert sorted(s_cols) == sorted(d_cols), name
+
+
+def test_oracle_lane(spark):
+    from uniparser_spark.suite import ORACLES, QUERIES
+
+    con = oracle_connection(SF_DIR)
+    failures = {}
+    for name in ORACLE_LANE:
+        reason = check(spark, con, QUERIES[name], ORACLES[name], SF_DIR)
+        if reason:
+            failures[name] = reason
+    assert not failures
+
+
+def test_registry_rejects_a_second_registration():
+    from uniparser_spark import suite
+
+    def q_pricing_summary(spark, sf_dir):
+        raise AssertionError("never runs")
+
+    before = dict(suite.QUERIES)
+    with pytest.raises(ValueError, match="pricing_summary"):
+        suite.query("SELECT 1")(q_pricing_summary)
+    assert suite.QUERIES == before
+
+
+def test_every_query_function_is_registered():
+    from uniparser_spark import suite
+
+    defined = {
+        name.removeprefix("q_")
+        for name, fn in vars(suite).items()
+        if name.startswith("q_") and inspect.isfunction(fn) and fn.__module__ == suite.__name__
+    }
+    assert defined == set(suite.QUERIES)
+    assert all(suite.QUERIES[n].__name__ == f"q_{n}" for n in defined)

@@ -114,6 +114,54 @@ def _type_diffs(s_types: dict, d_types: dict) -> list[str]:
     return diffs
 
 
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB connection with one view per suite table of *sf_dir*."""
+    from uniparser_spark.suite import TABLES
+
+    con = duckdb.connect()
+    for name in TABLES:
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{sf_dir}/{name}.parquet'")
+    return con
+
+
+def check(spark, con, fn, oracle: str, sf_dir: str) -> str | None:
+    """None when query *fn* matches *oracle* on DuckDB (columns, type
+    classes, row count, order-insensitive values); else why not."""
+    try:
+        sdf = fn(spark, sf_dir)
+        s_cols = sdf.columns
+        s_types = dict(sdf.dtypes)
+        s_rows = [tuple(r) for r in sdf.collect()]
+    except Exception as err:  # noqa: BLE001
+        return f"spark error: {err}"
+    try:
+        tbl = con.execute(oracle).fetch_arrow_table()
+        d_cols = tbl.schema.names
+        d_types = {f.name: f.type for f in tbl.schema}
+        d_data = [col.to_pylist() for col in tbl.columns]
+        d_rows = list(zip(*d_data)) if d_data else []
+    except Exception as err:  # noqa: BLE001
+        return f"duckdb error: {err}"
+    dec_cols = [c for c, t in d_types.items() if pa.types.is_decimal(t)]
+    if dec_cols:
+        return (
+            f"oracle decimal/hugeint columns {dec_cols} "
+            "(the Arrow-path hash diverges — CAST to BIGINT/DOUBLE)"
+        )
+    if sorted(s_cols) != sorted(d_cols):
+        return f"cols spark={sorted(s_cols)} duck={sorted(d_cols)}"
+    tdiffs = _type_diffs(s_types, d_types)
+    if tdiffs:
+        return f"type-class mismatch: {tdiffs}"
+    if len(s_rows) != len(d_rows):
+        return f"rowcount spark={len(s_rows)} duck={len(d_rows)}"
+    cs, cd = canon(s_rows, s_cols), canon(d_rows, d_cols)
+    if cs != cd:
+        bad = [(a, b) for a, b in zip(cs, cd) if a != b][:3]
+        return f"value mismatch, first diffs: {bad}"
+    return None
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
@@ -121,73 +169,20 @@ def main():
     from uniparser_spark.engine.session import get_spark
 
     spark = get_spark()
-    con = duckdb.connect()
-    for name in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM '{sf_dir}/{name}.parquet'"
-        )
-
+    con = oracle_connection(sf_dir)
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     n_pass = n_fail = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
         t0 = time.monotonic()
-        try:
-            sdf = fn(spark, sf_dir)
-            s_cols = sdf.columns
-            s_types = dict(sdf.dtypes)
-            s_rows = [tuple(r) for r in sdf.collect()]
-        except Exception as err:  # noqa: BLE001
-            print(f"FAIL {name}: spark error: {err}")
+        reason = check(spark, con, fn, oracles[name], sf_dir)
+        if reason:
+            print(f"FAIL {name}: {reason}")
             n_fail += 1
-            continue
-        if name not in oracles:
-            print(f"pass {name}: rows-only ({len(s_rows)} rows, no oracle)")
+        else:
+            print(f"pass {name}: match ({time.monotonic() - t0:.1f}s)")
             n_pass += 1
-            continue
-        try:
-            tbl = con.execute(oracles[name]).fetch_arrow_table()
-            d_cols = tbl.schema.names
-            d_types = {f.name: f.type for f in tbl.schema}
-            d_data = [col.to_pylist() for col in tbl.columns]
-            d_rows = list(zip(*d_data)) if d_data else []
-        except Exception as err:  # noqa: BLE001
-            print(f"FAIL {name}: duckdb error: {err}")
-            n_fail += 1
-            continue
-        dt = time.monotonic() - t0
-        dec_cols = [c for c, t in d_types.items() if pa.types.is_decimal(t)]
-        if dec_cols:
-            print(
-                f"FAIL {name}: oracle decimal/hugeint columns {dec_cols} "
-                "(driver Arrow hash diverges — CAST to BIGINT/DOUBLE)"
-            )
-            n_fail += 1
-            continue
-        if sorted(s_cols) != sorted(d_cols):
-            print(f"FAIL {name}: cols spark={sorted(s_cols)} duck={sorted(d_cols)}")
-            n_fail += 1
-            continue
-        tdiffs = _type_diffs(s_types, d_types)
-        if tdiffs:
-            print(f"FAIL {name}: type-class mismatch: {tdiffs}")
-            n_fail += 1
-            continue
-        if len(s_rows) != len(d_rows):
-            print(f"FAIL {name}: rowcount spark={len(s_rows)} duck={len(d_rows)}")
-            n_fail += 1
-            continue
-        cs, cd = canon(s_rows, s_cols), canon(d_rows, d_cols)
-        if cs != cd:
-            bad = [(a, b) for a, b in zip(cs, cd) if a != b][:3]
-            print(f"FAIL {name}: value mismatch, first diffs: {bad}")
-            n_fail += 1
-            continue
-        print(f"pass {name}: {len(s_rows)} rows match ({dt:.1f}s)")
-        n_pass += 1
     print(f"== {n_pass} pass, {n_fail} fail ==")
     return 1 if n_fail else 0
 

@@ -21,10 +21,7 @@ import pyarrow as pa
 
 sys.path.insert(0, ".")
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+from tools.check_oracle import oracle_connection  # noqa: E402
 
 
 def decimal_columns(con: duckdb.DuckDBPyConnection, sql: str) -> list[str]:
@@ -40,11 +37,7 @@ def decimal_columns(con: duckdb.DuckDBPyConnection, sql: str) -> list[str]:
 def sweep(sf_dir: str, only: set[str] | None = None) -> dict[str, list[str]]:
     import __spark_entry__ as entrymod
 
-    con = duckdb.connect()
-    for name in TABLES:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM '{sf_dir}/{name}.parquet'"
-        )
+    con = oracle_connection(sf_dir)
     bad: dict[str, list[str]] = {}
     for name, sql in entrymod.oracle_sql().items():
         if only and name not in only:
