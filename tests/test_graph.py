@@ -141,13 +141,16 @@ def test_select_canonical_quality_ranked(spark):
     assert sum(r["is_canonical"] for r in rows.values()) == 2
 
 
-def test_star_contraction_matches_hashmin(spark):
-    """Large-star/small-star CC (the power-law-scale algorithm) must
-    produce the identical (node, comp) labeling as hash-min on random
-    graphs, including singletons, chains (worst diameter), and merged
-    star shapes."""
+def test_star_contraction_matches_hashmin(spark, monkeypatch):
+    """Both paths of connected_components_star — the small-graph
+    union-find at the default cap and large-star/small-star contraction
+    (the power-law-scale algorithm) at cap 0 — must produce the
+    identical (node, comp) labeling as hash-min on random graphs,
+    including singletons, chains (worst diameter), and merged star
+    shapes."""
     import random
 
+    from uniparser_spark import graph
     from uniparser_spark.graph import connected_components, connected_components_star
 
     rng = random.Random(42)
@@ -169,19 +172,27 @@ def test_star_contraction_matches_hashmin(spark):
         else:
             edges = spark.createDataFrame([], "src long, dst long")
         hm = {r["node"]: r["comp"] for r in connected_components(edges, nodes).collect()}
-        st = {r["node"]: r["comp"] for r in connected_components_star(edges, nodes).collect()}
-        assert st == hm, f"case {i}: star != hash-min"
+        for cap in (graph.SMALL_GRAPH_EDGES, 0):
+            with monkeypatch.context() as mp:
+                mp.setattr(graph, "SMALL_GRAPH_EDGES", cap)
+                got = connected_components_star(edges, nodes).collect()
+            st = {r["node"]: r["comp"] for r in got}
+            assert st == hm, f"case {i}, cap {cap}: star != hash-min"
 
 
-def test_dedup_clusters_default_is_star(spark):
+def test_dedup_clusters_default_is_star(spark, monkeypatch):
     """The algorithm a user reaches first must be the O(log n)
     star-contraction path (VERDICT r3: hash-min's diameter-bound rounds
     are the weak plan on power-law graphs).  A diameter-60 chain with
     max_iter=12 converges under star (log2(61) ≈ 6 doubling rounds) but
     CANNOT under hash-min (needs ~60 label-propagation rounds) — so
-    convergence itself proves which algorithm ran."""
+    convergence itself proves which algorithm ran.  Cap 0 keeps the
+    120-edge chain off the small-graph union-find path, which has no
+    rounds to bound."""
+    from uniparser_spark import graph
     from uniparser_spark.graph import dedup_clusters
 
+    monkeypatch.setattr(graph, "SMALL_GRAPH_EDGES", 0)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(60)], "src long, dst long"
     )
@@ -191,18 +202,23 @@ def test_dedup_clusters_default_is_star(spark):
     assert sum(r["is_canonical"] for r in out) == 1
 
 
-def test_reliable_checkpoint_path_resumes(spark, tmp_path):
+def test_reliable_checkpoint_path_resumes(spark, tmp_path, monkeypatch):
     """engine/ckpt.py durable barriers: with a checkpoint dir
     configured, every RELIABLE_INTERVAL-th star round writes a reliable
     checkpoint (files on the checkpoint fs), and the result stays
     recomputable from those files after the local cache is dropped —
-    the executor-loss story localCheckpoint alone cannot tell."""
+    the executor-loss story localCheckpoint alone cannot tell.  Cap 0
+    forces the star rounds: the small-graph union-find path takes no
+    checkpoint."""
+    from uniparser_spark import graph
     from uniparser_spark.engine.ckpt import (
         has_checkpoint_dir,
         reliable_this_round,
         step_checkpoint,
     )
     from uniparser_spark.graph import connected_components_star
+
+    monkeypatch.setattr(graph, "SMALL_GRAPH_EDGES", 0)
 
     assert [reliable_this_round(i) for i in range(6)] == [
         False, False, False, False, True, False,
@@ -238,6 +254,78 @@ def test_reliable_checkpoint_path_resumes(spark, tmp_path):
     finally:
         # restore the shared session's default (no reliable dir)
         sc._jsc.sc().setCheckpointDir(None)
+
+
+def test_union_find_edge_cases_match_hashmin(spark):
+    """The small-graph union-find path on degenerate inputs equals
+    hash-min: no edges, self-loops only, duplicate and reversed edges,
+    and a chain fed in descending id order (every union lands on the
+    later, smaller root)."""
+    from uniparser_spark.graph import connected_components, connected_components_star
+
+    cases = {
+        "empty": [],
+        "self_loops": [(1, 1), (4, 4)],
+        "dup_reversed": [(3, 1), (1, 3), (3, 1), (5, 4), (4, 5), (2, 2)],
+        "desc_chain": [(i, i - 1) for i in range(9, 0, -1)],
+    }
+    nodes = spark.createDataFrame([(j,) for j in range(12)], "node long")
+    for name, pairs in cases.items():
+        edges = spark.createDataFrame(pairs, "src long, dst long")
+        hm = {r["node"]: r["comp"] for r in connected_components(edges, nodes).collect()}
+        uf = {r["node"]: r["comp"] for r in connected_components_star(edges, nodes).collect()}
+        assert uf == hm, name
+    assert uf == {**{j: 0 for j in range(10)}, 10: 10, 11: 11}
+
+
+def test_union_find_empty_input_yields_schema():
+    """With no edge batches the mapInPandas body still yields one empty
+    (node, comp) frame of longs."""
+    from uniparser_spark.graph import _union_find
+
+    (out,) = list(_union_find(iter([])))
+    assert list(out.columns) == ["node", "comp"] and len(out) == 0
+    assert [str(t) for t in out.dtypes] == ["int64", "int64"]
+
+
+def test_small_graph_path_runs_fewer_jobs(spark, monkeypatch):
+    """Job-group count on the keep-flags graph, union-find path vs cap
+    0 (star rounds), same rows either way.  With AQE off a job is one
+    action, so the counts are exact: the pre-loop signature and the
+    output collect (2) vs those plus one star round's signature (3).
+    With AQE on every query stage is its own job and the count moves
+    with stage timing (9-10 vs 19-20 measured), so only the order is
+    asserted there."""
+    from uniparser_spark import graph
+    from uniparser_spark.graph import dedup_clusters
+
+    edges = spark.createDataFrame([(7, 2), (2, 9)], "src long, dst long")
+    nodes = spark.createDataFrame([(i,) for i in (2, 3, 7, 9)], "node long")
+    sc = spark.sparkContext
+
+    def jobs(cap, aqe):
+        group = f"small-graph-jobs-cap-{cap}-aqe-{aqe}"
+        with monkeypatch.context() as mp:
+            mp.setattr(graph, "SMALL_GRAPH_EDGES", cap)
+            old = spark.conf.get("spark.sql.adaptive.enabled")
+            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+            sc.setJobGroup(group, group)
+            try:
+                rows = sorted(tuple(r) for r in dedup_clusters(edges, nodes).collect())
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+                spark.conf.set("spark.sql.adaptive.enabled", old)
+        return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    counts = {}
+    for aqe in ("false", "true"):
+        uf_rows, uf_jobs = jobs(graph.SMALL_GRAPH_EDGES, aqe)
+        star_rows, star_jobs = jobs(0, aqe)
+        assert uf_rows == star_rows
+        counts[aqe] = (uf_jobs, star_jobs)
+    assert counts["false"] == (2, 3)
+    assert counts["true"][0] < counts["true"][1]
 
 
 def test_trustrank_seed_mass_and_spam_isolation(spark):

@@ -25,13 +25,14 @@ from tools.check_oracle import check, oracle_connection
 # Oracles shared with or built from another query's (the _xx twins and
 # the dedup_clusters, links, regex and loader aliases), oracles spliced
 # from shared fragments (_IPS_SQL, _GRAPH_SQL, _PAGE_SQL, _NORM, the PSL
-# list), and one query per family.
+# list), one query per family, and canonical_docs (the small-graph
+# union-find components through select_canonical).
 ORACLE_LANE = (
     "pricing_summary rule_first3 token_stats c4_line_filter pii_redact "
     "dedup_exact multimodal_features spam_mass asn_tag ip_politeness "
     "dedup_verified_pairs_xx minhash_lsh_pairs_xx dedup_clusters_star "
     "dedup_clusters_hashmin stream_links stream_extract stream_host_rates "
-    "rule_loader_toml registrable_domains phrase_search"
+    "rule_loader_toml registrable_domains phrase_search canonical_docs"
 ).split()
 
 

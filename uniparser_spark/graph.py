@@ -24,6 +24,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+# connected_components_star finishes a graph of at most this many
+# symmetrized edges in one single-partition union-find task instead of
+# star-contraction rounds.  Random graphs on local[4] (4-core Xeon):
+# union-find 0.4 s vs star 4.1 s at 10^3 edges, 3.4 s vs 45.9 s at
+# 10^6, where the union-find worker grows by ~80 MB.
+SMALL_GRAPH_EDGES = 1_000_000
+
 
 def synth_edges(
     df: DataFrame, n_nodes: int, id_col: str = "doc_id", fanout: int = 3
@@ -258,10 +265,15 @@ def dedup_clusters(
     cluster size — filter ``is_canonical = 1`` to materialize the
     deduplicated corpus.
 
-    The default algorithm is star-contraction (O(log n) rounds
-    regardless of component diameter — the plan that survives a
-    power-law web graph at 100×); hash-min stays available as the
-    differential twin for shallow graphs.
+    The default algorithm, ``"star"``, is
+    :func:`connected_components_star`: a graph of at most
+    ``SMALL_GRAPH_EDGES`` symmetrized edges finishes in one
+    single-partition union-find task; above that cap, star-contraction
+    runs (O(log n) rounds regardless of component diameter — the plan
+    that survives a power-law web graph at 100×).  ``"hashmin"`` stays
+    fully distributed at every size as the differential twin for
+    shallow graphs.  ``max_iter`` bounds the rounds of the star loop or
+    of hash-min; the union-find path has none.
     """
     if algorithm == "hashmin":
         # O(diameter) rounds — the simple twin for shallow components
@@ -324,20 +336,66 @@ def select_canonical(
     )
 
 
+def _union_find(batches):
+    """``mapInPandas`` body of the small-graph path: union-find over the
+    whole symmetrized (a, b) edge state in one task, union by min root,
+    so every root is its component's minimum node id.  Yields one
+    (node, comp) frame — empty, with its schema, for an empty state."""
+    import numpy as np
+    import pandas as pd
+
+    frames = list(batches)
+    a = np.concatenate([f["a"].to_numpy() for f in frames] or [np.empty(0, np.int64)])
+    b = np.concatenate([f["b"].to_numpy() for f in frames] or [np.empty(0, np.int64)])
+    # the state holds both orientations of every edge: union each once
+    keep = a < b
+    a, b = a[keep], b[keep]
+    # dense ids in sorted order: the min index of a set is its min node
+    ids, dense = np.unique(np.concatenate([a, b]), return_inverse=True)
+    parent = list(range(len(ids)))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
+
+    for u, v in zip(dense[: len(a)].tolist(), dense[len(a):].tolist()):
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    roots = np.fromiter((find(x) for x in range(len(ids))), np.int64, len(ids))
+    yield pd.DataFrame({"node": ids, "comp": ids[roots]})
+
+
 def connected_components_star(
     edges: DataFrame,
     nodes: DataFrame,
     max_iter: int = 50,
 ) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the production choice for POWER-LAW graphs, where hash-min's
-    per-round shuffle stays O(E) for O(diameter) rounds but
-    star-contraction's active edge set contracts geometrically and
-    converges in O(log n) rounds regardless of diameter.
+    """Connected components, picked by graph size: a graph of at most
+    ``SMALL_GRAPH_EDGES`` symmetrized edges finishes in ONE
+    single-partition union-find task; a larger one runs alternating
+    large-star / small-star contraction (Kiveris et al., "Connected
+    Components in MapReduce and Beyond") — the production choice for
+    POWER-LAW graphs, where hash-min's per-round shuffle stays O(E) for
+    O(diameter) rounds but star-contraction's active edge set contracts
+    geometrically and converges in O(log n) rounds regardless of
+    diameter.
 
-    One round = two half-steps over the undirected neighbor relation,
-    each a groupBy(min) + join emitting a rewired edge set:
+    Both paths start from the symmetrized, deduplicated edge state,
+    whose signature (below) is collected before any round; its edge
+    count picks the path, so the choice costs no extra Spark action.
+
+    Small path: ``coalesce(1).mapInPandas`` over the materialized edge
+    state, union by min root (every root is its component's minimum
+    node id, the same ``comp`` star and hash-min reach).  The output
+    stays lazy; one task holds the whole edge list, which is why the
+    cap is a measured constant and not unbounded.
+
+    Large path, one round = two half-steps over the undirected
+    neighbor relation, each a groupBy(min) + join emitting a rewired
+    edge set:
 
     - large-star(u): every neighbor v > u re-attaches to
       m(u) = min(Γ(u) ∪ {u});
@@ -355,11 +413,12 @@ def connected_components_star(
     ``checkpoint`` when a checkpoint dir is configured — bounding
     re-lost work under executor failure to ``interval`` rounds of
     narrow-edge shuffles (localCheckpoint blocks die with their
-    executor; see engine/ckpt.py).
+    executor; see engine/ckpt.py).  ``max_iter`` bounds these rounds
+    only; the small path has none.
 
     Same contract as :func:`connected_components`: returns
     (node, comp); singletons map to themselves.  A differential test
-    pins equality with hash-min on random graphs.
+    pins both paths to hash-min on random graphs.
     """
     from .engine.ckpt import reliable_this_round, step_checkpoint
 
@@ -422,23 +481,26 @@ def connected_components_star(
         )
 
     sig = signature(e)
-    for it in range(max_iter):
-        durable = reliable_this_round(it)
-        e = star(e, large=True, reliable=False)
-        e = star(e, large=False, reliable=durable)
-        new_sig = signature(e)
-        if new_sig == sig:
-            break
-        sig = new_sig
+    if sig[0] <= SMALL_GRAPH_EDGES:
+        comp = e.coalesce(1).mapInPandas(_union_find, "node long, comp long")
     else:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} rounds"
+        for it in range(max_iter):
+            durable = reliable_this_round(it)
+            e = star(e, large=True, reliable=False)
+            e = star(e, large=False, reliable=durable)
+            new_sig = signature(e)
+            if new_sig == sig:
+                break
+            sig = new_sig
+        else:
+            raise RuntimeError(
+                f"connected_components_star did not converge in {max_iter} rounds"
+            )
+        # fixpoint: every edge points between a node and its component
+        # min; comp(u) = min neighbor (or u itself for singletons)
+        comp = e.groupBy("a").agg(F.min("b").alias("_mn")).select(
+            F.col("a").alias("node"), F.least(F.col("a"), F.col("_mn")).alias("comp")
         )
-    # fixpoint: every edge points between a node and its component min;
-    # comp(u) = min neighbor (or u itself for singletons)
-    comp = e.groupBy("a").agg(F.min("b").alias("_mn")).select(
-        F.col("a").alias("node"), F.least(F.col("a"), F.col("_mn")).alias("comp")
-    )
     return (
         nodes.join(comp, nodes["node"] == comp["node"], "left")
         .select(
