@@ -2,6 +2,8 @@
 simulator — nested results and seen-set membership must match."""
 
 import json
+from contextlib import contextmanager
+from pathlib import Path
 
 import pytest
 
@@ -70,6 +72,122 @@ def test_crawl_resume_from_checkpoint(spark, corpus, tmp_path):
     expected = [simulate_crawl(storage, store, u, seen=seen_sim) for u in seeds]
     assert resumed.assemble_results(seeds) == expected
     assert {r["url_canon"] for r in resumed.seen().collect()} == set(seen_sim.keys())
+
+
+class _Crash(Exception):
+    """A failure injected at one crash point of the state protocol."""
+
+
+@contextmanager
+def _crash_after_write(kind: str, rnd: int):
+    """Raise right after the ``DataFrameWriter.parquet`` write to
+    ``{kind}/r{rnd}`` (``kind`` = the state dir the write targets): the
+    process dies between two state writes of one round."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    original = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        original(self, path, *args, **kwargs)
+        p = Path(str(path))
+        if (p.parent.name, p.name) == (kind, f"r{rnd}"):
+            raise _Crash(str(path))
+
+    DataFrameWriter.parquet = parquet
+    try:
+        yield
+    finally:
+        DataFrameWriter.parquet = original
+
+
+def _step(eng, step) -> None:
+    if step == "round":
+        eng.run_round()
+    elif step == "run":
+        eng.run(max_rounds=10)
+    else:  # ("expire", max_age_rounds)
+        eng.expire_and_requeue(max_age_rounds=step[1])
+
+
+def _crawl_state(eng, seeds) -> dict:
+    """What a crawl leaves behind, in comparable form (``part_id`` is
+    task lineage, not state)."""
+    m = eng.read_manifest()
+    seen = eng.seen()
+    return {
+        "records": sorted(
+            json.dumps(r.asDict(), sort_keys=True)
+            for r in eng.records().drop("part_id").collect()
+        ),
+        "seen": {r["url_canon"] for r in seen.collect()},
+        "seen_count": seen.count(),
+        "manifest": {
+            k: m.get(k) for k in ("round", "done", "n_pending", "seen_total", "seen_base")
+        },
+        "results": eng.assemble_results(seeds),
+    }
+
+
+# case -> (steps before the crash, the step that crashes, its crash
+# point (state dir, round), the steps a fresh engine runs next,
+# seen_compact_every).  The uncrashed reference runs the steps before
+# and next only.  On the fixture crawl round 0 fetches the seeds, round
+# 1 the details, and round 2 finds the frontier empty.
+CRASH_CASES = {
+    "a-records": (["round"], "run", ("records", 1), ["run"], 64),
+    "b-frontier": (["round"], "run", ("frontier", 2), ["run"], 64),
+    "c-compaction-snapshot": (["round"], "run", ("seen", 2), ["run"], 2),
+    "d-expire-seen": (["run"], ("expire", 0), ("seen", 3), [("expire", 0), "run"], 64),
+    "e-records-then-expire": (["round"], "run", ("records", 1), [("expire", 100), "run"], 64),
+}
+_UNCRASHED: dict = {}
+
+
+@pytest.mark.parametrize("case", [
+    pytest.param(c, marks=pytest.mark.xfail(
+        strict=True, reason="records() returns the uncommitted records/r1 next to its re-crawl"))
+    if c == "e-records-then-expire" else c
+    for c in CRASH_CASES
+])
+def test_crash_point_resume_matches_uncrashed(spark, corpus, tmp_path, case):
+    """Round atomicity: a crash right after any state write, then a fresh
+    engine on the same state_dir, ends in the state of a run that took
+    the same steps without crashing — and in the simulator's crawl."""
+    pages, storage_json, store = corpus
+    seeds = [testgen.list_url(testgen.host_name(i)) for i in range(3)]
+    before, crashing, (kind, rnd), after, compact_every = CRASH_CASES[case]
+
+    def engine(state):
+        return CrawlEngine(
+            spark, pages, storage_json, state,
+            state_partitions=2, seen_compact_every=compact_every,
+        )
+
+    eng = engine(tmp_path / "crashed")
+    eng.seed(seeds)
+    for step in before:
+        _step(eng, step)
+    with pytest.raises(_Crash), _crash_after_write(kind, rnd):
+        _step(eng, crashing)
+    eng = engine(tmp_path / "crashed")
+    for step in after:
+        _step(eng, step)
+    got = _crawl_state(eng, seeds)
+
+    key = (repr(before + after), compact_every)
+    if key not in _UNCRASHED:
+        ref = engine(tmp_path / "uncrashed")
+        ref.seed(seeds)
+        for step in before + after:
+            _step(ref, step)
+        _UNCRASHED[key] = _crawl_state(ref, seeds)
+    assert got == _UNCRASHED[key]
+    assert got["manifest"]["seen_total"] == got["seen_count"]
+
+    storage = JSONRuleStorage(**json.loads(storage_json))
+    seen_sim: dict = {}
+    assert got["results"] == [simulate_crawl(storage, store, u, seen=seen_sim) for u in seeds]
+    assert got["seen"] == set(seen_sim)
 
 
 def test_crawl_politeness_budget_rounds(spark, corpus, tmp_path):
