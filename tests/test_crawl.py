@@ -140,16 +140,17 @@ CRASH_CASES = {
     "d-expire-seen": (["run"], ("expire", 0), ("seen", 3), [("expire", 0), "run"], 64),
     "e-records-then-expire": (["round"], "run", ("records", 1), [("expire", 100), "run"], 64),
 }
-_UNCRASHED: dict = {}
 
 
-@pytest.mark.parametrize("case", [
-    pytest.param(c, marks=pytest.mark.xfail(
-        strict=True, reason="records() returns the uncommitted records/r1 next to its re-crawl"))
-    if c == "e-records-then-expire" else c
-    for c in CRASH_CASES
-])
-def test_crash_point_resume_matches_uncrashed(spark, corpus, tmp_path, case):
+@pytest.fixture(scope="module")
+def uncrashed() -> dict:
+    """(steps, seen_compact_every) -> _crawl_state of the uncrashed
+    reference run, shared by the crash cases that take the same steps."""
+    return {}
+
+
+@pytest.mark.parametrize("case", list(CRASH_CASES))
+def test_crash_point_resume_matches_uncrashed(spark, corpus, tmp_path, uncrashed, case):
     """Round atomicity: a crash right after any state write, then a fresh
     engine on the same state_dir, ends in the state of a run that took
     the same steps without crashing — and in the simulator's crawl."""
@@ -170,18 +171,21 @@ def test_crash_point_resume_matches_uncrashed(spark, corpus, tmp_path, case):
     with pytest.raises(_Crash), _crash_after_write(kind, rnd):
         _step(eng, crashing)
     eng = engine(tmp_path / "crashed")
+    # records() returns the committed rounds only, never the crashed one
+    committed = eng.read_manifest()["round"]
+    assert {r[0] for r in eng.records().select("round").distinct().collect()} == set(range(committed))
     for step in after:
         _step(eng, step)
     got = _crawl_state(eng, seeds)
 
     key = (repr(before + after), compact_every)
-    if key not in _UNCRASHED:
+    if key not in uncrashed:
         ref = engine(tmp_path / "uncrashed")
         ref.seed(seeds)
         for step in before + after:
             _step(ref, step)
-        _UNCRASHED[key] = _crawl_state(ref, seeds)
-    assert got == _UNCRASHED[key]
+        uncrashed[key] = _crawl_state(ref, seeds)
+    assert got == uncrashed[key]
     assert got["manifest"]["seen_total"] == got["seen_count"]
 
     storage = JSONRuleStorage(**json.loads(storage_json))
@@ -350,36 +354,55 @@ def test_crawl_with_pluggable_adapter(spark, corpus, tmp_path):
 
 
 def test_seen_deltas_are_append_only_and_compact(spark, corpus, tmp_path):
-    """Seen state is an append-only delta log: seen/r{k+1} holds exactly
-    round k's scheduled URLs (O(round) I/O, never O(total)), and TTL
-    maintenance compacts the log and advances seen_base."""
+    """The seen set is the append-only records log: round k's slice
+    (crawled_round == k) holds exactly round k's scheduled URLs (O(round)
+    I/O, never O(total)), the slices are disjoint, and TTL maintenance
+    compacts the log into the snapshot seen/r{seen_base}.  Right after
+    seed() — no snapshot, no records — the seen set is empty and
+    maintenance runs on it."""
     pages, storage_json, store = corpus
     seeds = [testgen.list_url(testgen.host_name(i)) for i in range(3)]
+    seed_urls = {canonicalize_url(u) for u in seeds}
+
+    fresh = CrawlEngine(spark, pages, storage_json, tmp_path / "state_fresh", state_partitions=2)
+    fresh.seed(seeds)
+    assert fresh.seen().count() == 0
+    stats = fresh.expire_and_requeue(max_age_rounds=0)
+    assert (stats["seen_kept"], stats["n_pending"]) == (0, len(seeds))
+    assert fresh.read_manifest()["seen_base"] == 1
+    fresh.run_round()
+    assert {(r["url_canon"], r["crawled_round"]) for r in fresh.seen().collect()} == {
+        (u, 1) for u in seed_urls
+    }
+
     eng = CrawlEngine(spark, pages, storage_json, tmp_path / "state_delta", state_partitions=2)
     eng.seed(seeds)
     rounds = eng.run(max_rounds=10)
 
-    # delta r1 = round 0's scheduled set (the seeds), delta r2 = round 1's
-    d1 = spark.read.parquet(str(tmp_path / "state_delta/seen/r1"))
-    assert {r["url_canon"] for r in d1.collect()} == {canonicalize_url(u) for u in seeds}
-    assert d1.select("crawled_round").distinct().collect()[0][0] == 0
-    d2 = spark.read.parquet(str(tmp_path / "state_delta/seen/r2"))
-    assert d2.count() == rounds[1]["scheduled"]
+    # slice 0 = round 0's scheduled set (the seeds), slice 1 = round 1's
+    slices: dict = {}
+    for r in eng.seen().collect():
+        slices.setdefault(r["crawled_round"], []).append(r["url_hash"])
+    assert set(slices) == {0, 1}
+    assert {r["url_canon"] for r in eng.seen().filter("crawled_round = 0").collect()} == seed_urls
+    assert len(slices[1]) == rounds[1]["scheduled"]
     total = eng.seen().count()
-    assert total == d1.count() + d2.count()  # union of disjoint deltas
+    assert total == len(slices[0]) + len(slices[1])  # union of disjoint slices
+    assert len(set(slices[0]) | set(slices[1])) == total
 
-    # maintenance compacts: seen_base advances, membership unchanged
-    # (max_age large → nothing expires)
+    # maintenance compacts: seen_base advances, the snapshot holds the
+    # whole log, membership unchanged (max_age large → nothing expires)
     eng.expire_and_requeue(max_age_rounds=100)
     m = eng.read_manifest()
     assert m["seen_base"] == m["round"]
+    assert spark.read.parquet(eng._p("seen", m["seen_base"])).count() == total
     assert eng.seen().count() == total
 
 
 def test_seen_inline_autocompaction(spark, corpus, tmp_path):
     """With seen_compact_every=2 the second productive round folds the
-    whole log into its delta and advances seen_base — deep crawls never
-    read an unbounded union of deltas."""
+    whole log into the snapshot seen/r2 and advances seen_base — deep
+    crawls never read an unbounded union of records."""
     pages, storage_json, store = corpus
     seeds = [testgen.list_url(testgen.host_name(i)) for i in range(3)]
     eng = CrawlEngine(
@@ -405,7 +428,7 @@ def test_seen_inline_autocompaction(spark, corpus, tmp_path):
 
 def test_seen_log_long_horizon_soak(spark, tmp_path):
     """100+-round soak over a micro-corpus: TTL recrawl cycles drive the
-    append-only seen-delta log through many inline compactions and a
+    append-only seen log (the records) through many inline compactions and a
     maintenance compaction per cycle; a mid-soak engine restart lands
     exactly ON an inline-compaction round.  Invariants checked every
     cycle: seen membership == the full site (no false negatives after
@@ -469,12 +492,58 @@ def test_seen_log_long_horizon_soak(spark, tmp_path):
         if base > last_base:
             compactions_seen += 1
         last_round, last_base = m["round"], base
-        # every delta inside [seen_base, round] exists on disk
-        for r in range(base, last_round + 1):
-            assert Path(eng._p("seen", r)).exists() or r == last_round
+        # no hole in the live view: the snapshot seen/r{seen_base} and
+        # every records/r{j}, j in [seen_base, round), exist on disk
+        assert base == 0 or Path(eng._p("seen", base)).exists()
+        for r in range(base, last_round):
+            assert Path(eng._p("records", r)).exists()
 
     assert restarted and compactions_seen >= 10
     assert last_round >= 100  # the soak really covered 100+ rounds
+
+
+def test_state_write_protocol(spark, corpus, tmp_path, monkeypatch):
+    """Parquet writes per state dir, step by step: the records are the
+    seen log, so only a compaction (inline or TTL maintenance) writes
+    seen/.  The manifest's (round, seen_base, seen_total) after each
+    step are pinned, and seen_total is the seen set's size."""
+    from collections import Counter
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    pages, storage_json, _ = corpus
+    seeds = [testgen.list_url(testgen.host_name(i)) for i in range(3)]
+    writes: Counter = Counter()
+    original = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        writes[Path(str(path)).parent.name] += 1
+        return original(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    eng = CrawlEngine(spark, pages, storage_json, tmp_path / "state", state_partitions=2)
+
+    def compacting_round():
+        eng.seen_compact_every = 2
+        eng.run_round()
+
+    steps = [
+        # (step, parquet writes, (round, seen_base, seen_total) after it)
+        (lambda: eng.seed(seeds), {"frontier": 1}, (0, 0, 0)),
+        (eng.run_round, {"records": 1, "frontier": 1}, (1, 0, 3)),
+        (compacting_round, {"records": 1, "seen": 1, "frontier": 1}, (2, 2, 11)),
+        (eng.run_round, {}, (2, 2, 11)),  # empty frontier: done
+        (lambda: eng.expire_and_requeue(max_age_rounds=100), {"seen": 1, "frontier": 1}, (3, 3, 11)),
+        (lambda: eng.expire_and_requeue(max_age_rounds=0), {"seen": 1, "frontier": 1}, (4, 4, 0)),
+        (eng.run_round, {"records": 1, "frontier": 1}, (5, 4, 11)),
+    ]
+    for step, expected_writes, expected_manifest in steps:
+        writes.clear()
+        step()
+        m = eng.read_manifest()
+        assert dict(writes) == expected_writes
+        assert (m["round"], m["seen_base"], m["seen_total"]) == expected_manifest
+        assert eng.seen().count() == m["seen_total"]
 
 
 def test_expire_and_requeue_freshness_ranked(spark, corpus, tmp_path):

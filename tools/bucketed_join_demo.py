@@ -1,10 +1,10 @@
 #!/usr/bin/env python3
 """Evidence: bucketed state tables make the seen anti-join shuffle-free.
 
-The crawl engine writes its parquet state repartitioned by
-``pmod(url_hash, n)`` so successive rounds read co-partitioned files,
-but plain parquet carries no bucketing metadata — Spark still plans an
-Exchange on BOTH sides of the candidates-vs-seen anti-join.  A real
+The crawl engine reads its seen set from plain parquet (the records
+log plus compaction snapshots), which carries no bucketing metadata —
+Spark plans an Exchange on BOTH sides of the candidates-vs-seen
+anti-join.  A real
 deployment stores the seen log as bucketed tables (Iceberg bucket
 transform / Hive bucketBy): the same anti-join then plans with ZERO
 Exchange (both scans report ``Bucketed: true``) — at a 10^10-row seen

@@ -1,10 +1,10 @@
 """Round-based distributed crawl: frontier → schedule → fetch → extract.
 
-Each scheduling round runs three Spark actions over checkpointed
-parquet state: the records, seen-delta and frontier writes, plus a URL
-collect when the batch is fetched by In-list (SURVEY.md §3 EP1
-mapping).  Broadcasts and AQE stages split those actions into more
-Spark jobs: about 13 a round on the 400-page ``crawl_polite`` benchmark.
+Each scheduling round runs two Spark actions over checkpointed parquet
+state: the records and frontier writes, plus a URL collect when the
+batch is fetched by In-list (SURVEY.md §3 EP1 mapping).  Broadcasts
+and AQE stages split those actions into more Spark jobs: about 11 a
+round on the 400-page ``crawl_polite`` benchmark.
 The reference's recursive thread fan-out (crawler.py:156-189) becomes
 breadth-first rounds; result nesting is restored from (parent_url,
 list_index) so the final output is order-identical to the reference's
@@ -15,24 +15,24 @@ dirs + an atomically swapped manifest):
 
     manifest.json                    {"round": k, "done": bool, "seen_base": b, ...}
     frontier/r{k}/  (parquet)        pending URLs entering round k
-    seen/r{k}/      (parquet)        APPEND-ONLY delta: URLs crawled IN
-                                     round k-1 (the live seen set is the
-                                     union of deltas r{seen_base}..r{k};
-                                     TTL maintenance compacts and bumps
-                                     seen_base).  Per-round seen I/O is
-                                     O(round size), never O(total) — at
-                                     a 10^10-URL seen set a full rewrite
-                                     per round would dominate everything
-    records/r{k}/   (parquet)        extraction outputs of round k
+    records/r{k}/   (parquet)        extraction outputs of round k, one
+                                     row per scheduled URL — also the
+                                     seen log: the live seen set is
+                                     seen/r{b} ∪ records/r{b..k-1},
+                                     projected to (url_hash, url_canon,
+                                     round), so per-round seen I/O is
+                                     the records write itself
+    seen/r{b}/      (parquet)        compaction SNAPSHOT: every URL
+                                     crawled before round b (written by
+                                     inline compaction and TTL
+                                     maintenance, which advance
+                                     seen_base to b; none while b = 0)
     metrics/r{k}.json                per-round counters + per-partition lineage
 
 Resume = read manifest, continue from round k; a crashed round leaves
 the previous manifest intact (write new dirs first, swap manifest last).
 
 Scale notes (10^10-URL design):
-- frontier/seen parquet are written repartitioned by ``pmod(url_hash)``
-  so the anti-join and the next round's schedule shuffle read
-  co-partitioned buckets (real deployments: Iceberg bucket transform);
 - the fetch is an equi-join frontier→pages on url (shuffle hash join;
   pages side pruned to (url, text/html) columns only);
 - the seen-set anti-join is bloom-accelerated (frontier.seen);
@@ -43,6 +43,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from pathlib import Path
 from typing import Dict, List, Optional, Union
@@ -183,26 +184,33 @@ class CrawlEngine:
         return str(self.state_dir / kind / f"r{rnd}")
 
     def _seen_view(self, manifest: dict, upto_rnd: int) -> DataFrame:
-        """The live seen set: union of the append-only deltas from the
-        last compaction (manifest seen_base) through ``upto_rnd``.  Each
-        delta is bucket-repartitioned parquet; the union preserves the
-        narrow (url_hash, url_canon, crawled_round) schema."""
+        """The live seen set through round ``upto_rnd``: the snapshot
+        ``seen/r{seen_base}`` (only once a compaction wrote it) plus the
+        records of rounds seen_base..upto_rnd, projected to the narrow
+        (url_hash, url_canon, crawled_round) schema — the records hold
+        one row per scheduled URL, so they are the seen log."""
         base = int(manifest.get("seen_base", 0) or 0)
-        wanted = [(r, self._p("seen", r)) for r in range(base, upto_rnd + 1)]
-        missing = [r for r, p in wanted if not Path(p).exists()]
-        if missing and len(missing) < len(wanted):
-            # every committed round writes its delta: a hole inside
-            # [seen_base, upto_rnd] means lost/corrupted state, and
-            # silently shrinking the seen set would re-crawl URLs
+        snapshot = [self._p("seen", base)] if base > 0 else []
+        log = [self._p("records", r) for r in range(base, upto_rnd + 1)]
+        missing = [p for p in snapshot + log if not Path(p).exists()]
+        if missing:
+            # every committed round writes its records and every
+            # compaction its snapshot: a hole means lost/corrupted
+            # state, and silently shrinking the seen set would re-crawl
             raise FileNotFoundError(
-                f"seen delta missing for round(s) {missing} "
-                f"(seen_base={base}, upto={upto_rnd}) — state is "
-                "corrupted, restore or re-seed"
+                f"seen state missing: {missing} (seen_base={base}, "
+                f"upto={upto_rnd}) — state is corrupted, restore or re-seed"
             )
-        paths = [p for _, p in wanted] if not missing else []
-        if not paths:
-            raise FileNotFoundError("no seen state; call seed() first")
-        return self.spark.read.schema(SEEN_SCHEMA).parquet(*paths)
+        parts = [self.spark.read.schema(SEEN_SCHEMA).parquet(*snapshot)] if snapshot else []
+        if log:
+            parts.append(
+                self.spark.read.schema("url_hash long, url_canon string, round int")
+                .parquet(*log)
+                .withColumnRenamed("round", "crawled_round")
+            )
+        if not parts:
+            return self.spark.createDataFrame([], SEEN_SCHEMA)
+        return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
     # -------------------------------------------------------------- seeding
     def seed(self, urls: List[str], priority: float = 0.0) -> None:
@@ -222,10 +230,6 @@ class CrawlEngine:
         )
         frontier = add_url_keys(df).select(*_META_COLS)
         self._write_state(frontier, self._p("frontier", 0), rows_hint=len(urls))
-        empty_seen = self.spark.createDataFrame(
-            [], "url_hash long, url_canon string, crawled_round int"
-        )
-        self._write_state(empty_seen, self._p("seen", 0), partitions=1)
         self._commit_manifest(
             {
                 "round": 0,
@@ -284,10 +288,6 @@ class CrawlEngine:
         )
         self._write_state(frontier, self._p("frontier", 0))
         n = int(obs.get["n"])
-        empty_seen = self.spark.createDataFrame(
-            [], "url_hash long, url_canon string, crawled_round int"
-        )
-        self._write_state(empty_seen, self._p("seen", 0), partitions=1)
         self._commit_manifest(
             {
                 "round": 0,
@@ -303,11 +303,10 @@ class CrawlEngine:
         self,
         df: DataFrame,
         path: str,
-        partitions: Optional[int] = None,
         rows_hint: Optional[int] = None,
     ) -> None:
-        # bucket state by url_hash so successive rounds read co-partitioned;
-        # partition count scales with the known state size (rows_hint from
+        # hash state by url_hash (deterministic file placement); partition
+        # count scales with the known state size (rows_hint from
         # the round's observed counters) so small states don't pay
         # state_partitions-many task launches per write.  Floor of
         # min(8, n): rows_hint is only a hint (frontier fan-out can blow
@@ -315,21 +314,21 @@ class CrawlEngine:
         # encode — a measured ~2 s Amdahl tax per round that never
         # scales with cores.  Eight tasks keep small-state writes cheap
         # while bounding the serial fraction.
-        n = partitions or self.state_partitions
+        n = self.state_partitions
         if rows_hint is not None:
             n = max(min(8, n), min(n, rows_hint // 500_000 + 1))
-        df.repartition(n, F.pmod(F.col("url_hash"), F.lit(n)) if "url_hash" in df.columns else F.lit(0)).write.mode(
-            "overwrite"
-        ).parquet(path)
+        df.repartition(n, F.pmod(F.col("url_hash"), F.lit(n))).write.mode("overwrite").parquet(path)
 
     # --------------------------------------------------------------- rounds
     def run_round(self) -> Dict[str, int]:
-        """One scheduling round in exactly THREE Spark actions (records
-        write, seen write, frontier write; an In-list fetch adds a
-        collect of the batch's URLs) — per-round stats ride on the
-        writes via ``Observation`` instead of separate count() jobs, and
-        frontier metadata is carried through the extraction UDF instead
-        of re-joined, so nothing in the round is computed twice."""
+        """One scheduling round in exactly TWO Spark actions (records
+        write, frontier write; an In-list fetch adds a collect of the
+        batch's URLs, an inline compaction a seen snapshot write) —
+        per-round stats ride on the writes via ``Observation`` instead
+        of separate count() jobs, frontier metadata is carried through
+        the extraction UDF instead of re-joined, and the records written
+        are the round's seen-log entry, so nothing in the round is
+        computed or stored twice."""
         manifest = self.read_manifest()
         rnd = manifest["round"]
         if manifest.get("done"):
@@ -454,45 +453,25 @@ class CrawlEngine:
                 decided.unpersist()
             return {"round": rnd, "scheduled": 0, "done": True}
 
-        # ACTION 2 — seen-set DELTA: only this round's scheduled URLs
-        # are written (append-only log; the live set is the union of
-        # deltas, see _seen_view).  No dropDuplicates: the frontier is
-        # unique by url_hash (seeds deduped at seed(); candidates
-        # window-deduped, anti-joined vs seen AND vs the deferred
-        # backlog each round) and disjoint from seen, so the deltas are
-        # pairwise disjoint by construction.  crawled_round enables
-        # TTL-based recrawl (expire_and_requeue compacts + bumps
-        # seen_base).  Per-round seen I/O is O(n_scheduled), not
-        # O(seen_total) — the difference between a 10^10-row rewrite
-        # per round and a round-sized append.
-        delta = scheduled.select(
-            "url_hash", "url_canon", F.lit(rnd).alias("crawled_round")
-        )
+        # the records just written are this round's seen-log entry.  No
+        # dedup: the frontier is unique by url_hash (seeds deduped at
+        # seed(); candidates window-deduped, anti-joined vs seen AND vs
+        # the deferred backlog each round) and disjoint from seen, so
+        # the rounds' records are pairwise disjoint by construction.
         seen_base = int(manifest.get("seen_base", 0) or 0)
-        compacting = rnd + 1 - seen_base >= self.seen_compact_every
-        if compacting:
-            # inline compaction: fold the whole log into this delta so
-            # deep crawls never read an unbounded union.  COST NOTE:
-            # the compacting round pays a one-time O(seen_total) write
-            # (vs the usual O(round)); at 10^10 seen rows production
+        seen_total = int(manifest.get("seen_total", 0)) + n_scheduled
+        if rnd + 1 - seen_base >= self.seen_compact_every:
+            # inline compaction: fold the log into one snapshot so deep
+            # crawls never read an unbounded union.  COST NOTE: the
+            # compacting round pays a one-time O(seen_total) write (vs
+            # no seen write at all); at 10^10 seen rows production
             # would run this as an asynchronous Iceberg rewrite
-            # (rewrite_data_files) off the hot path instead of inline —
-            # the inline fold is TTL-maintenance-grade, not per-round.
-            delta = self._seen_view(manifest, rnd).unionByName(delta)
-        obs_seen = Observation()
-        delta = delta.observe(obs_seen, F.count(F.lit(1)).alias("n"))
-        self._write_state(
-            delta,
-            self._p("seen", rnd + 1),
-            rows_hint=(int(manifest.get("seen_total", 0)) if compacting else 0)
-            + n_scheduled,
-        )
-        if compacting:
-            seen_total = int(obs_seen.get["n"])
+            # (rewrite_data_files) off the hot path instead of inline.
+            self._write_state(
+                self._seen_view(manifest, rnd), self._p("seen", rnd + 1), rows_hint=seen_total
+            )
             seen_base = rnd + 1
-        else:
-            seen_total = int(manifest.get("seen_total", 0)) + int(obs_seen.get["n"])
-        seen_next = self._seen_view({"seen_base": seen_base}, rnd + 1)
+        seen_next = self._seen_view({"seen_base": seen_base}, rnd)
 
         # frontier expansion: __request__ leaves -> next round candidates
         # (partial schema = projection: only the three expansion columns
@@ -572,7 +551,7 @@ class CrawlEngine:
             # crawl-delay budgets flow in separately via `budgets`
             candidates = apply_robots(candidates, self.robots).select(*_META_COLS)
 
-        # ACTION 3 — dedup (bloom pre-filter + exact anti-join vs seen,
+        # ACTION 2 — dedup (bloom pre-filter + exact anti-join vs seen,
         # then vs the deferred backlog) and next-frontier sink.  The
         # bloom is sized from the observed seen_total (no count() job)
         # and only engaged once the seen set is big enough to repay its
@@ -640,10 +619,15 @@ class CrawlEngine:
         """TTL recrawl: drop seen entries older than ``max_age_rounds``
         and requeue their URLs into the frontier (a maintenance round —
         state advances to round+1 so no path is read and rewritten in
-        place).  The Bloom/cuckoo accelerators are derived state and
-        follow automatically (rebuilt per round here; at 10^10 scale the
-        cuckoo sidecar's delete() patches filters incrementally instead,
-        frontier/cuckoo.py).
+        place).  It doubles as COMPACTION: the kept set becomes the
+        snapshot ``seen/r{round+1}`` and seen_base advances past the
+        records log.  The maintenance round takes round ``round``'s
+        slot, so a ``records/r{round}`` left by a round that crashed
+        before its commit is dropped, never returned by records() or
+        counted as seen.  The Bloom/cuckoo accelerators are derived
+        state and follow automatically (rebuilt per round here; at 10^10
+        scale the cuckoo sidecar's delete() patches filters
+        incrementally instead, frontier/cuckoo.py).
 
         ``history`` (optional): a (url_canon, fetch_count, change_count)
         table from the caller's fetch log.  When given, requeues are
@@ -654,10 +638,9 @@ class CrawlEngine:
         """
         manifest = self.read_manifest()
         rnd = manifest["round"]
-        # maintenance doubles as COMPACTION: the kept set is written as
-        # one delta at r+1 and seen_base advances past the old deltas,
-        # bounding the union width the hot rounds read
-        seen = self._seen_view(manifest, rnd)
+        seen = self._seen_view(manifest, rnd - 1)
+        if Path(self._p("records", rnd)).exists():
+            shutil.rmtree(self._p("records", rnd))
         pending = self.spark.read.schema(FRONTIER_SCHEMA).parquet(self._p("frontier", rnd))
 
         cutoff = rnd - max_age_rounds
@@ -727,7 +710,7 @@ class CrawlEngine:
                 "done": n_pending == 0,
                 "n_pending": n_pending,
                 "seen_total": seen_kept,
-                "seen_base": rnd + 1,  # compaction: old deltas superseded
+                "seen_base": rnd + 1,  # compaction: the log is superseded
                 "last_stats": stats,
             }
         )
@@ -744,15 +727,18 @@ class CrawlEngine:
 
     # -------------------------------------------------------------- outputs
     def records(self) -> DataFrame:
+        """Records of the committed rounds 0..round-1 (a maintenance
+        round writes none; round ``round`` is uncommitted, or the empty
+        finish of a done crawl)."""
         rnd = self.read_manifest()["round"]
-        paths = [self._p("records", r) for r in range(rnd + 1) if Path(self._p("records", r)).exists()]
+        paths = [self._p("records", r) for r in range(rnd) if Path(self._p("records", r)).exists()]
         return self.spark.read.parquet(*paths)
 
     def seen(self) -> DataFrame:
         manifest = self.read_manifest()
         if manifest["round"] < 0:
             raise FileNotFoundError("no seen state; call seed() first")
-        return self._seen_view(manifest, manifest["round"])
+        return self._seen_view(manifest, manifest["round"] - 1)
 
     def assemble_results(self, seed_urls: List[str]) -> List[dict]:
         """Driver-side re-nesting of records into reference-shaped crawl
