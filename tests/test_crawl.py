@@ -5,7 +5,9 @@ import json
 from contextlib import contextmanager
 from pathlib import Path
 
+import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from uniparser_spark import JSONRuleStorage, testgen
 from uniparser_spark.crawl import CrawlEngine, simulate_crawl
@@ -28,7 +30,7 @@ def test_crawl_matches_simulator(spark, corpus, tmp_path):
     pages, storage_json, store = corpus
     seeds = [testgen.list_url(testgen.host_name(i)) for i in range(3)]
 
-    engine = CrawlEngine(spark, pages, storage_json, tmp_path / "state", state_partitions=4)
+    engine = CrawlEngine(spark, pages, storage_json, tmp_path / "state")
     engine.seed(seeds)
     rounds = engine.run(max_rounds=10)
     assert rounds[-1]["done"] or rounds[-1]["scheduled"] == 0
@@ -59,11 +61,11 @@ def test_crawl_resume_from_checkpoint(spark, corpus, tmp_path):
     seeds = [testgen.list_url(testgen.host_name(i)) for i in range(3)]
     state = tmp_path / "state_resume"
 
-    first = CrawlEngine(spark, pages, storage_json, state, state_partitions=4)
+    first = CrawlEngine(spark, pages, storage_json, state)
     first.seed(seeds)
     first.run_round()  # crawl only the seeds, then "crash"
 
-    resumed = CrawlEngine(spark, pages, storage_json, state, state_partitions=4)
+    resumed = CrawlEngine(spark, pages, storage_json, state)
     assert resumed.read_manifest()["round"] == 1
     resumed.run(max_rounds=10)
 
@@ -100,6 +102,22 @@ def _crash_after_write(kind: str, rnd: int):
         DataFrameWriter.parquet = original
 
 
+_UDF_FAILURE = "injected UDF failure"
+
+
+def _failing_pages(pages, url: str):
+    """``pages`` whose ``text`` passes through a pandas UDF that raises a
+    non-data error on ``url``: every job that scans it fails."""
+
+    @F.pandas_udf("string")
+    def text_or_raise(urls: pd.Series, texts: pd.Series) -> pd.Series:
+        if (urls == url).any():
+            raise RuntimeError(f"{_UDF_FAILURE} on {url}")
+        return texts
+
+    return pages.withColumn("text", text_or_raise("url", "text"))
+
+
 def _step(eng, step) -> None:
     if step == "round":
         eng.run_round()
@@ -129,16 +147,22 @@ def _crawl_state(eng, seeds) -> dict:
 
 
 # case -> (steps before the crash, the step that crashes, its crash
-# point (state dir, round), the steps a fresh engine runs next,
-# seen_compact_every).  The uncrashed reference runs the steps before
-# and next only.  On the fixture crawl round 0 fetches the seeds, round
-# 1 the details, and round 2 finds the frontier empty.
+# point, the steps a fresh engine runs next, seen_compact_every).  A
+# crash point (state dir, round) raises right after that state write;
+# ("udf", url) runs the crashing step on pages that fail in a pandas UDF
+# at url, so the round's records job fails.  The uncrashed reference
+# runs the steps before and next only.  On the fixture crawl round 0
+# fetches the seeds, round 1 the details, and round 2 finds the
+# frontier empty.
 CRASH_CASES = {
     "a-records": (["round"], "run", ("records", 1), ["run"], 64),
     "b-frontier": (["round"], "run", ("frontier", 2), ["run"], 64),
     "c-compaction-snapshot": (["round"], "run", ("seen", 2), ["run"], 2),
     "d-expire-seen": (["run"], ("expire", 0), ("seen", 3), [("expire", 0), "run"], 64),
     "e-records-then-expire": (["round"], "run", ("records", 1), [("expire", 100), "run"], 64),
+    "f-udf-failure": (
+        ["round"], "run", ("udf", testgen.detail_url(testgen.host_name(0), 0)), ["run"], 64
+    ),
 }
 
 
@@ -156,20 +180,25 @@ def test_crash_point_resume_matches_uncrashed(spark, corpus, tmp_path, uncrashed
     the same steps without crashing — and in the simulator's crawl."""
     pages, storage_json, store = corpus
     seeds = [testgen.list_url(testgen.host_name(i)) for i in range(3)]
-    before, crashing, (kind, rnd), after, compact_every = CRASH_CASES[case]
+    before, crashing, (kind, at), after, compact_every = CRASH_CASES[case]
 
-    def engine(state):
+    def engine(state, pages=pages):
         return CrawlEngine(
             spark, pages, storage_json, state,
-            state_partitions=2, seen_compact_every=compact_every,
+            seen_compact_every=compact_every,
         )
 
     eng = engine(tmp_path / "crashed")
     eng.seed(seeds)
     for step in before:
         _step(eng, step)
-    with pytest.raises(_Crash), _crash_after_write(kind, rnd):
-        _step(eng, crashing)
+    if kind == "udf":
+        eng = engine(tmp_path / "crashed", pages=_failing_pages(pages, at))
+        with pytest.raises(Exception, match=_UDF_FAILURE):
+            _step(eng, crashing)
+    else:
+        with pytest.raises(_Crash), _crash_after_write(kind, at):
+            _step(eng, crashing)
     eng = engine(tmp_path / "crashed")
     # records() returns the committed rounds only, never the crashed one
     committed = eng.read_manifest()["round"]
@@ -194,6 +223,47 @@ def test_crash_point_resume_matches_uncrashed(spark, corpus, tmp_path, uncrashed
     assert got["seen"] == set(seen_sim)
 
 
+def test_records_before_first_commit_is_empty(spark, corpus, tmp_path):
+    """Right after seed() no round is committed: records() is an empty
+    frame with the columns a committed round's records carry."""
+    pages, storage_json, _ = corpus
+    eng = CrawlEngine(spark, pages, storage_json, tmp_path / "state_empty")
+    eng.seed([testgen.list_url(testgen.host_name(0))])
+    empty = eng.records()
+    assert empty.count() == 0
+    eng.run_round()
+    recs = eng.records()
+    assert recs.count() == 1
+    assert [(f.name, f.dataType) for f in empty.schema] == [
+        (f.name, f.dataType) for f in recs.schema
+    ]
+
+
+def test_crawl_jobs_per_round_pinned(spark, corpus, tmp_path):
+    """Spark jobs each working round of the fixture crawl runs, counted
+    in a job group: the round's two actions plus the broadcasts and AQE
+    stages they split into.  A change to the round's plan shows here as
+    a count."""
+    pages, storage_json, _ = corpus
+    seeds = [testgen.list_url(testgen.host_name(i)) for i in range(3)]
+    pages.count()  # the cached corpus is built before any round runs
+    eng = CrawlEngine(spark, pages, storage_json, tmp_path / "state_jobs")
+    eng.seed(seeds)
+    sc = spark.sparkContext
+    jobs = []
+    try:
+        while True:
+            group = f"test_crawl_jobs_round_{len(jobs)}"
+            sc.setJobGroup(group, group)
+            if eng.run_round().get("done"):
+                break
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == [7, 7]
+
+
 def test_crawl_politeness_budget_rounds(spark, corpus, tmp_path):
     """budget=1 on a host => its 3 detail pages take 3 rounds; final
     results still identical (politeness changes schedule, not results)."""
@@ -203,7 +273,7 @@ def test_crawl_politeness_budget_rounds(spark, corpus, tmp_path):
     budgets = spark.createDataFrame([(host0, 1)], "host string, budget int")
 
     engine = CrawlEngine(
-        spark, pages, storage_json, tmp_path / "state_budget", budgets=budgets, state_partitions=4
+        spark, pages, storage_json, tmp_path / "state_budget", budgets=budgets
     )
     engine.seed(seeds)
     rounds = engine.run(max_rounds=10)
@@ -225,7 +295,7 @@ def test_crawl_rule_miss_and_fetch_miss(spark, tmp_path):
     ]
     import uniparser_spark.config as cfg
 
-    engine = CrawlEngine(spark, pages, cfg.json_dumps(storage), tmp_path / "state_miss", state_partitions=2)
+    engine = CrawlEngine(spark, pages, cfg.json_dumps(storage), tmp_path / "state_miss")
     engine.seed([testgen.list_url(host)])
     engine.run(max_rounds=5)
     [result] = engine.assemble_results([testgen.list_url(host)])
@@ -236,11 +306,11 @@ def test_crawl_rule_miss_and_fetch_miss(spark, tmp_path):
 
 
 def test_crawl_adaptive_paths_agree(spark, corpus, tmp_path, monkeypatch):
-    """The adaptive strategy switches (bloom seen-filter engaged,
-    broadcast fetch without the In-list pushdown, shuffle fetch) must not
-    change any output: records, seen set, and final results are
-    identical.  One seed is absent from the pages table, so every fetch
-    path also carries a miss."""
+    """The adaptive strategy switches (bloom seen-filter engaged, shuffle
+    fetch instead of the default broadcast fetch) must not change any
+    output: records, seen set, and final results are identical.  One
+    seed is absent from the pages table, so both fetch paths also carry
+    a miss."""
     pages, storage_json, store = corpus
     seeds = [testgen.list_url(testgen.host_name(i)) for i in range(3)]
     seeds.append(f"https://{testgen.host_name(0)}/item-999999/")
@@ -249,7 +319,6 @@ def test_crawl_adaptive_paths_agree(spark, corpus, tmp_path, monkeypatch):
     variants = {
         "default": ({}, {}),
         "bloom": ({"bloom_min_seen": 0}, {}),
-        "broadcast_fetch": ({}, {"ISIN_FETCH_MAX": 0}),
         "shuffle_fetch": ({}, {"BROADCAST_FETCH_MAX": 0}),
     }
     outputs = {}
@@ -257,14 +326,7 @@ def test_crawl_adaptive_paths_agree(spark, corpus, tmp_path, monkeypatch):
         with monkeypatch.context() as mp:
             for const, value in consts.items():
                 mp.setattr(crawl_engine, const, value)
-            eng = CrawlEngine(
-                spark,
-                pages,
-                storage_json,
-                tmp_path / f"state_{name}",
-                state_partitions=4,
-                **kwargs,
-            )
+            eng = CrawlEngine(spark, pages, storage_json, tmp_path / f"state_{name}", **kwargs)
             eng.seed(seeds)
             eng.run(max_rounds=10)
         recs = {
@@ -276,7 +338,7 @@ def test_crawl_adaptive_paths_agree(spark, corpus, tmp_path, monkeypatch):
 
     base = outputs["default"]
     assert any(err and err.startswith("FetchMiss") for *_, err in base[0])
-    for name in ("bloom", "broadcast_fetch", "shuffle_fetch"):
+    for name in ("bloom", "shuffle_fetch"):
         assert outputs[name] == base, f"{name} diverged from default"
 
 
@@ -285,7 +347,7 @@ def test_expire_and_requeue_recrawls(spark, corpus, tmp_path):
     second crawl pass reproduces the same extraction records."""
     pages, storage_json, store = corpus
     seeds = [testgen.list_url(testgen.host_name(i)) for i in range(3)]
-    eng = CrawlEngine(spark, pages, storage_json, tmp_path / "state_ttl", state_partitions=4)
+    eng = CrawlEngine(spark, pages, storage_json, tmp_path / "state_ttl")
     eng.seed(seeds)
     eng.run(max_rounds=10)
     first_pass = {
@@ -337,13 +399,13 @@ def test_crawl_with_pluggable_adapter(spark, corpus, tmp_path):
     adapter = RetryingAdapter(FlakyOnce(store), retries=2)
     engine = CrawlEngine(
         spark, None, storage_json, tmp_path / "state_adapter",
-        adapter=adapter, state_partitions=2,
+        adapter=adapter,
     )
     engine.seed(seeds)
     engine.run(max_rounds=10)
     got = engine.assemble_results(seeds)
 
-    ref = CrawlEngine(spark, pages, storage_json, tmp_path / "state_join", state_partitions=2)
+    ref = CrawlEngine(spark, pages, storage_json, tmp_path / "state_join")
     ref.seed(seeds)
     ref.run(max_rounds=10)
     assert got == ref.assemble_results(seeds)
@@ -364,7 +426,7 @@ def test_seen_deltas_are_append_only_and_compact(spark, corpus, tmp_path):
     seeds = [testgen.list_url(testgen.host_name(i)) for i in range(3)]
     seed_urls = {canonicalize_url(u) for u in seeds}
 
-    fresh = CrawlEngine(spark, pages, storage_json, tmp_path / "state_fresh", state_partitions=2)
+    fresh = CrawlEngine(spark, pages, storage_json, tmp_path / "state_fresh")
     fresh.seed(seeds)
     assert fresh.seen().count() == 0
     stats = fresh.expire_and_requeue(max_age_rounds=0)
@@ -375,7 +437,7 @@ def test_seen_deltas_are_append_only_and_compact(spark, corpus, tmp_path):
         (u, 1) for u in seed_urls
     }
 
-    eng = CrawlEngine(spark, pages, storage_json, tmp_path / "state_delta", state_partitions=2)
+    eng = CrawlEngine(spark, pages, storage_json, tmp_path / "state_delta")
     eng.seed(seeds)
     rounds = eng.run(max_rounds=10)
 
@@ -407,7 +469,7 @@ def test_seen_inline_autocompaction(spark, corpus, tmp_path):
     seeds = [testgen.list_url(testgen.host_name(i)) for i in range(3)]
     eng = CrawlEngine(
         spark, pages, storage_json, tmp_path / "state_autocompact",
-        state_partitions=2, seen_compact_every=2,
+        seen_compact_every=2,
     )
     eng.seed(seeds)
     rounds = eng.run(max_rounds=10)
@@ -417,7 +479,7 @@ def test_seen_inline_autocompaction(spark, corpus, tmp_path):
     assert d2.count() == sum(s.get("scheduled", 0) for s in rounds)  # full log
     assert eng.seen().count() == d2.count()
     # parity with the un-compacted engine
-    ref = CrawlEngine(spark, pages, storage_json, tmp_path / "state_nocompact", state_partitions=2)
+    ref = CrawlEngine(spark, pages, storage_json, tmp_path / "state_nocompact")
     ref.seed(seeds)
     ref.run(max_rounds=10)
     assert (
@@ -445,7 +507,7 @@ def test_seen_log_long_horizon_soak(spark, tmp_path):
     def new_engine():
         return CrawlEngine(
             spark, pages, storage_json, state,
-            state_partitions=2, seen_compact_every=5,
+            seen_compact_every=5,
         )
 
     eng = new_engine()
@@ -521,7 +583,7 @@ def test_state_write_protocol(spark, corpus, tmp_path, monkeypatch):
         return original(self, path, *args, **kwargs)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
-    eng = CrawlEngine(spark, pages, storage_json, tmp_path / "state", state_partitions=2)
+    eng = CrawlEngine(spark, pages, storage_json, tmp_path / "state")
 
     def compacting_round():
         eng.seen_compact_every = 2
@@ -553,7 +615,7 @@ def test_expire_and_requeue_freshness_ranked(spark, corpus, tmp_path):
     pages, storage_json, store = corpus
     seeds = [testgen.list_url(testgen.host_name(i)) for i in range(3)]
     eng = CrawlEngine(
-        spark, pages, storage_json, tmp_path / "state_fresh", state_partitions=4
+        spark, pages, storage_json, tmp_path / "state_fresh"
     )
     eng.seed(seeds)
     eng.run(max_rounds=10)
@@ -601,8 +663,7 @@ def test_seed_df_from_sitemap_entries(spark, corpus, tmp_path):
     )
     seed_tbl = seeds_from_entries(sitemap_entries(sm_pages))
 
-    eng = CrawlEngine(spark, pages, storage_json, tmp_path / "state_smseed",
-                      state_partitions=4)
+    eng = CrawlEngine(spark, pages, storage_json, tmp_path / "state_smseed")
     eng.seed_df(seed_tbl)
     frontier = spark.read.parquet(str(tmp_path / "state_smseed" / "frontier" / "r0"))
     rows = {r["url_canon"]: r for r in frontier.collect()}
@@ -618,8 +679,7 @@ def test_seed_df_from_sitemap_entries(spark, corpus, tmp_path):
     assert rounds[-1]["done"] or rounds[-1]["scheduled"] == 0
     got = eng.assemble_results(seeds)
     # same extraction results as a plain list-seeded crawl
-    ref = CrawlEngine(spark, pages, storage_json, tmp_path / "state_listseed",
-                      state_partitions=4)
+    ref = CrawlEngine(spark, pages, storage_json, tmp_path / "state_listseed")
     ref.seed(seeds)
     ref.run(max_rounds=10)
     assert got == ref.assemble_results(seeds)
@@ -652,7 +712,7 @@ def test_crawl_dust_rules_collapse_aliases_prefetch(spark, tmp_path):
     )
     eng = CrawlEngine(
         spark, pages, cfg.json_dumps(storage), tmp_path / "state_dust",
-        state_partitions=2, dust_rules=rules,
+        dust_rules=rules,
     )
     eng.seed([testgen.list_url(host)])
     eng.run(max_rounds=5)
@@ -689,7 +749,7 @@ def test_crawl_honor_nofollow_drops_children(spark, corpus, tmp_path):
 
     eng = CrawlEngine(
         spark, tagged, storage_json, tmp_path / "state_nf",
-        state_partitions=4, honor_nofollow=True,
+        honor_nofollow=True,
     )
     eng.seed(seeds)
     eng.run(max_rounds=6)
@@ -704,7 +764,6 @@ def test_crawl_honor_nofollow_drops_children(spark, corpus, tmp_path):
     # control: same corpus without the flag follows h1's links
     eng2 = CrawlEngine(
         spark, tagged, storage_json, tmp_path / "state_nf_off",
-        state_partitions=4,
     )
     eng2.seed(seeds)
     eng2.run(max_rounds=6)
@@ -722,7 +781,7 @@ def test_crawl_blocklist_keeps_domain_out_of_frontier(spark, corpus, tmp_path):
 
     eng = CrawlEngine(
         spark, pages, storage_json, tmp_path / "state_bl",
-        state_partitions=4, blocklist=rules,
+        blocklist=rules,
     )
     eng.seed(seeds)
     eng.run(max_rounds=6)

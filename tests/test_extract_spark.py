@@ -2,6 +2,8 @@
 
 import json
 
+import pytest
+
 from uniparser_spark import testgen
 from uniparser_spark.engine import extract_pages
 
@@ -81,3 +83,46 @@ def test_extraction_health_rollup(spark):
     assert b["top_error"] == "ZeroDivisionError"  # tie -> larger kind
     c = out[("c.org", "<none>")]
     assert c["err_rate"] == 1.0 and c["top_error"] == "RuleNotFoundError"
+
+
+def _cut_inside(html: str, marker: str, keep: int) -> str:
+    """``html`` cut ``keep`` characters into the first ``marker``."""
+    return html[: html.index(marker) + keep]
+
+
+_HOST0 = testgen.host_name(0)
+_DETAIL = testgen.detail_url(_HOST0, 0)
+# case -> (url, text, html): malformed bodies a crawl can fetch
+MALFORMED = {
+    "truncated-mid-tag": (_DETAIL, _cut_inside(testgen.detail_html(_HOST0, 0), "<h1 class", 7), None),
+    "truncated-mid-attribute": (
+        testgen.list_url(_HOST0),
+        _cut_inside(testgen.list_html(_HOST0, 3), 'href="/item-000001', 14),
+        None,
+    ),
+    "invalid-utf8-html": (_DETAIL, None, b'<h1 class="page-title">\xff\xfe\xc3\x28</h1>'),
+    "nul-bytes": (_DETAIL, '<h1 class="page-\x00title">a\x00b</h1>\x00<p>\x00', None),
+    "1mb-attribute": (
+        _DETAIL,
+        '<div data-x="' + "a" * (1 << 20) + '"><h1 class="page-title">t</h1></div>',
+        None,
+    ),
+    "10k-unclosed-nested-tags": (_DETAIL, "<div>" * 10_000 + '<h1 class="page-title">deep', None),
+}
+
+
+@pytest.mark.parametrize("case", list(MALFORMED))
+def test_extract_malformed_input_is_data(spark, case):
+    """Malformed input comes out as one row carrying an error or a valid
+    result, never as a task failure."""
+    url, text, html = MALFORMED[case]
+    pages = spark.createDataFrame(
+        [(url, text, bytearray(html) if html is not None else None)],
+        "url string, text string, html binary",
+    )
+    [row] = extract_pages(pages, testgen.storage_json(1), html_col="html").collect()
+    assert row["url"] == url
+    if row["error"] is None:
+        assert isinstance(json.loads(row["result"]), dict)
+    else:
+        assert row["result"] is None

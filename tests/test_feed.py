@@ -91,8 +91,7 @@ def test_feed_seeds_compose_into_engine(spark, tmp_path):
     )
     seeds = seeds_from_feed(feed_entries(feed_pages))
 
-    eng = CrawlEngine(spark, pages, storage_json, tmp_path / "state_feed",
-                      state_partitions=4)
+    eng = CrawlEngine(spark, pages, storage_json, tmp_path / "state_feed")
     eng.seed_df(seeds)
     eng.run(max_rounds=10)
     seen = {r["url_canon"] for r in eng.seen().collect()}

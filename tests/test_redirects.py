@@ -101,7 +101,6 @@ def test_redirect_dangling_targets_feed_frontier(spark, tmp_path):
 
     eng = CrawlEngine(
         spark, pages, storage_json, tmp_path / "state_redir",
-        state_partitions=4,
     )
     eng.seed_df(dangling)
     eng.run(max_rounds=10)

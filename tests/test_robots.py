@@ -89,7 +89,6 @@ def test_crawl_respects_robots(spark, tmp_path):
         testgen.storage_json(2),
         tmp_path / "state_robots",
         robots=robots,
-        state_partitions=2,
     )
     eng.seed([testgen.list_url(testgen.host_name(i)) for i in range(2)])
     eng.run(max_rounds=10)

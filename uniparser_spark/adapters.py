@@ -109,7 +109,7 @@ class RetryingAdapter(Adapter):
 class TableAdapter(Adapter):
     """Marker for the default strategy: fetch = equi-join against the
     pages table.  The engine special-cases this (crawl/engine.py fetch
-    strategies: In-pushdown, broadcast, shuffle join) rather than
+    strategies: broadcast or shuffle join) rather than
     calling fetch_batch — a join the optimizer can see always beats an
     opaque UDF.  Exists so 'which adapter is in use' is explicit."""
 

@@ -1,10 +1,8 @@
 """Round-based distributed crawl: frontier → schedule → fetch → extract.
 
 Each scheduling round runs two Spark actions over checkpointed parquet
-state: the records and frontier writes, plus a URL collect when the
-batch is fetched by In-list (SURVEY.md §3 EP1 mapping).  Broadcasts
-and AQE stages split those actions into more Spark jobs: about 11 a
-round on the 400-page ``crawl_polite`` benchmark.
+state: the records and frontier writes (SURVEY.md §3 EP1 mapping).
+Broadcasts and AQE stages split those actions into more Spark jobs.
 The reference's recursive thread fan-out (crawler.py:156-189) becomes
 breadth-first rounds; result nesting is restored from (parent_url,
 list_index) so the final output is order-identical to the reference's
@@ -33,9 +31,13 @@ Resume = read manifest, continue from round k; a crashed round leaves
 the previous manifest intact (write new dirs first, swap manifest last).
 
 Scale notes (10^10-URL design):
-- the fetch is an equi-join frontier→pages on url (shuffle hash join;
-  pages side pruned to (url, text/html) columns only);
-- the seen-set anti-join is bloom-accelerated (frontier.seen);
+- the fetch is an equi-join frontier→pages on url (broadcast of the
+  batch while it fits, shuffle join beyond; pages side pruned to
+  (url, text/html) columns only);
+- the seen-set anti-join is bloom-accelerated once the seen set is
+  large enough to repay the filter (size-gated, frontier.seen);
+- state is written as the plan leaves it: AQE sizes the files, and no
+  reader needs a hash layout (the seen anti-join shuffles both sides);
 - per-host politeness/priority runs salted (frontier.politeness).
 """
 
@@ -59,7 +61,7 @@ from pyspark.sql.types import (
 )
 
 from .. import config
-from ..engine.extract import extract_pages
+from ..engine.extract import RESULT_SCHEMA, extract_pages
 from ..frontier.politeness import schedule_batch
 from ..frontier.robots import apply_robots
 from ..frontier.seen import BloomSeenFilter, add_url_keys
@@ -88,10 +90,8 @@ _RECORDS_EXPAND_SCHEMA = "url string, depth int, requests array<string>"
 
 # seen-set Bloom filter width (buckets of the bit array)
 BLOOM_BUCKETS = 64
-# fetch strategy by pending-batch size: up to ISIN_FETCH_MAX URLs are
-# pushed into the pages scan as an In filter; up to BROADCAST_FETCH_MAX
+# fetch strategy by pending-batch size: up to BROADCAST_FETCH_MAX URLs
 # the batch is broadcast-joined; beyond that the join shuffles
-ISIN_FETCH_MAX = 512
 BROADCAST_FETCH_MAX = 5_000_000
 
 
@@ -107,7 +107,6 @@ class CrawlEngine:
         default_budget: int = 100000,
         salt_buckets: int = 16,
         bloom_min_seen: int = 1_000_000,
-        state_partitions: Optional[int] = None,
         text_col: str = "text",
         html_col: Optional[str] = None,
         adapter=None,
@@ -157,7 +156,6 @@ class CrawlEngine:
         self.salt_buckets = salt_buckets
         self.bloom = BloomSeenFilter(n_buckets=BLOOM_BUCKETS)
         self.bloom_min_seen = bloom_min_seen
-        self.state_partitions = state_partitions or spark.sparkContext.defaultParallelism
         self.text_col = text_col
         self.html_col = html_col
         # bound the delta-log width: after this many un-compacted rounds
@@ -229,7 +227,7 @@ class CrawlEngine:
             rows, "url string, priority double, depth int, parent_url string, list_index int, discovered_round int"
         )
         frontier = add_url_keys(df).select(*_META_COLS)
-        self._write_state(frontier, self._p("frontier", 0), rows_hint=len(urls))
+        frontier.write.mode("overwrite").parquet(self._p("frontier", 0))
         self._commit_manifest(
             {
                 "round": 0,
@@ -286,7 +284,7 @@ class CrawlEngine:
         frontier = dedup.observe(obs, F.count(F.lit(1)).alias("n")).select(
             *_META_COLS
         )
-        self._write_state(frontier, self._p("frontier", 0))
+        frontier.write.mode("overwrite").parquet(self._p("frontier", 0))
         n = int(obs.get["n"])
         self._commit_manifest(
             {
@@ -299,36 +297,18 @@ class CrawlEngine:
             }
         )
 
-    def _write_state(
-        self,
-        df: DataFrame,
-        path: str,
-        rows_hint: Optional[int] = None,
-    ) -> None:
-        # hash state by url_hash (deterministic file placement); partition
-        # count scales with the known state size (rows_hint from
-        # the round's observed counters) so small states don't pay
-        # state_partitions-many task launches per write.  Floor of
-        # min(8, n): rows_hint is only a hint (frontier fan-out can blow
-        # past it 100×), and a 1-partition write serializes the parquet
-        # encode — a measured ~2 s Amdahl tax per round that never
-        # scales with cores.  Eight tasks keep small-state writes cheap
-        # while bounding the serial fraction.
-        n = self.state_partitions
-        if rows_hint is not None:
-            n = max(min(8, n), min(n, rows_hint // 500_000 + 1))
-        df.repartition(n, F.pmod(F.col("url_hash"), F.lit(n))).write.mode("overwrite").parquet(path)
-
     # --------------------------------------------------------------- rounds
     def run_round(self) -> Dict[str, int]:
         """One scheduling round in exactly TWO Spark actions (records
-        write, frontier write; an In-list fetch adds a collect of the
-        batch's URLs, an inline compaction a seen snapshot write) —
-        per-round stats ride on the writes via ``Observation`` instead
-        of separate count() jobs, frontier metadata is carried through
-        the extraction UDF instead of re-joined, and the records written
-        are the round's seen-log entry, so nothing in the round is
-        computed or stored twice."""
+        write, frontier write; an inline compaction adds a seen snapshot
+        write) — per-round stats ride on the writes via ``Observation``
+        instead of separate count() jobs, frontier metadata is carried
+        through the extraction UDF instead of re-joined, and the records
+        written are the round's seen-log entry, so nothing in the round
+        is computed or stored twice.  The fetch takes one of two plans:
+        a broadcast join of the batch against the streamed pages scan
+        while the batch fits (``BROADCAST_FETCH_MAX``), else a shuffle
+        join."""
         manifest = self.read_manifest()
         rnd = manifest["round"]
         if manifest.get("done"):
@@ -389,19 +369,6 @@ class CrawlEngine:
             ).drop("fetch_error")
         else:
             pages_proj = self.pages.select(*page_cols)
-            isin_fetch = n_pending is not None and n_pending <= ISIN_FETCH_MAX
-            if isin_fetch:
-                # tiny batch (typically the seed round): push the URL list
-                # into the parquet scan as an In filter — row groups whose
-                # url min/max excludes the batch are never decompressed.
-                # The cap must stay small: parquet evaluates a pushed In
-                # as a nested OR tree whose recursion depth equals the
-                # list length (a ~1000-element list marginally overflows
-                # a 1 MB executor thread stack), and once the batch has
-                # more URLs than the table has row groups the pruning
-                # buys nothing over the broadcast join below anyway.
-                urls = [r["url"] for r in scheduled.select("url").collect()]
-                pages_proj = pages_proj.filter(F.col("url").isin(urls))
             if n_pending is not None and n_pending <= BROADCAST_FETCH_MAX:
                 hits = pages_proj.join(F.broadcast(scheduled), "url", "inner")
                 misses = scheduled.join(
@@ -411,14 +378,6 @@ class CrawlEngine:
                     "url",
                     "left_anti",
                 )
-                if isin_fetch:
-                    # a batch of <= ISIN_FETCH_MAX rows: the pruned scan
-                    # still spans every file split of the pages table, and
-                    # the misses (nearly always none) every scheduled
-                    # partition.  One wave of extraction tasks, plus one
-                    # for the misses, not one per split and partition.
-                    hits = hits.coalesce(self.state_partitions)
-                    misses = misses.coalesce(1)
                 for c in body_cols:
                     misses = misses.withColumn(c, F.lit(None).cast(pages_proj.schema[c].dataType))
                 fetched = hits.select(*scheduled.columns, *body_cols).unionByName(
@@ -467,8 +426,8 @@ class CrawlEngine:
             # no seen write at all); at 10^10 seen rows production
             # would run this as an asynchronous Iceberg rewrite
             # (rewrite_data_files) off the hot path instead of inline.
-            self._write_state(
-                self._seen_view(manifest, rnd), self._p("seen", rnd + 1), rows_hint=seen_total
+            self._seen_view(manifest, rnd).write.mode("overwrite").parquet(
+                self._p("seen", rnd + 1)
             )
             seen_base = rnd + 1
         seen_next = self._seen_view({"seen_base": seen_base}, rnd)
@@ -579,9 +538,7 @@ class CrawlEngine:
                 F.when(F.col("discovered_round") == rnd + 1, 1).otherwise(0)
             ).alias("fresh"),
         )
-        self._write_state(
-            next_frontier, self._p("frontier", rnd + 1), rows_hint=n_scheduled * 2
-        )
+        next_frontier.write.mode("overwrite").parquet(self._p("frontier", rnd + 1))
         n_pending_next = int(obs_front.get["n"])
         n_fresh = int(obs_front.get["fresh"] or 0)
         if flagged is not None:
@@ -649,9 +606,7 @@ class CrawlEngine:
 
         obs_seen = Observation()
         kept = kept.observe(obs_seen, F.count(F.lit(1)).alias("n"))
-        self._write_state(
-            kept, self._p("seen", rnd + 1), rows_hint=int(manifest.get("seen_total", 0))
-        )
+        kept.write.mode("overwrite").parquet(self._p("seen", rnd + 1))
         seen_kept = int(obs_seen.get["n"])
 
         if history is not None:
@@ -690,11 +645,7 @@ class CrawlEngine:
         next_frontier = pending.unionByName(requeued)
         obs_front = Observation()
         next_frontier = next_frontier.observe(obs_front, F.count(F.lit(1)).alias("n"))
-        self._write_state(
-            next_frontier,
-            self._p("frontier", rnd + 1),
-            rows_hint=int(manifest.get("n_pending", 0) or 0) + seen_kept,
-        )
+        next_frontier.write.mode("overwrite").parquet(self._p("frontier", rnd + 1))
         n_pending = int(obs_front.get["n"])
 
         stats = {
@@ -729,9 +680,17 @@ class CrawlEngine:
     def records(self) -> DataFrame:
         """Records of the committed rounds 0..round-1 (a maintenance
         round writes none; round ``round`` is uncommitted, or the empty
-        finish of a done crawl)."""
+        finish of a done crawl).  Before the first commit: an empty frame
+        with the records' columns."""
         rnd = self.read_manifest()["round"]
         paths = [self._p("records", r) for r in range(rnd) if Path(self._p("records", r)).exists()]
+        if not paths:
+            schema = StructType(
+                RESULT_SCHEMA.fields
+                + [f for f in FRONTIER_SCHEMA.fields if f.name != "url"]
+                + [StructField("round", IntegerType()), StructField("part_id", IntegerType())]
+            )
+            return self.spark.createDataFrame([], schema)
         return self.spark.read.parquet(*paths)
 
     def seen(self) -> DataFrame:

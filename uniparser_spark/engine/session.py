@@ -58,10 +58,6 @@ def get_spark(
         # are python-CPU-bound, so split count — not IO — sets the
         # achievable parallelism when reading page tables directly
         .config("spark.sql.files.maxPartitionBytes", "16m")
-        # push tiny-batch fetch URL lists into parquet as real In filters
-        # (default threshold 10 degrades them to a min/max range filter,
-        # which never prunes a lexically interleaved URL space)
-        .config("spark.sql.parquet.pushdown.inFilterThreshold", "2048")
         # page tables carry multi-KB html/text values: the default 4096-row
         # columnar batches reserve ~100MB/task and OOM wide executors
         .config("spark.sql.parquet.columnarReaderBatchSize", "512")
