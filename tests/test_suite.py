@@ -26,13 +26,20 @@ from tools.check_oracle import check, oracle_connection
 # the dedup_clusters, links, regex and loader aliases), oracles spliced
 # from shared fragments (_IPS_SQL, _GRAPH_SQL, _PAGE_SQL, _NORM, the PSL
 # list), one query per family, and canonical_docs (the small-graph
-# union-find components through select_canonical).
+# union-find components through select_canonical).  Every query run
+# through the shared rule-query runner and every oracle built from the
+# shared MinHash-LSH fragment is in the lane too.
 ORACLE_LANE = (
     "pricing_summary rule_first3 token_stats c4_line_filter pii_redact "
     "dedup_exact multimodal_features spam_mass asn_tag ip_politeness "
     "dedup_verified_pairs_xx minhash_lsh_pairs_xx dedup_clusters_star "
     "dedup_clusters_hashmin stream_links stream_extract stream_host_rates "
-    "rule_loader_toml registrable_domains phrase_search canonical_docs"
+    "rule_loader_toml registrable_domains phrase_search canonical_docs "
+    "rule_css rule_css1 rule_xpath rule_json rule_time rule_paths "
+    "rule_children rule_udf rule_regex_sub rule_python_ops rule_b64 "
+    "rule_xml rule_re_modes rule_loader_yaml rule_python_modes "
+    "rule_context minhash_lsh_pairs dedup_verified_pairs dedup_clusters "
+    "minhash_error"
 ).split()
 
 
