@@ -2,7 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from uniparser_spark.sources.cdx import cdx_seed_candidates, parse_cdx_lines
+from uniparser_spark.sources.cdx import cdx_seed_candidates, parse_cdx_lines, read_cdx
 
 
 def _lines(spark, rows):
@@ -47,6 +47,32 @@ def test_parse_cdx_short_lines_survive_ansi(spark):
     kt = by_key["org,example)/key-and-ts"]
     assert kt["valid"] == 0 and kt["ts"] is not None and kt["url"] is None
     assert by_key["org,example)/ok"]["valid"] == 1
+
+
+def test_read_cdx_directory_gzip_and_glob(spark, tmp_path):
+    """read_cdx over a shard directory: a plain .cdxj shard and a
+    .cdxj.gz shard are both read (gzip by codec inference), and a file
+    the default glob does not match is skipped."""
+    import gzip
+
+    plain = [
+        'org,example)/a 20260102030405 {"url": "https://example.org/a", "status": "200"}',
+        'org,example)/b 20260102030406 {"url": "https://example.org/b", "status": "404"}',
+    ]
+    zipped = [
+        'org,example)/c 20260102030407 {"url": "https://example.org/c", "status": "200"}',
+        "garbage line without json",
+    ]
+    (tmp_path / "shard-0.cdxj").write_text("\n".join(plain) + "\n")
+    with gzip.open(tmp_path / "shard-1.cdxj.gz", "wt") as f:
+        f.write("\n".join(zipped) + "\n")
+    (tmp_path / "notes.txt").write_text(
+        'org,example)/skip 20260102030408 {"url": "https://example.org/skip"}\n'
+    )
+    got = read_cdx(spark, str(tmp_path)).collect()
+    want = parse_cdx_lines(_lines(spark, plain + zipped)).collect()
+    assert len(got) == 4
+    assert sorted(map(tuple, got), key=repr) == sorted(map(tuple, want), key=repr)
 
 
 def test_cdx_seed_candidates_triage(spark):

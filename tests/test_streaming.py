@@ -6,7 +6,6 @@ import os
 
 from uniparser_spark.engine.extract import extract_pages
 from uniparser_spark.streaming import (
-    extract_stream,
     host_rate_metrics,
     read_pages_stream,
     run_to_parquet,
@@ -28,7 +27,7 @@ def test_stream_extract_matches_batch(spark, tmp_path):
 
     stream = read_pages_stream(spark, pages_dir)
     assert stream.isStreaming
-    q = run_to_parquet(extract_stream(stream, storage_json(2)), out_dir, ck)
+    q = run_to_parquet(extract_pages(stream, storage_json(2)), out_dir, ck)
     q.awaitTermination(120)
 
     got = {
@@ -46,7 +45,7 @@ def test_stream_extract_matches_batch(spark, tmp_path):
     # second trigger with NEW files only: checkpoint prevents reprocessing
     _land_pages(spark, pages_dir, n_hosts=2, n_details=14)
     q2 = run_to_parquet(
-        extract_stream(read_pages_stream(spark, pages_dir), storage_json(2)),
+        extract_pages(read_pages_stream(spark, pages_dir), storage_json(2)),
         out_dir,
         ck,
     )

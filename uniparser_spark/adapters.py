@@ -17,10 +17,10 @@ setup.  Per-URL failures are DATA (``FetchResult.error``), never task
 failures — a dead URL becomes a ``FetchMiss`` record downstream,
 matching the engine's error-as-data rule.
 
-``TableAdapter`` documents the default (the engine's built-in join is
-the optimized equivalent); ``FakeAdapter`` is the deterministic
-in-memory implementation used by tests and a template for real ones;
-``RetryingAdapter`` adds the reference's retry loop
+With no adapter the engine fetches by joining the pages table (a join
+the optimizer can see beats an opaque UDF); ``FakeAdapter`` is the
+deterministic in-memory implementation used by tests and a template for
+real ones; ``RetryingAdapter`` adds the reference's retry loop
 (utils.py:254-276) around any inner adapter.
 """
 
@@ -106,40 +106,21 @@ class RetryingAdapter(Adapter):
         return results
 
 
-class TableAdapter(Adapter):
-    """Marker for the default strategy: fetch = equi-join against the
-    pages table.  The engine special-cases this (crawl/engine.py fetch
-    strategies: broadcast or shuffle join) rather than
-    calling fetch_batch — a join the optimizer can see always beats an
-    opaque UDF.  Exists so 'which adapter is in use' is explicit."""
-
-    def __init__(self, pages: DataFrame):
-        self.pages = pages
-
-    def fetch_batch(self, requests: Sequence[dict]) -> List[FetchResult]:  # pragma: no cover
-        raise NotImplementedError(
-            "TableAdapter is executed as a join by the engine, not per batch"
-        )
-
-
 def fetch_with_adapter(
     scheduled: DataFrame,
     adapter: Adapter,
     text_col: str = "text",
     method: str = "get",
 ) -> DataFrame:
-    """scheduled(url, ...meta) -> same rows + ``text_col`` and
-    ``fetch_error`` via one mapInPandas crossing.
+    """scheduled(url, ...meta) -> same rows + ``text_col`` via one
+    mapInPandas crossing; a failed fetch (``FetchResult.error``) lands
+    as a NULL body, i.e. a miss.
 
     One output row per input row, so frontier metadata rides through
     exactly like the engine's join path.
     """
     out_schema = StructType(
-        scheduled.schema.fields
-        + [
-            StructField(text_col, StringType(), True),
-            StructField("fetch_error", StringType(), True),
-        ]
+        scheduled.schema.fields + [StructField(text_col, StringType(), True)]
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -154,7 +135,6 @@ def fetch_with_adapter(
                 )
             out = batch.copy()
             out[text_col] = [r.text for r in results]
-            out["fetch_error"] = [r.error for r in results]
             yield out
 
     return scheduled.mapInPandas(run, schema=out_schema)

@@ -117,13 +117,8 @@ class CrawlEngine:
     ):
         """``adapter``: an :class:`uniparser_spark.adapters.Adapter` to
         fetch page bodies with, replacing the pages-table join (the
-        production seam; see adapters.py).  ``TableAdapter``/None keep
-        the optimized join strategies."""
-        from ..adapters import TableAdapter
-
-        if adapter is not None and isinstance(adapter, TableAdapter):
-            pages = adapter.pages
-            adapter = None
+        production seam; see adapters.py).  None keeps the optimized
+        join strategies."""
         if adapter is not None and html_col is not None:
             raise ValueError(
                 "adapter and html_col are mutually exclusive: adapter "
@@ -364,9 +359,7 @@ class CrawlEngine:
             # connections per partition inside fetch_batch
             from ..adapters import fetch_with_adapter
 
-            fetched = fetch_with_adapter(
-                scheduled, self.adapter, text_col=self.text_col
-            ).drop("fetch_error")
+            fetched = fetch_with_adapter(scheduled, self.adapter, text_col=self.text_col)
         else:
             pages_proj = self.pages.select(*page_cols)
             if n_pending is not None and n_pending <= BROADCAST_FETCH_MAX:

@@ -30,7 +30,7 @@ import gzip
 import io
 import re
 from datetime import datetime, timezone
-from typing import Any, Dict, Iterable, Iterator, List, Optional, Tuple
+from typing import Any, Dict, Iterable, Iterator, List, Optional, Sequence, Tuple
 
 _CRLF = b"\r\n"
 _GZIP_MAGIC = b"\x1f\x8b"
@@ -261,6 +261,39 @@ def read_warc(spark, path: str, path_glob: str = "*.warc*"):
     return files.mapInPandas(decode, schema=schema)
 
 
+def _warc_record(
+    warc_type: str,
+    url: str,
+    ts: datetime,
+    content_type: str,
+    payload: bytes,
+    gzip_member: bool,
+    extra_headers: Sequence[bytes] = (),
+) -> bytes:
+    """One WARC/1.0 record: header block (type, target URI, date, any
+    ``extra_headers``, content type, length), payload, closing CRLF
+    pair — a gzip member when ``gzip_member``."""
+    head = _CRLF.join(
+        [
+            b"WARC/1.0",
+            f"WARC-Type: {warc_type}".encode(),
+            f"WARC-Target-URI: {url}".encode(),
+            f"WARC-Date: {ts.astimezone(timezone.utc):%Y-%m-%dT%H:%M:%SZ}".encode(),
+            *extra_headers,
+            f"Content-Type: {content_type}".encode(),
+            f"Content-Length: {len(payload)}".encode(),
+        ]
+    )
+    record = head + _CRLF + _CRLF + payload + _CRLF + _CRLF
+    if not gzip_member:
+        return record
+    # mtime pinned for byte-determinism
+    buf = io.BytesIO()
+    with gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
+        gz.write(record)
+    return buf.getvalue()
+
+
 def build_warc(
     records: Iterable[Tuple[str, datetime, bytes]],
     gzip_per_record: bool = True,
@@ -270,7 +303,7 @@ def build_warc(
     """Deterministic WARC writer: ``(url, ts, body)`` → response
     records with an HTTP/1.1 payload, one gzip member each (the
     Common-Crawl layout) or a plain concatenated stream."""
-    out = io.BytesIO()
+    out = []
     for url, ts, body in records:
         http_lines = [
             b"HTTP/1.1 200 OK",
@@ -280,26 +313,13 @@ def build_warc(
             http_lines.append(f"Content-Language: {content_language}".encode())
         http_lines.append(f"Content-Length: {len(body)}".encode())
         http = _CRLF.join(http_lines) + _CRLF + _CRLF + body
-        head = _CRLF.join(
-            [
-                b"WARC/1.0",
-                b"WARC-Type: response",
-                f"WARC-Target-URI: {url}".encode(),
-                f"WARC-Date: {ts.astimezone(timezone.utc):%Y-%m-%dT%H:%M:%SZ}".encode(),
-                b"Content-Type: application/http; msgtype=response",
-                f"Content-Length: {len(http)}".encode(),
-            ]
+        out.append(
+            _warc_record(
+                "response", url, ts, "application/http; msgtype=response",
+                http, gzip_per_record,
+            )
         )
-        record = head + _CRLF + _CRLF + http + _CRLF + _CRLF
-        if gzip_per_record:
-            # mtime pinned for byte-determinism
-            buf = io.BytesIO()
-            with gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
-                gz.write(record)
-            out.write(buf.getvalue())
-        else:
-            out.write(record)
-    return out.getvalue()
+    return b"".join(out)
 
 
 def build_wet(
@@ -310,28 +330,12 @@ def build_wet(
     of ``build_warc``): ``(url, ts, text)`` → ``conversion`` records
     with a plain-text payload (no HTTP envelope), one pinned-mtime gzip
     member each."""
-    out = io.BytesIO()
-    for url, ts, text in records:
-        body = text.encode("utf-8")
-        head = _CRLF.join(
-            [
-                b"WARC/1.0",
-                b"WARC-Type: conversion",
-                f"WARC-Target-URI: {url}".encode(),
-                f"WARC-Date: {ts.astimezone(timezone.utc):%Y-%m-%dT%H:%M:%SZ}".encode(),
-                b"Content-Type: text/plain",
-                f"Content-Length: {len(body)}".encode(),
-            ]
+    return b"".join(
+        _warc_record(
+            "conversion", url, ts, "text/plain", text.encode("utf-8"), gzip_per_record
         )
-        record = head + _CRLF + _CRLF + body + _CRLF + _CRLF
-        if gzip_per_record:
-            buf = io.BytesIO()
-            with gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
-                gz.write(record)
-            out.write(buf.getvalue())
-        else:
-            out.write(record)
-    return out.getvalue()
+        for url, ts, text in records
+    )
 
 
 def build_warc_revisits(
@@ -343,32 +347,22 @@ def build_warc_revisits(
     profile — response headers only, no body (the whole point of a
     revisit is NOT storing the payload again).  ``digest=None`` omits
     the WARC-Payload-Digest header (the orphan path)."""
-    out = io.BytesIO()
+    http = _CRLF.join([b"HTTP/1.1 200 OK", b"Content-Length: 0"]) + _CRLF + _CRLF
+    out = []
     for url, ts, digest in records:
-        http = _CRLF.join([b"HTTP/1.1 200 OK", b"Content-Length: 0"]) + _CRLF + _CRLF
-        head_lines = [
-            b"WARC/1.0",
-            b"WARC-Type: revisit",
-            f"WARC-Target-URI: {url}".encode(),
-            f"WARC-Date: {ts.astimezone(timezone.utc):%Y-%m-%dT%H:%M:%SZ}".encode(),
+        extra = [
             b"WARC-Profile: http://netpreserve.org/warc/1.0/revisit/"
             b"identical-payload-digest",
         ]
         if digest is not None:
-            head_lines.append(f"WARC-Payload-Digest: {digest}".encode())
-        head_lines += [
-            b"Content-Type: application/http; msgtype=response",
-            f"Content-Length: {len(http)}".encode(),
-        ]
-        record = _CRLF.join(head_lines) + _CRLF + _CRLF + http + _CRLF + _CRLF
-        if gzip_per_record:
-            buf = io.BytesIO()
-            with gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
-                gz.write(record)
-            out.write(buf.getvalue())
-        else:
-            out.write(record)
-    return out.getvalue()
+            extra.append(f"WARC-Payload-Digest: {digest}".encode())
+        out.append(
+            _warc_record(
+                "revisit", url, ts, "application/http; msgtype=response",
+                http, gzip_per_record, extra,
+            )
+        )
+    return b"".join(out)
 
 
 def write_warc(

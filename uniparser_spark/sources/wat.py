@@ -32,13 +32,10 @@ the whole bootstrap is scan → explode → narrow-key shuffles.
 
 from __future__ import annotations
 
-import gzip
-import io
 import json
-from datetime import datetime, timezone
 from typing import Any, Dict, Iterable, Iterator, List, Optional, Tuple
 
-from .warc import _CRLF, _parse_warc_date, iter_warc_records
+from .warc import _parse_warc_date, _warc_record, iter_warc_records
 
 __all__ = ["build_wat", "records_to_meta", "read_wat"]
 
@@ -57,7 +54,7 @@ def build_wat(
     compact, sorted-keys JSON envelope, so identical inputs give
     byte-identical segments.
     """
-    out = io.BytesIO()
+    out = []
     for e in entries:
         links: List[Dict[str, str]] = []
         for link in e.get("links") or []:
@@ -84,26 +81,12 @@ def build_wat(
         body = json.dumps(
             envelope, sort_keys=True, separators=(",", ":"), ensure_ascii=False
         ).encode("utf-8")
-        ts: datetime = e["ts"]
-        head = _CRLF.join(
-            [
-                b"WARC/1.0",
-                b"WARC-Type: metadata",
-                f"WARC-Target-URI: {e['url']}".encode(),
-                f"WARC-Date: {ts.astimezone(timezone.utc):%Y-%m-%dT%H:%M:%SZ}".encode(),
-                b"Content-Type: application/json",
-                f"Content-Length: {len(body)}".encode(),
-            ]
+        out.append(
+            _warc_record(
+                "metadata", e["url"], e["ts"], "application/json", body, gzip_per_record
+            )
         )
-        record = head + _CRLF + _CRLF + body + _CRLF + _CRLF
-        if gzip_per_record:
-            buf = io.BytesIO()
-            with gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
-                gz.write(record)
-            out.write(buf.getvalue())
-        else:
-            out.write(record)
-    return out.getvalue()
+    return b"".join(out)
 
 
 def records_to_meta(data: bytes) -> Iterator[Dict[str, Any]]:

@@ -8,24 +8,22 @@ continuous-ingestion deployments: pages land in a directory/Kafka topic,
 the same compiled-rule ``mapInPandas`` runs incrementally, and sinks
 receive exactly-once micro-batches with checkpointed progress.
 
-Two operators:
-
-- :func:`extract_stream` — streaming pages → streaming extraction
-  results (same fused UDF as the batch path; rule compilation is
-  per-executor-process, so micro-batches reuse compiled rules).
-- :func:`host_rate_metrics` — event-time windowed per-host page counts
-  with a watermark for late data: the streaming analogue of the
-  crawl's per-round metrics table.
+Extraction needs no streaming operator of its own: the batch
+``engine.extract.extract_pages`` applied to a streaming DataFrame runs
+the same fused UDF per micro-batch partition (rule compilation is
+per-executor-process, so micro-batches reuse compiled rules).
+:func:`host_rate_metrics` is event-time windowed per-host page counts
+with a watermark for late data: the streaming analogue of the crawl's
+per-round metrics table.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Optional
+from typing import Iterator, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .engine.extract import extract_pages
 from .testgen import PAGES_SCHEMA
 
 
@@ -41,18 +39,6 @@ def read_pages_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(input_dir)
-
-
-def extract_stream(
-    pages: DataFrame,
-    storage: Any,
-    text_col: str = "text",
-    html_col: Optional[str] = None,
-) -> DataFrame:
-    """Streaming extraction: identical semantics to the batch
-    ``extract_pages`` — one Arrow crossing per micro-batch partition,
-    errors as data."""
-    return extract_pages(pages, storage, text_col=text_col, html_col=html_col)
 
 
 def host_rate_metrics(

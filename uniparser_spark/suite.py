@@ -53,6 +53,7 @@ Sections, in file order:
 from __future__ import annotations
 
 import os
+import re
 import tempfile
 import uuid
 
@@ -61,7 +62,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from . import config
 from .engine.extract import extract_pages
 from .frontier.domains import registrable_domain_sql_literal
-from .streaming import dedup_stream, extract_stream, host_rate_metrics, run_to_parquet
+from .streaming import dedup_stream, host_rate_metrics, run_to_parquet
 from .testgen import BASE_EPOCH
 from .textops import (
     cosine_topk,
@@ -579,57 +580,6 @@ def q_json_props(spark, sf_dir):
 _DOCS_HOST = "docs.example.org"
 
 
-def _docs_storage() -> str:
-    storage = {
-        _DOCS_HOST: {
-            "host": _DOCS_HOST,
-            "crawler_rules": {
-                "doc": {
-                    "name": "doc",
-                    "request_args": {
-                        "method": "get",
-                        "url": f"https://{_DOCS_HOST}/d/0",
-                    },
-                    "parse_rules": [
-                        {
-                            "name": "first3",
-                            "chain_rules": [
-                                ["re", "[a-z]+", ""],
-                                ["python", "getitem", "[:3]"],
-                                ["python", "join", " "],
-                            ],
-                            "child_rules": [],
-                        }
-                    ],
-                    "regex": rf"^https://docs\.example\.org/d/\d+$",
-                }
-            },
-        }
-    }
-    return config.json_dumps(storage)
-
-
-@query("""
-        SELECT 'https://docs.example.org/d/' || doc_id AS url,
-               array_to_string(regexp_extract_all(text, '[a-z]+')[1:3], ' ') AS first3
-        FROM documents
-    """)
-def q_rule_first3(spark, sf_dir):
-    """The compiled rule-chain engine (re → getitem → join) run as a
-    fused mapInPandas over the documents table — EP2 of the reference."""
-    docs = tp(spark, sf_dir, "documents")
-    pages = docs.select(
-        F.concat(
-            F.lit(f"https://{_DOCS_HOST}/d/"), F.col("doc_id").cast("string")
-        ).alias("url"),
-        F.col("text"),
-    )
-    res = extract_pages(pages, _docs_storage())
-    return res.select(
-        "url", F.get_json_object("result", "$.doc.first3").alias("first3")
-    )
-
-
 def _single_host_storage(host: str, rule_name: str, regex: str, parse_rules: list) -> str:
     return config.json_dumps(
         {
@@ -648,6 +598,52 @@ def _single_host_storage(host: str, rule_name: str, regex: str, parse_rules: lis
     )
 
 
+def _rule_query(spark, sf_dir, table, path, text_expr, parse_rules, rule="r", out_cols=None):
+    """The rule-query runner: pages (url, text) over a page table (url
+    https://docs.example.org/<path>/<doc_id> for documents,
+    https://api.example.org/<path>/<event_id> for events), the compiled
+    chain engine under a one-rule storage for that host, then result
+    fields projected with get_json_object — by default one string
+    column per parse rule, named after the rule."""
+    id_col, host = {"documents": ("doc_id", _DOCS_HOST), "events": ("event_id", "api.example.org")}[table]
+    prefix = f"https://{host}/{path}/"
+    pages = tp(spark, sf_dir, table).select(
+        F.concat(F.lit(prefix), F.col(id_col).cast("string")).alias("url"),
+        text_expr.alias("text"),
+    )
+    storage = _single_host_storage(host, rule, "^" + re.escape(prefix) + r"\d+$", parse_rules)
+    if out_cols is None:
+        out_cols = [
+            F.get_json_object("result", f"$.{rule}.{r['name']}").alias(r["name"])
+            for r in parse_rules
+        ]
+    return extract_pages(pages, storage).select("url", *out_cols)
+
+
+@query("""
+        SELECT 'https://docs.example.org/d/' || doc_id AS url,
+               array_to_string(regexp_extract_all(text, '[a-z]+')[1:3], ' ') AS first3
+        FROM documents
+    """)
+def q_rule_first3(spark, sf_dir):
+    """The compiled rule-chain engine (re → getitem → join) run as a
+    fused mapInPandas over the documents table — EP2 of the reference."""
+    chain = [
+        ["re", "[a-z]+", ""],
+        ["python", "getitem", "[:3]"],
+        ["python", "join", " "],
+    ]
+    return _rule_query(
+        spark,
+        sf_dir,
+        "documents",
+        "d",
+        F.col("text"),
+        [{"name": "first3", "chain_rules": chain, "child_rules": []}],
+        rule="doc",
+    )
+
+
 @query("""
         SELECT 'https://docs.example.org/h/' || doc_id AS url,
                'Doc ' || doc_id AS title,
@@ -659,7 +655,6 @@ def q_rule_css(spark, sf_dir):
     pure-Python DOM engine, validated against an independently
     constructed oracle (the HTML is synthesized from doc_id, so DuckDB
     can predict the extraction output exactly)."""
-    docs = tp(spark, sf_dir, "documents")
     d = F.col("doc_id").cast("string")
     html = F.concat(
         F.lit('<html><body><h1 class="title">Doc '), d,
@@ -672,14 +667,12 @@ def q_rule_css(spark, sf_dir):
         F.lit('/">three</a></li>'),
         F.lit("</ul></body></html>"),
     )
-    pages = docs.select(
-        F.concat(F.lit("https://docs.example.org/h/"), d).alias("url"),
-        html.alias("text"),
-    )
-    storage = _single_host_storage(
-        "docs.example.org",
-        "page",
-        r"^https://docs\.example\.org/h/\d+$",
+    return _rule_query(
+        spark,
+        sf_dir,
+        "documents",
+        "h",
+        html,
         [
             {
                 "name": "title",
@@ -692,12 +685,7 @@ def q_rule_css(spark, sf_dir):
                 "child_rules": [],
             },
         ],
-    )
-    res = extract_pages(pages, storage)
-    return res.select(
-        "url",
-        F.get_json_object("result", "$.page.title").alias("title"),
-        F.get_json_object("result", "$.page.links").alias("links"),
+        rule="page",
     )
 
 
@@ -713,35 +701,25 @@ def q_rule_css1(spark, sf_dir):
     """Single-match selector variants and their distinct miss
     semantics: css1 → None (null) on miss, se1 → '' (empty string);
     selectolax engine for list extraction."""
-    docs = tp(spark, sf_dir, "documents")
     d = F.col("doc_id").cast("string")
     html = F.concat(
         F.lit('<html><body><h1 class="title">Doc '), d,
         F.lit('</h1><a class="lnk" href="/d/'), d,
         F.lit('/">link '), d, F.lit("</a></body></html>"),
     )
-    pages = docs.select(
-        F.concat(F.lit("https://docs.example.org/s/"), d).alias("url"),
-        html.alias("text"),
-    )
-    storage = _single_host_storage(
-        "docs.example.org",
-        "s1",
-        r"^https://docs\.example\.org/s/\d+$",
+    return _rule_query(
+        spark,
+        sf_dir,
+        "documents",
+        "s",
+        html,
         [
             {"name": "title", "chain_rules": [["css1", "h1.title", "$text"]], "child_rules": []},
             {"name": "miss_css1", "chain_rules": [["css1", "h2.missing", "$text"]], "child_rules": []},
             {"name": "miss_se1", "chain_rules": [["se1", "h2.missing", "$text"]], "child_rules": []},
             {"name": "href", "chain_rules": [["selectolax", "a.lnk", "@href"], ["python", "getitem", "[0]"]], "child_rules": []},
         ],
-    )
-    res = extract_pages(pages, storage)
-    return res.select(
-        "url",
-        F.get_json_object("result", "$.s1.title").alias("title"),
-        F.get_json_object("result", "$.s1.miss_css1").alias("miss_css1"),
-        F.get_json_object("result", "$.s1.miss_se1").alias("miss_se1"),
-        F.get_json_object("result", "$.s1.href").alias("href"),
+        rule="s1",
     )
 
 
@@ -760,7 +738,6 @@ def q_rule_xpath(spark, sf_dir):
     contains() predicate, all through the fused chain engine.  The HTML
     carries TWO lists so the per-context //li[1] semantics are visible
     in the oracle (two firsts, not one)."""
-    docs = tp(spark, sf_dir, "documents")
     d = F.col("doc_id").cast("string")
     html = F.concat(
         F.lit('<html><body><h1 class="title">Doc '), d,
@@ -773,14 +750,12 @@ def q_rule_xpath(spark, sf_dir):
         F.lit('/">three</a></li></ul><p lang="en-US">sum '), d,
         F.lit("</p></body></html>"),
     )
-    pages = docs.select(
-        F.concat(F.lit(f"https://{_DOCS_HOST}/x/"), d).alias("url"),
-        html.alias("text"),
-    )
-    storage = _single_host_storage(
-        _DOCS_HOST,
-        "xp",
-        rf"^https://docs\.example\.org/x/\d+$",
+    return _rule_query(
+        spark,
+        sf_dir,
+        "documents",
+        "x",
+        html,
         [
             {
                 "name": "title",
@@ -815,14 +790,7 @@ def q_rule_xpath(spark, sf_dir):
                 "child_rules": [],
             },
         ],
-    )
-    res = extract_pages(pages, storage)
-    return res.select(
-        "url",
-        F.get_json_object("result", "$.xp.title").alias("title"),
-        F.get_json_object("result", "$.xp.firsts").alias("firsts"),
-        F.get_json_object("result", "$.xp.ul1_last").alias("ul1_last"),
-        F.get_json_object("result", "$.xp.lang_text").alias("lang_text"),
+        rule="xp",
     )
 
 
@@ -1311,15 +1279,12 @@ def q_sitemap_refresh(spark, sf_dir):
     """)
 def q_rule_json(spark, sf_dir):
     """loader(json) → jmespath chain over the events props column."""
-    ev = tp(spark, sf_dir, "events")
-    pages = ev.select(
-        F.concat(F.lit("https://api.example.org/ev/"), F.col("event_id").cast("string")).alias("url"),
-        F.col("props").alias("text"),
-    )
-    storage = _single_host_storage(
-        "api.example.org",
-        "api",
-        r"^https://api\.example\.org/ev/\d+$",
+    return _rule_query(
+        spark,
+        sf_dir,
+        "events",
+        "ev",
+        F.col("props"),
         [
             {
                 "name": "k",
@@ -1327,27 +1292,9 @@ def q_rule_json(spark, sf_dir):
                 "child_rules": [],
             }
         ],
+        rule="api",
+        out_cols=[F.get_json_object("result", "$.api.k").cast("long").alias("k")],
     )
-    res = extract_pages(pages, storage)
-    return res.select(
-        "url", F.get_json_object("result", "$.api.k").cast("long").alias("k")
-    )
-
-
-def _doc_rule_query(spark, sf_dir, parse_rules, out_cols, rule="r", text_expr=None):
-    """documents-table rule runner: build (url, text), run the compiled
-    chain engine, project result fields with get_json_object."""
-    docs = tp(spark, sf_dir, "documents")
-    text = text_expr if text_expr is not None else F.col("text")
-    pages = docs.select(
-        F.concat(F.lit("https://docs.example.org/d/"), F.col("doc_id").cast("string")).alias("url"),
-        text.alias("text"),
-    )
-    storage = _single_host_storage(
-        "docs.example.org", rule, r"^https://docs\.example\.org/d/\d+$", parse_rules
-    )
-    res = extract_pages(pages, storage)
-    return res.select("url", *out_cols)
 
 
 @query("""
@@ -1357,11 +1304,14 @@ def _doc_rule_query(spark, sf_dir, parse_rules, out_cols, rule="r", text_expr=No
     """)
 def q_rule_udf(spark, sf_dir):
     """The sandboxed udf operator (exec-mode lambda) through Spark."""
-    return _doc_rule_query(
+    return _rule_query(
         spark,
         sf_dir,
+        "documents",
+        "d",
+        F.col("text"),
         [{"name": "n", "chain_rules": [["udf", "parse = lambda input_object: len(input_object)", ""]], "child_rules": []}],
-        [F.get_json_object("result", "$.r.n").cast("long").alias("n_chars_udf")],
+        out_cols=[F.get_json_object("result", "$.r.n").cast("long").alias("n_chars_udf")],
     )
 
 
@@ -1375,11 +1325,13 @@ _DEVOWEL_SQL = """
 @query(_DEVOWEL_SQL)
 def q_rule_regex_sub(spark, sf_dir):
     """re parser @replacement mode (sub)."""
-    return _doc_rule_query(
+    return _rule_query(
         spark,
         sf_dir,
-        [{"name": "s", "chain_rules": [["re", "[aeiou]", "@_"]], "child_rules": []}],
-        [F.get_json_object("result", "$.r.s").alias("devoweled")],
+        "documents",
+        "d",
+        F.col("text"),
+        [{"name": "devoweled", "chain_rules": [["re", "[aeiou]", "@_"]], "child_rules": []}],
     )
 
 
@@ -1396,11 +1348,13 @@ def q_rule_python_ops(spark, sf_dir):
         ["python", "getitem", "[:5]"],
         ["python", "join", "|"],
     ]
-    return _doc_rule_query(
+    return _rule_query(
         spark,
         sf_dir,
-        [{"name": "t", "chain_rules": chain, "child_rules": []}],
-        [F.get_json_object("result", "$.r.t").alias("top5")],
+        "documents",
+        "d",
+        F.col("text"),
+        [{"name": "top5", "chain_rules": chain, "child_rules": []}],
     )
 
 
@@ -1411,11 +1365,13 @@ def q_rule_python_ops(spark, sf_dir):
     """)
 def q_rule_b64(spark, sf_dir):
     """python base64_encode sub-op."""
-    return _doc_rule_query(
+    return _rule_query(
         spark,
         sf_dir,
-        [{"name": "b", "chain_rules": [["python", "base64_encode", ""]], "child_rules": []}],
-        [F.get_json_object("result", "$.r.b").alias("b64")],
+        "documents",
+        "d",
+        F.col("text"),
+        [{"name": "b64", "chain_rules": [["python", "base64_encode", ""]], "child_rules": []}],
     )
 
 
@@ -1434,12 +1390,14 @@ def q_rule_xml(spark, sf_dir):
         F.lit("</name></item></root>"),
     )
     chain = [["xml", "name", "$text"], ["python", "getitem", "[0]"]]
-    return _doc_rule_query(
+    return _rule_query(
         spark,
         sf_dir,
+        "documents",
+        "d",
+        xml,
         [{"name": "n", "chain_rules": chain, "child_rules": []}],
-        [F.get_json_object("result", "$.r.n").alias("name")],
-        text_expr=xml,
+        out_cols=[F.get_json_object("result", "$.r.n").alias("name")],
     )
 
 
@@ -1450,20 +1408,15 @@ def q_rule_xml(spark, sf_dir):
     """)
 def q_rule_time(spark, sf_dir):
     """time parser encode (timestr → epoch, engine tz pinned UTC)."""
-    ev = tp(spark, sf_dir, "events")
-    pages = ev.select(
-        F.concat(F.lit("https://api.example.org/ev/"), F.col("event_id").cast("string")).alias("url"),
-        F.date_format(F.col("ts").cast("timestamp"), "yyyy-MM-dd HH:mm:ss").alias("text"),
-    )
-    storage = _single_host_storage(
-        "api.example.org",
-        "t",
-        r"^https://api\.example\.org/ev/\d+$",
+    return _rule_query(
+        spark,
+        sf_dir,
+        "events",
+        "ev",
+        F.date_format(F.col("ts").cast("timestamp"), "yyyy-MM-dd HH:mm:ss"),
         [{"name": "epoch", "chain_rules": [["time", "encode", ""]], "child_rules": []}],
-    )
-    res = extract_pages(pages, storage)
-    return res.select(
-        "url", F.get_json_object("result", "$.t.epoch").cast("double").alias("epoch")
+        rule="t",
+        out_cols=[F.get_json_object("result", "$.t.epoch").cast("double").alias("epoch")],
     )
 
 
@@ -1489,7 +1442,6 @@ def q_rule_paths(spark, sf_dir):
     ``[?(@.id in [1, 3])]``, existence-or ``[?(@.flag | @.id == 3)]``
     (the grammar the reference gets from jsonpath-rw-ext, paths.py from
     scratch)."""
-    ev = tp(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("long")
     nested = F.concat(
         F.lit('{"a": {"b": '),
@@ -1506,80 +1458,70 @@ def q_rule_paths(spark, sf_dir):
         (k + 20).cast("string"),
         F.lit("}]}"),
     )
-    pages = ev.select(
-        F.concat(F.lit("https://api.example.org/ev/"), F.col("event_id").cast("string")).alias("url"),
-        nested.alias("text"),
-    )
-    storage = _single_host_storage(
-        "api.example.org",
-        "p",
-        r"^https://api\.example\.org/ev/\d+$",
-        [
-            {
-                "name": "jp",
-                "chain_rules": [["loader", "json", ""], ["jsonpath", "$.a.b.k", ""], ["python", "getitem", "[0]"]],
-                "child_rules": [],
-            },
-            {
-                "name": "op",
-                "chain_rules": [["loader", "json", ""], ["objectpath", "$.a.b.k", ""]],
-                "child_rules": [],
-            },
-            {
-                "name": "rk",
-                "chain_rules": [["loader", "json", ""], ["jsonpath", "$..k", ""], ["python", "getitem", "[0]"]],
-                "child_rules": [],
-            },
-            {
-                "name": "un",
-                "chain_rules": [["loader", "json", ""], ["jsonpath", "$.a.b['k','zz']", ""], ["python", "getitem", "[0]"]],
-                "child_rules": [],
-            },
-            {
-                "name": "iu",
-                "chain_rules": [["loader", "json", ""], ["jsonpath", "$.l[1,0]", ""], ["python", "getitem", "[0]"]],
-                "child_rules": [],
-            },
-            {
-                "name": "fa",  # boolean AND of two comparisons -> id 2
-                "chain_rules": [["loader", "json", ""], ["jsonpath", "$.items[?(@.id > 1 & @.id < 3)].p", ""], ["python", "getitem", "[0]"]],
-                "child_rules": [],
-            },
-            {
-                "name": "fi",  # list membership -> ids 1,3; [1] -> id 3
-                "chain_rules": [["loader", "json", ""], ["jsonpath", "$.items[?(@.id in [1, 3])].p", ""], ["python", "getitem", "[1]"]],
-                "child_rules": [],
-            },
-            {
-                "name": "fo",  # existence OR comparison -> ids 1,3; [0] -> id 1
-                "chain_rules": [["loader", "json", ""], ["objectpath", "$.items[@.flag | @.id == 3]", ""], ["python", "getitem", "[0]"], ["jsonpath", "p", ""], ["python", "getitem", "[0]"]],
-                "child_rules": [],
-            },
-            {
-                "name": "fr",  # regex match =~ -> tags row-1, row-3; [1] -> id 3
-                "chain_rules": [["loader", "json", ""], ["jsonpath", '$.items[?(@.tag =~ "^row-")].p', ""], ["python", "getitem", "[1]"]],
-                "child_rules": [],
-            },
-            {
-                "name": "fm",  # arithmetic operands -> id*2-1==3 -> id 2
-                "chain_rules": [["loader", "json", ""], ["jsonpath", "$.items[?(@.id * 2 - 1 == 3)].p", ""], ["python", "getitem", "[0]"]],
-                "child_rules": [],
-            },
+    rules = [
+        {
+            "name": "k_jsonpath",
+            "chain_rules": [["loader", "json", ""], ["jsonpath", "$.a.b.k", ""], ["python", "getitem", "[0]"]],
+            "child_rules": [],
+        },
+        {
+            "name": "k_objectpath",
+            "chain_rules": [["loader", "json", ""], ["objectpath", "$.a.b.k", ""]],
+            "child_rules": [],
+        },
+        {
+            "name": "k_recursive",
+            "chain_rules": [["loader", "json", ""], ["jsonpath", "$..k", ""], ["python", "getitem", "[0]"]],
+            "child_rules": [],
+        },
+        {
+            "name": "k_union",
+            "chain_rules": [["loader", "json", ""], ["jsonpath", "$.a.b['k','zz']", ""], ["python", "getitem", "[0]"]],
+            "child_rules": [],
+        },
+        {
+            "name": "k_idx_union",
+            "chain_rules": [["loader", "json", ""], ["jsonpath", "$.l[1,0]", ""], ["python", "getitem", "[0]"]],
+            "child_rules": [],
+        },
+        {
+            "name": "k_filter_and",  # boolean AND of two comparisons -> id 2
+            "chain_rules": [["loader", "json", ""], ["jsonpath", "$.items[?(@.id > 1 & @.id < 3)].p", ""], ["python", "getitem", "[0]"]],
+            "child_rules": [],
+        },
+        {
+            "name": "k_filter_in",  # list membership -> ids 1,3; [1] -> id 3
+            "chain_rules": [["loader", "json", ""], ["jsonpath", "$.items[?(@.id in [1, 3])].p", ""], ["python", "getitem", "[1]"]],
+            "child_rules": [],
+        },
+        {
+            "name": "k_filter_or",  # existence OR comparison -> ids 1,3; [0] -> id 1
+            "chain_rules": [["loader", "json", ""], ["objectpath", "$.items[@.flag | @.id == 3]", ""], ["python", "getitem", "[0]"], ["jsonpath", "p", ""], ["python", "getitem", "[0]"]],
+            "child_rules": [],
+        },
+        {
+            "name": "k_filter_re",  # regex match =~ -> tags row-1, row-3; [1] -> id 3
+            "chain_rules": [["loader", "json", ""], ["jsonpath", '$.items[?(@.tag =~ "^row-")].p', ""], ["python", "getitem", "[1]"]],
+            "child_rules": [],
+        },
+        {
+            "name": "k_filter_math",  # arithmetic operands -> id*2-1==3 -> id 2
+            "chain_rules": [["loader", "json", ""], ["jsonpath", "$.items[?(@.id * 2 - 1 == 3)].p", ""], ["python", "getitem", "[0]"]],
+            "child_rules": [],
+        },
+    ]
+    return _rule_query(
+        spark,
+        sf_dir,
+        "events",
+        "ev",
+        nested,
+        rules,
+        rule="p",
+        out_cols=[
+            F.get_json_object("result", f"$.p.{r['name']}").cast("long").alias(r["name"])
+            for r in rules
         ],
-    )
-    res = extract_pages(pages, storage)
-    return res.select(
-        "url",
-        F.get_json_object("result", "$.p.jp").cast("long").alias("k_jsonpath"),
-        F.get_json_object("result", "$.p.op").cast("long").alias("k_objectpath"),
-        F.get_json_object("result", "$.p.rk").cast("long").alias("k_recursive"),
-        F.get_json_object("result", "$.p.un").cast("long").alias("k_union"),
-        F.get_json_object("result", "$.p.iu").cast("long").alias("k_idx_union"),
-        F.get_json_object("result", "$.p.fa").cast("long").alias("k_filter_and"),
-        F.get_json_object("result", "$.p.fi").cast("long").alias("k_filter_in"),
-        F.get_json_object("result", "$.p.fo").cast("long").alias("k_filter_or"),
-        F.get_json_object("result", "$.p.fr").cast("long").alias("k_filter_re"),
-        F.get_json_object("result", "$.p.fm").cast("long").alias("k_filter_math"),
     )
 
 
@@ -1625,18 +1567,16 @@ def q_rule_re_modes(spark, sf_dir):
     """The remaining re parser modes (reference parsers.py:456-471):
     $N → finditer group N, '-' → split, '#N' → search().group(N) with ''
     on miss."""
-    return _doc_rule_query(
+    return _rule_query(
         spark,
         sf_dir,
+        "documents",
+        "d",
+        F.col("text"),
         [
             {"name": "g1", "chain_rules": [["re", "([a-z]+) ", "$1"], ["python", "join", ","]], "child_rules": []},
             {"name": "parts", "chain_rules": [["re", r"\s+", "-"], ["python", "join", "|"]], "child_rules": []},
             {"name": "first5", "chain_rules": [["re", "[a-z]{5,}", "#0"]], "child_rules": []},
-        ],
-        [
-            F.get_json_object("result", "$.r.g1").alias("g1"),
-            F.get_json_object("result", "$.r.parts").alias("parts"),
-            F.get_json_object("result", "$.r.first5").alias("first5"),
         ],
     )
 
@@ -1649,25 +1589,33 @@ _RULE_LOADER_SQL = """
     """
 
 
+def _rule_loader_query(spark, sf_dir, loader, text_expr):
+    """The rule_loader_* body: loader(<loader>) → python getitem of the
+    keys k and name."""
+    return _rule_query(
+        spark,
+        sf_dir,
+        "documents",
+        "d",
+        text_expr,
+        [
+            {"name": "k", "chain_rules": [["loader", loader, ""], ["python", "getitem", "k"]], "child_rules": []},
+            {"name": "nm", "chain_rules": [["loader", loader, ""], ["python", "getitem", "name"]], "child_rules": []},
+        ],
+        out_cols=[
+            F.get_json_object("result", "$.r.k").cast("long").alias("k"),
+            F.get_json_object("result", "$.r.nm").alias("nm"),
+        ],
+    )
+
+
 @query(_RULE_LOADER_SQL)
 def q_rule_loader_yaml(spark, sf_dir):
     """loader(yaml) → python getitem chain (reference parsers.py:857-871)
     over synthesized YAML docs, so DuckDB predicts the parsed values."""
     d = F.col("doc_id").cast("string")
     yaml_text = F.concat(F.lit("k: "), d, F.lit("\nname: doc-"), d)
-    return _doc_rule_query(
-        spark,
-        sf_dir,
-        [
-            {"name": "k", "chain_rules": [["loader", "yaml", ""], ["python", "getitem", "k"]], "child_rules": []},
-            {"name": "nm", "chain_rules": [["loader", "yaml", ""], ["python", "getitem", "name"]], "child_rules": []},
-        ],
-        [
-            F.get_json_object("result", "$.r.k").cast("long").alias("k"),
-            F.get_json_object("result", "$.r.nm").alias("nm"),
-        ],
-        text_expr=yaml_text,
-    )
+    return _rule_loader_query(spark, sf_dir, "yaml", yaml_text)
 
 
 @query(_RULE_LOADER_SQL)
@@ -1675,19 +1623,7 @@ def q_rule_loader_toml(spark, sf_dir):
     """loader(toml) over synthesized TOML docs (parsers.py:873-887)."""
     d = F.col("doc_id").cast("string")
     toml_text = F.concat(F.lit("k = "), d, F.lit('\nname = "doc-'), d, F.lit('"'))
-    return _doc_rule_query(
-        spark,
-        sf_dir,
-        [
-            {"name": "k", "chain_rules": [["loader", "toml", ""], ["python", "getitem", "k"]], "child_rules": []},
-            {"name": "nm", "chain_rules": [["loader", "toml", ""], ["python", "getitem", "name"]], "child_rules": []},
-        ],
-        [
-            F.get_json_object("result", "$.r.k").cast("long").alias("k"),
-            F.get_json_object("result", "$.r.nm").alias("nm"),
-        ],
-        text_expr=toml_text,
-    )
+    return _rule_loader_query(spark, sf_dir, "toml", toml_text)
 
 
 @query("""
@@ -1705,9 +1641,12 @@ def q_rule_python_modes(spark, sf_dir):
     """The python parser sub-ops not covered by rule_python_ops
     (reference parsers.py:739-829): template, strip, default, chain,
     index, const."""
-    return _doc_rule_query(
+    return _rule_query(
         spark,
         sf_dir,
+        "documents",
+        "d",
+        F.col("text"),
         [
             {"name": "tmpl", "chain_rules": [["python", "template", "pre:${obj}"]], "child_rules": []},
             {"name": "strip2", "chain_rules": [["python", "template", "##${obj}##"], ["python", "strip", "#"]], "child_rules": []},
@@ -1715,14 +1654,6 @@ def q_rule_python_modes(spark, sf_dir):
             {"name": "last", "chain_rules": [["python", "split", " "], ["python", "index", "-1"]], "child_rules": []},
             {"name": "dflt", "chain_rules": [["re", "[a-z]{12,}", "#0"], ["python", "default", "none"]], "child_rules": []},
             {"name": "konst", "chain_rules": [["python", "const", "K"]], "child_rules": []},
-        ],
-        [
-            F.get_json_object("result", "$.r.tmpl").alias("tmpl"),
-            F.get_json_object("result", "$.r.strip2").alias("strip2"),
-            F.get_json_object("result", "$.r.nospace").alias("nospace"),
-            F.get_json_object("result", "$.r.last").alias("last"),
-            F.get_json_object("result", "$.r.dflt").alias("dflt"),
-            F.get_json_object("result", "$.r.konst").alias("konst"),
         ],
     )
 
@@ -1737,16 +1668,15 @@ def q_rule_context(spark, sf_dir):
     """The context parser (reference parsers.py:958-977): swaps the
     chain input for the live context dict — extract the per-page url
     seeded by the engine, and the default-on-miss branch."""
-    return _doc_rule_query(
+    return _rule_query(
         spark,
         sf_dir,
+        "documents",
+        "d",
+        F.col("text"),
         [
-            {"name": "cur", "chain_rules": [["context", "url", ""]], "child_rules": []},
-            {"name": "fb", "chain_rules": [["context", "no_such_key", "fallback"]], "child_rules": []},
-        ],
-        [
-            F.get_json_object("result", "$.r.cur").alias("ctx_url"),
-            F.get_json_object("result", "$.r.fb").alias("ctx_fallback"),
+            {"name": "ctx_url", "chain_rules": [["context", "url", ""]], "child_rules": []},
+            {"name": "ctx_fallback", "chain_rules": [["context", "no_such_key", "fallback"]], "child_rules": []},
         ],
     )
 
@@ -1764,8 +1694,6 @@ def q_rule_children(spark, sf_dir):
     """Composed rule exercising iter_parse_child (per-element child
     rules, parsers.py:1352-1361), __object__ input rebinding and the
     __schema__ assert (parsers.py:1335-1349) in one crawler rule."""
-    docs = tp(spark, sf_dir, "documents")
-    d = F.col("doc_id").cast("string")
     html = F.concat(
         F.lit("<html><body><ul>"),
         F.lit('<li><a class="lnk" href="/d/'), (F.col("doc_id") * 3).cast("string"),
@@ -1776,14 +1704,12 @@ def q_rule_children(spark, sf_dir):
         F.lit('/">three</a></li>'),
         F.lit("</ul></body></html>"),
     )
-    pages = docs.select(
-        F.concat(F.lit("https://docs.example.org/c/"), d).alias("url"),
-        html.alias("text"),
-    )
-    storage = _single_host_storage(
-        "docs.example.org",
-        "page",
-        r"^https://docs\.example\.org/c/\d+$",
+    return _rule_query(
+        spark,
+        sf_dir,
+        "documents",
+        "c",
+        html,
         [
             {
                 "name": "__schema__",
@@ -1810,15 +1736,14 @@ def q_rule_children(spark, sf_dir):
                 "child_rules": [],
             },
         ],
-    )
-    res = extract_pages(pages, storage)
-    return res.select(
-        "url",
-        F.get_json_object("result", "$.page.__schema__").alias("schema_ok"),
-        F.get_json_object("result", "$.page.items[0].href").alias("item0_href"),
-        F.get_json_object("result", "$.page.items[1].href").alias("item1_href"),
-        F.get_json_object("result", "$.page.items[2].txt").alias("item2_txt"),
-        F.get_json_object("result", "$.page.head").alias("head"),
+        rule="page",
+        out_cols=[
+            F.get_json_object("result", "$.page.__schema__").alias("schema_ok"),
+            F.get_json_object("result", "$.page.items[0].href").alias("item0_href"),
+            F.get_json_object("result", "$.page.items[1].href").alias("item1_href"),
+            F.get_json_object("result", "$.page.items[2].txt").alias("item2_txt"),
+            F.get_json_object("result", "$.page.head").alias("head"),
+        ],
     )
 
 
@@ -3160,13 +3085,11 @@ def q_template_stats(spark, sf_dir):
     return template_stats(s)
 
 
-# dedup_clusters: same md5-MinHash banding as minhash_lsh_pairs to
-# get the candidate edges, then the transitive closure via a
-# recursive CTE (reach(node, r): r is in node's component; MIN(r)
-# per node = the component's canonical id — exactly hash-min's
-# fixpoint).
-_DEDUP_CLUSTERS_SQL = rf"""
-        WITH RECURSIVE toks AS (
+# The DuckDB twin of lsh_candidate_pairs(n_hashes=16, bands=8,
+# shingle_k=3): word 3-gram shingles (sh), the md5-MinHash signature
+# (sig), 8 bands of 2 rows (bands) and the doc pairs sharing a band
+# key (cand).  Every MinHash-LSH oracle splices these CTEs.
+_LSH_CTES = rf"""toks AS (
           SELECT doc_id, {_TOKS} AS tk FROM documents
         ),
         sh AS (
@@ -3191,8 +3114,13 @@ _DEDUP_CLUSTERS_SQL = rf"""
           SELECT a.doc_id AS id1, b.doc_id AS id2
           FROM bands a JOIN bands b USING (band_idx, band_key)
           WHERE a.doc_id < b.doc_id GROUP BY 1, 2
-        ),
-        e AS (
+        )"""
+
+# The transitive closure of the cand pairs, for a WITH RECURSIVE after
+# _LSH_CTES: reach(node, r) holds when r is in node's component; MIN(r)
+# per node = the component's canonical id — exactly hash-min's
+# fixpoint.
+_CLOSURE_CTES = """e AS (
           SELECT id1 AS a, id2 AS b FROM cand
           UNION ALL
           SELECT id2 AS a, id1 AS b FROM cand
@@ -3202,7 +3130,22 @@ _DEDUP_CLUSTERS_SQL = rf"""
           UNION
           SELECT e.b AS node, reach.r FROM reach JOIN e ON e.a = reach.node
         ),
-        comp AS (SELECT node, MIN(r) AS cluster_id FROM reach GROUP BY node)
+        comp AS (SELECT node, MIN(r) AS cluster_id FROM reach GROUP BY node)"""
+
+
+def _lsh_graph(docs: DataFrame):
+    """The near-dup graph of the dedup_clusters* and canonical_docs
+    queries: lsh_candidate_pairs(16, 8, 3) as (src, dst) edges, and
+    every document as a node (singletons are their own cluster)."""
+    pairs = lsh_candidate_pairs(docs, n_hashes=16, bands=8, shingle_k=3)
+    edges = pairs.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
+    return edges, docs.select(F.col("doc_id").alias("node"))
+
+
+# dedup_clusters: the LSH candidate edges, then their closure.
+_DEDUP_CLUSTERS_SQL = f"""
+        WITH RECURSIVE {_LSH_CTES},
+        {_CLOSURE_CTES}
         SELECT node AS doc_id, cluster_id,
                CAST(CASE WHEN node = cluster_id THEN 1 ELSE 0 END AS INTEGER)
                  AS is_canonical,
@@ -3222,11 +3165,7 @@ def q_dedup_clusters(spark, sf_dir):
     CTE."""
     from .graph import dedup_clusters
 
-    docs = tp(spark, sf_dir, "documents")
-    pairs = lsh_candidate_pairs(docs, n_hashes=16, bands=8, shingle_k=3)
-    edges = pairs.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
-    nodes = docs.select(F.col("doc_id").alias("node"))
-    return dedup_clusters(edges, nodes)
+    return dedup_clusters(*_lsh_graph(tp(spark, sf_dir, "documents")))
 
 
 # the star-contraction CC computes the same closure as hash-min: both
@@ -3240,11 +3179,7 @@ def q_dedup_clusters_star(spark, sf_dir):
     algorithms are pinned to one ground truth."""
     from .graph import dedup_clusters
 
-    docs = tp(spark, sf_dir, "documents")
-    pairs = lsh_candidate_pairs(docs, n_hashes=16, bands=8, shingle_k=3)
-    edges = pairs.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
-    nodes = docs.select(F.col("doc_id").alias("node"))
-    return dedup_clusters(edges, nodes, algorithm="star")
+    return dedup_clusters(*_lsh_graph(tp(spark, sf_dir, "documents")), algorithm="star")
 
 
 @query(_DEDUP_CLUSTERS_SQL)
@@ -3255,53 +3190,14 @@ def q_dedup_clusters_hashmin(spark, sf_dir):
     Oracle-gated against the same recursive-CTE closure."""
     from .graph import dedup_clusters
 
-    docs = tp(spark, sf_dir, "documents")
-    pairs = lsh_candidate_pairs(docs, n_hashes=16, bands=8, shingle_k=3)
-    edges = pairs.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
-    nodes = docs.select(F.col("doc_id").alias("node"))
-    return dedup_clusters(edges, nodes, algorithm="hashmin")
+    return dedup_clusters(*_lsh_graph(tp(spark, sf_dir, "documents")), algorithm="hashmin")
 
 
 # canonical_docs: the dedup_clusters closure + quality-ranked
 # canonical election (quality DESC, id ASC within each cluster).
 @query(rf"""
-        WITH RECURSIVE toks AS (
-          SELECT doc_id, {_TOKS} AS tk FROM documents
-        ),
-        sh AS (
-          SELECT doc_id,
-                 list_transform(range(0, len(tk) - 2),
-                                i -> array_to_string(tk[i+1:i+3], ' ')) AS s
-          FROM toks WHERE len(tk) >= 3
-        ),
-        sig AS (
-          SELECT doc_id,
-                 list_transform(range(0, 16),
-                   h -> list_min(list_transform(s,
-                          g -> substr(md5(h || ':' || g), 1, 16)))) AS sg
-          FROM sh WHERE len(s) > 0
-        ),
-        bands AS (
-          SELECT doc_id, j.band_idx,
-                 md5(array_to_string(sg[j.band_idx*2+1:j.band_idx*2+2], ',')) AS band_key
-          FROM sig, (SELECT unnest(range(0, 8)) AS band_idx) j
-        ),
-        cand AS (
-          SELECT a.doc_id AS id1, b.doc_id AS id2
-          FROM bands a JOIN bands b USING (band_idx, band_key)
-          WHERE a.doc_id < b.doc_id GROUP BY 1, 2
-        ),
-        e AS (
-          SELECT id1 AS a, id2 AS b FROM cand
-          UNION ALL
-          SELECT id2 AS a, id1 AS b FROM cand
-        ),
-        reach AS (
-          SELECT doc_id AS node, doc_id AS r FROM documents
-          UNION
-          SELECT e.b AS node, reach.r FROM reach JOIN e ON e.a = reach.node
-        ),
-        comp AS (SELECT node, MIN(r) AS cluster_id FROM reach GROUP BY node),
+        WITH RECURSIVE {_LSH_CTES},
+        {_CLOSURE_CTES},
         sized AS (
           SELECT node, cluster_id,
                  COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size
@@ -3341,10 +3237,7 @@ def q_canonical_docs(spark, sf_dir):
     from .textops.quality import quality_expr
 
     docs = tp(spark, sf_dir, "documents")
-    pairs = lsh_candidate_pairs(docs, n_hashes=16, bands=8, shingle_k=3)
-    edges = pairs.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
-    nodes = docs.select(F.col("doc_id").alias("node"))
-    clusters = dedup_clusters(edges, nodes)
+    clusters = dedup_clusters(*_lsh_graph(docs))
     quality = docs.select("doc_id", quality_expr("text").alias("quality"))
     return select_canonical(clusters, quality)
 
@@ -4900,32 +4793,9 @@ def q_dedup_exact(spark, sf_dir):
     return exact_dup_groups(tp(spark, sf_dir, "documents"))
 
 
-@query(rf"""
-        WITH toks AS (
-          SELECT doc_id, {_TOKS} AS tk FROM documents
-        ),
-        sh AS (
-          SELECT doc_id,
-                 list_transform(range(0, len(tk) - 2),
-                                i -> array_to_string(tk[i+1:i+3], ' ')) AS s
-          FROM toks WHERE len(tk) >= 3
-        ),
-        sig AS (
-          SELECT doc_id,
-                 list_transform(range(0, 16),
-                   h -> list_min(list_transform(s,
-                          g -> substr(md5(h || ':' || g), 1, 16)))) AS sg
-          FROM sh WHERE len(s) > 0
-        ),
-        bands AS (
-          SELECT doc_id, j.band_idx,
-                 md5(array_to_string(sg[j.band_idx*2+1:j.band_idx*2+2], ',')) AS band_key
-          FROM sig, (SELECT unnest(range(0, 8)) AS band_idx) j
-        )
-        SELECT a.doc_id AS id1, b.doc_id AS id2
-        FROM bands a JOIN bands b USING (band_idx, band_key)
-        WHERE a.doc_id < b.doc_id
-        GROUP BY 1, 2
+@query(f"""
+        WITH {_LSH_CTES}
+        SELECT id1, id2 FROM cand
     """)
 def q_minhash_lsh_pairs(spark, sf_dir):
     return lsh_candidate_pairs(
@@ -4933,33 +4803,8 @@ def q_minhash_lsh_pairs(spark, sf_dir):
     )
 
 
-_VERIFIED_PAIRS_SQL = rf"""
-        WITH toks AS (
-          SELECT doc_id, {_TOKS} AS tk FROM documents
-        ),
-        sh AS (
-          SELECT doc_id,
-                 list_transform(range(0, len(tk) - 2),
-                                i -> array_to_string(tk[i+1:i+3], ' ')) AS s
-          FROM toks WHERE len(tk) >= 3
-        ),
-        sig AS (
-          SELECT doc_id,
-                 list_transform(range(0, 16),
-                   h -> list_min(list_transform(s,
-                          g -> substr(md5(h || ':' || g), 1, 16)))) AS sg
-          FROM sh WHERE len(s) > 0
-        ),
-        bands AS (
-          SELECT doc_id, j.band_idx,
-                 md5(array_to_string(sg[j.band_idx*2+1:j.band_idx*2+2], ',')) AS band_key
-          FROM sig, (SELECT unnest(range(0, 8)) AS band_idx) j
-        ),
-        cand AS (
-          SELECT a.doc_id AS id1, b.doc_id AS id2
-          FROM bands a JOIN bands b USING (band_idx, band_key)
-          WHERE a.doc_id < b.doc_id GROUP BY 1, 2
-        ),
+_VERIFIED_PAIRS_SQL = f"""
+        WITH {_LSH_CTES},
         d AS (SELECT doc_id, list_distinct(s) AS sd FROM sh)
         SELECT id1, id2, ROUND(inter / (la + lb - inter), 4) AS jaccard FROM (
           SELECT id1, id2,
@@ -7038,7 +6883,7 @@ def q_stream_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = tempfile.mkdtemp(prefix="us_stream_extract_")
     out_dir, ck = os.path.join(base, "out"), os.path.join(base, "ck")
-    _await(run_to_parquet(extract_stream(pages, storage), out_dir, ck))
+    _await(run_to_parquet(extract_pages(pages, storage), out_dir, ck))
     return spark.read.parquet(out_dir).select(
         "url", F.get_json_object("result", "$.r.s").alias("devoweled")
     )
@@ -8582,33 +8427,8 @@ def q_lang_fertility(spark, sf_dir):
     return lang_fertility(tp(spark, sf_dir, "documents"))
 
 
-@query(rf"""
-    WITH toks AS (
-      SELECT doc_id, {_TOKS} AS tk FROM documents
-    ),
-    sh AS (
-      SELECT doc_id,
-             list_transform(range(0, len(tk) - 2),
-                            i -> array_to_string(tk[i+1:i+3], ' ')) AS s
-      FROM toks WHERE len(tk) >= 3
-    ),
-    sig AS (
-      SELECT doc_id,
-             list_transform(range(0, 16),
-               h -> list_min(list_transform(s,
-                      g -> substr(md5(h || ':' || g), 1, 16)))) AS sg
-      FROM sh WHERE len(s) > 0
-    ),
-    bands AS (
-      SELECT doc_id, j.band_idx,
-             md5(array_to_string(sg[j.band_idx*2+1:j.band_idx*2+2], ',')) AS band_key
-      FROM sig, (SELECT unnest(range(0, 8)) AS band_idx) j
-    ),
-    cand AS (
-      SELECT a.doc_id AS id1, b.doc_id AS id2
-      FROM bands a JOIN bands b USING (band_idx, band_key)
-      WHERE a.doc_id < b.doc_id GROUP BY 1, 2
-    ),
+@query(f"""
+    WITH {_LSH_CTES},
     d AS (SELECT doc_id, list_distinct(s) AS sd FROM sh)
     SELECT id1, id2, ROUND(est, 4) AS est_jaccard,
            ROUND(inter / (la + lb - inter), 4) AS jaccard,
