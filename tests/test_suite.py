@@ -27,8 +27,9 @@ from tools.check_oracle import check, oracle_connection
 # from shared fragments (_IPS_SQL, _GRAPH_SQL, _PAGE_SQL, _NORM, the PSL
 # list), one query per family, and canonical_docs (the small-graph
 # union-find components through select_canonical).  Every query run
-# through the shared rule-query runner and every oracle built from the
-# shared MinHash-LSH fragment is in the lane too.
+# through the shared rule-query runner, every oracle built from the
+# shared MinHash-LSH fragment and every query that reaches a row-wise
+# pandas kernel is in the lane too.
 ORACLE_LANE = (
     "pricing_summary rule_first3 token_stats c4_line_filter pii_redact "
     "dedup_exact multimodal_features spam_mass asn_tag ip_politeness "
@@ -39,7 +40,12 @@ ORACLE_LANE = (
     "rule_children rule_udf rule_regex_sub rule_python_ops rule_b64 "
     "rule_xml rule_re_modes rule_loader_yaml rule_python_modes "
     "rule_context minhash_lsh_pairs dedup_verified_pairs dedup_clusters "
-    "minhash_error"
+    "minhash_error ngram_jaccard_pairs simhash_groups simhash_hamming_pairs "
+    "containment_pairs doc_fingerprints winnow_fingerprints content_extract "
+    "binary_extract links_extract page_directives stream_admission "
+    "robots_matrix media_dims dom_structure template_stats html_tables "
+    "hreflang_audit microdata page_metadata charset_sniff mojibake_repair "
+    "warc_sink_roundtrip"
 ).split()
 
 
