@@ -574,10 +574,10 @@ class CrawlEngine:
         records log.  The maintenance round takes round ``round``'s
         slot, so a ``records/r{round}`` left by a round that crashed
         before its commit is dropped, never returned by records() or
-        counted as seen.  The Bloom/cuckoo accelerators are derived
-        state and follow automatically (rebuilt per round here; at 10^10
-        scale the cuckoo sidecar's delete() patches filters
-        incrementally instead, frontier/cuckoo.py).
+        counted as seen.  The Bloom pre-filter is derived state and
+        follows automatically (rebuilt from the seen set every round).
+        No engine path builds a cuckoo filter; frontier/cuckoo.py's
+        delete() is a standalone operator.
 
         ``history`` (optional): a (url_canon, fetch_count, change_count)
         table from the caller's fetch log.  When given, requeues are

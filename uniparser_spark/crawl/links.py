@@ -20,10 +20,12 @@ chains).
 from __future__ import annotations
 
 import re
-from typing import Iterator, List
+from typing import List
 from urllib.parse import urljoin
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..engine.rows import map_rows
 
 LINKS_SCHEMA = (
     "src string, dst string, anchor string, link_idx int, "
@@ -34,13 +36,13 @@ _WS = re.compile(r"\s+")
 _HOST = re.compile(r"^https?://([^/?#:]+)", re.I)
 
 
-def _page_links(src: str, markup: str) -> List[tuple]:
-    from ..dom.html import parse_html
+def _page_links(src: str, markup) -> List[tuple]:
+    from ..dom.html import markup_text, parse_html
 
     src_host = m.group(1).lower() if (m := _HOST.match(src)) else ""
     out: List[tuple] = []
     idx = 0
-    for el in parse_html(markup).iter_elements():
+    for el in parse_html(markup_text(markup)).iter_elements():
         if el.tag != "a":
             continue
         href = el.get("href")
@@ -72,25 +74,10 @@ def links_from_html(
     all land absolute.  ``link_idx`` is document order — the crawl
     frontier's ``list_index`` analog for link-discovery seeding.
     """
-    import pandas as pd
-
     cols = pages.select(
         F.col(url_col).alias("src"), F.col(html_col).alias("markup")
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows: List[tuple] = []
-            for src, markup in zip(batch["src"], batch["markup"]):
-                if isinstance(markup, (bytes, bytearray, memoryview)):
-                    markup = bytes(markup).decode("utf-8", errors="replace")
-                rows.extend(_page_links(src, markup))
-            yield pd.DataFrame(
-                rows,
-                columns=["src", "dst", "anchor", "link_idx", "nofollow", "internal"],
-            )
-
-    return cols.mapInPandas(run, schema=LINKS_SCHEMA)
+    return map_rows(cols, LINKS_SCHEMA, _page_links)
 
 
 def link_edges(

@@ -317,3 +317,11 @@ def _fused_parse(markup: str) -> HtmlDocument:
 def parse_html(markup: str) -> HtmlDocument:
     """markup → DOM (the fused scanner, ~6× stdlib ``html.parser``)."""
     return _fused_parse(markup)
+
+
+def markup_text(markup) -> str:
+    """A pages-table ``html`` value as str: binary markup is utf-8
+    decoded with replace (the pages-table contract), str passes."""
+    if isinstance(markup, (bytes, bytearray, memoryview)):
+        return bytes(markup).decode("utf-8", errors="replace")
+    return markup

@@ -6,7 +6,9 @@ Settings chosen for the 100 TB design point (SURVEY.md §4):
 - session timezone pinned to UTC so TimeParser semantics are
   deterministic across JVM/Python (reference tz-fix arithmetic,
   parsers.py:938-955);
-- runtime bloom-filter join pushdown enabled (seen-set anti-joins).
+- runtime bloom-filter join pushdown enabled.  It does not fire on the
+  crawl's seen-set anti-joins (checked on Spark 4.1.2); the crawl's own
+  Bloom pre-filter is ``frontier/seen.py``.
 """
 
 from __future__ import annotations

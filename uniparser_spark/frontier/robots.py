@@ -22,9 +22,8 @@ groups, comments) — enough for the corpus and byte-stable.
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional, Tuple
+from typing import List, Optional, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -34,6 +33,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..engine.rows import map_rows
 
 ROBOTS_SCHEMA = StructType(
     [
@@ -111,19 +112,11 @@ def robots_table(
     robots_pages = pages.filter(
         F.col(url_col).rlike(r"^https?://[^/]+/robots\.txt$")
     ).select(host.alias("host"), F.col(text_col).alias("body"))
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {"host": [], "crawl_delay": [], "disallow": [], "allow": []}
-            for h, body in zip(batch["host"], batch["body"]):
-                delay, dis, allow = parse_robots(body, user_agent)
-                out["host"].append(h)
-                out["crawl_delay"].append(delay)
-                out["disallow"].append(dis)
-                out["allow"].append(allow)
-            yield pd.DataFrame(out)
-
-    return robots_pages.mapInPandas(parse, schema=ROBOTS_SCHEMA)
+    return map_rows(
+        robots_pages,
+        ROBOTS_SCHEMA,
+        lambda h, body: [(h, *parse_robots(body, user_agent))],
+    )
 
 
 def _path_col(url_col: str = "url_canon") -> F.Column:
@@ -201,14 +194,15 @@ def budgets_from_robots(
 PAGE_DIRECTIVES_SCHEMA = "url string, noindex int, nofollow int, noarchive int"
 
 
-def _page_directive_flags(markup: str, header: Optional[str]) -> Tuple[int, int, int]:
-    """Union of all robots meta tags on the page plus the header value.
+def _page_directive_flags(url: str, markup, header: Optional[str]) -> List[tuple]:
+    """The page's one ``(url, noindex, nofollow, noarchive)`` row: the
+    union of all robots meta tags on the page plus the header value.
     Directives are comma-separated, case-insensitive; `none` is the
     spec's alias for `noindex, nofollow`; `all` is an explicit no-op."""
-    from ..dom.html import parse_html
+    from ..dom.html import markup_text, parse_html
 
     toks: set = set()
-    for el in parse_html(markup).iter_elements():
+    for el in parse_html(markup_text(markup)).iter_elements():
         if el.tag != "meta":
             continue
         name = el.get("name") or ""
@@ -218,15 +212,18 @@ def _page_directive_flags(markup: str, header: Optional[str]) -> Tuple[int, int,
             continue
         content = el.get("content") or ""
         toks.update(t.strip().lower() for t in str(content).split(","))
-    if header:
+    if header and isinstance(header, str):
         toks.update(t.strip().lower() for t in header.split(","))
     if "none" in toks:
         toks.update(("noindex", "nofollow"))
-    return (
-        int("noindex" in toks),
-        int("nofollow" in toks),
-        int("noarchive" in toks),
-    )
+    return [
+        (
+            url,
+            int("noindex" in toks),
+            int("nofollow" in toks),
+            int("noarchive" in toks),
+        )
+    ]
 
 
 def page_directives(
@@ -251,33 +248,13 @@ def page_directives(
     Scale: same shape as ``links_from_html`` — HTML crosses into Python
     exactly once (Arrow-batched mapInPandas in the scan stage), the
     output is four narrow columns, nothing shuffles."""
-    import pandas as pd  # noqa: F811 (module-level import is for type use)
-
     sel = [F.col(url_col).alias("url"), F.col(html_col).alias("markup")]
     sel.append(
         F.col(header_col).alias("xrobots")
         if header_col
         else F.lit(None).cast("string").alias("xrobots")
     )
-    cols = pages.select(*sel)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for url, markup, header in zip(
-                batch["url"], batch["markup"], batch["xrobots"]
-            ):
-                if isinstance(markup, (bytes, bytearray, memoryview)):
-                    markup = bytes(markup).decode("utf-8", errors="replace")
-                ni, nf, na = _page_directive_flags(
-                    markup, header if isinstance(header, str) else None
-                )
-                rows.append((url, ni, nf, na))
-            yield pd.DataFrame(
-                rows, columns=["url", "noindex", "nofollow", "noarchive"]
-            )
-
-    return cols.mapInPandas(run, schema=PAGE_DIRECTIVES_SCHEMA)
+    return map_rows(pages.select(*sel), PAGE_DIRECTIVES_SCHEMA, _page_directive_flags)
 
 
 def robots_agent_matrix(
@@ -324,27 +301,19 @@ def robots_agent_matrix(
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {k.name: [] for k in schema.fields}
-            for h, body in zip(batch["host"], batch["body"]):
-                groups = robots_groups(body)
-                for agent in agent_list:
-                    grp = groups.get(agent)
-                    specific = int(grp is not None)
-                    if grp is None:
-                        grp = groups.get(
-                            "*", {"disallow": [], "allow": [], "delay": None}
-                        )
-                    out["host"].append(h)
-                    out["agent"].append(agent)
-                    out["specific"].append(specific)
-                    out["crawl_delay"].append(grp["delay"])
-                    out["n_disallow"].append(len(grp["disallow"]))
-                    out["n_allow"].append(len(grp["allow"]))
-            yield pd.DataFrame(out)
+    def rows(h, body):
+        groups = robots_groups(body)
+        for agent in agent_list:
+            grp = groups.get(agent)
+            specific = int(grp is not None)
+            if grp is None:
+                grp = groups.get("*", {"disallow": [], "allow": [], "delay": None})
+            yield (
+                h, agent, specific, grp["delay"],
+                len(grp["disallow"]), len(grp["allow"]),
+            )
 
-    return robots_pages.mapInPandas(run, schema=schema)
+    return map_rows(robots_pages, schema, rows)
 
 
 def robots_fetch_policy(

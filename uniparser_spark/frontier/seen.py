@@ -6,13 +6,15 @@ the north rule adds one at 10^10-URL scale.  Design:
 - **keys**: ``url_canon`` (deterministic canonicalizer, identity on
   reference inputs) hashed with ``xxhash64`` — the 64-bit membership
   key; ``pmod(hash, n_buckets)`` routes to a bloom bucket.
-- **bloom state**: one bitmap per bucket, built distributively with
-  ``applyInPandas`` (partial bitmaps per partition OR-merged per
-  bucket).  Buckets bound memory: each bitmap sizes to its expected
-  share, and probe joins shuffle on the bucket id instead of
-  broadcasting one giant filter.  At 10^10 URLs × 10 bits/URL that is
-  ~12.5 GB of bitmaps across (say) 4096 buckets — 3 MB each, trivially
-  co-partitioned with candidates; never driver-resident.
+- **bloom state**: one bitmap per bucket, built by a grouped
+  ``applyInPandas`` on the bucket id.  That has no map-side partial
+  aggregation: every seen row is shuffled to its bucket's group, and
+  each group builds its bitmap from all of its hashes.  Buckets bound
+  memory: each bitmap sizes to its expected share, and probe joins
+  shuffle on the bucket id instead of broadcasting one giant filter.
+  At 10^10 URLs × 10 bits/URL that is ~12.5 GB of bitmaps across (say)
+  4096 buckets — 3 MB each, trivially co-partitioned with candidates;
+  never driver-resident.
 - **probe**: candidates ⟖ bloom (bucket equi-join) → vectorized bit
   tests in numpy → definite-new rows skip the expensive exact check;
   only bloom-positives anti-join the exact seen table (false-positive
@@ -154,9 +156,10 @@ class BloomSeenFilter:
         return 1 << math.ceil(math.log2(m))  # power of two for cheap mod
 
     def build(self, seen: DataFrame, expected_total: Optional[int] = None) -> DataFrame:
-        """seen(url_hash) -> bloom(bucket, bitmap).  Partial-aggregate
-        pattern: bitmaps built per shuffle partition group, one row per
-        bucket."""
+        """seen(url_hash) -> bloom(bucket, bitmap), one row per bucket.
+        ``groupBy("bucket").applyInPandas``: no partial aggregation, so
+        the whole seen input is shuffled by bucket, and each bucket's
+        bitmap is built from all of its hashes in one Python call."""
         if expected_total is None:
             expected_total = max(1, seen.count())
         m_bits = self._m_bits(expected_total // self.n_buckets + 1)

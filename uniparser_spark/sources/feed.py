@@ -32,7 +32,7 @@ from __future__ import annotations
 import xml.etree.ElementTree as ET
 from datetime import datetime, timezone
 from email.utils import format_datetime, parsedate_to_datetime
-from typing import Any, Dict, Iterator, List, Optional
+from typing import Any, Dict, List, Optional
 from xml.sax.saxutils import escape
 
 from pyspark.sql import DataFrame, functions as F
@@ -42,6 +42,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..engine.rows import map_rows
 
 _ATOM_NS = "{http://www.w3.org/2005/Atom}"
 
@@ -199,47 +201,30 @@ def feed_entries(
     documents become ``kind='error'`` rows with the message in ``loc``
     — error-as-data, same policy as the sitemap connector.
     """
-    import pandas as pd
-
     fp = pages.filter(F.col(url_col).rlike(FEED_URL_RE)).select(
         F.col(url_col).alias("feed_url"), F.col(body_col).alias("body")
     )
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows: List[Dict[str, Any]] = []
-            for u, body in zip(batch["feed_url"], batch["body"]):
-                raw = bytes(body) if not isinstance(body, str) else body.encode()
-                try:
-                    items = parse_feed(raw)
-                except ValueError as exc:
-                    rows.append(
-                        {
-                            "feed_url": u, "kind": "error", "fmt": None,
-                            "loc": str(exc), "title": None,
-                            "pub_epoch": None, "guid": None,
-                        }
-                    )
-                    continue
-                for it in items:
-                    rows.append(
-                        {
-                            "feed_url": u,
-                            "kind": "item",
-                            "fmt": it["fmt"],
-                            "loc": it["loc"],
-                            "title": it["title"],
-                            "pub_epoch": (
-                                int(it["pub"].timestamp())
-                                if it["pub"] is not None
-                                else None
-                            ),
-                            "guid": it["guid"],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in FEED_ENTRY_SCHEMA])
+    def decode(u, body):
+        raw = bytes(body) if not isinstance(body, str) else body.encode()
+        try:
+            items = parse_feed(raw)
+        except ValueError as exc:
+            return [(u, "error", None, str(exc), None, None, None)]
+        return [
+            (
+                u,
+                "item",
+                it["fmt"],
+                it["loc"],
+                it["title"],
+                int(it["pub"].timestamp()) if it["pub"] is not None else None,
+                it["guid"],
+            )
+            for it in items
+        ]
 
-    return fp.mapInPandas(decode, schema=FEED_ENTRY_SCHEMA)
+    return map_rows(fp, FEED_ENTRY_SCHEMA, decode)
 
 
 def seeds_from_feed(entries: DataFrame, priority: float = 0.8) -> DataFrame:

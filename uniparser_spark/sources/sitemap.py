@@ -41,7 +41,7 @@ import io
 import re
 import xml.etree.ElementTree as ET
 from datetime import datetime, timezone
-from typing import Any, Dict, Iterable, Iterator, List, Optional, Tuple
+from typing import Any, Dict, Iterable, List, Optional, Tuple
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
@@ -51,6 +51,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..engine.rows import map_rows
 
 _GZIP_MAGIC = b"\x1f\x8b"
 _NS = "{http://www.sitemaps.org/schemas/sitemap/0.9}"
@@ -224,59 +226,29 @@ def sitemap_entries(
     become ``kind='error'`` rows with the message in ``loc`` —
     error-as-data, same policy as the extraction engine.
     """
-    import pandas as pd
-
     sm = pages.filter(
         F.col(url_col).rlike(r"^https?://[^?#]*sitemap[^?#]*\.xml(\.gz)?$")
     ).select(F.col(url_col).alias("sitemap_url"), F.col(body_col).alias("body"))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows: List[Dict[str, Any]] = []
-            for u, body in zip(batch["sitemap_url"], batch["body"]):
-                raw = bytes(body) if not isinstance(body, str) else body.encode()
-                try:
-                    entries = parse_sitemap(raw)
-                except ValueError as exc:
-                    rows.append(
-                        {
-                            "sitemap_url": u,
-                            "kind": "error",
-                            "loc": str(exc),
-                            "lastmod_epoch": None,
-                            "changefreq": None,
-                            "priority": None,
-                        }
-                    )
-                    continue
-                for e in entries:
-                    rows.append(
-                        {
-                            "sitemap_url": u,
-                            "kind": e["kind"],
-                            "loc": e["loc"],
-                            "lastmod_epoch": (
-                                int(e["lastmod"].timestamp())
-                                if e["lastmod"] is not None
-                                else None
-                            ),
-                            "changefreq": e["changefreq"],
-                            "priority": e["priority"],
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "sitemap_url",
-                    "kind",
-                    "loc",
-                    "lastmod_epoch",
-                    "changefreq",
-                    "priority",
-                ],
+    def decode(u, body):
+        raw = bytes(body) if not isinstance(body, str) else body.encode()
+        try:
+            entries = parse_sitemap(raw)
+        except ValueError as exc:
+            return [(u, "error", str(exc), None, None, None)]
+        return [
+            (
+                u,
+                e["kind"],
+                e["loc"],
+                int(e["lastmod"].timestamp()) if e["lastmod"] is not None else None,
+                e["changefreq"],
+                e["priority"],
             )
+            for e in entries
+        ]
 
-    return sm.mapInPandas(decode, schema=ENTRY_SCHEMA)
+    return map_rows(sm, ENTRY_SCHEMA, decode)
 
 
 def sitemap_urls_from_robots(

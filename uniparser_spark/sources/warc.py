@@ -231,9 +231,9 @@ def read_warc(spark, path: str, path_glob: str = "*.warc*"):
     mapInPandas with no shuffle.  Column pruning still applies above
     this source; filters belong downstream of the decode.
     """
-    import pandas as pd
     from pyspark.sql.types import StructField, StructType
 
+    from ..engine.rows import map_rows
     from ..testgen import PAGES_SCHEMA
 
     # real-world WARC headers are optional (Content-Language, WARC-Date
@@ -248,17 +248,14 @@ def read_warc(spark, path: str, path_glob: str = "*.warc*"):
         .load(path)
         .select("content")
     )
-
-    def decode(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows: List[Dict[str, Any]] = []
-            for blob in batch["content"]:
-                rows.extend(records_to_pages(bytes(blob)))
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "text", "lang"]
-            )
-
-    return files.mapInPandas(decode, schema=schema)
+    return map_rows(
+        files,
+        schema,
+        lambda blob: (
+            (p["url"], p["warc_ts"], p["html"], p["text"], p["lang"])
+            for p in records_to_pages(bytes(blob))
+        ),
+    )
 
 
 def _warc_record(

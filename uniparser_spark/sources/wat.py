@@ -138,36 +138,27 @@ def read_wat(spark, path: str, path_glob: str = "*.wat*"):
     shuffle, and column pruning upstream of the decode drops the file
     bytes as soon as rows are emitted.
     """
-    import pandas as pd
+    from ..engine.rows import map_rows
 
     files = spark.read.format("binaryFile").option("pathGlobFilter", path_glob).load(
         path
     )
-
-    def decode(batches: Iterable["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for b in batches:
-            rows = []
-            for content in b["content"]:
-                for m in records_to_meta(bytes(content)):
-                    rows.append(
-                        {
-                            "url": m["url"],
-                            "warc_ts": m["warc_ts"],
-                            "title": m["title"],
-                            "links": [
-                                {"url": u, "text": t} for u, t in m["links"]
-                            ],
-                            "n_links": len(m["links"]),
-                            "valid": m["valid"],
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["url", "warc_ts", "title", "links", "n_links", "valid"],
-            )
-
     schema = (
         "url string, warc_ts timestamp, title string, "
         "links array<struct<url:string,text:string>>, n_links int, valid int"
     )
-    return files.select("content").mapInPandas(decode, schema=schema)
+    return map_rows(
+        files.select("content"),
+        schema,
+        lambda content: (
+            (
+                m["url"],
+                m["warc_ts"],
+                m["title"],
+                [{"url": u, "text": t} for u, t in m["links"]],
+                len(m["links"]),
+                m["valid"],
+            )
+            for m in records_to_meta(bytes(content))
+        ),
+    )

@@ -30,10 +30,9 @@ bytes so it can run long after the fetch, at corpus scale.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
+
+from ..engine.rows import map_rows
 
 _META_RE = r"""charset=["']?([a-z0-9_\-]+)"""
 DEFAULT_CHARSET = "windows-1252"
@@ -98,33 +97,20 @@ def decode_html(
         source.alias("source"),
     )
     schema = f"{id_col} long, charset string, source string, text string"
+    boms = {
+        "utf-8": b"\xef\xbb\xbf",
+        "utf-16le": b"\xff\xfe",
+        "utf-16be": b"\xfe\xff",
+    }
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        boms = {
-            "utf-8": b"\xef\xbb\xbf",
-            "utf-16le": b"\xff\xfe",
-            "utf-16be": b"\xfe\xff",
-        }
-        for batch in batches:
-            texts = []
-            for raw, cs, src in zip(
-                batch["_b"], batch["charset"], batch["source"]
-            ):
-                data = bytes(raw or b"")
-                if src == "bom":
-                    data = data[len(boms[cs]):]
-                codec = _PY_CODECS.get(cs, "cp1252")
-                texts.append(data.decode(codec, errors="replace"))
-            yield pd.DataFrame(
-                {
-                    id_col: batch[id_col],
-                    "charset": batch["charset"],
-                    "source": batch["source"],
-                    "text": texts,
-                }
-            )
+    def decode(doc_id, raw, cs, src):
+        data = bytes(raw or b"")
+        if src == "bom":
+            data = data[len(boms[cs]):]
+        codec = _PY_CODECS.get(cs, "cp1252")
+        return [(doc_id, cs, src, data.decode(codec, errors="replace"))]
 
-    return staged.mapInPandas(run, schema=schema)
+    return map_rows(staged, schema, decode)
 
 
 def synth_html_bytes(
@@ -274,18 +260,8 @@ def repair_mojibake(
             return 1, n_pre - n_post, cand
         return 0, 0, t
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [fix_one(t if t is not None else "") for t in pdf[text_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "repaired": pd.array(
-                        [r[0] for r in rows], dtype="int32"
-                    ),
-                    "n_fixed": pd.array([r[1] for r in rows], dtype="int32"),
-                    "text_repaired": [r[2] for r in rows],
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(run, schema=schema)
+    return map_rows(
+        df.select(id_col, text_col),
+        schema,
+        lambda i, t: [(i, *fix_one(t if t is not None else ""))],
+    )

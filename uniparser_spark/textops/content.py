@@ -35,12 +35,12 @@ and the output rows are narrow (id + extracted text + counters).
 
 from __future__ import annotations
 
-from typing import Iterator, List, Tuple
+from typing import List, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..dom.html import parse_html
+from ..engine.rows import map_rows
 from ..dom.nodes import Element, Text
 
 CANDIDATE_TAGS = frozenset({"article", "main", "div", "section", "td"})
@@ -127,18 +127,6 @@ def extract_main_content(
         f"{id_col} long, main_tag string, main_text string, "
         "n_paras int, main_len int"
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [extract_main(h) for h in pdf[html_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "main_tag": [r[0] for r in rows],
-                    "main_text": [r[1] for r in rows],
-                    "n_paras": pd.array([r[2] for r in rows], dtype="int32"),
-                    "main_len": pd.array([r[3] for r in rows], dtype="int32"),
-                }
-            )
-
-    return df.select(id_col, html_col).mapInPandas(run, schema=schema)
+    return map_rows(
+        df.select(id_col, html_col), schema, lambda i, h: [(i, *extract_main(h))]
+    )

@@ -30,9 +30,28 @@ Hashing has two implementations:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+import hashlib
 
-from .exprs import h16, md5_bit, seeded_h16, tokens, word_shingles
+from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+from ..engine.rows import map_rows
+from .exprs import (
+    h16,
+    md5_bit,
+    seeded_h16,
+    split_tokens,
+    tokens,
+    word_grams,
+    word_shingles,
+)
 
 
 def exact_dup_groups(
@@ -144,20 +163,6 @@ def minhash_signatures(
             F.col(id_col), sig.alias("sig"), F.size(sh).alias("n_shingles")
         ).filter(F.col("n_shingles") > 0)
 
-    import hashlib
-    import re as _re
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     schema = StructType(
         [
             StructField(id_col, LongType(), False),
@@ -165,34 +170,17 @@ def minhash_signatures(
             StructField("n_shingles", IntegerType(), False),
         ]
     )
-    ws = _re.compile(r"\s+")
     prefixes = [f"{s}:".encode() for s in range(n_hashes)]
+    md5 = hashlib.md5
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        md5 = hashlib.md5
-        for batch in batches:
-            ids, sigs, counts = [], [], []
-            for doc_id, text in zip(batch[id_col], batch[text_col]):
-                toks = ws.split(text.strip()) if text and text.strip() else []
-                n_sh = len(toks) - shingle_k + 1
-                if n_sh <= 0:
-                    continue
-                grams = [
-                    " ".join(toks[i : i + shingle_k]).encode() for i in range(n_sh)
-                ]
-                sig = [
-                    min(md5(p + g).hexdigest()[:16] for g in grams)
-                    for p in prefixes
-                ]
-                ids.append(int(doc_id))
-                sigs.append(sig)
-                counts.append(n_sh)
-            yield pd.DataFrame(
-                {id_col: pd.Series(ids, dtype="int64"), "sig": sigs,
-                 "n_shingles": pd.Series(counts, dtype="int32")}
-            )
+    def signature(doc_id, text):
+        grams = [g.encode() for g in word_grams(split_tokens(text), shingle_k)]
+        if not grams:
+            return []
+        sig = [min(md5(p + g).hexdigest()[:16] for g in grams) for p in prefixes]
+        return [(doc_id, sig, len(grams))]
 
-    return df.select(id_col, text_col).mapInPandas(run, schema=schema)
+    return map_rows(df.select(id_col, text_col), schema, signature)
 
 
 def _xx_minhash_cols(
@@ -313,38 +301,18 @@ def _shingle_sets(
     (pure string slicing, no hashing) but ~20× faster than the
     interpreted array-lambda expression on long documents.  Rows with
     no shingles are dropped (the expression path's size>0 filter)."""
-    import re as _re
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
-
     schema = StructType(
         [
             StructField(id_col, LongType(), False),
             StructField("sh", ArrayType(StringType()), False),
         ]
     )
-    ws = _re.compile(r"\s+")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids, sets = [], []
-            for doc_id, text in zip(batch[id_col], batch[text_col]):
-                toks = ws.split(text.strip()) if text and text.strip() else []
-                n = len(toks) - shingle_k + 1
-                if n <= 0:
-                    continue
-                grams = list(
-                    dict.fromkeys(
-                        " ".join(toks[i : i + shingle_k]) for i in range(n)
-                    )
-                )
-                ids.append(int(doc_id))
-                sets.append(grams)
-            yield pd.DataFrame({id_col: pd.Series(ids, dtype="int64"), "sh": sets})
+    def shingle_set(doc_id, text):
+        grams = list(dict.fromkeys(word_grams(split_tokens(text), shingle_k)))
+        return [(doc_id, grams)] if grams else []
 
-    return df.select(id_col, text_col).mapInPandas(run, schema=schema)
+    return map_rows(df.select(id_col, text_col), schema, shingle_set)
 
 
 def ngram_jaccard_pairs(
@@ -480,48 +448,32 @@ def with_simhash(
             .drop("n_tokens")
         )
 
-    import hashlib
-    import re as _re
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql.types import LongType, StructField, StructType
-
     schema = StructType(
         [
             StructField(id_col, LongType(), False),
             StructField("simhash", LongType(), False),
         ]
     )
-    ws = _re.compile(r"\s+")
+    md5 = hashlib.md5
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        md5 = hashlib.md5
-        for batch in batches:
-            ids, hashes = [], []
-            for doc_id, text in zip(batch[id_col], batch[text_col]):
-                toks = ws.split(text.strip()) if text and text.strip() else []
-                if not toks:
-                    continue
-                sums = [0] * bits
-                for t in toks:
-                    hexd = md5(t.encode()).hexdigest()
-                    for j in range(bits):
-                        # same pseudo-random bit as exprs.md5_bit:
-                        # parity of the (j+1)-th hex char's codepoint
-                        sums[j] += (ord(hexd[j]) % 2) * 2 - 1
-                sh = 0
-                for j in range(bits):
-                    if sums[j] >= 0:
-                        sh += 1 << j
-                ids.append(int(doc_id))
-                hashes.append(sh)
-            yield pd.DataFrame(
-                {id_col: pd.Series(ids, dtype="int64"),
-                 "simhash": pd.Series(hashes, dtype="int64")}
-            )
+    def simhash(doc_id, text):
+        toks = split_tokens(text)
+        if not toks:
+            return []
+        sums = [0] * bits
+        for t in toks:
+            hexd = md5(t.encode()).hexdigest()
+            for j in range(bits):
+                # same pseudo-random bit as exprs.md5_bit:
+                # parity of the (j+1)-th hex char's codepoint
+                sums[j] += (ord(hexd[j]) % 2) * 2 - 1
+        sh = 0
+        for j in range(bits):
+            if sums[j] >= 0:
+                sh += 1 << j
+        return [(doc_id, sh)]
 
-    return df.select(id_col, text_col).mapInPandas(run, schema=schema)
+    return map_rows(df.select(id_col, text_col), schema, simhash)
 
 
 def simhash_hamming_pairs(
@@ -824,19 +776,6 @@ def _containment_postings_pandas(
     ``list_distinct`` grams in the oracle, and ~20× cheaper than the
     interpreted higher-order-lambda expression chain (Spark's array
     lambdas are CodegenFallback; see :func:`minhash_signatures`)."""
-    import hashlib
-    import re as _re
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     schema = StructType(
         [
             StructField(id_col, LongType(), False),
@@ -844,34 +783,13 @@ def _containment_postings_pandas(
             StructField("fp", StringType(), False),
         ]
     )
-    ws = _re.compile(r"\s+")
+    md5 = hashlib.md5
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        md5 = hashlib.md5
-        for batch in batches:
-            ids, sizes, fps = [], [], []
-            for doc_id, text in zip(batch[id_col], batch[text_col]):
-                toks = ws.split(text.strip()) if text and text.strip() else []
-                n = len(toks) - shingle_k + 1
-                if n <= 0:
-                    continue
-                grams = {
-                    " ".join(toks[i : i + shingle_k]) for i in range(n)
-                }
-                n_sh = len(grams)
-                for g in grams:
-                    ids.append(int(doc_id))
-                    sizes.append(n_sh)
-                    fps.append(md5(g.encode()).hexdigest()[:16])
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "n_sh": pd.Series(sizes, dtype="int32"),
-                    "fp": fps,
-                }
-            )
+    def postings(doc_id, text):
+        grams = set(word_grams(split_tokens(text), shingle_k))
+        return [(doc_id, len(grams), md5(g.encode()).hexdigest()[:16]) for g in grams]
 
-    return df.select(id_col, text_col).mapInPandas(run, schema=schema)
+    return map_rows(df.select(id_col, text_col), schema, postings)
 
 
 def containment_pairs(

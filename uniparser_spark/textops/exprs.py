@@ -10,14 +10,24 @@ same left-to-right summation order and rounded before emission.
 
 from __future__ import annotations
 
+import re
+from typing import List, Optional
+
 from pyspark.sql import Column, functions as F
 
 WS_RE = r"\s+"
+_WS = re.compile(WS_RE)
 
 
 def tokens(col: Column) -> Column:
     """Whitespace tokenization — split(trim(text), '\\s+')."""
     return F.split(F.trim(col), WS_RE)
+
+
+def split_tokens(text: Optional[str]) -> List[str]:
+    """Python twin of :func:`tokens` for the pandas kernels; an empty,
+    blank or NULL text has no tokens."""
+    return _WS.split(text.strip()) if text and text.strip() else []
 
 
 def word_shingles(toks: Column, k: int) -> Column:
@@ -28,6 +38,12 @@ def word_shingles(toks: Column, k: int) -> Column:
         lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
     )
     return F.when(F.size(toks) >= k, grams).otherwise(F.array().cast("array<string>"))
+
+
+def word_grams(toks: List[str], k: int) -> List[str]:
+    """Python twin of :func:`word_shingles`: the word k-grams of
+    ``toks`` in order, joined by single spaces; empty below k tokens."""
+    return [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
 
 
 def h16(col: Column) -> Column:

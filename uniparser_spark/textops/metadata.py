@@ -51,13 +51,13 @@ and Arrow batches amortize the Python crossing.
 from __future__ import annotations
 
 import json
-from typing import Iterator, List, Optional, Tuple
+from typing import List, Optional, Tuple
 from urllib.parse import urljoin
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..dom.html import parse_html
+from ..engine.rows import map_rows
 from ..dom.nodes import Element
 
 
@@ -156,32 +156,17 @@ def harvest_hreflang(
     order.  Pages with no alternates contribute no rows."""
     schema = "url string, hreflang string, href string"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls: List[str] = []
-            langs: List[str] = []
-            hrefs: List[str] = []
-            for base, html in zip(pdf[url_col], pdf[html_col]):
-                doc = parse_html(html)
-                for el in doc.iter_elements():
-                    if el.tag != "link":
-                        continue
-                    lang = el.get("hreflang")
-                    href = el.get("href")
-                    if (
-                        lang is None
-                        or href is None
-                        or "alternate" not in _rel_tokens(el)
-                    ):
-                        continue
-                    urls.append(base)
-                    langs.append(lang)
-                    hrefs.append(urljoin(base, href) if base else href)
-            yield pd.DataFrame(
-                {"url": urls, "hreflang": langs, "href": hrefs}
-            )
+    def edges(base, html):
+        for el in parse_html(html).iter_elements():
+            if el.tag != "link":
+                continue
+            lang = el.get("hreflang")
+            href = el.get("href")
+            if lang is None or href is None or "alternate" not in _rel_tokens(el):
+                continue
+            yield base, lang, urljoin(base, href) if base else href
 
-    return df.select(url_col, html_col).mapInPandas(run, schema=schema)
+    return map_rows(df.select(url_col, html_col), schema, edges)
 
 
 def hreflang_audit(edges: DataFrame) -> DataFrame:
@@ -247,36 +232,20 @@ def harvest_microdata(
     One DOM parse, one pre-order walk, one Arrow crossing."""
     schema = f"{id_col} long, n_scopes int, itemtypes string, n_props int"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            scopes: List[int] = []
-            types: List[Optional[str]] = []
-            props: List[int] = []
-            for html in pdf[html_col]:
-                doc = parse_html(html)
-                n_s = n_p = 0
-                ts: List[str] = []
-                for el in doc.iter_elements():
-                    if el.get("itemscope") is not None:
-                        n_s += 1
-                        t = el.get("itemtype")
-                        if t:
-                            ts.append(t)
-                    if el.get("itemprop") is not None:
-                        n_p += 1
-                scopes.append(n_s)
-                types.append(",".join(sorted(set(ts))) if ts else None)
-                props.append(n_p)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "n_scopes": pd.array(scopes, dtype="int32"),
-                    "itemtypes": types,
-                    "n_props": pd.array(props, dtype="int32"),
-                }
-            )
+    def census(doc_id, html):
+        n_s = n_p = 0
+        ts: List[str] = []
+        for el in parse_html(html).iter_elements():
+            if el.get("itemscope") is not None:
+                n_s += 1
+                t = el.get("itemtype")
+                if t:
+                    ts.append(t)
+            if el.get("itemprop") is not None:
+                n_p += 1
+        return [(doc_id, n_s, ",".join(sorted(set(ts))) if ts else None, n_p)]
 
-    return df.select(id_col, html_col).mapInPandas(run, schema=schema)
+    return map_rows(df.select(id_col, html_col), schema, census)
 
 
 def harvest_metadata(
@@ -297,30 +266,11 @@ def harvest_metadata(
         "published string"
     )
     cols = [id_col, html_col] + ([base_url_col] if base_url_col else [])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            bases = pdf[base_url_col] if base_url_col else [None] * len(pdf)
-            rows = [
-                harvest_page_metadata(h, b)
-                for h, b in zip(pdf[html_col], bases)
-            ]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "title": [r[0] for r in rows],
-                    "description": [r[1] for r in rows],
-                    "og_title": [r[2] for r in rows],
-                    "og_url": [r[3] for r in rows],
-                    "canonical": [r[4] for r in rows],
-                    "n_hreflang": pd.array([r[5] for r in rows], dtype="int32"),
-                    "jsonld_types": [r[6] for r in rows],
-                    "n_jsonld_bad": pd.array([r[7] for r in rows], dtype="int32"),
-                    "published": [r[8] for r in rows],
-                }
-            )
-
-    return df.select(*cols).mapInPandas(run, schema=schema)
+    return map_rows(
+        df.select(*cols),
+        schema,
+        lambda i, h, base=None: [(i, *harvest_page_metadata(h, base))],
+    )
 
 
 def bitext_candidates(

@@ -29,9 +29,8 @@ import io
 import struct
 import wave
 import zlib
-from typing import Iterator, Optional, Tuple
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -41,6 +40,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..engine.rows import map_rows
 
 MEDIA_SCHEMA = StructType(
     [
@@ -479,42 +480,33 @@ def synth_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
         "webp": "image/webp",
     }
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = {k.name: [] for k in MEDIA_SCHEMA.fields}
-            for mid in batch["media_id"]:
-                mid = int(mid)
-                fmt = fmts[mid % 10]
-                w, h = 16 + mid % 240, 16 + (7 * mid) % 240
-                if fmt == "png":
-                    blob = make_png(w, h)
-                elif fmt == "gif":
-                    blob = make_gif(w, h, 1 + (mid // 4) % 4)
-                elif fmt == "jpeg":
-                    blob = make_jpeg(w, h)
-                elif fmt == "wav":
-                    blob = make_wav(8 * (1000 + mid % 1000))
-                elif fmt == "bmp":
-                    blob = make_bmp(w, h)
-                elif fmt == "tiff":
-                    blob = make_tiff(w, h)
-                elif fmt == "flac":
-                    blob = make_flac(8 * (1000 + mid % 1000))
-                elif fmt == "ico":
-                    blob = make_ico(w, h)
-                elif fmt == "webp":
-                    blob = make_webp(w, h)
-                else:
-                    blob = make_mp3(10 + mid % 20)
-                rows["media_id"].append(mid)
-                rows["media_type"].append(types[fmt])
-                rows["content"].append(blob)
-                rows["mime"].append(mimes[fmt])
-            yield pd.DataFrame(rows)
+    def media(mid):
+        mid = int(mid)
+        fmt = fmts[mid % 10]
+        w, h = 16 + mid % 240, 16 + (7 * mid) % 240
+        if fmt == "png":
+            blob = make_png(w, h)
+        elif fmt == "gif":
+            blob = make_gif(w, h, 1 + (mid // 4) % 4)
+        elif fmt == "jpeg":
+            blob = make_jpeg(w, h)
+        elif fmt == "wav":
+            blob = make_wav(8 * (1000 + mid % 1000))
+        elif fmt == "bmp":
+            blob = make_bmp(w, h)
+        elif fmt == "tiff":
+            blob = make_tiff(w, h)
+        elif fmt == "flac":
+            blob = make_flac(8 * (1000 + mid % 1000))
+        elif fmt == "ico":
+            blob = make_ico(w, h)
+        elif fmt == "webp":
+            blob = make_webp(w, h)
+        else:
+            blob = make_mp3(10 + mid % 20)
+        return [(mid, types[fmt], blob, mimes[fmt])]
 
-    return docs.select(F.col(id_col).alias("media_id")).mapInPandas(
-        run, schema=MEDIA_SCHEMA
-    )
+    return map_rows(docs.select(F.col(id_col).alias("media_id")), MEDIA_SCHEMA, media)
 
 
 # ---------------------------------------------------------------- decode
@@ -543,42 +535,33 @@ def decode_media(
         raise ValueError(f"unknown decode mode {mode!r}")
     schema = HEADER_SCHEMA if mode == "header" else FEATURE_SCHEMA
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {k.name: [] for k in schema.fields}
-            for mid, mtype, content in zip(
-                batch["media_id"], batch["media_type"], batch["content"]
-            ):
-                blob = bytes(content) if content is not None else b""
-                # md5 (not sha) so the DuckDB oracle can recompute it
-                digest = hashlib.md5(blob).digest()
-                if mode == "codec":
-                    # >>> codec seam: Pillow / soundfile / pyav decode here
-                    raise NotImplementedError(
-                        "pixel/sample decode requires image/audio libraries "
-                        "not present in this environment (header mode "
-                        "parses container metadata with the stdlib)"
-                    )
-                out["media_id"].append(int(mid))
-                out["media_type"].append(mtype)
-                out["n_bytes"].append(len(blob))
-                out["content_hash"].append(digest.hex()[:16])
-                if mode == "fake":
-                    w, h, frames = _fake_dims(digest)
-                    out["width"].append(w if mtype in ("image", "video") else None)
-                    out["height"].append(h if mtype in ("image", "video") else None)
-                    out["n_frames"].append(frames if mtype == "video" else None)
-                else:
-                    meta = parse_media_header(blob)
-                    out["fmt"].append(meta.get("fmt"))
-                    out["width"].append(meta.get("width"))
-                    out["height"].append(meta.get("height"))
-                    out["n_frames"].append(meta.get("n_frames"))
-                    out["duration_ms"].append(meta.get("duration_ms"))
-            yield pd.DataFrame(out)
+    def features(mid, mtype, content):
+        blob = bytes(content) if content is not None else b""
+        # md5 (not sha) so the DuckDB oracle can recompute it
+        digest = hashlib.md5(blob).digest()
+        if mode == "codec":
+            # >>> codec seam: Pillow / soundfile / pyav decode here
+            raise NotImplementedError(
+                "pixel/sample decode requires image/audio libraries "
+                "not present in this environment (header mode "
+                "parses container metadata with the stdlib)"
+            )
+        head = (mid, mtype, len(blob), digest.hex()[:16])
+        if mode == "fake":
+            w, h, frames = _fake_dims(digest)
+            visual = mtype in ("image", "video")
+            return [
+                (*head, w if visual else None, h if visual else None,
+                 frames if mtype == "video" else None)
+            ]
+        meta = parse_media_header(blob)
+        return [
+            (*head, meta.get("width"), meta.get("height"), meta.get("n_frames"),
+             meta.get("fmt"), meta.get("duration_ms"))
+        ]
 
     projected = df.select("media_id", "media_type", "content")
-    return projected.mapInPandas(run, schema=schema)
+    return map_rows(projected, schema, features)
 
 
 def docs_as_media(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:

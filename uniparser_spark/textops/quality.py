@@ -8,9 +8,13 @@ DuckDB oracle exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+import hashlib
 
-from .exprs import h16, tokens, word_shingles
+from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
+
+from ..engine.rows import map_rows
+from .exprs import h16, split_tokens, tokens, word_grams, word_shingles
 
 # Tiny per-language stopword lists for the n-gram-free heuristic
 # language-ID below.  Chosen for mutual exclusivity, not linguistic
@@ -361,13 +365,6 @@ def doc_fingerprints(
             F.array_min(F.transform(grams, h16)).alias("min_gram_fp"),
         )
 
-    import hashlib
-    import re as _re
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     schema = StructType(
         [
             StructField(id_col, LongType(), False),
@@ -375,33 +372,16 @@ def doc_fingerprints(
             StructField("min_gram_fp", StringType(), True),
         ]
     )
-    ws = _re.compile(r"\s+")
+    md5 = hashlib.md5
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        md5 = hashlib.md5
-        for batch in batches:
-            ids, cfps, mfps = [], [], []
-            for doc_id, text in zip(batch[id_col], batch[text_col]):
-                norm = " ".join(ws.split((text or "").lower())).strip()
-                toks = norm.split(" ") if norm else []
-                n_grams = len(toks) - k + 1
-                mfp = (
-                    min(
-                        md5(" ".join(toks[i : i + k]).encode()).hexdigest()[:16]
-                        for i in range(n_grams)
-                    )
-                    if n_grams > 0
-                    else None
-                )
-                ids.append(int(doc_id))
-                cfps.append(md5(norm.encode()).hexdigest()[:16])
-                mfps.append(mfp)
-            yield pd.DataFrame(
-                {id_col: pd.Series(ids, dtype="int64"), "content_fp": cfps,
-                 "min_gram_fp": mfps}
-            )
+    def fingerprints(doc_id, text):
+        toks = split_tokens((text or "").lower())
+        norm = " ".join(toks)
+        grams = word_grams(toks, k)
+        mfp = min(md5(g.encode()).hexdigest()[:16] for g in grams) if grams else None
+        return [(doc_id, md5(norm.encode()).hexdigest()[:16], mfp)]
 
-    return df.select(id_col, text_col).mapInPandas(run, schema=schema)
+    return map_rows(df.select(id_col, text_col), schema, fingerprints)
 
 
 def winnow_fingerprints(
@@ -435,19 +415,6 @@ def winnow_fingerprints(
     than ``w`` grams degenerate to one window over all grams (the
     standard convention).
     """
-    import hashlib
-    import re as _re
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     schema = StructType(
         [
             StructField(id_col, LongType(), False),
@@ -455,42 +422,27 @@ def winnow_fingerprints(
             StructField("fp", StringType(), False),
         ]
     )
-    ws = _re.compile(r"\s+")
+    md5 = hashlib.md5
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        md5 = hashlib.md5
-        for batch in batches:
-            ids, poss, fps = [], [], []
-            for doc_id, text in zip(batch[id_col], batch[text_col]):
-                toks = ws.split(text.strip()) if text and text.strip() else []
-                n_grams = len(toks) - k + 1
-                if n_grams <= 0:
-                    continue
-                hs = [
-                    md5(" ".join(toks[i : i + k]).encode()).hexdigest()[:16]
-                    for i in range(n_grams)
-                ]
-                sel = set()
-                for p in range(max(n_grams - w, 0) + 1):
-                    best_pos = p
-                    for j in range(p + 1, min(p + w, n_grams)):
-                        # rightmost minimum: later position wins ties
-                        if hs[j] <= hs[best_pos]:
-                            best_pos = j
-                    sel.add((best_pos, hs[best_pos]))
-                for pos, fp in sel:
-                    ids.append(int(doc_id))
-                    poss.append(pos)
-                    fps.append(fp)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "pos": pd.Series(poss, dtype="int32"),
-                    "fp": fps,
-                }
-            )
+    def winnow(doc_id, text):
+        hs = [
+            md5(g.encode()).hexdigest()[:16]
+            for g in word_grams(split_tokens(text), k)
+        ]
+        n_grams = len(hs)
+        if n_grams == 0:
+            return []
+        sel = set()
+        for p in range(max(n_grams - w, 0) + 1):
+            best_pos = p
+            for j in range(p + 1, min(p + w, n_grams)):
+                # rightmost minimum: later position wins ties
+                if hs[j] <= hs[best_pos]:
+                    best_pos = j
+            sel.add((best_pos, hs[best_pos]))
+        return [(doc_id, pos, fp) for pos, fp in sel]
 
-    return df.select(id_col, text_col).mapInPandas(run, schema=schema)
+    return map_rows(df.select(id_col, text_col), schema, winnow)
 
 
 def doc_keywords(

@@ -32,12 +32,12 @@ no page bytes in the shuffle.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator, Optional, Tuple
+from typing import Optional, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..dom.html import parse_html
+from ..engine.rows import map_rows
 from ..dom.nodes import Element
 
 _HEADINGS = frozenset({"h1", "h2", "h3", "h4", "h5", "h6"})
@@ -113,22 +113,9 @@ def dom_structure(
         f"{id_col} long, template_fp string, n_nodes int, max_depth int, "
         "heading_seq string, n_headings int"
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [page_structure(h) for h in pdf[html_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "template_fp": [r[0] for r in rows],
-                    "n_nodes": pd.array([r[1] for r in rows], dtype="int32"),
-                    "max_depth": pd.array([r[2] for r in rows], dtype="int32"),
-                    "heading_seq": [r[3] for r in rows],
-                    "n_headings": pd.array([r[4] for r in rows], dtype="int32"),
-                }
-            )
-
-    return df.select(id_col, html_col).mapInPandas(run, schema=schema)
+    return map_rows(
+        df.select(id_col, html_col), schema, lambda i, h: [(i, *page_structure(h))]
+    )
 
 
 def page_tables(html: str) -> list:
@@ -197,27 +184,8 @@ def extract_tables(
         f"{id_col} long, table_idx int, row_idx int, is_header int, "
         "n_cells int, cells string"
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ti, ri, hdr, nc, cell = [], [], [], [], [], []
-            for i, html in zip(pdf[id_col], pdf[html_col]):
-                for t_idx, r_idx, is_h, n, cs in page_tables(html):
-                    ids.append(i)
-                    ti.append(t_idx)
-                    ri.append(r_idx)
-                    hdr.append(is_h)
-                    nc.append(n)
-                    cell.append(cs)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.array(ids, dtype="int64"),
-                    "table_idx": pd.array(ti, dtype="int32"),
-                    "row_idx": pd.array(ri, dtype="int32"),
-                    "is_header": pd.array(hdr, dtype="int32"),
-                    "n_cells": pd.array(nc, dtype="int32"),
-                    "cells": cell,
-                }
-            )
-
-    return df.select(id_col, html_col).mapInPandas(run, schema=schema)
+    return map_rows(
+        df.select(id_col, html_col),
+        schema,
+        lambda i, h: [(i, *row) for row in page_tables(h)],
+    )
