@@ -242,8 +242,10 @@ def test_records_before_first_commit_is_empty(spark, corpus, tmp_path):
 def test_crawl_jobs_per_round_pinned(spark, corpus, tmp_path):
     """Spark jobs each working round of the fixture crawl runs, counted
     in a job group: the round's two actions plus the broadcasts and AQE
-    stages they split into.  A change to the round's plan shows here as
-    a count."""
+    stages they split into.  Round 1 fetches detail pages only, so it is
+    a leaf round and writes the (empty) backlog without the expansion
+    and seen dedup.  A change to the round's plan shows here as a
+    count."""
     pages, storage_json, _ = corpus
     seeds = [testgen.list_url(testgen.host_name(i)) for i in range(3)]
     pages.count()  # the cached corpus is built before any round runs
@@ -261,7 +263,155 @@ def test_crawl_jobs_per_round_pinned(spark, corpus, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert jobs == [7, 7]
+    assert jobs == [7, 5]
+
+
+def _sim_children(seeds, results) -> dict:
+    """url -> the ``__request__`` children of its page, read off the
+    simulator's nested results (a memoized or in-progress child is
+    walked once)."""
+    children: dict = {}
+
+    def walk(url, result):
+        if url in children or not isinstance(result, dict):
+            return
+        payload = next(iter(result.values()))
+        requests = payload.get("__request__")
+        if requests is None:
+            children[url] = []
+            return
+        subs = payload["__result__"]
+        if not isinstance(requests, list):
+            requests, subs = [requests], [subs]
+        children[url] = requests
+        for child, sub in zip(requests, subs):
+            walk(child, sub)
+
+    for url, result in zip(seeds, results):
+        walk(url, result)
+    return children
+
+
+def _budget_rounds(children: dict, seeds, budget: int) -> list:
+    """(seen_total, n_pending) after each round of a breadth-first crawl
+    of ``children`` that schedules at most ``budget`` URLs of a host per
+    round.  On the fixture every host's backlog holds one depth at a
+    time, so the counts do not depend on which URLs a round picks."""
+    from collections import Counter
+    from urllib.parse import urlsplit
+
+    pending, seen, out = list(seeds), set(seeds), []
+    while pending:
+        taken: Counter = Counter()
+        scheduled, deferred = [], []
+        for url in pending:
+            host = urlsplit(url).hostname
+            (scheduled if taken[host] < budget else deferred).append(url)
+            taken[host] += 1
+        new = []
+        for url in scheduled:
+            for child in children[url]:
+                if child not in seen:
+                    seen.add(child)
+                    new.append(child)
+        pending = deferred + new
+        out.append((len(seen) - len(pending), len(pending)))
+    return out
+
+
+def test_crawl_leaf_rounds_write_the_backlog(spark, corpus, tmp_path):
+    """A budget of 2 URLs a host with the Bloom on: round 1 fetches 6 of
+    the 8 detail pages and defers 2, round 2 (budget short-circuit: the
+    backlog fits) fetches those 2.  Neither discovers a link, so each
+    leaf round's next frontier is its frontier minus its records.
+    Records, seen set, the manifest's counters after every round and the
+    nested results equal the simulator's crawl."""
+    pages, storage_json, store = corpus
+    seeds = [testgen.list_url(testgen.host_name(i)) for i in range(3)]
+    eng = CrawlEngine(
+        spark, pages, storage_json, tmp_path / "state", default_budget=2, bloom_min_seen=0
+    )
+    eng.seed(seeds)
+    rounds, counters = [], []
+    while not (stats := eng.run_round()).get("done"):
+        rounds.append(stats)
+        m = eng.read_manifest()
+        counters.append((m["seen_total"], m["n_pending"]))
+
+    storage = JSONRuleStorage(**json.loads(storage_json))
+    seen_sim: dict = {}
+    expected = [simulate_crawl(storage, store, u, seen=seen_sim) for u in seeds]
+    assert eng.assemble_results(seeds) == expected
+    assert sorted(r["url"] for r in eng.records().select("url").collect()) == sorted(seen_sim)
+    assert {r["url_canon"] for r in eng.seen().collect()} == set(seen_sim)
+    assert counters == _budget_rounds(_sim_children(seeds, expected), seeds, 2)
+    assert counters == [(3, 8), (9, 2), (11, 0)]
+
+    assert [(s["decisions"]["budget"], s["decisions"]["expand"]) for s in rounds] == [
+        ("ranked", True), ("ranked", False), ("trivial", False)
+    ]
+
+    def urls(kind, k):
+        schema = crawl_engine.FRONTIER_SCHEMA if kind == "frontier" else "url string"
+        return {r["url"] for r in spark.read.schema(schema).parquet(eng._p(kind, k)).collect()}
+
+    for k in (1, 2):
+        assert urls("frontier", k + 1) == urls("frontier", k) - urls("records", k)
+    assert len(urls("frontier", 2)) == 2 and not urls("frontier", 3)
+
+
+def test_crawl_round_decisions(spark, corpus, tmp_path):
+    """Each round's stats name its plan choices, and the metrics file
+    and the manifest's ``last_stats`` carry them.  Bloom-on fixture
+    crawl compacting every 2 rounds: round 0 expands through the Bloom,
+    round 1 is a leaf round that compacts."""
+    pages, storage_json, _ = corpus
+    seeds = [testgen.list_url(testgen.host_name(i)) for i in range(3)]
+    eng = CrawlEngine(
+        spark, pages, storage_json, tmp_path / "state", bloom_min_seen=0, seen_compact_every=2
+    )
+    eng.seed(seeds)
+    rounds = [s for s in eng.run(max_rounds=10) if not s.get("done")]
+    assert [s["decisions"] for s in rounds] == [
+        {"budget": "trivial", "fetch": "broadcast", "expand": True, "bloom": True, "compacted": False},
+        {"budget": "trivial", "fetch": "broadcast", "expand": False, "bloom": False, "compacted": True},
+    ]
+    for s in rounds:
+        assert json.loads((eng.state_dir / "metrics" / f"r{s['round']}.json").read_text()) == s
+    assert eng.read_manifest()["last_stats"] == rounds[-1]
+
+
+def test_crawl_children_all_seen_take_the_full_path(spark, corpus, tmp_path):
+    """Every detail page requests its host's list page, which round 0
+    crawled: round 1 discovers children that are all seen, so it takes
+    the full dedup path (Bloom on), adds nothing to the frontier, and
+    the crawl still equals the simulator's."""
+    import uniparser_spark.config as cfg
+
+    pages, _, store = corpus
+    storage = testgen.build_storage(3, keep_first=3)
+    for i in range(3):
+        host = testgen.host_name(i)
+        storage[host]["crawler_rules"]["detail"]["parse_rules"].append(
+            {"name": "__request__", "chain_rules": [["udf", repr(testgen.list_url(host)), ""]], "child_rules": []}
+        )
+    storage_json = cfg.json_dumps(storage)
+    seeds = [testgen.list_url(testgen.host_name(i)) for i in range(3)]
+    eng = CrawlEngine(spark, pages, storage_json, tmp_path / "state", bloom_min_seen=0)
+    eng.seed(seeds)
+    rounds = [s for s in eng.run(max_rounds=10) if not s.get("done")]
+    assert [(s["decisions"]["expand"], s["decisions"]["bloom"], s["new_candidates"]) for s in rounds] == [
+        (True, True, 8), (True, True, 0)
+    ]
+    assert eng.read_manifest()["n_pending"] == 0
+
+    seen_sim: dict = {}
+    expected = [
+        simulate_crawl(JSONRuleStorage(**json.loads(storage_json)), store, u, seen=seen_sim) for u in seeds
+    ]
+    assert eng.assemble_results(seeds) == expected
+    assert expected[0]["list"]["__result__"][0]["detail"]["__request__"] == seeds[0]
+    assert {r["url_canon"] for r in eng.seen().collect()} == set(seen_sim)
 
 
 def test_crawl_politeness_budget_rounds(spark, corpus, tmp_path):

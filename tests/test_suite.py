@@ -12,10 +12,13 @@ side is the accepted form) — the two anti-patterns that silently
 stop surviving a 100x scale-up.
 
 The oracle lane then runs the full value comparison of
-``tools/check_oracle.py`` on a fixed sample of queries, so oracle drift
-fails here and not only in the full sweep."""
+``tools/check_oracle.py`` on a fixed sample of queries plus 12 more
+drawn each UTC day from the rest, so oracle drift fails here and not
+only in the full sweep."""
 
 import inspect
+import random
+from datetime import datetime, timezone
 
 import pytest
 
@@ -72,16 +75,29 @@ def test_suite_contract(spark):
         assert sorted(s_cols) == sorted(d_cols), name
 
 
-def test_oracle_lane(spark):
+def test_oracle_lane(spark, capsys):
+    """The fixed lane plus a rotation: 12 queries outside it, drawn with
+    the UTC date (YYYYMMDD) as the seed, so the whole registry passes
+    through Tier-1 over the days.  The seed, the drawn names and the
+    command that re-checks them are printed and in the failure."""
     from uniparser_spark.suite import ORACLES, QUERIES
+
+    seed = int(datetime.now(timezone.utc).strftime("%Y%m%d"))
+    rotated = random.Random(seed).sample(sorted(set(QUERIES) - set(ORACLE_LANE)), 12)
+    note = (
+        f"oracle lane rotation seed {seed}: {' '.join(rotated)}\n"
+        f"  re-check: python3 tools/check_oracle.py {SF_DIR} {' '.join(rotated)}"
+    )
+    with capsys.disabled():
+        print(f"\n{note}")
 
     con = oracle_connection(SF_DIR)
     failures = {}
-    for name in ORACLE_LANE:
+    for name in [*ORACLE_LANE, *rotated]:
         reason = check(spark, con, QUERIES[name], ORACLES[name], SF_DIR)
         if reason:
             failures[name] = reason
-    assert not failures
+    assert not failures, f"{failures}\n{note}"
 
 
 def test_registry_rejects_a_second_registration():

@@ -251,6 +251,61 @@ def test_simhash_and_fingerprint_impls_agree(spark):
     assert fp_p == fp_e
 
 
+def test_split_tokens_twins_spark_tokens(spark):
+    """split_tokens equals Spark's split(trim(text), '\\s+'): trim strips
+    only U+0020 and \\s is ASCII, so a tab leads with an empty token
+    and NBSP or U+2003 joins two words.  The pandas MinHash then counts
+    the shingles the expression path counts."""
+    from uniparser_spark.textops.exprs import split_tokens, tokens
+
+    texts = [
+        "\talpha beta gamma delta",
+        "alpha\u00a0beta gamma delta",
+        "alpha\u2003beta gamma",
+        "a\x0bb c",
+        "  x \t y  ",
+        "",
+        " ",
+        "\t",
+    ]
+    df = docs_df(spark, list(enumerate(texts)))
+    got = {
+        r["doc_id"]: list(r["t"])
+        for r in df.select("doc_id", tokens(F.col("text")).alias("t")).collect()
+    }
+    assert got == {i: split_tokens(t) for i, t in enumerate(texts)}
+
+    found = docs_df(spark, list(enumerate(texts[:2])))
+    n_shingles = {
+        impl: {r["doc_id"]: r["n_shingles"] for r in minhash_signatures(found, **kw).collect()}
+        for impl, kw in (("expr", {"impl": "expr"}), ("default", {}))
+    }
+    assert n_shingles["default"] == n_shingles["expr"] == {0: 3, 1: 1}
+
+
+def test_blank_and_null_text_kernels_match_expr(spark):
+    """On blank and NULL text each pandas kernel emits what its
+    impl='expr' twin emits: a blank text is one empty token (so 1-grams
+    see the empty shingle), a NULL text has none."""
+    from uniparser_spark.textops import containment_pairs
+
+    df = docs_df(spark, [(0, ""), (1, " "), (2, None), (3, "\t"), (4, "word")])
+
+    def rows(out):
+        return sorted(map(tuple, out.collect()), key=repr)
+
+    assert rows(minhash_signatures(df, shingle_k=1)) == rows(
+        minhash_signatures(df, shingle_k=1, impl="expr")
+    )
+    assert rows(with_simhash(df)) == rows(with_simhash(df, impl="expr"))
+    assert rows(doc_fingerprints(df, k=1)) == rows(doc_fingerprints(df, k=1, impl="expr"))
+    pairs = {
+        impl: rows(containment_pairs(df, shingle_k=1, min_shared=1, threshold=0.0, impl=impl))
+        for impl in ("pandas", "expr")
+    }
+    assert pairs["pandas"] == pairs["expr"] and len(pairs["pandas"]) == 3
+
+
 def test_verified_near_dups(spark):
     from uniparser_spark.textops import verified_near_dups
     near = BASE + " tail"

@@ -3,6 +3,9 @@
 Each scheduling round runs two Spark actions over checkpointed parquet
 state: the records and frontier writes (SURVEY.md §3 EP1 mapping).
 Broadcasts and AQE stages split those actions into more Spark jobs.
+A leaf round (its pages request no children) writes only its deferred
+backlog as the next frontier: no expansion, seen view, Bloom or
+anti-join.
 The reference's recursive thread fan-out (crawler.py:156-189) becomes
 breadth-first rounds; result nesting is restored from (parent_url,
 list_index) so the final output is order-identical to the reference's
@@ -35,7 +38,8 @@ Scale notes (10^10-URL design):
   batch while it fits, shuffle join beyond; pages side pruned to
   (url, text/html) columns only);
 - the seen-set anti-join is bloom-accelerated once the seen set is
-  large enough to repay the filter (size-gated, frontier.seen);
+  large enough to repay the filter (size-gated, frontier.seen), in the
+  rounds that discover links;
 - state is written as the plan leaves it: AQE sizes the files, and no
   reader needs a hash layout (the seen anti-join shuffles both sides);
 - per-host politeness/priority runs salted (frontier.politeness).
@@ -205,6 +209,90 @@ class CrawlEngine:
             return self.spark.createDataFrame([], SEEN_SCHEMA)
         return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
+    def _candidates(self, rnd: int, fetched: DataFrame) -> DataFrame:
+        """Frontier expansion: round ``rnd``'s ``__request__`` leaves as
+        next-round candidates — DUST-rewritten, keyed, first-discovery
+        deduped, then the nofollow, blocklist and robots filters.
+        ``fetched`` is the round's fetch join (the nofollow pass reads
+        the page bodies from it)."""
+        # partial schema = projection: only the three expansion columns
+        # are read back, and no inference job runs
+        records_df = self.spark.read.schema(_RECORDS_EXPAND_SCHEMA).parquet(
+            self._p("records", rnd)
+        )
+        exploded = (
+            records_df.filter(F.col("requests").isNotNull())
+            .select("url", "depth", F.posexplode("requests").alias("list_index", "child_url"))
+            .select(
+                F.col("child_url").alias("url"),
+                F.lit(0.0).alias("priority"),
+                (F.col("depth") + 1).alias("depth"),
+                F.col("url").alias("parent_url"),
+                F.col("list_index"),
+                F.lit(rnd + 1).alias("discovered_round"),
+            )
+        )
+        if self.dust_rules is not None:
+            from .dust import apply_dust_rules
+
+            # rewrite BEFORE canonicalization: stripped aliases collapse
+            # onto one url_hash and the first-discovery window below
+            # dedups them — every collapsed alias is a fetch saved
+            exploded = apply_dust_rules(exploded, self.dust_rules, url_col="url")
+        candidates = add_url_keys(exploded).select(*_META_COLS)
+        # first-discovery-wins within the round (deterministic order)
+        first_seen = Window.partitionBy("url_hash").orderBy("depth", "parent_url", "list_index")
+        candidates = (
+            candidates.withColumn("_rk", F.row_number().over(first_seen)).filter(F.col("_rk") == 1).drop("_rk")
+        )
+        if self.honor_nofollow:
+            # REP HTML extension: children of a nofollow page never
+            # reach the frontier.  Re-derives (url, body) from the
+            # fetch join (broadcast-shaped, no extraction re-run) and
+            # anti-joins the small nofollow-parent set.
+            from ..frontier.robots import page_directives
+
+            body = self.html_col or self.text_col
+            nofollow_parents = (
+                page_directives(fetched.select("url", body), html_col=body)
+                .filter(F.col("nofollow") == 1)
+                .select(F.col("url").alias("parent_url"))
+            )
+            candidates = candidates.join(
+                F.broadcast(nofollow_parents), "parent_url", "left_anti"
+            ).select(*_META_COLS)
+        if self.blocklist is not None:
+            # domain blocklist (label-suffix semantics): resolve the
+            # round's DISTINCT hosts against the broadcast rules, then
+            # anti-join candidates on host — suffix explosion touches
+            # |hosts| rows, not |candidates|
+            from ..frontier.blocklist import host_suffixes
+
+            blocked_hosts = (
+                candidates.select("host")
+                .distinct()
+                .select(
+                    "host", F.explode(host_suffixes(F.col("host"))).alias("suf")
+                )
+                .join(
+                    F.broadcast(
+                        self.blocklist.select(F.col("domain").alias("suf"))
+                    ),
+                    "suf",
+                    "left_semi",
+                )
+                .select("host")
+                .distinct()
+            )
+            candidates = candidates.join(
+                F.broadcast(blocked_hosts), "host", "left_anti"
+            ).select(*_META_COLS)
+        if self.robots is not None:
+            # robots disallow filter (broadcast join + prefix match);
+            # crawl-delay budgets flow in separately via `budgets`
+            candidates = apply_robots(candidates, self.robots).select(*_META_COLS)
+        return candidates
+
     # -------------------------------------------------------------- seeding
     def seed(self, urls: List[str], priority: float = 0.0) -> None:
         """Initialize frontier round 0 with the seed list (list order kept
@@ -303,7 +391,10 @@ class CrawlEngine:
         is computed or stored twice.  The fetch takes one of two plans:
         a broadcast join of the batch against the streamed pages scan
         while the batch fits (``BROADCAST_FETCH_MAX``), else a shuffle
-        join."""
+        join.  A leaf round — one whose pages request no children —
+        writes the deferred backlog as the next frontier and skips the
+        expansion and seen dedup.  The stats' ``decisions`` name the
+        plan each choice took."""
         manifest = self.read_manifest()
         rnd = manifest["round"]
         if manifest.get("done"):
@@ -354,6 +445,7 @@ class CrawlEngine:
         page_cols = ["url", self.text_col] + ([self.html_col] if self.html_col else [])
         body_cols = [c for c in page_cols if c != "url"]
         if self.adapter is not None:
+            fetch_plan = "adapter"
             # pluggable adapter path (production HTTP seam, adapters.py):
             # one mapInPandas crossing per batch; real fetchers pool
             # connections per partition inside fetch_batch
@@ -363,6 +455,7 @@ class CrawlEngine:
         else:
             pages_proj = self.pages.select(*page_cols)
             if n_pending is not None and n_pending <= BROADCAST_FETCH_MAX:
+                fetch_plan = "broadcast"
                 hits = pages_proj.join(F.broadcast(scheduled), "url", "inner")
                 misses = scheduled.join(
                     F.broadcast(pages_proj.select("url").join(
@@ -377,6 +470,7 @@ class CrawlEngine:
                     misses.select(*scheduled.columns, *body_cols)
                 )
             else:
+                fetch_plan = "shuffle"
                 fetched = scheduled.join(pages_proj, "url", "left")
         records = (
             extract_pages(
@@ -395,10 +489,14 @@ class CrawlEngine:
             obs_rec,
             F.count(F.lit(1)).alias("n"),
             F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("errors"),
+            F.sum(F.when(F.col("requests").isNotNull(), F.size("requests")).otherwise(0)).alias(
+                "children"
+            ),
         )
         records.write.mode("overwrite").parquet(self._p("records", rnd))
         n_scheduled = int(obs_rec.get["n"])
         n_errors = int(obs_rec.get["errors"] or 0)
+        n_children = int(obs_rec.get["children"] or 0)
         if n_scheduled == 0:
             self._commit_manifest({**manifest, "done": True})
             if decided is not None:
@@ -412,7 +510,8 @@ class CrawlEngine:
         # the rounds' records are pairwise disjoint by construction.
         seen_base = int(manifest.get("seen_base", 0) or 0)
         seen_total = int(manifest.get("seen_total", 0)) + n_scheduled
-        if rnd + 1 - seen_base >= self.seen_compact_every:
+        compacted = rnd + 1 - seen_base >= self.seen_compact_every
+        if compacted:
             # inline compaction: fold the log into one snapshot so deep
             # crawls never read an unbounded union.  COST NOTE: the
             # compacting round pays a one-time O(seen_total) write (vs
@@ -423,106 +522,45 @@ class CrawlEngine:
                 self._p("seen", rnd + 1)
             )
             seen_base = rnd + 1
-        seen_next = self._seen_view({"seen_base": seen_base}, rnd)
 
-        # frontier expansion: __request__ leaves -> next round candidates
-        # (partial schema = projection: only the three expansion columns
-        # are read back, and no inference job runs)
-        records_df = self.spark.read.schema(_RECORDS_EXPAND_SCHEMA).parquet(
-            self._p("records", rnd)
-        )
-        exploded = (
-            records_df.filter(F.col("requests").isNotNull())
-            .select("url", "depth", F.posexplode("requests").alias("list_index", "child_url"))
-            .select(
-                F.col("child_url").alias("url"),
-                F.lit(0.0).alias("priority"),
-                (F.col("depth") + 1).alias("depth"),
-                F.col("url").alias("parent_url"),
-                F.col("list_index"),
-                F.lit(rnd + 1).alias("discovered_round"),
-            )
-        )
-        if self.dust_rules is not None:
-            from .dust import apply_dust_rules
-
-            # rewrite BEFORE canonicalization: stripped aliases collapse
-            # onto one url_hash and the first-discovery window below
-            # dedups them — every collapsed alias is a fetch saved
-            exploded = apply_dust_rules(exploded, self.dust_rules, url_col="url")
-        candidates = add_url_keys(exploded).select(*_META_COLS)
-        # first-discovery-wins within the round (deterministic order)
-        first_seen = Window.partitionBy("url_hash").orderBy("depth", "parent_url", "list_index")
-        candidates = (
-            candidates.withColumn("_rk", F.row_number().over(first_seen)).filter(F.col("_rk") == 1).drop("_rk")
-        )
-        if self.honor_nofollow:
-            # REP HTML extension: children of a nofollow page never
-            # reach the frontier.  Re-derives (url, body) from the
-            # fetch join (broadcast-shaped, no extraction re-run) and
-            # anti-joins the small nofollow-parent set.
-            from ..frontier.robots import page_directives
-
-            body = self.html_col or self.text_col
-            nofollow_parents = (
-                page_directives(fetched.select("url", body), html_col=body)
-                .filter(F.col("nofollow") == 1)
-                .select(F.col("url").alias("parent_url"))
-            )
-            candidates = candidates.join(
-                F.broadcast(nofollow_parents), "parent_url", "left_anti"
-            ).select(*_META_COLS)
-        if self.blocklist is not None:
-            # domain blocklist (label-suffix semantics): resolve the
-            # round's DISTINCT hosts against the broadcast rules, then
-            # anti-join candidates on host — suffix explosion touches
-            # |hosts| rows, not |candidates|
-            from ..frontier.blocklist import host_suffixes
-
-            blocked_hosts = (
-                candidates.select("host")
-                .distinct()
-                .select(
-                    "host", F.explode(host_suffixes(F.col("host"))).alias("suf")
-                )
-                .join(
-                    F.broadcast(
-                        self.blocklist.select(F.col("domain").alias("suf"))
-                    ),
-                    "suf",
-                    "left_semi",
-                )
-                .select("host")
-                .distinct()
-            )
-            candidates = candidates.join(
-                F.broadcast(blocked_hosts), "host", "left_anti"
-            ).select(*_META_COLS)
-        if self.robots is not None:
-            # robots disallow filter (broadcast join + prefix match);
-            # crawl-delay budgets flow in separately via `budgets`
-            candidates = apply_robots(candidates, self.robots).select(*_META_COLS)
-
-        # ACTION 2 — dedup (bloom pre-filter + exact anti-join vs seen,
-        # then vs the deferred backlog) and next-frontier sink.  The
-        # bloom is sized from the observed seen_total (no count() job)
-        # and only engaged once the seen set is big enough to repay its
-        # build+probe stages — below the threshold a plain anti-join is
-        # strictly cheaper.
+        # ACTION 2 — next-frontier sink.  The plan follows the child
+        # count the records write observed:
+        # - a LEAF round (no __request__ children; the reference ends a
+        #   branch there, crawler.py:156-189) discovered nothing, so the
+        #   next frontier is the deferred backlog alone (empty when the
+        #   budget short-circuit deferred nothing): no records read-back,
+        #   no filters, no seen view, no Bloom, no anti-join;
+        # - otherwise the candidates are deduped (bloom pre-filter +
+        #   exact anti-join vs seen, then vs the deferred backlog).  The
+        #   bloom is sized from the observed seen_total (no count() job)
+        #   and only engaged once the seen set is big enough to repay
+        #   its build+probe stages — below the threshold a plain
+        #   anti-join is strictly cheaper.
+        expand = n_children > 0
+        use_bloom = expand and seen_total >= self.bloom_min_seen
         flagged = None
-        if seen_total >= self.bloom_min_seen:
-            bloom_df = self.bloom.build(seen_next, expected_total=seen_total)
-            # cached: both branches of the definite-new/suspects split
-            # read it, and the probe's Python pass runs once
-            flagged = self.bloom.probe(candidates, bloom_df).cache()
-            fresh = self.bloom.filter_probed(flagged, seen_next)
+        if not expand:
+            next_frontier = (
+                deferred
+                if deferred is not None
+                else self.spark.createDataFrame([], FRONTIER_SCHEMA)
+            )
         else:
-            fresh = candidates.join(seen_next.select("url_hash"), "url_hash", "left_anti")
-        if deferred is not None:
-            fresh = fresh.join(deferred.select("url_hash"), "url_hash", "left_anti")
-            next_frontier = deferred.unionByName(fresh.select(*_META_COLS))
-        else:
-            next_frontier = fresh.select(*_META_COLS)
+            seen_next = self._seen_view({"seen_base": seen_base}, rnd)
+            candidates = self._candidates(rnd, fetched)
+            if use_bloom:
+                bloom_df = self.bloom.build(seen_next, expected_total=seen_total)
+                # cached: both branches of the definite-new/suspects split
+                # read it, and the probe's Python pass runs once
+                flagged = self.bloom.probe(candidates, bloom_df).cache()
+                fresh = self.bloom.filter_probed(flagged, seen_next)
+            else:
+                fresh = candidates.join(seen_next.select("url_hash"), "url_hash", "left_anti")
+            if deferred is not None:
+                fresh = fresh.join(deferred.select("url_hash"), "url_hash", "left_anti")
+                next_frontier = deferred.unionByName(fresh.select(*_META_COLS))
+            else:
+                next_frontier = fresh.select(*_META_COLS)
         obs_front = Observation()
         next_frontier = next_frontier.observe(
             obs_front,
@@ -546,6 +584,14 @@ class CrawlEngine:
             "seen_total": seen_total,
             "wall_sec": round(time.monotonic() - t0, 3),
             "done": False,
+            # the plan choices, from driver-side values only
+            "decisions": {
+                "budget": "trivial" if trivial_budget else "ranked",
+                "fetch": fetch_plan,
+                "expand": expand,
+                "bloom": use_bloom,
+                "compacted": compacted,
+            },
         }
         (self.state_dir / "metrics").mkdir(exist_ok=True)
         (self.state_dir / "metrics" / f"r{rnd}.json").write_text(json.dumps(stats))
@@ -575,7 +621,8 @@ class CrawlEngine:
         slot, so a ``records/r{round}`` left by a round that crashed
         before its commit is dropped, never returned by records() or
         counted as seen.  The Bloom pre-filter is derived state and
-        follows automatically (rebuilt from the seen set every round).
+        follows automatically (rebuilt from the seen set every round
+        that discovers links).
         No engine path builds a cuckoo filter; frontier/cuckoo.py's
         delete() is a standalone operator.
 

@@ -16,7 +16,8 @@ from typing import List, Optional
 from pyspark.sql import Column, functions as F
 
 WS_RE = r"\s+"
-_WS = re.compile(WS_RE)
+# Java's \s is ASCII [ \t\n\x0B\f\r], the same set as Python's re.ASCII \s
+_WS = re.compile(WS_RE, re.ASCII)
 
 
 def tokens(col: Column) -> Column:
@@ -25,9 +26,12 @@ def tokens(col: Column) -> Column:
 
 
 def split_tokens(text: Optional[str]) -> List[str]:
-    """Python twin of :func:`tokens` for the pandas kernels; an empty,
-    blank or NULL text has no tokens."""
-    return _WS.split(text.strip()) if text and text.strip() else []
+    """Python twin of :func:`tokens` for the pandas kernels.  Spark's
+    ``trim`` strips only U+0020 and its split is Java's ASCII ``\\s``, so
+    a tab-led text starts with an empty token and U+00A0 joins two
+    words; a blank text is one empty token.  A NULL text has no tokens
+    (the expressions' NULL array yields no shingles either)."""
+    return [] if text is None else _WS.split(text.strip(" "))
 
 
 def word_shingles(toks: Column, k: int) -> Column:

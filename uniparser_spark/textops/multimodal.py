@@ -519,11 +519,12 @@ def _fake_dims(digest: bytes) -> tuple:
 
 
 def decode_media(
-    df: DataFrame, mode: str = "header", batch_rows: int = 1024, fake: Optional[bool] = None
+    df: DataFrame, mode: str = "header", fake: Optional[bool] = None
 ) -> DataFrame:
     """binary media table → per-item features via mapInPandas.
 
-    One Arrow batch crosses the boundary per ``batch_rows`` items; heavy
+    One Arrow batch crosses the boundary per
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` items; heavy
     payloads stay in executor memory, never on the driver.  ``mode``
     selects header (real stdlib container parse), fake (hash-derived
     pseudo-features), or codec (the NotImplementedError seam for pixel

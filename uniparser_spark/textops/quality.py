@@ -368,16 +368,18 @@ def doc_fingerprints(
     schema = StructType(
         [
             StructField(id_col, LongType(), False),
-            StructField("content_fp", StringType(), False),
+            StructField("content_fp", StringType(), True),
             StructField("min_gram_fp", StringType(), True),
         ]
     )
     md5 = hashlib.md5
 
     def fingerprints(doc_id, text):
-        toks = split_tokens((text or "").lower())
-        norm = " ".join(toks)
-        grams = word_grams(toks, k)
+        if text is None:
+            return [(doc_id, None, None)]
+        # the expression's norm: whitespace runs as one space, trimmed
+        norm = " ".join(t for t in split_tokens(text.lower()) if t)
+        grams = word_grams(split_tokens(norm), k)
         mfp = min(md5(g.encode()).hexdigest()[:16] for g in grams) if grams else None
         return [(doc_id, md5(norm.encode()).hexdigest()[:16], mfp)]
 
