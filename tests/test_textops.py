@@ -160,8 +160,6 @@ def test_multimodal_decode_stub(spark):
     # the codec seam (pixel/sample decode) is explicit
     with pytest.raises(Exception):
         decode_media(media, mode="codec").collect()
-    # legacy bool kwarg still maps
-    assert decode_media(media, fake=True).columns == decode_media(media, mode="fake").columns
     with pytest.raises(ValueError):
         decode_media(media, mode="nope")
 

@@ -64,22 +64,16 @@ class Adapter:
 
 class FakeAdapter(Adapter):
     """Deterministic dict-backed adapter (tests / offline replays).
+    Unknown URLs are misses (text=None, status 404)."""
 
-    ``fail_urls`` simulates fetch failures; unknown URLs are misses
-    (text=None, status 404).
-    """
-
-    def __init__(self, bodies: Dict[str, str], fail_urls: Sequence[str] = ()):
+    def __init__(self, bodies: Dict[str, str]):
         self.bodies = dict(bodies)
-        self.fail_urls = set(fail_urls)
 
     def fetch_batch(self, requests: Sequence[dict]) -> List[FetchResult]:
         out = []
         for req in requests:
             url = req["url"]
-            if url in self.fail_urls:
-                out.append(FetchResult(url, None, 599, "SimulatedFetchError"))
-            elif url in self.bodies:
+            if url in self.bodies:
                 out.append(FetchResult(url, self.bodies[url], 200))
             else:
                 out.append(FetchResult(url, None, 404, None))
@@ -110,7 +104,6 @@ def fetch_with_adapter(
     scheduled: DataFrame,
     adapter: Adapter,
     text_col: str = "text",
-    method: str = "get",
 ) -> DataFrame:
     """scheduled(url, ...meta) -> same rows + ``text_col`` via one
     mapInPandas crossing; a failed fetch (``FetchResult.error``) lands
@@ -125,7 +118,7 @@ def fetch_with_adapter(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
-            reqs = [{"method": method, "url": u} for u in batch["url"]]
+            reqs = [{"method": "get", "url": u} for u in batch["url"]]
             results = adapter.fetch_batch(reqs)
             if len(results) != len(reqs):
                 raise RuntimeError(

@@ -43,7 +43,7 @@ def _parts(url: Column) -> tuple:
     return path, query
 
 
-def classify_urls(df: DataFrame, url_col: str = "url") -> DataFrame:
+def classify_urls(df: DataFrame) -> DataFrame:
     """Classify every URL into a page type + scheduling priority band.
 
     Output: (url, path_depth, has_query, page_type, type_priority).
@@ -56,7 +56,7 @@ def classify_urls(df: DataFrame, url_col: str = "url") -> DataFrame:
     composable with the politeness schedule's band algebra (the
     priority here is one more additive signal source).
     """
-    url = F.col(url_col)
+    url = F.col("url")
     path, query = _parts(url)
     verdict: Column = F.lit("other")
     prio: Column = F.lit(6)

@@ -24,24 +24,23 @@ the salted two-phase trim politeness already uses, here per SOURCE
 
 from __future__ import annotations
 
-from typing import Dict, Optional, Sequence
+from typing import Dict, Optional
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-#: Default trust order: explicit seeds first, then curated channels,
+#: Trust order: explicit seeds first, then curated channels,
 #: harvested links, archive backfill last.
-DEFAULT_PRECEDENCE = ("seed", "sitemap", "feed", "link", "cdx")
+PRECEDENCE = ("seed", "sitemap", "feed", "link", "cdx")
 
 
 def merge_discovery_feeds(
     feeds: DataFrame,
-    precedence: Sequence[str] = DEFAULT_PRECEDENCE,
     quotas: Optional[Dict[str, int]] = None,
 ) -> DataFrame:
     """``feeds`` is the unioned (url, source, priority) relation.
 
     Per URL the winning row is the one with the best (lowest-index)
-    source in ``precedence`` (unknown sources rank after all known
+    source in ``PRECEDENCE`` (unknown sources rank after all known
     ones, by name), ties by lowest priority value.  ``quotas`` caps
     admissions per source AFTER winner election (so a URL losing to a
     better source never consumes the worse source's quota); within a
@@ -51,17 +50,17 @@ def merge_discovery_feeds(
     per distinct URL; callers filter ``admitted = 1`` into
     schedule_batch.
     """
-    rank = F.lit(len(precedence))
-    for i, name in enumerate(reversed(precedence)):
+    rank = F.lit(len(PRECEDENCE))
+    for i, name in enumerate(reversed(PRECEDENCE)):
         rank = F.when(
-            F.col("source") == name, F.lit(len(precedence) - 1 - i)
+            F.col("source") == name, F.lit(len(PRECEDENCE) - 1 - i)
         ).otherwise(rank)
     keyed = feeds.select(
         "url",
         F.struct(
             rank.cast("int").alias("src_rank"),
             F.col("priority").cast("int").alias("priority"),
-            F.col("source").alias("source"),
+            F.col("source"),
         ).alias("_k"),
     )
     winners = (

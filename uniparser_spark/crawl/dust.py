@@ -42,11 +42,7 @@ def _norm(text_col: str) -> F.Column:
     return F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
 
 
-def url_aliases(
-    pages: DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
-) -> DataFrame:
+def url_aliases(pages: DataFrame) -> DataFrame:
     """(alias_url, canonical_url, content_fp) for every URL whose
     normalized content is served by at least one other URL.
 
@@ -61,7 +57,7 @@ def url_aliases(
     """
     w = Window.partitionBy("content_fp")
     fp = pages.select(
-        F.col(url_col).alias("alias_url"), h16(_norm(text_col)).alias("content_fp")
+        F.col("url").alias("alias_url"), h16(_norm("text")).alias("content_fp")
     )
     return (
         fp.select(
@@ -177,12 +173,7 @@ def strip_params_py(url: str, drop_params) -> str:
     return base if not kept else base + "?" + "&".join(kept)
 
 
-def host_trap_stats(
-    pages: DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
-    approx: bool = False,
-) -> DataFrame:
+def host_trap_stats(pages: DataFrame, approx: bool = False) -> DataFrame:
     """Per-host crawl-trap signals: URL inflation over distinct content
     plus URL-shape aggregates.
 
@@ -198,13 +189,13 @@ def host_trap_stats(
     distinct for the HLL sketch exactly as in host_quality_stats —
     the 10^10-row path, materialized in code rather than a comment.
     """
-    host = F.regexp_extract(F.col(url_col), _HOST_RE, 1)
-    path = F.regexp_extract(F.col(url_col), _PATH_RE, 1)
+    host = F.regexp_extract(F.col("url"), _HOST_RE, 1)
+    path = F.regexp_extract(F.col("url"), _PATH_RE, 1)
     depth = F.size(F.filter(F.split(path, "/"), lambda s: s != ""))
-    has_q = F.regexp_extract(F.col(url_col), _QUERY_RE, 1) != ""
+    has_q = F.regexp_extract(F.col("url"), _QUERY_RE, 1) != ""
     base = pages.select(
         host.alias("host"),
-        h16(_norm(text_col)).alias("fp"),
+        h16(_norm("text")).alias("fp"),
         depth.cast("double").alias("depth"),
         has_q.cast("double").alias("has_q"),
     )
@@ -242,11 +233,7 @@ def host_trap_stats(
     )
 
 
-def url_templates(
-    pages: DataFrame,
-    url_col: str = "url",
-    min_urls: int = 2,
-) -> DataFrame:
+def url_templates(pages: DataFrame) -> DataFrame:
     """URL-template discovery: collapse URLs onto their path SHAPE
     (digit runs → ``{n}``, long hex runs → ``{hex}``, query values →
     ``{v}``) and rank templates by population — the analytics a rule
@@ -258,9 +245,9 @@ def url_templates(
     One scan + one groupBy on the (short) template string; example =
     MIN(url) for a deterministic representative.
     """
-    host = F.regexp_extract(F.col(url_col), _HOST_RE, 1)
-    path = F.regexp_extract(F.col(url_col), _PATH_RE, 1)
-    query = F.regexp_extract(F.col(url_col), _QUERY_RE, 1)
+    host = F.regexp_extract(F.col("url"), _HOST_RE, 1)
+    path = F.regexp_extract(F.col("url"), _PATH_RE, 1)
+    query = F.regexp_extract(F.col("url"), _QUERY_RE, 1)
     shape = F.regexp_replace(path, r"[0-9a-fA-F]{16,}", "{hex}")
     shape = F.regexp_replace(shape, r"[0-9]+", "{n}")
     qshape = F.regexp_replace(query, r"=[^&]*", "={v}")
@@ -273,21 +260,19 @@ def url_templates(
         pages.select(
             host.alias("host"),
             template.alias("template"),
-            F.col(url_col).alias("url"),
+            F.col("url"),
         )
         .groupBy("host", "template")
         .agg(
             F.count(F.lit(1)).alias("n_urls"),
             F.min("url").alias("example_url"),
         )
-        .filter(F.col("n_urls") >= min_urls)
+        .filter(F.col("n_urls") >= 2)
     )
 
 
 def path_prefix_stats(
     pages: DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
     max_depth: int = 3,
     min_urls: int = 2,
 ) -> DataFrame:
@@ -315,8 +300,8 @@ def path_prefix_stats(
     wants it); swap in approx_count_distinct at production scale
     where the prefix population is huge.
     """
-    host = F.regexp_extract(F.col(url_col), _HOST_RE, 1)
-    path = F.regexp_extract(F.col(url_col), _PATH_RE, 1)
+    host = F.regexp_extract(F.col("url"), _HOST_RE, 1)
+    path = F.regexp_extract(F.col("url"), _PATH_RE, 1)
     segs = F.filter(F.split(path, "/"), lambda s: s != "")
     depth = F.least(F.lit(max_depth), F.size(segs))
     # guard depth = 0 (root URL): sequence(1, 0) DESCENDS in Spark,
@@ -332,7 +317,7 @@ def path_prefix_stats(
     rows = pages.select(
         host.alias("host"),
         F.size(segs).alias("n_segs"),
-        h16(_norm(text_col)).alias("fp"),
+        h16(_norm("text")).alias("fp"),
         F.posexplode(prefixes).alias("d", "prefix"),
     )
     return (

@@ -294,7 +294,7 @@ class CrawlEngine:
         return candidates
 
     # -------------------------------------------------------------- seeding
-    def seed(self, urls: List[str], priority: float = 0.0) -> None:
+    def seed(self, urls: List[str]) -> None:
         """Initialize frontier round 0 with the seed list (list order kept
         via list_index, matching reference seed iteration).  Seeds are
         deduplicated here so the frontier invariant (unique url_hash)
@@ -305,7 +305,7 @@ class CrawlEngine:
                 seen_urls.add(u)
                 unique.append(u)
         urls = unique
-        rows = [(u, float(priority), 0, None, i, 0) for i, u in enumerate(urls)]
+        rows = [(u, 0.0, 0, None, i, 0) for i, u in enumerate(urls)]
         df = self.spark.createDataFrame(
             rows, "url string, priority double, depth int, parent_url string, list_index int, discovered_round int"
         )

@@ -50,14 +50,11 @@ def url_equivalence(
     pages: DataFrame,
     log: DataFrame,
     rules: Optional[DataFrame] = None,
-    url_col: str = "url",
-    canonical_col: str = "canonical",
-    max_hops: int = 8,
 ) -> DataFrame:
     """One row per page URL: ``(url, canonical_url, source, chained)``.
 
     ``pages``: one row per fetched URL with its harvested
-    ``canonical_col`` (NULL when the page declared none).
+    ``canonical`` (NULL when the page declared none).
     ``log``: the fetch log (url, status, location) —
     :func:`resolve_redirects`' input contract.
     ``rules``: optional DUST (host, param) rules; broadcast.
@@ -69,10 +66,10 @@ def url_equivalence(
     non-identity mapping in this view (the one-step residue).
     """
     urls = pages.select(
-        F.col(url_col).alias("url"), F.col(canonical_col).alias("_rel")
+        F.col("url"), F.col("canonical").alias("_rel")
     )
     red = (
-        resolve_redirects(log, max_hops=max_hops)
+        resolve_redirects(log)
         .filter(
             (F.col("verdict") != "unresolved")
             & (F.col("final_url") != F.col("url"))
@@ -82,7 +79,7 @@ def url_equivalence(
     j = urls.join(red, "url", "left")
     if rules is not None:
         dust_in = pages.select(
-            F.col(url_col).alias("url"), F.col(url_col).alias("url_canon")
+            F.col("url"), F.col("url").alias("url_canon")
         )
         dusted = apply_dust_rules(dust_in, rules).select(
             "url",

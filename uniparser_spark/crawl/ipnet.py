@@ -69,7 +69,7 @@ def _hex_byte(prefix: str, col: Column) -> Column:
     return F.conv(F.substring(h, 1, 2), 16, 10).cast("int")
 
 
-def assign_hosting_ips(hosts: DataFrame, host_col: str = "host") -> DataFrame:
+def assign_hosting_ips(hosts: DataFrame) -> DataFrame:
     """Deterministic resolver stand-in: (host) -> (host, ip24, shared).
 
     A host's provider byte p = md5-byte('prov', host) decides its fate:
@@ -80,7 +80,7 @@ def assign_hosting_ips(hosts: DataFrame, host_col: str = "host") -> DataFrame:
     Pure projection — no shuffle, no Python; composes with any
     downstream scan pushdown.
     """
-    host = F.col(host_col)
+    host = F.col("host")
     p = _hex_byte("prov", host)
     provider_ip = _hex24("provip", (p % N_PROVIDERS).cast("string"))
     dedicated_ip = _hex24("hostip", host)
@@ -120,14 +120,10 @@ def asn_ranges(spark: SparkSession, n_boundaries: int = 64) -> DataFrame:
     )
 
 
-def tag_hosts_with_asn(
-    hosts_with_ip: DataFrame,
-    ranges: DataFrame,
-    bucket_bits: int = 12,
-) -> DataFrame:
+def tag_hosts_with_asn(hosts_with_ip: DataFrame, ranges: DataFrame) -> DataFrame:
     """Range-join each host's ip24 into its ASN range — bucketed.
 
-    The scale pattern: pick a prefix width (bucket = ip >> bucket_bits),
+    The scale pattern: pick a prefix width (bucket = ip >> 12),
     explode every range to the buckets it overlaps (a range spanning k
     buckets becomes k rows — Σk ≈ n_buckets + n_ranges, NOT a cross
     product), then hash-equi-join hosts to ranges on the bucket and
@@ -146,13 +142,13 @@ def tag_hosts_with_asn(
         "ip_hi",
         F.explode(
             F.sequence(
-                F.shiftright(F.col("ip_lo"), bucket_bits),
-                F.shiftright(F.col("ip_hi") - 1, bucket_bits),
+                F.shiftright(F.col("ip_lo"), 12),
+                F.shiftright(F.col("ip_hi") - 1, 12),
             )
         ).alias("bucket"),
     )
     probe = hosts_with_ip.withColumn(
-        "bucket", F.shiftright(F.col("ip24"), bucket_bits)
+        "bucket", F.shiftright(F.col("ip24"), 12)
     )
     return (
         probe.join(F.broadcast(exploded), "bucket")

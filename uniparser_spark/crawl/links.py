@@ -60,14 +60,10 @@ def _page_links(src: str, markup) -> List[tuple]:
     return out
 
 
-def links_from_html(
-    pages: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-) -> DataFrame:
+def links_from_html(pages: DataFrame) -> DataFrame:
     """Pages → (src, dst, anchor, link_idx, nofollow, internal).
 
-    ``html_col`` may be string or binary (utf-8 decoded with replace —
+    ``html`` may be string or binary (utf-8 decoded with replace —
     the pages-table contract).  Fragment-only and ``javascript:`` hrefs
     are skipped (not navigation); everything else resolves against the
     page URL, so relative, root-relative and protocol-relative links
@@ -75,7 +71,7 @@ def links_from_html(
     frontier's ``list_index`` analog for link-discovery seeding.
     """
     cols = pages.select(
-        F.col(url_col).alias("src"), F.col(html_col).alias("markup")
+        F.col("url").alias("src"), F.col("html").alias("markup")
     )
     return map_rows(cols, LINKS_SCHEMA, _page_links)
 

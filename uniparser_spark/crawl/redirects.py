@@ -69,13 +69,7 @@ def _compose(j: DataFrame) -> DataFrame:
     )
 
 
-def resolve_redirects(
-    log: DataFrame,
-    url_col: str = "url",
-    status_col: str = "status",
-    location_col: str = "location",
-    max_hops: int = 8,
-) -> DataFrame:
+def resolve_redirects(log: DataFrame, max_hops: int = 8) -> DataFrame:
     """Resolve every fetched URL to its final destination.
 
     Input: one row per FETCHED url with its status and (for 3xx) the
@@ -92,14 +86,14 @@ def resolve_redirects(
     of length 8 (k rounds resolve 2^k).
     """
     is_redir = (
-        (F.col(status_col) >= 300)
-        & (F.col(status_col) < 400)
-        & F.col(location_col).isNotNull()
+        (F.col("status") >= 300)
+        & (F.col("status") < 400)
+        & F.col("location").isNotNull()
     )
     base = log.select(
-        F.col(url_col).alias("url"),
+        F.col("url"),
         is_redir.alias("is_redir"),
-        F.col(location_col).alias("loc"),
+        F.col("location").alias("loc"),
     )
     # J0: one hop for redirect rows, identity (closed) for terminal rows
     j = base.select(
@@ -120,7 +114,7 @@ def resolve_redirects(
         j = step_checkpoint(j, reliable=reliable_this_round(it))
     # dest still open after 2^rounds hops => loop or over-cap chain.
     # dest closed but absent from the log's url set => dangling.
-    urls = log.select(F.col(url_col).alias("_seen")).distinct()
+    urls = log.select(F.col("url").alias("_seen")).distinct()
     out = j.join(urls, j["dest"] == urls["_seen"], "left")
     return out.select(
         "url",
@@ -141,9 +135,6 @@ _SOFT404_RE = (
 
 def soft404_scores(
     pages: DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
-    n_links_col: str = "n_links",
     min_tokens: int = 20,
     max_link_ratio: float = 0.5,
 ) -> DataFrame:
@@ -157,20 +148,20 @@ def soft404_scores(
     Pure codegen projection: one regexp_count, one size(split), one
     division — composes into the extraction scan, shuffles nothing.
     """
-    lowered = F.lower(F.col(text_col))
+    lowered = F.lower(F.col("text"))
     n_markers = F.size(
         F.regexp_extract_all(lowered, F.lit(_SOFT404_RE), 1)
     )
-    n_tokens = F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
+    n_tokens = F.size(F.split(F.trim(F.col("text")), r"\s+"))
     denom = F.greatest(n_tokens, F.lit(1)).cast("double")
-    link_ratio = F.round(F.col(n_links_col).cast("double") / denom, 4)
+    link_ratio = F.round(F.col("n_links").cast("double") / denom, 4)
     # verdict compares the UNROUNDED ratio (n_links >= r * max(n,1)
     # avoids both the rounding and a lateral-alias reference)
     link_heavy = (
-        F.col(n_links_col).cast("double") >= F.lit(max_link_ratio) * denom
+        F.col("n_links").cast("double") >= F.lit(max_link_ratio) * denom
     )
     return pages.select(
-        F.col(url_col).alias("url"),
+        F.col("url"),
         n_markers.alias("n_markers"),
         n_tokens.alias("n_tokens"),
         link_ratio.alias("link_ratio"),

@@ -31,13 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def sessionize(
-    df: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    gap_sec: int = 1800,
-) -> DataFrame:
+def sessionize(df: DataFrame, gap_sec: int = 1800) -> DataFrame:
     """Cut each key's event stream into sessions at > ``gap_sec`` gaps.
 
     Output one row per session: ``(key, session_id, n_events,
@@ -47,31 +41,31 @@ def sessionize(
     # testdata timestamps are TIMESTAMP_NTZ; the session tz is pinned to
     # UTC (engine/session.py:55) so the cast is offset-free and matches
     # DuckDB's epoch_us over the same naive values.
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    w = Window.partitionBy(key_col).orderBy(us.asc(), F.col(id_col).asc())
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    w = Window.partitionBy("user_id").orderBy(us.asc(), F.col("event_id").asc())
     gap_us = int(gap_sec) * 1_000_000
     prev = F.lag(us).over(w)
     new_session = (
         prev.isNull() | ((us - prev) > F.lit(gap_us))
     ).cast("long")
     numbered = df.select(
-        F.col(key_col),
-        F.col(id_col),
+        F.col("user_id"),
+        F.col("event_id"),
         us.alias("_us"),
         F.sum(new_session)
         .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
         .alias("session_id"),
     )
     return (
-        numbered.groupBy(key_col, "session_id")
+        numbered.groupBy("user_id", "session_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.min(id_col).alias("first_event"),
+            F.min("event_id").alias("first_event"),
             F.min("_us").alias("start_us"),
             F.max("_us").alias("end_us"),
         )
         .select(
-            key_col,
+            "user_id",
             "session_id",
             "n_events",
             "first_event",
@@ -87,7 +81,6 @@ def failure_episodes(
     key_col: str = "host",
     ts_col: str = "ts",
     id_col: str = "event_id",
-    ok_col: str = "ok",
     min_failures: int = 2,
 ) -> DataFrame:
     """Host-outage detection: maximal runs of consecutive FAILED
@@ -115,20 +108,20 @@ def failure_episodes(
     """
     us = F.unix_micros(F.col(ts_col).cast("timestamp"))
     w = Window.partitionBy(key_col).orderBy(us.asc(), F.col(id_col).asc())
-    w_ok = Window.partitionBy(key_col, ok_col).orderBy(
+    w_ok = Window.partitionBy(key_col, "ok").orderBy(
         us.asc(), F.col(id_col).asc()
     )
     numbered = df.select(
         F.col(key_col),
         F.col(id_col),
-        F.col(ok_col),
+        F.col("ok"),
         us.alias("_us"),
         F.row_number().over(w).alias("_rn"),
         (F.row_number().over(w) - F.row_number().over(w_ok)).alias("_island"),
         F.count(F.lit(1)).over(Window.partitionBy(key_col)).alias("_total"),
     )
     return (
-        numbered.filter(~F.col(ok_col).cast("boolean"))
+        numbered.filter(~F.col("ok").cast("boolean"))
         .groupBy(key_col, "_island")
         .agg(
             F.min("_us").alias("start_us"),

@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-#: Default cadence for durable barriers in long iterative chains:
+#: Cadence for durable barriers in long iterative chains:
 #: reliable-checkpoint every N-th round, localCheckpoint otherwise.
 RELIABLE_INTERVAL = 5
 
@@ -40,24 +40,22 @@ def has_checkpoint_dir(df: DataFrame) -> bool:
     return d is not None
 
 
-def step_checkpoint(
-    df: DataFrame, *, eager: bool = False, reliable: bool = False
-) -> DataFrame:
+def step_checkpoint(df: DataFrame, *, reliable: bool = False) -> DataFrame:
     """Lineage barrier for one iteration step.
 
     ``reliable=True`` + configured checkpoint dir → durable
     ``checkpoint`` (survives executor loss); otherwise
-    ``localCheckpoint``.  ``eager=False`` by default so the NEXT action
-    (the round's convergence aggregate) materializes the barrier —
-    one Spark job per round instead of two.
+    ``localCheckpoint``.  Both are lazy, so the NEXT action (the
+    round's convergence aggregate) materializes the barrier — one Spark
+    job per round instead of two.
     """
     if reliable and has_checkpoint_dir(df):
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+        return df.checkpoint(eager=False)
+    return df.localCheckpoint(eager=False)
 
 
-def reliable_this_round(round_idx: int, interval: int = RELIABLE_INTERVAL) -> bool:
-    """Durable-barrier cadence: rounds interval-1, 2*interval-1, ...
-    (0-based), so a chain shorter than ``interval`` rounds never pays
+def reliable_this_round(round_idx: int) -> bool:
+    """Durable-barrier cadence: rounds I-1, 2I-1, ... (0-based, I =
+    ``RELIABLE_INTERVAL``), so a chain shorter than I rounds never pays
     a dfs write."""
-    return interval > 0 and (round_idx % interval) == (interval - 1)
+    return round_idx % RELIABLE_INTERVAL == RELIABLE_INTERVAL - 1

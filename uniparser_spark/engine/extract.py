@@ -95,7 +95,7 @@ def compile_ruleset(storage_json: str) -> RuleSet:
 
 
 def parse_one(
-    ruleset: RuleSet, url: str, body: Any, base_context: Optional[dict] = None
+    ruleset: RuleSet, url: str, body: Any
 ) -> Tuple[Optional[str], Optional[str], Optional[str], Optional[List[str]]]:
     """Run the matching rule for one page.
 
@@ -112,8 +112,6 @@ def parse_one(
         return rule["name"], None, f"FetchMiss: no page body for {url}", None
     request_args = {"method": rule["request_args"].get("method", "get"), "url": url}
     context = {"request_args": request_args, "url": url}
-    if base_context:
-        context.update(base_context)
     try:
         obj = apply_input_callback(body, context, rule.get("input_callback"))
         result = run_crawler_rule(obj, rule, context=context)

@@ -27,32 +27,24 @@ from pyspark.sql import DataFrame, Window, functions as F
 _HOST_RE = r"^[a-z][a-z0-9+.-]*://([^/?#]+)"
 
 
-def extraction_health(
-    results: DataFrame,
-    url_col: str = "url",
-    rule_col: str = "rule_name",
-    error_col: str = "error",
-    degraded: float = 0.05,
-    broken: float = 0.5,
-) -> DataFrame:
+def extraction_health(results: DataFrame) -> DataFrame:
     """Extraction results -> per (host, rule) health report.
 
     Output: ``(host, rule_name, n_pages, n_errors, err_rate,
     top_error, verdict)`` where ``top_error`` is the most frequent
     error kind (the ``ExceptionName`` prefix; ties break toward the
     lexicographically LARGER kind — struct-max semantics, identical in
-    both engines; NULL when clean) and verdict ∈ healthy (<
-    ``degraded``), degraded, broken (>= ``broken``).  Feed ``broken``
-    rows to the rule-maintenance queue; ``degraded`` ones to sampling
-    review.
+    both engines; NULL when clean) and verdict ∈ healthy (err_rate <
+    0.05), degraded, broken (>= 0.5).  Feed ``broken`` rows to the
+    rule-maintenance queue; ``degraded`` ones to sampling review.
     """
     kind = F.when(
-        F.col(error_col).isNotNull(),
-        F.regexp_extract(F.col(error_col), r"^([A-Za-z_]+)", 1),
+        F.col("error").isNotNull(),
+        F.regexp_extract(F.col("error"), r"^([A-Za-z_]+)", 1),
     )
     base = results.select(
-        F.regexp_extract(F.col(url_col), _HOST_RE, 1).alias("host"),
-        F.coalesce(F.col(rule_col), F.lit("<none>")).alias("rule_name"),
+        F.regexp_extract(F.col("url"), _HOST_RE, 1).alias("host"),
+        F.coalesce(F.col("rule_name"), F.lit("<none>")).alias("rule_name"),
         kind.alias("kind"),
     )
     counts = base.groupBy("host", "rule_name", "kind").agg(
@@ -63,7 +55,7 @@ def extraction_health(
     err_top = F.max(
         F.when(
             F.col("kind").isNotNull(),
-            F.struct(F.col("c").alias("c"), F.col("kind").alias("k")),
+            F.struct(F.col("c"), F.col("kind").alias("k")),
         )
     ).over(w)
     agg = (
@@ -85,8 +77,8 @@ def extraction_health(
         F.col("n_errors").cast("long").alias("n_errors"),
         F.round(rate, 4).alias("err_rate"),
         F.col("_top")["k"].alias("top_error"),
-        F.when(rate >= broken, F.lit("broken"))
-        .when(rate >= degraded, F.lit("degraded"))
+        F.when(rate >= 0.5, F.lit("broken"))
+        .when(rate >= 0.05, F.lit("degraded"))
         .otherwise(F.lit("healthy"))
         .alias("verdict"),
     )

@@ -326,8 +326,6 @@ def compile_chain(chain_rules: Sequence[Sequence]) -> Optional[ChainFn]:
 def extract_columns(
     df: DataFrame,
     parse_rules: Sequence[dict],
-    text_col: str = "text",
-    keep: Sequence[str] = ("url",),
     fallback: bool = True,
 ) -> DataFrame:
     """Typed-column extraction: one output column per parse rule.
@@ -347,12 +345,12 @@ def extract_columns(
     through ``engine.extract.extract_pages`` (the differential test in
     tests/test_native.py documents and pins this).
     """
-    cols = [F.col(c) for c in keep]
+    cols = [F.col("url")]
     pending_fallback: List[dict] = []
     for rule in parse_rules:
         fn = compile_chain(rule["chain_rules"])
         if fn is not None:
-            cols.append(fn(F.col(text_col)).alias(rule["name"]))
+            cols.append(fn(F.col("text")).alias(rule["name"]))
         elif fallback:
             pending_fallback.append(rule)
         else:
@@ -376,6 +374,6 @@ def extract_columns(
             return run
 
         for rule in pending_fallback:
-            cols.append(make_udf(rule)(F.col(text_col)).alias(rule["name"]))
+            cols.append(make_udf(rule)(F.col("text")).alias(rule["name"]))
         out = df.select(*cols)
     return out

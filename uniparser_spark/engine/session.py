@@ -1,14 +1,16 @@
 """SparkSession factory with the engine's standard configuration.
 
 Settings chosen for the 100 TB design point (SURVEY.md §4):
-- AQE on (runtime coalescing + skew-join splitting for hot hosts);
 - Arrow transport for the pandas extraction UDFs;
 - session timezone pinned to UTC so TimeParser semantics are
   deterministic across JVM/Python (reference tz-fix arithmetic,
-  parsers.py:938-955);
-- runtime bloom-filter join pushdown enabled.  It does not fire on the
-  crawl's seen-set anti-joins (checked on Spark 4.1.2); the crawl's own
-  Bloom pre-filter is ``frontier/seen.py``.
+  parsers.py:938-955).
+
+AQE (runtime coalescing + skew-join splitting for hot hosts) and
+runtime bloom-filter join pushdown are on by default in Spark 4.1.2 and
+are not restated here.  The bloom pushdown does not fire on the crawl's
+seen-set anti-joins; the crawl's own Bloom pre-filter is
+``frontier/seen.py``.
 """
 
 from __future__ import annotations
@@ -25,15 +27,19 @@ from pyspark.sql import SparkSession
 def ship_package(spark: SparkSession) -> None:
     """Make ``uniparser_spark`` importable on executors regardless of the
     driver's cwd — the local-mode equivalent of
-    ``spark-submit --py-files uniparser_spark.zip``."""
+    ``spark-submit --py-files uniparser_spark.zip``.  Once per
+    SparkContext: a context that already holds the archive keeps it."""
     pkg_dir = Path(__file__).resolve().parent.parent
     if not pkg_dir.is_dir():
         # imported from a --py-files zip: the package is already shipped
         # (and there is no directory tree to re-archive)
         return
+    sc = spark.sparkContext
     zip_base = Path(tempfile.gettempdir()) / f"uniparser_spark_pyfiles_{os.getpid()}"
+    if any(f.endswith(f"/{zip_base.name}.zip") for f in sc.listFiles):
+        return
     archive = shutil.make_archive(str(zip_base), "zip", root_dir=pkg_dir.parent, base_dir=pkg_dir.name)
-    spark.sparkContext.addPyFile(archive)
+    sc.addPyFile(archive)
 
 
 def get_spark(
@@ -49,13 +55,9 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         # smaller scan splits than the 128MB default: extraction stages
         # are python-CPU-bound, so split count — not IO — sets the
         # achievable parallelism when reading page tables directly

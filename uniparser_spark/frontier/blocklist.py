@@ -40,13 +40,7 @@ def host_suffixes(host: Column) -> Column:
     )
 
 
-def apply_blocklist(
-    urls: DataFrame,
-    blocklist: DataFrame,
-    url_col: str = "url",
-    host_col: str = "host",
-    domain_col: str = "domain",
-) -> DataFrame:
+def apply_blocklist(urls: DataFrame, blocklist: DataFrame) -> DataFrame:
     """URLs + a (domain) blocklist -> (url, host, blocked, matched).
 
     ``matched`` is the longest blocklisted suffix that matched (the
@@ -65,13 +59,13 @@ def apply_blocklist(
     # two selects: aliasing host and exploding a lambda over it in ONE
     # select trips Spark 4's lateral-column-alias resolution
     base0 = urls.select(
-        F.col(url_col).alias("url"), F.col(host_col).alias("host")
+        F.col("url"), F.col("host")
     )
     suf = base0.select(
         "url", "host", F.explode(host_suffixes(F.col("host"))).alias("suf")
     )
     rules = (
-        blocklist.select(F.col(domain_col).alias("suf"))
+        blocklist.select(F.col("domain").alias("suf"))
         .distinct()
         .withColumn("_hit", F.lit(1))
     )

@@ -39,8 +39,6 @@ def allocate_budget(
     fetch_log: DataFrame,
     total_budget: int = 10000,
     smooth: int = 8,
-    host_col: str = "host",
-    q_col: str = "q",
 ) -> DataFrame:
     """Fold a round's per-fetch quality scores into per-host budget for
     the next round.
@@ -53,9 +51,9 @@ def allocate_budget(
     ``sum(alloc) <= total_budget`` (floor rounding); the remainder is
     the scheduler's slack.  ``alloc`` uses integer DIV so the value is
     exact — no float in the allocation path."""
-    per = fetch_log.groupBy(F.col(host_col).alias("host")).agg(
+    per = fetch_log.groupBy(F.col("host")).agg(
         F.count(F.lit(1)).cast("long").alias("n_fetches"),
-        F.sum(q_col).cast("long").alias("sum_q"),
+        F.sum("q").cast("long").alias("sum_q"),
     )
     tot = per.agg(
         F.sum("sum_q").cast("long").alias("_tq"),

@@ -37,6 +37,7 @@ from pyspark.sql.types import (
 )
 
 SLOTS = 4  # entries per index (standard (2,4)-cuckoo)
+LOAD_FACTOR = 0.84
 MAX_KICKS = 500
 
 CUCKOO_SCHEMA = StructType(
@@ -130,13 +131,12 @@ class _Shard:
 class CuckooSeenFilter:
     """Distributed cuckoo state over (bucket, m_indexes, table) rows."""
 
-    def __init__(self, n_buckets: int = 64, load_factor: float = 0.84, min_indexes: int = 1024):
+    def __init__(self, n_buckets: int = 64, min_indexes: int = 1024):
         self.n_buckets = n_buckets
-        self.load_factor = load_factor
         self.min_indexes = min_indexes
 
     def _m_indexes(self, expected_per_bucket: int) -> int:
-        need = int(expected_per_bucket / (SLOTS * self.load_factor)) + 1
+        need = int(expected_per_bucket / (SLOTS * LOAD_FACTOR)) + 1
         m = max(self.min_indexes, need)
         return 1 << (m - 1).bit_length()  # power of two
 

@@ -66,9 +66,7 @@ MINI_PSL = sorted(
 _IPV4_RE = r"^\d{1,3}(\.\d{1,3}){3}$"
 
 
-def with_registrable_domain(
-    df: DataFrame, host_col: str = "host"
-) -> DataFrame:
+def with_registrable_domain(df: DataFrame) -> DataFrame:
     """Append ``public_suffix`` and ``registrable_domain`` columns.
 
     NULL suffix+domain for single-label hosts; NULL domain (suffix set)
@@ -76,7 +74,7 @@ def with_registrable_domain(
     NULL suffix for IPv4 literals.
     """
     psl = F.array(*[F.lit(s) for s in MINI_PSL])
-    host = F.col(host_col)
+    host = F.col("host")
     sufs = host_suffixes(host)  # longest first
     listed = F.filter(sufs, lambda s: F.array_contains(psl, s))
     # longest listed suffix = first element (chain is longest-first);

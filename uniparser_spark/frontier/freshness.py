@@ -52,19 +52,14 @@ def staleness_expr(now_round: int, last_round_col: str = "last_fetch_round"):
     return la / (F.lit(1.0) + la)
 
 
-def recrawl_priority(
-    history: DataFrame,
-    now_round: int,
-    threshold: float = 0.5,
-    url_col: str = "url_canon",
-) -> DataFrame:
+def recrawl_priority(history: DataFrame, now_round: int) -> DataFrame:
     """history: (url_canon, host, fetch_count, change_count,
     last_fetch_round).  Returns it + (lam, staleness, recrawl_rank, due).
     """
     lam = lam_expr()
     staleness = staleness_expr(now_round)
     scored = history.select(
-        url_col,
+        "url_canon",
         "host",
         "fetch_count",
         "change_count",
@@ -72,12 +67,12 @@ def recrawl_priority(
         staleness.alias("staleness"),
     )
     w = Window.partitionBy("host").orderBy(
-        F.col("staleness").desc(), F.col(url_col).asc()
+        F.col("staleness").desc(), F.col("url_canon").asc()
     )
     return scored.select(
         "*",
         F.row_number().over(w).alias("recrawl_rank"),
-        (F.col("staleness") >= F.lit(threshold)).cast("int").alias("due"),
+        (F.col("staleness") >= F.lit(0.5)).cast("int").alias("due"),
     )
 
 
@@ -187,12 +182,7 @@ def snapshot_asof(
     )
 
 
-def crawl_diff(
-    old: DataFrame,
-    new: DataFrame,
-    key: str = "url",
-    fp: str = "content_fp",
-) -> DataFrame:
+def crawl_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """Crawl-to-crawl change detection: full-outer join of two snapshot
     fingerprint tables → one verdict row per URL ever seen —
     ``added`` (new only), ``removed`` (old only), ``changed`` (both,
@@ -204,10 +194,10 @@ def crawl_diff(
     Scale shape: both sides are NARROW (key, fp) projections — page
     bodies never join; one co-partitioned shuffle on the key, which the
     snapshot tables' url-bucketed layout already provides at rest."""
-    o = old.select(F.col(key), F.col(fp).alias("old_fp"))
-    n = new.select(F.col(key), F.col(fp).alias("new_fp"))
-    return o.join(n, key, "full_outer").select(
-        key,
+    o = old.select(F.col("url"), F.col("content_fp").alias("old_fp"))
+    n = new.select(F.col("url"), F.col("content_fp").alias("new_fp"))
+    return o.join(n, "url", "full_outer").select(
+        "url",
         "old_fp",
         "new_fp",
         F.when(F.col("old_fp").isNull(), F.lit("added"))
@@ -218,14 +208,7 @@ def crawl_diff(
     )
 
 
-def revalidation_plan(
-    history: DataFrame,
-    now_round: int,
-    fresh_below: float = 0.5,
-    revalidate_lam_below: float = 0.3,
-    url_col: str = "url_canon",
-    validator_col: str = "has_validator",
-) -> DataFrame:
+def revalidation_plan(history: DataFrame, now_round: int) -> DataFrame:
     """Conditional-GET planning: for each known URL decide ``skip``
     (still fresh), ``revalidate`` (stale, the server gave us an
     ETag/Last-Modified AND the page rarely changes — a cheap
@@ -246,21 +229,21 @@ def revalidation_plan(
     lam = lam_expr()
     staleness = staleness_expr(now_round)
     scored = history.select(
-        F.col(url_col),
+        F.col("url_canon"),
         F.col("host"),
         lam.alias("lam"),
         staleness.alias("staleness"),
-        F.col(validator_col),
+        F.col("has_validator"),
     )
     return scored.select(
-        url_col,
+        "url_canon",
         "host",
         "lam",
         "staleness",
-        F.when(F.col("staleness") < F.lit(fresh_below), F.lit("skip"))
+        F.when(F.col("staleness") < F.lit(0.5), F.lit("skip"))
         .when(
-            (F.col(validator_col) == 1)
-            & (F.col("lam") < F.lit(revalidate_lam_below)),
+            (F.col("has_validator") == 1)
+            & (F.col("lam") < F.lit(0.3)),
             F.lit("revalidate"),
         )
         .otherwise(F.lit("fetch"))
@@ -272,7 +255,6 @@ def scd2_history(
     snapshots: DataFrame,
     url_col: str = "url_canon",
     round_col: str = "round",
-    fp_col: str = "content_fp",
 ) -> DataFrame:
     """Fold per-round fetch snapshots into SCD-2 validity intervals.
 
@@ -297,11 +279,11 @@ def scd2_history(
     adjacency, so a url fetched at rounds {0,1,5} still folds correctly
     (the interval's valid_to is the last round the version was SEEN).
     """
-    url, rnd, fp = F.col(url_col), F.col(round_col), F.col(fp_col)
+    url, rnd, fp = F.col(url_col), F.col(round_col), F.col("content_fp")
     w = Window.partitionBy(url_col).orderBy(round_col)
     chg = F.when(
-        F.lag(fp_col, 1).over(w).isNull()
-        | (F.lag(fp_col, 1).over(w) != fp),
+        F.lag("content_fp", 1).over(w).isNull()
+        | (F.lag("content_fp", 1).over(w) != fp),
         1,
     ).otherwise(0)
     # two selects: Spark forbids a window function (the running sum)
@@ -342,11 +324,7 @@ def scd2_history(
     )
 
 
-def refresh_policy_freshness(
-    history: DataFrame,
-    budget: int,
-    url_col: str = "url_canon",
-) -> DataFrame:
+def refresh_policy_freshness(history: DataFrame, budget: int) -> DataFrame:
     """Price the epoch's recrawl budget under the two canonical
     allocation policies (Cho & Garcia-Molina, "Effective Page Refresh
     Policies for Web Crawlers", TODS'03): UNIFORM gives every page the
@@ -371,7 +349,7 @@ def refresh_policy_freshness(
     broadcast of two doubles), one map-side-combined groupBy(host).
     The history table is narrow; page bytes are never touched.
     """
-    host = F.regexp_extract(F.col(url_col), r"^https?://([^/?#:]+)", 1)
+    host = F.regexp_extract(F.col("url_canon"), r"^https?://([^/?#:]+)", 1)
     base = history.select(host.alias("host"), lam_expr().alias("lam"))
     totals = base.agg(
         F.count(F.lit(1)).cast("double").alias("n_total"),
@@ -429,8 +407,6 @@ def refresh_policy_freshness(
 
 def retention_plan(
     snapshots: DataFrame,
-    id_col: str = "snapshot_id",
-    ts_col: str = "ts",
     keep_last: int = 7,
     keep_weekly: int = 4,
     keep_monthly: int = 6,
@@ -453,18 +429,18 @@ def retention_plan(
     Returns ``(snapshot_id, ts_us, keep, reason)``, reason ∈
     {recent, weekly, monthly, expire} by first match.
     """
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    week = F.date_trunc("week", F.col(ts_col).cast("timestamp"))
-    month = F.date_trunc("month", F.col(ts_col).cast("timestamp"))
-    order = (F.col("_us").desc(), F.col(id_col).desc())
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    week = F.date_trunc("week", F.col("ts").cast("timestamp"))
+    month = F.date_trunc("month", F.col("ts").cast("timestamp"))
+    order = (F.col("_us").desc(), F.col("snapshot_id").desc())
     staged = snapshots.select(
-        F.col(id_col), us.alias("_us"), week.alias("_wk"), month.alias("_mo")
+        F.col("snapshot_id"), us.alias("_us"), week.alias("_wk"), month.alias("_mo")
     )
     w_all = Window.orderBy(*order)
     w_wk = Window.partitionBy("_wk").orderBy(*order)
     w_mo = Window.partitionBy("_mo").orderBy(*order)
     ranked = staged.select(
-        id_col,
+        "snapshot_id",
         "_us",
         F.row_number().over(w_all).alias("_recent"),
         (F.row_number().over(w_wk) == 1).alias("_wk_win"),
@@ -479,7 +455,7 @@ def retention_plan(
         .otherwise(F.lit("expire"))
     )
     return ranked.select(
-        id_col,
+        "snapshot_id",
         F.col("_us").alias("ts_us"),
         (reason != "expire").cast("int").alias("keep"),
         reason.alias("reason"),

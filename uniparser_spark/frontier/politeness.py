@@ -86,10 +86,6 @@ def adaptive_delays(
     fetch_log: DataFrame,
     round_seconds: int = 60,
     multiplier: int = 2,
-    min_delay_ms: int = 200,
-    max_delay_ms: int = 10_000,
-    host_col: str = "host",
-    latency_col: str = "latency_ms",
 ) -> DataFrame:
     """Latency-adaptive politeness: derive each host's crawl delay from
     its OBSERVED response times instead of a fixed default — the
@@ -112,27 +108,27 @@ def adaptive_delays(
     Scale shape: one map-side-combinable groupBy over the narrow
     (host, latency) log — output is O(hosts) rows, broadcastable into
     the frontier join."""
-    p50 = F.round(F.percentile(F.col(latency_col), F.lit(0.5)), 4)
+    p50 = F.round(F.percentile(F.col("latency_ms"), F.lit(0.5)), 4)
     return (
-        fetch_log.groupBy(host_col)
+        fetch_log.groupBy("host")
         .agg(
             F.count(F.lit(1)).alias("n_obs"),
             p50.alias("p50_ms"),
         )
         .select(
-            host_col,
+            "host",
             "n_obs",
             "p50_ms",
             F.least(
                 F.greatest(
                     F.round(F.col("p50_ms") * multiplier, 4),
-                    F.lit(float(min_delay_ms)),
+                    F.lit(200.0),
                 ),
-                F.lit(float(max_delay_ms)),
+                F.lit(10_000.0),
             ).alias("delay_ms"),
         )
         .select(
-            host_col,
+            "host",
             "n_obs",
             "p50_ms",
             "delay_ms",
@@ -142,13 +138,7 @@ def adaptive_delays(
     )
 
 
-def politeness_audit(
-    fetch_log: DataFrame,
-    delays: DataFrame,
-    host_col: str = "host",
-    ts_col: str = "ts",
-    delay_col: str = "delay_us",
-) -> DataFrame:
+def politeness_audit(fetch_log: DataFrame, delays: DataFrame) -> DataFrame:
     """Compliance audit of an executed crawl against per-host
     crawl-delay contracts: did consecutive fetches to a host ever
     arrive closer than its delay?  This is the operator that VERIFIES
@@ -167,36 +157,29 @@ def politeness_audit(
     re-shuffle (superset-grouping-key device, same as sessionize);
     the contract table joins in by broadcast.
     """
-    w = Window.partitionBy(host_col).orderBy(ts_col)
+    w = Window.partitionBy("host").orderBy("ts")
     gaps = (
-        fetch_log.join(F.broadcast(delays), host_col, "left")
+        fetch_log.join(F.broadcast(delays), "host", "left")
         .select(
-            F.col(host_col),
-            F.col(delay_col),
-            (F.col(ts_col) - F.lag(ts_col).over(w)).alias("gap_us"),
+            F.col("host"),
+            F.col("delay_us"),
+            (F.col("ts") - F.lag("ts").over(w)).alias("gap_us"),
         )
     )
-    return gaps.groupBy(host_col).agg(
+    return gaps.groupBy("host").agg(
         F.count(F.lit(1)).alias("n_fetches"),
         F.count("gap_us").alias("n_gaps"),
         F.sum(
-            F.when(F.col("gap_us") < F.col(delay_col), 1).otherwise(0)
+            F.when(F.col("gap_us") < F.col("delay_us"), 1).otherwise(0)
         )
         .cast("long")
         .alias("n_violations"),
         F.min("gap_us").alias("min_gap_us"),
-        F.max(delay_col).alias(delay_col),
+        F.max("delay_us").alias("delay_us"),
     )
 
 
-def aimd_rates(
-    outcomes: DataFrame,
-    base_rate: int = 8,
-    cap: int = 32,
-    host_col: str = "host",
-    round_col: str = "round",
-    ok_col: str = "ok",
-) -> DataFrame:
+def aimd_rates(outcomes: DataFrame, base_rate: int = 8, cap: int = 32) -> DataFrame:
     """AIMD per-host crawl-rate control: fold each host's per-round
     fetch outcomes (ok/error) through additive-increase /
     multiplicative-decrease — ok rounds add 1 up to ``cap``, error
@@ -213,17 +196,17 @@ def aimd_rates(
 
     Output: (host, n_rounds, n_errs, final_rate).
     """
-    per_host = outcomes.groupBy(F.col(host_col).alias("host")).agg(
+    per_host = outcomes.groupBy(F.col("host")).agg(
         F.count(F.lit(1)).cast("int").alias("n_rounds"),
         F.sum(
-            F.when(F.col(ok_col).cast("int") == 1, 0).otherwise(1)
+            F.when(F.col("ok").cast("int") == 1, 0).otherwise(1)
         ).cast("int").alias("n_errs"),
         F.transform(
             F.array_sort(
                 F.collect_list(
                     F.struct(
-                        F.col(round_col).cast("int").alias("r"),
-                        F.col(ok_col).cast("int").alias("ok"),
+                        F.col("round").cast("int").alias("r"),
+                        F.col("ok").cast("int").alias("ok"),
                     )
                 )
             ),
@@ -245,11 +228,7 @@ def aimd_rates(
     )
 
 
-def fairness_report(
-    df: DataFrame,
-    key_col: str = "host",
-    weight_col: Optional[str] = None,
-) -> DataFrame:
+def fairness_report(df: DataFrame, weight_col: Optional[str] = None) -> DataFrame:
     """Jain fairness index of the crawl budget across hosts:
     ``J = (Σx)² / (n·Σx²)`` over per-key totals — 1.0 when every host
     gets an equal share, → 1/n when one host eats the budget.
@@ -267,7 +246,7 @@ def fairness_report(
     deterministic total order), all shares/index rounded to 6 dp.
     """
     w = F.col(weight_col) if weight_col else F.lit(1)
-    per = df.groupBy(F.col(key_col).alias("k")).agg(
+    per = df.groupBy(F.col("host").alias("k")).agg(
         F.sum(w).cast("double").alias("x")
     )
     return per.agg(
@@ -283,13 +262,7 @@ def fairness_report(
     )
 
 
-def frontier_backlog(
-    df: DataFrame,
-    host_col: str = "host",
-    round_col: str = "round",
-    arrivals_col: str = "arrivals",
-    capacity_per_round: int = 6,
-) -> DataFrame:
+def frontier_backlog(df: DataFrame, capacity_per_round: int = 6) -> DataFrame:
     """Per-host frontier queue evolution under a fixed politeness
     capacity — the Lindley waiting-line recursion
     ``B_r = max(0, B_{r-1} + arrivals_r − capacity)`` computed WITHOUT
@@ -313,14 +286,14 @@ def frontier_backlog(
     saturated = 1 iff the round ends with work still queued.
     """
     C = int(capacity_per_round)
-    w = Window.partitionBy(host_col).orderBy(F.col(round_col).asc())
+    w = Window.partitionBy("host").orderBy(F.col("round").asc())
     run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    x = F.col(arrivals_col).cast("long") - F.lit(C)
+    x = F.col("arrivals").cast("long") - F.lit(C)
     cum = F.sum(x).over(run)
     staged = df.select(
-        F.col(host_col).alias("host"),
-        F.col(round_col).cast("long").alias("round"),
-        F.col(arrivals_col).cast("long").alias("arrivals"),
+        F.col("host"),
+        F.col("round").cast("long").alias("round"),
+        F.col("arrivals").cast("long").alias("arrivals"),
         (cum - F.least(F.lit(0), F.min(cum).over(run))).alias("backlog"),
     )
     prev = F.coalesce(

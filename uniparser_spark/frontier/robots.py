@@ -101,16 +101,15 @@ def parse_robots(
 
 def robots_table(
     pages: DataFrame,
-    url_col: str = "url",
     text_col: str = "text",
     user_agent: str = "*",
 ) -> DataFrame:
     """pages table -> robots cache table (one row per host that serves a
     /robots.txt).  The scan is pruned to robots URLs before any Python
     runs; parsing is an Arrow-batched mapInPandas."""
-    host = F.regexp_extract(F.col(url_col), r"^https?://([^/:]+)", 1)
+    host = F.regexp_extract(F.col("url"), r"^https?://([^/:]+)", 1)
     robots_pages = pages.filter(
-        F.col(url_col).rlike(r"^https?://[^/]+/robots\.txt$")
+        F.col("url").rlike(r"^https?://[^/]+/robots\.txt$")
     ).select(host.alias("host"), F.col(text_col).alias("body"))
     return map_rows(
         robots_pages,
@@ -119,8 +118,8 @@ def robots_table(
     )
 
 
-def _path_col(url_col: str = "url_canon") -> F.Column:
-    path = F.regexp_extract(F.col(url_col), r"^https?://[^/]+(/.*)?$", 1)
+def _path_col() -> F.Column:
+    path = F.regexp_extract(F.col("url_canon"), r"^https?://[^/]+(/.*)?$", 1)
     return F.when(path == "", F.lit("/")).otherwise(path)
 
 
@@ -228,7 +227,6 @@ def _page_directive_flags(url: str, markup, header: Optional[str]) -> List[tuple
 
 def page_directives(
     pages: DataFrame,
-    url_col: str = "url",
     html_col: str = "html",
     header_col: Optional[str] = None,
 ) -> DataFrame:
@@ -248,7 +246,7 @@ def page_directives(
     Scale: same shape as ``links_from_html`` — HTML crosses into Python
     exactly once (Arrow-batched mapInPandas in the scan stage), the
     output is four narrow columns, nothing shuffles."""
-    sel = [F.col(url_col).alias("url"), F.col(html_col).alias("markup")]
+    sel = [F.col("url"), F.col(html_col).alias("markup")]
     sel.append(
         F.col(header_col).alias("xrobots")
         if header_col
@@ -257,12 +255,7 @@ def page_directives(
     return map_rows(pages.select(*sel), PAGE_DIRECTIVES_SCHEMA, _page_directive_flags)
 
 
-def robots_agent_matrix(
-    pages: DataFrame,
-    agents: List[str],
-    url_col: str = "url",
-    text_col: str = "text",
-) -> DataFrame:
+def robots_agent_matrix(pages: DataFrame, agents: List[str]) -> DataFrame:
     """Per-(host, agent) effective REP group audit: which of the
     fleet's user-agents gets an agent-SPECIFIC rule group vs falling
     back to '*', and what that group actually grants — the diff a
@@ -284,10 +277,10 @@ def robots_agent_matrix(
     (SURVEY.md §2.3); this extends the north rule's robots cache to
     agent fleets.
     """
-    host = F.regexp_extract(F.col(url_col), r"^https?://([^/:]+)", 1)
+    host = F.regexp_extract(F.col("url"), r"^https?://([^/:]+)", 1)
     robots_pages = pages.filter(
-        F.col(url_col).rlike(r"^https?://[^/]+/robots\.txt$")
-    ).select(host.alias("host"), F.col(text_col).alias("body"))
+        F.col("url").rlike(r"^https?://[^/]+/robots\.txt$")
+    ).select(host.alias("host"), F.col("text").alias("body"))
     agent_list = [a.lower() for a in agents]
 
     schema = StructType(
@@ -316,15 +309,7 @@ def robots_agent_matrix(
     return map_rows(robots_pages, schema, rows)
 
 
-def robots_fetch_policy(
-    fetches: DataFrame,
-    host_col: str = "host",
-    status_col: str = "status",
-    ts_col: str = "ts",
-    grace_hours: int = 720,
-    ttl_ok_sec: int = 86400,
-    ttl_err_sec: int = 3600,
-) -> DataFrame:
+def robots_fetch_policy(fetches: DataFrame) -> DataFrame:
     """Effective crawl policy per host from its /robots.txt FETCH
     history — the RFC 9309 §2.3.1 status-code rules the parser alone
     can't answer:
@@ -335,16 +320,15 @@ def robots_fetch_policy(
       robots.txt means no restrictions,
     - 5xx / network error (status 0, "unreachable") → ``disallow_all``
       while fresh, degrading to ``stale_cache_allow`` once the host
-      has been continuously unreachable longer than ``grace_hours``
+      has been continuously unreachable longer than 720 hours
       (the spec's "reasonably long time" — crawlers MAY then fall back
-      to a cached copy; 30 days default here).
+      to a cached copy; 30 days here).
 
     The LATEST fetch (ts, then status as tie-break) decides the
     branch; continuous-unreachability is measured from the last
     non-5xx fetch (or the log start when the host has never answered).
     ``refetch_at_us`` prices the next probe: healthy outcomes recheck
-    daily (``ttl_ok_sec``), error outcomes back off hourly
-    (``ttl_err_sec``) — feeding the same scheduler lane as
+    daily, error outcomes back off hourly — feeding the same scheduler lane as
     frontier/freshness.py's revalidation planner.
 
     Shape: ONE map-side-combined groupBy(host) — max_by for the latest
@@ -353,9 +337,9 @@ def robots_fetch_policy(
     ``(host, last_status, last_us, unreachable_hours, policy,
     refetch_at_us)`` — unreachable_hours is 0 outside the 5xx branch.
     """
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    st = F.col(status_col).cast("int")
-    agg = fetches.groupBy(F.col(host_col).alias("host")).agg(
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    st = F.col("status").cast("int")
+    agg = fetches.groupBy(F.col("host")).agg(
         F.max_by(st, F.struct(us, st)).alias("last_status"),
         F.max(us).alias("last_us"),
         F.max(F.when((st > 0) & (st < 500), us)).alias("_last_ok_us"),
@@ -373,13 +357,12 @@ def robots_fetch_policy(
         F.when((ls >= 200) & (ls < 300), F.lit("parse"))
         .when((ls >= 300) & (ls < 400), F.lit("follow_redirect"))
         .when((ls >= 400) & (ls < 500), F.lit("allow_all"))
-        .when(hours > grace_hours, F.lit("stale_cache_allow"))
+        .when(hours > 720, F.lit("stale_cache_allow"))
         .otherwise(F.lit("disallow_all"))
     )
-    err = unreachable
     refetch = F.col("last_us") + F.when(
-        err, F.lit(int(ttl_err_sec) * 1_000_000)
-    ).otherwise(F.lit(int(ttl_ok_sec) * 1_000_000))
+        unreachable, F.lit(3600 * 1_000_000)
+    ).otherwise(F.lit(86400 * 1_000_000))
     return agg.select(
         "host",
         "last_status",

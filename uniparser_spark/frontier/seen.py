@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import BinaryType, BooleanType, IntegerType, StructField, StructType
 
 _K_HASHES = 5  # probes per key; with 10 bits/key gives ~1% fp rate
+_BITS_PER_KEY = 10
+_MIN_BITS = 1 << 13
 
 BLOOM_SCHEMA = StructType(
     [
@@ -47,7 +49,7 @@ BLOOM_SCHEMA = StructType(
 )
 
 
-def add_url_keys(df: DataFrame, url_col: str = "url") -> DataFrame:
+def add_url_keys(df: DataFrame) -> DataFrame:
     """Add canonical form (``url_canon``), 64-bit membership key
     (``url_hash``), and ``host`` columns.
 
@@ -56,7 +58,7 @@ def add_url_keys(df: DataFrame, url_col: str = "url") -> DataFrame:
     expressions — no Python, stays inside whole-stage codegen; parity is
     unit-tested against the Python canonicalizer.
     """
-    url = F.col(url_col)
+    url = F.col("url")
     scheme = F.lower(F.regexp_extract(url, r"^([^:/?#]+)://", 1))
     hostport = F.lower(F.regexp_extract(url, r"^[^:/?#]+://([^/?#]*)", 1))
     tail = F.regexp_extract(url, r"^[^:/?#]+://[^/?#]*([\s\S]*)$", 1)
@@ -75,7 +77,7 @@ def add_url_keys(df: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
-def surt_key_expr(url_col: str = "url"):
+def surt_key_expr():
     """SURT (Sort-friendly URI Reordering Transform) key as a native
     expression — the canonical ordering of web-archive indexes (CDX /
     OpenWayback): ``https://www.a.example.org:8080/p?q=1#f`` →
@@ -96,7 +98,7 @@ def surt_key_expr(url_col: str = "url"):
     URLs (no ``scheme://``) yield NULL — error-as-data, same contract
     as the CDX scanner.
     """
-    url = F.col(url_col)
+    url = F.col("url")
     scheme = F.lower(F.regexp_extract(url, r"^([^:/?#]+)://", 1))
     hostport = F.lower(
         F.regexp_extract(url, r"^[^:/?#]+://(?:[^/?#@]*@)?([^/?#]*)", 1)
@@ -124,11 +126,11 @@ def surt_key_expr(url_col: str = "url"):
     )
 
 
-def add_surt_keys(df: DataFrame, url_col: str = "url") -> DataFrame:
+def add_surt_keys(df: DataFrame) -> DataFrame:
     """Add ``surt`` plus ``surt_host`` (the reversed-host prefix before
     ``)`` — the range-partitioning key: all of a registrable domain's
     subdomains sort together under its label prefix)."""
-    out = df.withColumn("surt", surt_key_expr(url_col))
+    out = df.withColumn("surt", surt_key_expr())
     return out.withColumn(
         "surt_host", F.regexp_extract(F.col("surt"), r"^([^)]*)\)", 1)
     )
@@ -146,13 +148,11 @@ def _bit_positions(hashes: np.ndarray, m_bits: int) -> Iterator[np.ndarray]:
 class BloomSeenFilter:
     """Distributed bloom state over (bucket, bitmap) rows."""
 
-    def __init__(self, n_buckets: int = 64, bits_per_key: int = 10, min_bits: int = 1 << 13):
+    def __init__(self, n_buckets: int = 64):
         self.n_buckets = n_buckets
-        self.bits_per_key = bits_per_key
-        self.min_bits = min_bits
 
     def _m_bits(self, expected_per_bucket: int) -> int:
-        m = max(self.min_bits, expected_per_bucket * self.bits_per_key)
+        m = max(_MIN_BITS, expected_per_bucket * _BITS_PER_KEY)
         return 1 << math.ceil(math.log2(m))  # power of two for cheap mod
 
     def build(self, seen: DataFrame, expected_total: Optional[int] = None) -> DataFrame:
@@ -175,23 +175,21 @@ class BloomSeenFilter:
         keyed = seen.withColumn("bucket", F.pmod(F.col("url_hash"), F.lit(n_buckets)).cast("int"))
         return keyed.groupBy("bucket").applyInPandas(build_bucket, schema=BLOOM_SCHEMA)
 
-    def probe(self, candidates: DataFrame, bloom: DataFrame, broadcast: bool = True) -> DataFrame:
+    def probe(self, candidates: DataFrame, bloom: DataFrame) -> DataFrame:
         """Add ``maybe_seen`` boolean to candidates(url_hash, ...).
 
-        Bucket equi-join then a vectorized membership test; rows with no
-        bloom bucket are definitely new.  ``broadcast=True`` suits bloom
-        states up to a few hundred MB; beyond that (10^10-URL regime) the
-        plain shuffle join co-partitions candidates with their bucket's
-        bitmap instead.
+        Broadcast bucket equi-join then a vectorized membership test;
+        rows with no bloom bucket are definitely new.  Every candidate
+        row carries its bucket's whole bitmap through the join and the
+        Arrow batch.
         """
         out_schema = StructType(
             candidates.schema.fields + [StructField("maybe_seen", BooleanType(), False)]
         )
         cand_cols = [f.name for f in candidates.schema.fields]
-        bloom_side = F.broadcast(bloom) if broadcast else bloom
         joined = candidates.withColumn(
             "bucket", F.pmod(F.col("url_hash"), F.lit(self.n_buckets)).cast("int")
-        ).join(bloom_side, "bucket", "left")
+        ).join(F.broadcast(bloom), "bucket", "left")
 
         def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:

@@ -40,12 +40,7 @@ def _weight(host: Column, k: Column, impl: str) -> Column:
     return h16(tagged)
 
 
-def rendezvous_shards(
-    hosts: DataFrame,
-    n_shards: int,
-    host_col: str = "host",
-    impl: str = "expr",
-) -> DataFrame:
+def rendezvous_shards(hosts: DataFrame, n_shards: int, impl: str = "expr") -> DataFrame:
     """(host) -> (host, shard) by highest-random-weight.
 
     shard = argmax over k ∈ [0, n_shards) of weight(host, k), ties
@@ -57,22 +52,18 @@ def rendezvous_shards(
         F.transform(
             F.sequence(F.lit(0), F.lit(n_shards - 1)),
             lambda k: F.struct(
-                _weight(F.col(host_col), k, impl).alias("w"),
+                _weight(F.col("host"), k, impl).alias("w"),
                 k.cast("int").alias("k"),
             ),
         )
     )
     return hosts.select(
-        F.col(host_col),
+        F.col("host"),
         pick["k"].alias("shard"),
     )
 
 
-def shard_loads(
-    assigned: DataFrame,
-    weight_col: str | None = None,
-    shard_col: str = "shard",
-) -> DataFrame:
+def shard_loads(assigned: DataFrame, weight_col: str | None = None) -> DataFrame:
     """Shard load report over an assignment: host count (and optional
     weighted load, e.g. expected pages per host) per shard — the
     balance check a resize decision reads.  One map-side-combined
@@ -80,4 +71,4 @@ def shard_loads(
     aggs = [F.count(F.lit(1)).alias("n_hosts")]
     if weight_col is not None:
         aggs.append(F.sum(weight_col).cast("long").alias("load"))
-    return assigned.groupBy(shard_col).agg(*aggs)
+    return assigned.groupBy("shard").agg(*aggs)

@@ -39,8 +39,6 @@ no distinct-count machinery at all).
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
-
 from pyspark.sql import Column, DataFrame, functions as F
 
 _HASH_BITS = 60  # 15 hex chars of md5: fits signed 64-bit everywhere
@@ -233,7 +231,6 @@ def hll_estimate_from_registers(sketches: DataFrame) -> DataFrame:
 def cms_counts(
     df: DataFrame,
     key_col: str,
-    group_cols: Optional[Sequence[str]] = None,
     depth: int = 4,
     width: int = 256,
 ) -> DataFrame:
@@ -255,10 +252,9 @@ def cms_counts(
     mod width (same portable hash family as :func:`hll_counts`) — the
     DuckDB oracle reproduces every counter bit-exactly.
 
-    Returns one row per (group, row_idx, bucket) with ``cnt`` —
+    Returns one row per (row_idx, bucket) with ``cnt`` —
     the sparse sketch relation (absent bucket = 0).
     """
-    gcols = list(group_cols or [])
     rows = F.explode(
         F.transform(
             F.sequence(F.lit(0), F.lit(depth - 1)),
@@ -274,9 +270,9 @@ def cms_counts(
         )
     ).alias("_rc")
     return (
-        df.select(*gcols, rows)
-        .select(*gcols, "_rc.row_idx", "_rc.bucket")
-        .groupBy(*gcols, "row_idx", "bucket")
+        df.select(rows)
+        .select("_rc.row_idx", "_rc.bucket")
+        .groupBy("row_idx", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
 

@@ -30,14 +30,13 @@ from pyspark.sql import DataFrame, Window, functions as F
 # union-find 0.4 s vs star 4.1 s at 10^3 edges, 3.4 s vs 45.9 s at
 # 10^6, where the union-find worker grows by ~80 MB.
 SMALL_GRAPH_EDGES = 1_000_000
+DAMPING = 0.85  # PageRank / TrustRank link-follow probability
 
 
-def synth_edges(
-    df: DataFrame, n_nodes: int, id_col: str = "doc_id", fanout: int = 3
-) -> DataFrame:
+def synth_edges(df: DataFrame, n_nodes: int, fanout: int = 3) -> DataFrame:
     """Deterministic circulant link graph: v → (7v+k) mod n_nodes for
     k = 1..fanout, self-loops dropped (distinct targets for n > fanout)."""
-    did = F.col(id_col)
+    did = F.col("doc_id")
     dsts = F.array(*[(did * 7 + k) % n_nodes for k in range(1, fanout + 1)])
     return (
         df.select(did.alias("src"), F.explode(dsts).alias("dst"))
@@ -70,7 +69,6 @@ def pagerank(
     nodes: DataFrame,
     n_nodes: int,
     iters: int = 3,
-    damping: float = 0.85,
 ) -> DataFrame:
     """PageRank after ``iters`` synchronous iterations (uniform init,
     no dangling nodes in the synthesized graph — every v has out-links).
@@ -85,7 +83,7 @@ def pagerank(
     deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
     edges_deg = edges.join(deg, "src")
     ranks = nodes.select("node", (F.lit(1.0) / n).alias("rank"))
-    teleport = (1.0 - damping) / n
+    teleport = (1.0 - DAMPING) / n
     for _ in range(iters):
         # explicit aliases: ranks' lineage includes edges_deg/nodes after
         # the first iteration, and unaliased self-joins are ambiguous
@@ -106,7 +104,7 @@ def pagerank(
                 F.col("n.node").alias("node"),
                 (
                     F.lit(teleport)
-                    + F.lit(damping) * F.coalesce(F.col("c.c"), F.lit(0.0))
+                    + F.lit(DAMPING) * F.coalesce(F.col("c.c"), F.lit(0.0))
                 ).alias("rank"),
             )
         )
@@ -118,7 +116,6 @@ def trustrank(
     nodes: DataFrame,
     seeds: DataFrame,
     iters: int = 3,
-    damping: float = 0.85,
 ) -> DataFrame:
     """TrustRank (Gyongyi, Garcia-Molina & Pedersen, VLDB'04):
     personalized PageRank whose teleport mass returns ONLY to a
@@ -132,7 +129,7 @@ def trustrank(
     broadcast of the seed vector (curated seed lists are 10^2-10^5
     rows; never a shuffle side).  Trust starts as the uniform seed
     distribution d (1/|seeds| on seeds, 0 elsewhere) and iterates
-    t = (1-damping)*d + damping*M't.  Like :func:`pagerank`, dangling
+    t = (1-DAMPING)*d + DAMPING*M't.  Like :func:`pagerank`, dangling
     mass is dropped, not redistributed (the synthesized suite graph
     has no dangling nodes); a fixed ``iters`` keeps the whole thing
     SQL-expressible for the oracle.
@@ -170,8 +167,8 @@ def trustrank(
             .select(
                 F.col("b.node").alias("node"),
                 (
-                    F.lit(1.0 - damping) * F.col("b.d")
-                    + F.lit(damping) * F.coalesce(F.col("c.c"), F.lit(0.0))
+                    F.lit(1.0 - DAMPING) * F.col("b.d")
+                    + F.lit(DAMPING) * F.coalesce(F.col("c.c"), F.lit(0.0))
                 ).alias("trust"),
             )
         )
@@ -298,12 +295,7 @@ def dedup_clusters(
     )
 
 
-def select_canonical(
-    clusters: DataFrame,
-    quality: DataFrame,
-    id_col: str = "doc_id",
-    quality_col: str = "quality",
-) -> DataFrame:
+def select_canonical(clusters: DataFrame, quality: DataFrame) -> DataFrame:
     """Quality-ranked retention: re-elect each cluster's canonical as
     its BEST-quality document (ties → smallest id) instead of
     :func:`dedup_clusters`' min-id default.
@@ -321,17 +313,17 @@ def select_canonical(
     band-cap upstream already prevents.
     """
     w = Window.partitionBy("cluster_id").orderBy(
-        F.col(quality_col).desc(), F.col(id_col).asc()
+        F.col("quality").desc(), F.col("doc_id").asc()
     )
     return (
-        clusters.join(quality.select(id_col, quality_col), id_col)
+        clusters.join(quality.select("doc_id", "quality"), "doc_id")
         .withColumn("_rk", F.row_number().over(w))
         .select(
-            id_col,
+            "doc_id",
             "cluster_id",
             (F.col("_rk") == 1).cast("int").alias("is_canonical"),
             "cluster_size",
-            quality_col,
+            "quality",
         )
     )
 
@@ -577,13 +569,7 @@ def hits(edges: DataFrame, nodes: DataFrame, iters: int = 2) -> DataFrame:
     )
 
 
-def opic_round(
-    links: DataFrame,
-    cash: DataFrame,
-    url_col: str = "url",
-    cash_col: str = "cash",
-    history_col: str = "history",
-) -> DataFrame:
+def opic_round(links: DataFrame, cash: DataFrame) -> DataFrame:
     """One OPIC round (Abiteboul/Preda/Cobena 2003, "Adaptive On-Line
     Page Importance Computation") — the frontier-time importance signal
     a crawler can maintain INCREMENTALLY, before any PageRank-style
@@ -613,9 +599,9 @@ def opic_round(
         F.count(F.lit(1)).cast("long").alias("_deg")
     )
     c = cash.select(
-        F.col(url_col).alias("_u"),
-        F.col(cash_col).cast("long").alias("_c"),
-        F.col(history_col).cast("long").alias("_h"),
+        F.col("url").alias("_u"),
+        F.col("cash").cast("long").alias("_c"),
+        F.col("history").cast("long").alias("_h"),
     )
     giving = c.join(deg, c["_u"] == deg["src"], "left").select(
         "_u",
@@ -642,13 +628,13 @@ def opic_round(
     )
     merged = staged.join(recv, "_u", "full_outer")
     return merged.select(
-        F.col("_u").alias(url_col),
+        F.col("_u").alias("url"),
         (
             F.coalesce("_residual", F.lit(0)) + F.coalesce("_recv", F.lit(0))
-        ).cast("long").alias(cash_col),
+        ).cast("long").alias("cash"),
         (
             F.coalesce("_h", F.lit(0)) + F.coalesce("_given", F.lit(0))
-        ).cast("long").alias(history_col),
+        ).cast("long").alias("history"),
         (
             F.coalesce("_residual", F.lit(0))
             + F.coalesce("_recv", F.lit(0))
@@ -664,7 +650,6 @@ def spam_mass(
     n_nodes: int,
     seeds: DataFrame,
     iters: int = 3,
-    damping: float = 0.85,
 ) -> DataFrame:
     """Spam mass (Gyongyi et al., 'Link Spam Detection Based on Mass
     Estimation', VLDB'06, simplified): the fraction of a page's
@@ -685,8 +670,8 @@ def spam_mass(
     :func:`spam_mass_from_signals` — two node-keyed joins, nothing
     iterative — which this function delegates to.
     """
-    pr = pagerank(edges, nodes, n_nodes, iters=iters, damping=damping)
-    tr = trustrank(edges, nodes, seeds, iters=iters, damping=damping)
+    pr = pagerank(edges, nodes, n_nodes, iters=iters)
+    tr = trustrank(edges, nodes, seeds, iters=iters)
     return spam_mass_from_signals(pr, tr, seeds)
 
 

@@ -35,7 +35,7 @@ CDX_JSON_SCHEMA = StructType(
 )
 
 
-def parse_cdx_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
+def parse_cdx_lines(lines: DataFrame) -> DataFrame:
     """Text lines → typed capture rows.
 
     CDXJ format: ``urlkey SP timestamp SP {json}`` — the urlkey is a
@@ -45,7 +45,7 @@ def parse_cdx_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
     valid int).  Lines whose JSON fails to parse keep the raw columns
     with valid = 0.
     """
-    v = F.col(value_col)
+    v = F.col("value")
     urlkey = F.substring_index(v, " ", 1)
     # try_element_at, not element_at: under Spark 4's default ANSI mode
     # a blank/truncated line (<3 space-separated fields) would raise
@@ -79,10 +79,7 @@ def read_cdx(spark: SparkSession, path: str, path_glob: str = "*.cdx*") -> DataF
     )
 
 
-def cdx_seed_candidates(
-    captures: DataFrame,
-    mime_prefixes: tuple = ("text/html",),
-) -> DataFrame:
+def cdx_seed_candidates(captures: DataFrame) -> DataFrame:
     """Capture table → frontier-ready (url, priority) discovery feed:
 
     - one row per url FIRST: the LATEST capture wins (max ts over ALL
@@ -112,12 +109,10 @@ def cdx_seed_candidates(
         )
         .select("url", "cap.status", "cap.mime", "cap.digest")
     )
-    pref = None
-    for p in mime_prefixes:
-        c = F.col("mime").startswith(p)
-        pref = c if pref is None else (pref | c)
     ok = latest.filter(
-        (F.col("status") == 200) & F.col("mime").isNotNull() & pref
+        (F.col("status") == 200)
+        & F.col("mime").isNotNull()
+        & F.col("mime").startswith("text/html")
     )
     return (
         ok.groupBy("digest")
@@ -126,16 +121,7 @@ def cdx_seed_candidates(
     )
 
 
-def cdxj_lines(
-    index: DataFrame,
-    url_col: str = "url",
-    ts_col: str = "ts",
-    status_col: str = "status",
-    mime_col: str = "mime",
-    digest_col: str = "digest",
-    length_col: str = "length",
-    filename_col: str = "filename",
-) -> DataFrame:
+def cdxj_lines(index: DataFrame) -> DataFrame:
     """Capture/index rows → CDXJ text lines: the WRITE side of this
     connector, so a crawl indexes its own WARC output in the exact
     format :func:`parse_cdx_lines` (and standard web-archive tooling —
@@ -160,16 +146,16 @@ def cdxj_lines(
     """
     from ..frontier.seen import surt_key_expr
 
-    key = surt_key_expr(url_col)
-    ts14 = F.date_format(F.col(ts_col).cast("timestamp"), "yyyyMMddHHmmss")
+    key = surt_key_expr()
+    ts14 = F.date_format(F.col("ts").cast("timestamp"), "yyyyMMddHHmmss")
     js = F.to_json(
         F.struct(
-            F.col(url_col).cast("string").alias("url"),
-            F.col(mime_col).cast("string").alias("mime"),
-            F.col(status_col).cast("string").alias("status"),
-            F.col(digest_col).cast("string").alias("digest"),
-            F.col(length_col).cast("string").alias("length"),
-            F.col(filename_col).cast("string").alias("filename"),
+            F.col("url").cast("string").alias("url"),
+            F.col("mime").cast("string").alias("mime"),
+            F.col("status").cast("string").alias("status"),
+            F.col("digest").cast("string").alias("digest"),
+            F.col("length").cast("string").alias("length"),
+            F.col("filename").cast("string").alias("filename"),
         ),
         {"ignoreNullFields": "false"},
     )

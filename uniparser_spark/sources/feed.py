@@ -189,11 +189,7 @@ def parse_feed(raw: bytes) -> List[Dict[str, Any]]:
 FEED_URL_RE = r"^https?://[^?#]*(?:/feed/?|/rss/?|\.(?:rss|atom)|(?:feed|rss|atom)[^/]*\.xml)(?:\?[^#]*)?$"
 
 
-def feed_entries(
-    pages: DataFrame,
-    url_col: str = "url",
-    body_col: str = "html",
-) -> DataFrame:
+def feed_entries(pages: DataFrame) -> DataFrame:
     """Pages table → feed entry table (FEED_ENTRY_SCHEMA).
 
     The scan is pruned to feed-shaped URLs BEFORE any Python runs; the
@@ -201,8 +197,8 @@ def feed_entries(
     documents become ``kind='error'`` rows with the message in ``loc``
     — error-as-data, same policy as the sitemap connector.
     """
-    fp = pages.filter(F.col(url_col).rlike(FEED_URL_RE)).select(
-        F.col(url_col).alias("feed_url"), F.col(body_col).alias("body")
+    fp = pages.filter(F.col("url").rlike(FEED_URL_RE)).select(
+        F.col("url").alias("feed_url"), F.col("html").alias("body")
     )
 
     def decode(u, body):
@@ -227,7 +223,7 @@ def feed_entries(
     return map_rows(fp, FEED_ENTRY_SCHEMA, decode)
 
 
-def seeds_from_feed(entries: DataFrame, priority: float = 0.8) -> DataFrame:
+def seeds_from_feed(entries: DataFrame) -> DataFrame:
     """Feed entry table → frontier-ready (url, priority); items only,
     distinct by url (a story syndicated into several feeds seeds
     once)."""
@@ -235,5 +231,5 @@ def seeds_from_feed(entries: DataFrame, priority: float = 0.8) -> DataFrame:
         entries.filter(F.col("kind") == "item")
         .select(F.col("loc").alias("url"))
         .distinct()
-        .select("url", F.lit(float(priority)).alias("priority"))
+        .select("url", F.lit(0.8).alias("priority"))
     )

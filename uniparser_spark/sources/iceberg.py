@@ -69,7 +69,7 @@ def frontier_ddl(table: str, n_buckets: int = 1024) -> str:
     )
 
 
-def compact_call(table: str, target_mb: int = 512) -> str:
+def compact_call(table: str) -> str:
     """The async maintenance CALL replacing inline seen-log compaction
     (crawl/engine.py compaction rounds): run from a maintenance job,
     never the crawl loop."""
@@ -78,7 +78,7 @@ def compact_call(table: str, target_mb: int = 512) -> str:
     return (
         f"CALL {catalog}.system.rewrite_data_files("
         f"table => '{short}', "
-        f"options => map('target-file-size-bytes','{target_mb * 1024 * 1024}'))"
+        "options => map('target-file-size-bytes','536870912'))"  # 512 MiB
     )
 
 
@@ -96,28 +96,18 @@ def expire_snapshots_call(table: str, retain_last: int = 10) -> str:
 class FrontierTable:
     """Catalog-backed frontier/seen state with URL-hash bucketing.
 
-    ``fmt='iceberg'`` (auto-selected when the runtime is present)
-    issues the real DDL/DML; ``fmt='builtin'`` uses session-catalog
+    ``fmt`` is ``'iceberg'`` when the runtime is present (the real
+    DDL/DML), else ``'builtin'``: session-catalog
     bucketed parquet tables — same co-partitioned layout, so join
     plans and tests carry over.  The API is the three verbs the crawl
     loop needs: ``create``, ``append``, ``read``.
     """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        table: str,
-        n_buckets: int = 32,
-        fmt: Optional[str] = None,
-    ):
-        if fmt is None:
-            fmt = "iceberg" if iceberg_available(spark) else "builtin"
-        if fmt not in ("iceberg", "builtin"):
-            raise ValueError(f"unknown table format {fmt!r}")
+    def __init__(self, spark: SparkSession, table: str, n_buckets: int = 32):
         self.spark = spark
         self.table = table
         self.n_buckets = n_buckets
-        self.fmt = fmt
+        self.fmt = "iceberg" if iceberg_available(spark) else "builtin"
 
     # -- lifecycle -----------------------------------------------------
     def create(self) -> None:
@@ -162,8 +152,8 @@ class FrontierTable:
             return sql
         return None
 
-    def expire_snapshots(self, retain_last: int = 10) -> Optional[str]:
-        sql = expire_snapshots_call(self.table, retain_last)
+    def expire_snapshots(self) -> Optional[str]:
+        sql = expire_snapshots_call(self.table)
         if self.fmt == "iceberg":
             self.spark.sql(sql)
             return sql

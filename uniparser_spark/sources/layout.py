@@ -77,7 +77,6 @@ def pruning_audit(
     sort_cols: Sequence[str],
     stat_col: str,
     predicate_value,
-    id_col: str = "doc_id",
     file_rows: int = 64,
 ) -> DataFrame:
     """Compare footer-stats pruning for a point predicate
@@ -95,8 +94,8 @@ def pruning_audit(
     skips on stats alone.  Aggregate ``1 - avg(contains)`` per layout
     is the prune fraction the rewrite buys.
     """
-    ordered = [F.col(c) for c in sort_cols] + [F.col(id_col)]
-    hashed = [F.md5(F.col(id_col).cast("string")), F.col(id_col)]
+    ordered = [F.col(c) for c in sort_cols] + [F.col("doc_id")]
+    hashed = [F.md5(F.col("doc_id").cast("string")), F.col("doc_id")]
     stats = layout_file_stats(
         df, ordered, "clustered", stat_col, file_rows
     ).unionByName(
@@ -117,9 +116,6 @@ def pruning_audit(
 
 def compaction_plan(
     files: DataFrame,
-    partition_col: str = "partition",
-    file_col: str = "file",
-    size_col: str = "size_bytes",
     target_bytes: int = 128 * 1024 * 1024,
 ) -> DataFrame:
     """Small-files compaction plan: within each partition, bin the
@@ -153,12 +149,12 @@ def compaction_plan(
     group_id), reading the group's files, writing one.
     """
     part, name, size = (
-        F.col(partition_col), F.col(file_col), F.col(size_col)
+        F.col("partition"), F.col("file"), F.col("size_bytes")
     )
     small = files.filter(size < target_bytes)
-    w = Window.partitionBy(partition_col).orderBy(size.desc(), name.asc())
+    w = Window.partitionBy("partition").orderBy(size.desc(), name.asc())
     cum_before = F.coalesce(
-        F.sum(size_col).over(
+        F.sum("size_bytes").over(
             w.rowsBetween(Window.unboundedPreceding, -1)
         ),
         F.lit(0),

@@ -213,11 +213,7 @@ def build_sitemap_index(
     return body
 
 
-def sitemap_entries(
-    pages: DataFrame,
-    url_col: str = "url",
-    body_col: str = "html",
-) -> DataFrame:
+def sitemap_entries(pages: DataFrame) -> DataFrame:
     """Pages table → sitemap entry table (ENTRY_SCHEMA).
 
     The scan is pruned to sitemap-shaped URLs (``*.xml`` / ``*.xml.gz``
@@ -227,8 +223,8 @@ def sitemap_entries(
     error-as-data, same policy as the extraction engine.
     """
     sm = pages.filter(
-        F.col(url_col).rlike(r"^https?://[^?#]*sitemap[^?#]*\.xml(\.gz)?$")
-    ).select(F.col(url_col).alias("sitemap_url"), F.col(body_col).alias("body"))
+        F.col("url").rlike(r"^https?://[^?#]*sitemap[^?#]*\.xml(\.gz)?$")
+    ).select(F.col("url").alias("sitemap_url"), F.col("html").alias("body"))
 
     def decode(u, body):
         raw = bytes(body) if not isinstance(body, str) else body.encode()
@@ -251,19 +247,15 @@ def sitemap_entries(
     return map_rows(sm, ENTRY_SCHEMA, decode)
 
 
-def sitemap_urls_from_robots(
-    pages: DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
-) -> DataFrame:
+def sitemap_urls_from_robots(pages: DataFrame) -> DataFrame:
     """robots.txt bodies → (host, sitemap_url) via pure native
     expressions (regexp_extract_all + posexplode keeps in-file order).
     RFC 9309 §2.3: ``Sitemap:`` is group-independent, so a plain line
     scan IS the spec semantics — no group state machine needed."""
-    host = F.regexp_extract(F.col(url_col), r"^https?://([^/:]+)", 1)
+    host = F.regexp_extract(F.col("url"), r"^https?://([^/:]+)", 1)
     robots = pages.filter(
-        F.col(url_col).rlike(r"^https?://[^/]+/robots\.txt$")
-    ).select(host.alias("host"), F.col(text_col).alias("body"))
+        F.col("url").rlike(r"^https?://[^/]+/robots\.txt$")
+    ).select(host.alias("host"), F.col("text").alias("body"))
     urls = F.regexp_extract_all(
         F.col("body"), F.lit(r"(?mi)^\s*sitemap\s*:\s*(\S+)\s*$"), F.lit(1)
     )
@@ -272,11 +264,7 @@ def sitemap_urls_from_robots(
     )
 
 
-def sitemap_refresh(
-    entries: DataFrame,
-    history: DataFrame,
-    round_epoch: DataFrame = None,
-) -> DataFrame:
+def sitemap_refresh(entries: DataFrame, history: DataFrame) -> DataFrame:
     """Incremental recrawl from sitemap ``lastmod``: which advertised
     URLs actually need a fetch?
 
@@ -317,9 +305,7 @@ def sitemap_refresh(
     )
 
 
-def sitemap_coverage(
-    sitemap_urls: DataFrame, crawled: DataFrame, url_col: str = "url"
-) -> DataFrame:
+def sitemap_coverage(sitemap_urls: DataFrame, crawled: DataFrame) -> DataFrame:
     """Per-host sitemap-vs-crawl coverage diff.
 
     The two discovery channels disagree in both directions: URLs the
@@ -338,12 +324,12 @@ def sitemap_coverage(
     aggregation on the host key, and skewed hosts are AQE's problem —
     no row ever carries page content."""
     s = (
-        sitemap_urls.select(F.col(url_col).alias("url"))
+        sitemap_urls.select(F.col("url"))
         .distinct()
         .withColumn("_s", F.lit(1))
     )
     c = (
-        crawled.select(F.col(url_col).alias("url"))
+        crawled.select(F.col("url"))
         .distinct()
         .withColumn("_c", F.lit(1))
     )
@@ -391,12 +377,7 @@ def seeds_from_entries(entries: DataFrame) -> DataFrame:
     )
 
 
-def cross_submission_audit(
-    entries: DataFrame,
-    robots_sitemaps: DataFrame,
-    sitemap_col: str = "sitemap_url",
-    loc_col: str = "loc",
-) -> DataFrame:
+def cross_submission_audit(entries: DataFrame, robots_sitemaps: DataFrame) -> DataFrame:
     """sitemaps.org cross-submission validation: a sitemap hosted on A
     may list URLs on B ONLY if B's robots.txt declares that exact
     sitemap URL (``Sitemap:`` line) — otherwise anyone could publish a
@@ -421,10 +402,10 @@ def cross_submission_audit(
         F.regexp_extract(c, r"^[^:/?#]+://(?:[^/?#@]*@)?([^/?#]*)", 1)
     )
     base = entries.select(
-        F.col(sitemap_col).alias("sitemap_url"),
-        F.col(loc_col).alias("loc"),
-        host_of(F.col(sitemap_col)).alias("sitemap_host"),
-        host_of(F.col(loc_col)).alias("loc_host"),
+        F.col("sitemap_url"),
+        F.col("loc"),
+        host_of(F.col("sitemap_url")).alias("sitemap_host"),
+        host_of(F.col("loc")).alias("loc_host"),
     )
     declared = (
         robots_sitemaps.select(

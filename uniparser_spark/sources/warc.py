@@ -319,17 +319,14 @@ def build_warc(
     return b"".join(out)
 
 
-def build_wet(
-    records: Iterable[Tuple[str, datetime, str]],
-    gzip_per_record: bool = True,
-) -> bytes:
+def build_wet(records: Iterable[Tuple[str, datetime, str]]) -> bytes:
     """Deterministic WET writer (Common Crawl's extracted-text sibling
     of ``build_warc``): ``(url, ts, text)`` → ``conversion`` records
     with a plain-text payload (no HTTP envelope), one pinned-mtime gzip
     member each."""
     return b"".join(
         _warc_record(
-            "conversion", url, ts, "text/plain", text.encode("utf-8"), gzip_per_record
+            "conversion", url, ts, "text/plain", text.encode("utf-8"), True
         )
         for url, ts, text in records
     )
@@ -337,7 +334,6 @@ def build_wet(
 
 def build_warc_revisits(
     records: Iterable[Tuple[str, datetime, Optional[str]]],
-    gzip_per_record: bool = True,
 ) -> bytes:
     """Deterministic revisit-record writer: ``(url, ts, digest)`` →
     WARC 1.0 ``revisit`` records on the identical-payload-digest
@@ -356,20 +352,13 @@ def build_warc_revisits(
         out.append(
             _warc_record(
                 "revisit", url, ts, "application/http; msgtype=response",
-                http, gzip_per_record, extra,
+                http, True, extra,
             )
         )
     return b"".join(out)
 
 
-def write_warc(
-    pages,
-    out_dir: str,
-    url_col: str = "url",
-    ts_col: str = "warc_ts",
-    body_col: str = "html",
-    lang_col: Optional[str] = "lang",
-):
+def write_warc(pages, out_dir: str, lang_col: Optional[str] = "lang"):
     """Distributed WARC SINK: pages DataFrame → one ``.warc.gz`` segment
     per partition under ``out_dir``; returns the segment manifest as a
     DataFrame ``(segment, n_records, n_bytes)`` (an action on it
@@ -400,9 +389,9 @@ def write_warc(
 
     os.makedirs(out_dir, exist_ok=True)
     cols = [
-        F.col(url_col).alias("url"),
-        F.col(ts_col).alias("ts"),
-        F.col(body_col).alias("body"),
+        F.col("url"),
+        F.col("warc_ts").alias("ts"),
+        F.col("html").alias("body"),
     ]
     cols.append(
         F.col(lang_col).alias("lang")

@@ -19,7 +19,7 @@ per-round metrics table.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -27,25 +27,16 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .testgen import PAGES_SCHEMA
 
 
-def read_pages_stream(
-    spark: SparkSession,
-    input_dir: str,
-    schema=PAGES_SCHEMA,
-    max_files_per_trigger: Optional[int] = None,
-) -> DataFrame:
+def read_pages_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     """Stream a Common-Crawl-style page directory (parquet files appear
     as upstream fetchers land them)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(input_dir)
+    return spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir)
 
 
 def host_rate_metrics(
     pages: DataFrame,
     window: str = "1 hour",
     watermark: str = "2 hours",
-    ts_col: str = "warc_ts",
 ) -> DataFrame:
     """Per-host page-rate over event-time windows with late-data bound.
 
@@ -55,8 +46,8 @@ def host_rate_metrics(
     """
     host = F.regexp_extract(F.col("url"), r"^https?://([^/:]+)", 1)
     return (
-        pages.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("win"), host.alias("host"))
+        pages.withWatermark("warc_ts", watermark)
+        .groupBy(F.window(F.col("warc_ts"), window).alias("win"), host.alias("host"))
         .agg(
             F.count(F.lit(1)).alias("n_pages"),
             F.sum(F.length(F.col("text"))).alias("bytes_text"),
@@ -71,11 +62,7 @@ def host_rate_metrics(
     )
 
 
-def dedup_stream(
-    pages: DataFrame,
-    url_col: str = "url",
-    n_buckets: int = 32,
-) -> DataFrame:
+def dedup_stream(pages: DataFrame, n_buckets: int = 32) -> DataFrame:
     """Custom stateful streaming operator: exactly-once URL dedup across
     micro-batches via ``applyInPandasWithState``.
 
@@ -105,7 +92,7 @@ def dedup_stream(
                 yield pdf.loc[fresh_rows, cols]
         state.update((list(seen),))
 
-    keyed = pages.withColumn("_h", F.xxhash64(F.col(url_col))).withColumn(
+    keyed = pages.withColumn("_h", F.xxhash64(F.col("url"))).withColumn(
         "_bucket", F.pmod(F.col("_h"), F.lit(n_buckets)).cast("int")
     )
     return keyed.groupBy("_bucket").applyInPandasWithState(
@@ -117,35 +104,20 @@ def dedup_stream(
     )
 
 
-def run_to_parquet(
-    result: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    output_mode: str = "append",
-):
-    """Start the sink with checkpointing; ``available_now`` drains all
-    currently-visible input then stops (the batch-compatible trigger
-    used by tests and backfills)."""
+def run_to_parquet(result: DataFrame, out_dir: str, checkpoint_dir: str):
+    """Start the append-mode sink with checkpointing; the
+    ``availableNow`` trigger drains all currently-visible input then
+    stops (the batch-compatible trigger used by tests and backfills)."""
     writer = (
         result.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
-        .outputMode(output_mode)
+        .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
-def session_stream(
-    events: DataFrame,
-    key_col: str = "host",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    gap_sec: int = 1800,
-    flush_col: str = "flush",
-) -> DataFrame:
+def session_stream(events: DataFrame, gap_sec: int = 1800) -> DataFrame:
     """Streaming twin of :func:`~uniparser_spark.crawl.sessions.
     sessionize`: gap-based sessionization as a custom stateful operator
     (``applyInPandasWithState``), emitting each session exactly once —
@@ -155,7 +127,7 @@ def session_stream(
     State per key is O(1): ``(session_id, start_us, last_us, n_events,
     first_event)`` for the one open session — a host's full history
     never accumulates, so state volume is bounded by the live key set
-    regardless of stream length.  Rows where ``flush_col`` = 1 are
+    regardless of stream length.  Rows where ``flush`` = 1 are
     control events: they close any open session without starting one
     (the drain protocol for bounded runs / graceful shutdown — the
     caller appends one sentinel per key after the data; an unbounded
@@ -175,7 +147,7 @@ def session_stream(
 
     gap_us = int(gap_sec) * 1_000_000
     out_schema = (
-        f"{key_col} string, session_id long, n_events long, "
+        "host string, session_id long, n_events long, "
         "first_event long, start_us long, end_us long, duration_sec long"
     )
 
@@ -213,18 +185,18 @@ def session_stream(
             yield pd.DataFrame(
                 closed,
                 columns=[
-                    key_col, "session_id", "n_events", "first_event",
+                    "host", "session_id", "n_events", "first_event",
                     "start_us", "end_us", "duration_sec",
                 ],
             )
 
     keyed = events.select(
-        F.col(key_col),
-        F.unix_micros(F.col(ts_col).cast("timestamp")).alias("_us"),
-        F.col(id_col).cast("long").alias("_id"),
-        F.coalesce(F.col(flush_col), F.lit(0)).cast("int").alias("_fl"),
+        F.col("host"),
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("_us"),
+        F.col("event_id").cast("long").alias("_id"),
+        F.coalesce(F.col("flush"), F.lit(0)).cast("int").alias("_fl"),
     )
-    return keyed.groupBy(key_col).applyInPandasWithState(
+    return keyed.groupBy("host").applyInPandasWithState(
         fn,
         outputStructType=out_schema,
         stateStructType=(

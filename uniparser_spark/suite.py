@@ -61,6 +61,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import config
 from .engine.extract import extract_pages
+from .engine.session import ship_package
 from .frontier.domains import registrable_domain_sql_literal
 from .streaming import dedup_stream, host_rate_metrics, run_to_parquet
 from .testgen import BASE_EPOCH
@@ -116,27 +117,14 @@ def query(oracle_sql: str):
     return register
 
 
-_SHIPPED: set = set()
-
-
-def _ensure_shipped(spark: SparkSession) -> None:
-    """Ship uniparser_spark to executors once per session — the driver
-    harness may build its own SparkSession without --py-files, and the
-    suite's mapInPandas functions are pickled by reference."""
-    key = id(spark)
-    if key in _SHIPPED:
-        return
+def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    # the driver harness may build its own SparkSession without
+    # --py-files, and the suite's mapInPandas functions are pickled by
+    # reference
     try:
-        from .engine.session import ship_package
-
         ship_package(spark)
     except Exception:  # noqa: BLE001 - best-effort (cwd import may suffice)
         pass
-    _SHIPPED.add(key)
-
-
-def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    _ensure_shipped(spark)
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
@@ -6819,10 +6807,10 @@ def _doc_url(host_expr) -> F.Column:
     return F.concat(F.lit("https://"), host_expr, F.lit("/d/"), F.col("doc_id").cast("string"))
 
 
-def _await(handle, timeout: int = 300) -> None:
-    if not handle.awaitTermination(timeout):
+def _await(handle) -> None:
+    if not handle.awaitTermination(300):
         handle.stop()
-        raise TimeoutError("streaming query did not drain within timeout")
+        raise TimeoutError("streaming query did not drain within 300 s")
 
 
 # Spark's tumbling window aligns to the epoch: floor(epoch/3600)*3600.

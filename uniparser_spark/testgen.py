@@ -43,6 +43,8 @@ PAGES_SCHEMA = StructType(
 )
 
 _LANGS = ("en", "zh", "de")
+ZIPF_S = 1.2  # detail pages per host fall off as 1 / rank^ZIPF_S
+PAGE_SIZE = 200  # detail links per list page
 
 
 def host_name(i: int) -> str:
@@ -60,10 +62,10 @@ def detail_url(host: str, k: int) -> str:
     return f"https://{host}/item-{k:06d}/"
 
 
-def zipf_counts(n_hosts: int, n_details: int, s: float = 1.2) -> List[int]:
+def zipf_counts(n_hosts: int, n_details: int) -> List[int]:
     """Deterministic Zipf-ish split of n_details across hosts (host 0 is
     hot), every host getting at least one detail page."""
-    weights = [1.0 / (i + 1) ** s for i in range(n_hosts)]
+    weights = [1.0 / (i + 1) ** ZIPF_S for i in range(n_hosts)]
     total = sum(weights)
     counts = [max(1, int(n_details * w / total)) for w in weights]
     # fix rounding drift on the hot host
@@ -121,24 +123,22 @@ def list_html(host: str, n_details: int, start: int = 0, end: Optional[int] = No
     )
 
 
-def list_page_index(counts: List[int], page_size: int) -> List[tuple]:
+def list_page_index(counts: List[int]) -> List[tuple]:
     """(host_idx, page_idx, start, end) for every paginated list page."""
     pages = []
     for hi, cnt in enumerate(counts):
-        n_pages = max(1, -(-cnt // page_size))
+        n_pages = max(1, -(-cnt // PAGE_SIZE))
         for p in range(n_pages):
-            pages.append((hi, p, p * page_size, min((p + 1) * page_size, cnt)))
+            pages.append((hi, p, p * PAGE_SIZE, min((p + 1) * PAGE_SIZE, cnt)))
     return pages
 
 
-def seed_urls(
-    n_hosts: int, n_details: int, zipf_s: float = 1.2, page_size: int = 200
-) -> List[str]:
+def seed_urls(n_hosts: int, n_details: int) -> List[str]:
     """All list-page URLs — the crawl's seed list."""
-    counts = zipf_counts(n_hosts, n_details, zipf_s)
+    counts = zipf_counts(n_hosts, n_details)
     return [
         list_url(host_name(hi), p)
-        for hi, p, _, _ in list_page_index(counts, page_size)
+        for hi, p, _, _ in list_page_index(counts)
     ]
 
 
@@ -190,19 +190,17 @@ def generate_pages(
     spark: SparkSession,
     n_hosts: int = 4,
     n_details: int = 36,
-    zipf_s: float = 1.2,
     partitions: Optional[int] = None,
-    page_size: int = 200,
 ) -> DataFrame:
-    """Pages DataFrame: paginated list pages per host (``page_size``
+    """Pages DataFrame: paginated list pages per host (``PAGE_SIZE``
     links each) + Zipf-distributed detail pages.  Global page index =
     [list pages in (host, page) order) then detail pages ordered by
     (host, k)."""
-    counts = zipf_counts(n_hosts, n_details, zipf_s)
+    counts = zipf_counts(n_hosts, n_details)
     offsets = [0]
     for c in counts:
         offsets.append(offsets[-1] + c)
-    lp = list_page_index(counts, page_size)
+    lp = list_page_index(counts)
     n_list = len(lp)
     total = n_list + offsets[-1]
     partitions = partitions or spark.sparkContext.defaultParallelism

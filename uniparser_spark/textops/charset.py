@@ -74,29 +74,25 @@ def sniff_charset_cols(b: Column) -> tuple[Column, Column]:
     return charset, source
 
 
-def sniff_charset(
-    df: DataFrame, bin_col: str = "html", id_col: str = "doc_id"
-) -> DataFrame:
+def sniff_charset(df: DataFrame) -> DataFrame:
     """Per-page charset verdict: ``(id, charset, source)``."""
-    charset, source = sniff_charset_cols(F.col(bin_col))
+    charset, source = sniff_charset_cols(F.col("html"))
     return df.select(
-        F.col(id_col), charset.alias("charset"), source.alias("source")
+        F.col("doc_id"), charset.alias("charset"), source.alias("source")
     )
 
 
-def decode_html(
-    df: DataFrame, bin_col: str = "html", id_col: str = "doc_id"
-) -> DataFrame:
+def decode_html(df: DataFrame) -> DataFrame:
     """Bytes → text using the sniffed charset (BOM stripped), one
     Arrow crossing, U+FFFD on malformed sequences."""
-    charset, source = sniff_charset_cols(F.col(bin_col))
+    charset, source = sniff_charset_cols(F.col("html"))
     staged = df.select(
-        F.col(id_col),
-        F.col(bin_col).alias("_b"),
+        F.col("doc_id"),
+        F.col("html").alias("_b"),
         charset.alias("charset"),
         source.alias("source"),
     )
-    schema = f"{id_col} long, charset string, source string, text string"
+    schema = "doc_id long, charset string, source string, text string"
     boms = {
         "utf-8": b"\xef\xbb\xbf",
         "utf-16le": b"\xff\xfe",
@@ -113,13 +109,11 @@ def decode_html(
     return map_rows(staged, schema, decode)
 
 
-def synth_html_bytes(
-    df: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synth_html_bytes(df: DataFrame) -> DataFrame:
     """Deterministic binary-HTML synthesis (tests/bench): 7 encoding
     variants keyed on ``id % 7``, built with native encode/to_binary —
     real bytes in the declared encodings, no Python."""
-    d = F.col(id_col)
+    d = F.col("doc_id")
     m = d % 7
     body = F.concat(
         F.lit("<title>doc "), d.cast("string"),
@@ -185,13 +179,11 @@ def synth_html_bytes(
 _MOJI_RE = "(Ã.)|(â€.)"
 
 
-def encoding_health(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def encoding_health(df: DataFrame) -> DataFrame:
     """Per-doc encoding-damage profile: replacement-char count,
     mojibake-pair count, damage per kchar (4 dp), and a verdict
     (``clean`` / ``damaged`` at >0 artifacts)."""
-    t = F.col(text_col)
+    t = F.col("text")
     n_repl = F.size(
         F.regexp_extract_all(t, F.lit("�"), F.lit(0))
     ).cast("long")
@@ -203,7 +195,7 @@ def encoding_health(
         (n_repl + n_moji).cast("double") * F.lit(1000.0) / n_chars, 4
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_repl.alias("n_repl"),
         n_moji.alias("n_moji"),
         per_kchar.alias("damage_per_kchar"),
@@ -214,9 +206,7 @@ def encoding_health(
 
 
 # --------------------------------------------------------- mojibake repair
-def repair_mojibake(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def repair_mojibake(df: DataFrame) -> DataFrame:
     """The ACTION twin of :func:`encoding_health`: repair classic
     UTF-8-read-as-cp1252 mojibake ("cafÃ©" → "café", "donâ€™t" →
     "don’t") by reversing the mis-decode — re-encode the text to
@@ -243,7 +233,7 @@ def repair_mojibake(
     import re as _re
 
     pat = _re.compile("(Ã.)|(â€.)", _re.DOTALL)
-    schema = f"{id_col} long, repaired int, n_fixed int, text_repaired string"
+    schema = "doc_id long, repaired int, n_fixed int, text_repaired string"
 
     def fix_one(t: str) -> tuple:
         n_pre = len(pat.findall(t))
@@ -261,7 +251,7 @@ def repair_mojibake(
         return 0, 0, t
 
     return map_rows(
-        df.select(id_col, text_col),
+        df.select("doc_id", "text"),
         schema,
         lambda i, t: [(i, *fix_one(t if t is not None else ""))],
     )

@@ -45,8 +45,10 @@ EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 IP_RE = r"\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b"
 PHONE_RE = r"\+[0-9]{1,2} [0-9]{3} [0-9]{4}"
 
+REP_NS = (2, 3)  # word n-gram orders of ngram_repetition
 
-def synth_page_expr(text_col: str = "text", id_col: str = "doc_id") -> Column:
+
+def synth_page_expr() -> Column:
     """Build the synthetic page column (see module docstring).
 
     Page layout (paragraphs separated by blank lines): shared header
@@ -56,11 +58,11 @@ def synth_page_expr(text_col: str = "text", id_col: str = "doc_id") -> Column:
     footer are identical across documents — corpus-wide paragraph dedup
     removes them, which is exactly the boilerplate-removal semantics
     the operator exists for."""
-    body = F.regexp_replace(F.col(text_col), LINE_RE, "$1\n")
+    body = F.regexp_replace(F.col("text"), LINE_RE, "$1\n")
     body = F.regexp_replace(body, PUNCT_RE, "$1.$2")
     body = F.regexp_replace(body, PARA_RE, "$1\n\n")
     first_line = F.substring_index(body, "\n", 1)
-    did = F.col(id_col)
+    did = F.col("doc_id")
     pii = F.concat(
         F.lit("contact user"),
         (did % 50).cast("string"),
@@ -77,26 +79,21 @@ def synth_page_expr(text_col: str = "text", id_col: str = "doc_id") -> Column:
     )
 
 
-def with_page(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    return df.select(F.col(id_col), synth_page_expr(text_col, id_col).alias("page"))
+def with_page(df: DataFrame) -> DataFrame:
+    return df.select(F.col("doc_id"), synth_page_expr().alias("page"))
 
 
 # ------------------------------------------------------------- line filters
-def c4_line_filter(
-    df: DataFrame,
-    text_col: str = "page",
-    id_col: str = "doc_id",
-    min_words: int = 4,
-) -> DataFrame:
+def c4_line_filter(df: DataFrame) -> DataFrame:
     """C4-style line-level cleaning: keep lines that end in terminal
-    punctuation, have at least ``min_words`` words, and are not
+    punctuation, have at least 4 words, and are not
     boilerplate (nav/footer markers).  Pure array expressions — one
     scan, no shuffle, the whole filter runs inside codegen."""
-    lines = F.split(F.col(text_col), "\n")
+    lines = F.split(F.col("page"), "\n")
 
     def keep(line: Column) -> Column:
         return (
-            (F.size(F.split(line, " ")) >= min_words)
+            (F.size(F.split(line, " ")) >= 4)
             & line.endswith(".")
             & ~line.contains("login")
             & ~line.contains("copyright")
@@ -104,28 +101,26 @@ def c4_line_filter(
 
     kept = F.filter(lines, keep)
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(lines).alias("n_lines"),
         F.size(kept).alias("n_kept"),
         F.array_join(kept, "\n").alias("clean_text"),
     )
 
 
-def repetition_stats(
-    df: DataFrame, text_col: str = "page", id_col: str = "doc_id"
-) -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Gopher-style repetition signals per document: duplicate-line and
     duplicate-paragraph fractions, line-length extremes.  Documents with
     high duplicate fractions are templated/boilerplate pages a training
     pipeline drops.  No shuffle; ratios rounded to 4 dp for the oracle."""
     lines = F.filter(
-        F.split(F.col(text_col), "\n"), lambda l: F.length(l) > 0
+        F.split(F.col("page"), "\n"), lambda l: F.length(l) > 0
     )
-    paras = F.split(F.col(text_col), "\n\n")
+    paras = F.split(F.col("page"), "\n\n")
     n_lines = F.size(lines).cast("double")
     n_paras = F.size(paras).cast("double")
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_lines.cast("long").alias("n_lines"),
         F.round(
             F.lit(1.0) - F.size(F.array_distinct(lines)) / n_lines, 4
@@ -143,19 +138,17 @@ def repetition_stats(
     )
 
 
-def pii_redact(
-    df: DataFrame, text_col: str = "page", id_col: str = "doc_id"
-) -> DataFrame:
+def pii_redact(df: DataFrame) -> DataFrame:
     """PII scrubbing: emails / IPv4s / phone numbers -> typed
     placeholders, with per-document match counts.  A regexp_replace
     chain in one projection — codegen end to end, counts come from
     ``regexp_count`` on the unredacted text."""
-    col = F.col(text_col)
+    col = F.col("page")
     redacted = F.regexp_replace(col, EMAIL_RE, "<EMAIL>")
     redacted = F.regexp_replace(redacted, IP_RE, "<IP>")
     redacted = F.regexp_replace(redacted, PHONE_RE, "<PHONE>")
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.regexp_count(col, F.lit(EMAIL_RE)).alias("n_emails"),
         F.regexp_count(col, F.lit(IP_RE)).alias("n_ips"),
         F.regexp_count(col, F.lit(PHONE_RE)).alias("n_phones"),
@@ -164,9 +157,7 @@ def pii_redact(
 
 
 # ---------------------------------------------------- corpus-wide span dedup
-def para_dedup(
-    df: DataFrame, text_col: str = "page", id_col: str = "doc_id"
-) -> DataFrame:
+def para_dedup(df: DataFrame) -> DataFrame:
     """RefinedWeb-style duplicated-span removal: corpus-wide keep-first
     dedup of paragraphs, then reassemble each document from its
     surviving paragraphs.
@@ -181,21 +172,21 @@ def para_dedup(
     deployment shape).  Naive reassembly from the exploded paragraphs
     would shuffle the full corpus text twice instead.
     """
-    paras_arr = F.split(F.col(text_col), "\n\n")
+    paras_arr = F.split(F.col("page"), "\n\n")
     narrow = df.select(
-        F.col(id_col), F.posexplode(paras_arr).alias("idx", "para")
-    ).select(id_col, "idx", h16(F.col("para")).alias("fp"))
-    w = Window.partitionBy("fp").orderBy(id_col, "idx")
+        F.col("doc_id"), F.posexplode(paras_arr).alias("idx", "para")
+    ).select("doc_id", "idx", h16(F.col("para")).alias("fp"))
+    w = Window.partitionBy("fp").orderBy("doc_id", "idx")
     kept_idx = (
         narrow.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.sort_array(F.collect_list("idx")).alias("keep_idx"))
     )
     return (
-        df.join(kept_idx, id_col)
+        df.join(kept_idx, "doc_id")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.size(paras_arr).alias("n_paras"),
             F.size(F.col("keep_idx")).alias("n_kept"),
             F.array_join(
@@ -211,9 +202,6 @@ def para_dedup(
 
 def boilerplate_lines(
     df: DataFrame,
-    text_col: str = "page",
-    host_col: str = "host",
-    id_col: str = "doc_id",
     min_docs: int = 5,
     min_frac: float = 0.5,
 ) -> DataFrame:
@@ -237,10 +225,10 @@ def boilerplate_lines(
     distinct (host, line) — never the page text.
     """
     lines = F.array_distinct(
-        F.filter(F.split(F.col(text_col), "\n"), lambda l: l != F.lit(""))
+        F.filter(F.split(F.col("page"), "\n"), lambda l: l != F.lit(""))
     )
     narrow = df.select(
-        F.col(host_col).alias("host"),
+        F.col("host"),
         F.explode(lines).alias("line"),
     ).select("host", h16(F.col("line")).alias("fp"), "line")
     per_line = narrow.groupBy("host", "fp").agg(
@@ -248,7 +236,7 @@ def boilerplate_lines(
         F.min("line").alias("line"),
     )
     host_docs = (
-        df.groupBy(F.col(host_col).alias("host"))
+        df.groupBy(F.col("host"))
         .agg(F.count(F.lit(1)).alias("host_docs"))
     )
     frac = F.round(
@@ -274,12 +262,7 @@ def boilerplate_lines(
     )
 
 
-def ngram_repetition(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ns: tuple = (2, 3),
-) -> DataFrame:
+def ngram_repetition(df: DataFrame) -> DataFrame:
     """The remaining Gopher repetition signal: the fraction of tokens
     covered by the most frequent word n-gram (top-2-gram fraction over
     ~0.2 marks templated text).
@@ -290,7 +273,7 @@ def ngram_repetition(
     (second narrow shuffle), and left-joined back to the token counts.
     Ties need no break: only the max count is emitted.
     """
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
 
     # NB: a `lambda g, n=n:` two-parameter lambda would be treated by
     # F.transform as (element, index) — the factory keeps it unary.
@@ -298,29 +281,29 @@ def ngram_repetition(
         return lambda g: F.struct(F.lit(n).alias("n"), g.alias("g"))
 
     grams = F.flatten(
-        F.array(*[F.transform(word_shingles(toks, n), _tag(n)) for n in ns])
+        F.array(*[F.transform(word_shingles(toks, n), _tag(n)) for n in REP_NS])
     )
     narrow = (
-        df.select(F.col(id_col), F.explode(grams).alias("x"))
-        .select(id_col, "x.n", "x.g")
+        df.select(F.col("doc_id"), F.explode(grams).alias("x"))
+        .select("doc_id", "x.n", "x.g")
     )
     maxes = (
-        narrow.groupBy(id_col, "n", "g")
+        narrow.groupBy("doc_id", "n", "g")
         .agg(F.count("*").alias("c"))
-        .groupBy(id_col, "n")
+        .groupBy("doc_id", "n")
         .agg(F.max("c").alias("mc"))
     )
-    piv = maxes.groupBy(id_col).agg(
+    piv = maxes.groupBy("doc_id").agg(
         *[
             F.max(F.when(F.col("n") == n, F.col("mc"))).alias(
                 f"top_{n}gram_cnt"
             )
-            for n in ns
+            for n in REP_NS
         ]
     )
-    base = df.select(F.col(id_col), F.size(toks).alias("n_tokens"))
-    out = base.join(piv, id_col, "left")
-    for n in ns:
+    base = df.select(F.col("doc_id"), F.size(toks).alias("n_tokens"))
+    out = base.join(piv, "doc_id", "left")
+    for n in REP_NS:
         out = out.withColumn(
             f"top_{n}gram_frac",
             F.round(
@@ -330,22 +313,20 @@ def ngram_repetition(
     return out
 
 
-def accent_synth_expr(text_col: str = "text", id_col: str = "doc_id") -> Column:
+def accent_synth_expr() -> Column:
     """Deterministic unicode synthesis for the normalization oracle:
     even doc_ids get precomposed accents ('a' → U+00E1), odd get the
     decomposed pair ('a' → 'a' + U+0301) — NFC maps both to the same
     string, which is exactly what the operator must prove."""
     return F.when(
-        F.col(id_col) % 2 == 0,
-        F.regexp_replace(F.col(text_col), "a", "\u00e1"),  # precomposed
+        F.col("doc_id") % 2 == 0,
+        F.regexp_replace(F.col("text"), "a", "\u00e1"),  # precomposed
     ).otherwise(
-        F.regexp_replace(F.col(text_col), "a", "a\u0301")  # decomposed
+        F.regexp_replace(F.col("text"), "a", "a\u0301")  # decomposed
     )
 
 
-def text_normalize(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def text_normalize(df: DataFrame) -> DataFrame:
     """Unicode normalization: NFC plus accent folding (NFD → drop
     combining marks → NFC).  Spark has no JVM-side NFC expression, so
     this is an honest Arrow-batched Python stage (stdlib unicodedata;
@@ -366,7 +347,7 @@ def text_normalize(
 
     schema = StructType(
         [
-            StructField(id_col, LongType(), False),
+            StructField("doc_id", LongType(), False),
             StructField("n_chars_raw", LongType(), False),
             StructField("n_chars_nfc", LongType(), False),
             StructField("changed", BooleanType(), False),
@@ -384,11 +365,11 @@ def text_normalize(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
-            raw = batch[text_col].fillna("")
+            raw = batch["text"].fillna("")
             nfc = raw.map(lambda s: unicodedata.normalize("NFC", s))
             yield pd.DataFrame(
                 {
-                    id_col: batch[id_col].astype("int64"),
+                    "doc_id": batch["doc_id"].astype("int64"),
                     "n_chars_raw": raw.map(len).astype("int64"),
                     "n_chars_nfc": nfc.map(len).astype("int64"),
                     "changed": (raw != nfc),
@@ -397,17 +378,10 @@ def text_normalize(
                 }
             )
 
-    return df.select(id_col, text_col).mapInPandas(run, schema=schema)
+    return df.select("doc_id", "text").mapInPandas(run, schema=schema)
 
 
-def doc_filter(
-    df: DataFrame,
-    text_col: str = "page",
-    id_col: str = "doc_id",
-    min_tokens: int = 60,
-    word_len_band: tuple = (3.0, 10.0),
-    max_dup_line_frac: float = 0.10,
-) -> DataFrame:
+def doc_filter(df: DataFrame) -> DataFrame:
     """Document-level admission filter — the C4/Gopher doc rules with
     an explainable verdict: ``admit`` plus the FIRST failing rule as
     ``reason`` (too_short | word_length | boilerplate | repetition).
@@ -417,30 +391,30 @@ def doc_filter(
     projection over the page — the measured stats ship with the verdict
     so downstream audits don't re-scan the corpus.
     """
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("page"))
     n_tok = F.size(toks)
     mean_wl = F.round(
         F.aggregate(toks, F.lit(0), lambda a, t: a + F.length(t))
         / n_tok.cast("double"),
         4,
     )
-    lines = F.filter(F.split(F.col(text_col), "\n"), lambda l: F.length(l) > 0)
+    lines = F.filter(F.split(F.col("page"), "\n"), lambda l: F.length(l) > 0)
     dup_frac = F.round(
         F.lit(1.0) - F.size(F.array_distinct(lines)) / F.size(lines).cast("double"),
         4,
     )
-    boiler = F.col(text_col).contains("lorem ipsum") | F.col(text_col).contains("{")
+    boiler = F.col("page").contains("lorem ipsum") | F.col("page").contains("{")
     reason = (
-        F.when(n_tok < min_tokens, F.lit("too_short"))
+        F.when(n_tok < 60, F.lit("too_short"))
         .when(
-            (mean_wl < word_len_band[0]) | (mean_wl > word_len_band[1]),
+            (mean_wl < 3.0) | (mean_wl > 10.0),
             F.lit("word_length"),
         )
         .when(boiler, F.lit("boilerplate"))
-        .when(dup_frac > max_dup_line_frac, F.lit("repetition"))
+        .when(dup_frac > 0.10, F.lit("repetition"))
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_tok.alias("n_tokens"),
         mean_wl.alias("mean_word_len"),
         dup_frac.alias("dup_line_frac"),
@@ -514,23 +488,18 @@ def gopher_signals(
     )
 
 
-def top_tokens(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 50,
-) -> DataFrame:
+def top_tokens(df: DataFrame, k: int = 50) -> DataFrame:
     """Corpus vocabulary: top-k tokens by document frequency and total
     count.  Explode + two-phase aggregation (map-side partial combine,
     one shuffle on the token key), then a TakeOrdered top-k — the
     canonical corpus-stats shape at any scale."""
-    toks = F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("token")
+    toks = F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("token")
     counts = (
-        df.select(F.col(id_col), toks)
+        df.select(F.col("doc_id"), toks)
         .groupBy("token")
         .agg(
             F.count("*").alias("n_occurrences"),
-            F.countDistinct(id_col).alias("n_docs"),
+            F.countDistinct("doc_id").alias("n_docs"),
         )
     )
     return (
@@ -540,12 +509,7 @@ def top_tokens(
     )
 
 
-def wordlist_filter(
-    df: DataFrame,
-    words: list,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def wordlist_filter(df: DataFrame, words: list) -> DataFrame:
     """C4-style wordlist admission filter: flag documents containing any
     token from a blocklist (C4 drops pages hitting the public
     "dirty/naughty/obscene" list; the same operator serves allowlists,
@@ -573,24 +537,24 @@ def wordlist_filter(
             [(w.lower(),) for w in sorted(set(words))], "_w string"
         )
     )
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
+    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     toks = tokens(norm)
     base = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.when(norm == "", F.array().cast("array<string>")).otherwise(toks)
         ).alias("_t"),
     )
     hits = base.join(wl, base["_t"] == wl["_w"], "left")
-    per = hits.groupBy(id_col).agg(
+    per = hits.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_tokens"),
         F.sum(F.when(F.col("_w").isNotNull(), 1).otherwise(0))
         .cast("long")
         .alias("n_flagged"),
     )
-    out = df.select(F.col(id_col)).join(per, id_col, "left")
+    out = df.select(F.col("doc_id")).join(per, "doc_id", "left")
     return out.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.coalesce("n_tokens", F.lit(0)).cast("long").alias("n_tokens"),
         F.coalesce("n_flagged", F.lit(0)).cast("long").alias("n_flagged"),
         F.round(

@@ -116,17 +116,15 @@ def extract_main(html: str) -> Tuple[str, str, int, int]:
     return best.tag, main_text, len(paras), len(main_text)
 
 
-def extract_main_content(
-    df: DataFrame, html_col: str = "html", id_col: str = "doc_id"
-) -> DataFrame:
+def extract_main_content(df: DataFrame, html_col: str = "html") -> DataFrame:
     """Readability-style main-content extraction as one Arrow crossing.
 
     Returns (id, main_tag, main_text, n_paras, main_len) per page.
     """
     schema = (
-        f"{id_col} long, main_tag string, main_text string, "
+        "doc_id long, main_tag string, main_text string, "
         "n_paras int, main_len int"
     )
     return map_rows(
-        df.select(id_col, html_col), schema, lambda i, h: [(i, *extract_main(h))]
+        df.select("doc_id", html_col), schema, lambda i, h: [(i, *extract_main(h))]
     )

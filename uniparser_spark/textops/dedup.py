@@ -54,21 +54,19 @@ from .exprs import (
 )
 
 
-def exact_dup_groups(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dup_groups(df: DataFrame) -> DataFrame:
     """Exact duplicate groups by normalized content hash.
 
     Returns one row per distinct content: (content_fp, n_docs, keep_id)
     where keep_id is the smallest doc id (keep-first policy).
     """
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
+    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     return (
-        df.select(F.col(id_col), h16(norm).alias("content_fp"))
+        df.select(F.col("doc_id"), h16(norm).alias("content_fp"))
         .groupBy("content_fp")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.min(id_col).alias("keep_id"),
+            F.min("doc_id").alias("keep_id"),
         )
     )
 
@@ -76,9 +74,6 @@ def exact_dup_groups(
 def incremental_dedup(
     new_docs: DataFrame,
     seen_fps: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    fp_col: str = "content_fp",
     broadcast_ledger: bool = False,
 ) -> DataFrame:
     """Admit a NEW batch of documents against an existing corpus
@@ -109,25 +104,25 @@ def incremental_dedup(
     row ledgers pass ``broadcast_ledger=True`` instead.  Document text
     never shuffles either way.
     """
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
-    batch = new_docs.select(F.col(id_col), h16(norm).alias(fp_col))
-    keep = batch.groupBy(fp_col).agg(F.min(id_col).alias("_keep"))
-    ledger = seen_fps.select(F.col(fp_col)).distinct().withColumn(
+    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
+    batch = new_docs.select(F.col("doc_id"), h16(norm).alias("content_fp"))
+    keep = batch.groupBy("content_fp").agg(F.min("doc_id").alias("_keep"))
+    ledger = seen_fps.select(F.col("content_fp")).distinct().withColumn(
         "_seen", F.lit(1)
     )
     if broadcast_ledger:
         ledger = F.broadcast(ledger)
     return (
-        batch.join(keep, fp_col)
-        .join(ledger, fp_col, "left")
+        batch.join(keep, "content_fp")
+        .join(ledger, "content_fp", "left")
         .select(
-            F.col(id_col),
-            F.col(fp_col),
+            F.col("doc_id"),
+            F.col("content_fp"),
             (
-                F.col("_seen").isNull() & (F.col(id_col) == F.col("_keep"))
+                F.col("_seen").isNull() & (F.col("doc_id") == F.col("_keep"))
             ).cast("int").alias("admitted"),
             F.when(F.col("_seen").isNotNull(), F.lit("dup_corpus"))
-            .when(F.col(id_col) != F.col("_keep"), F.lit("dup_batch"))
+            .when(F.col("doc_id") != F.col("_keep"), F.lit("dup_batch"))
             .otherwise(F.lit("new"))
             .alias("reason"),
         )
@@ -205,15 +200,13 @@ def _xx_minhash_cols(
 
 def minhash_signatures_xx(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_hashes: int = 16,
     shingle_k: int = 3,
 ) -> DataFrame:
     """xxhash64 MinHash signatures: (id, sig array<long>, n_shingles)."""
-    cols = _xx_minhash_cols(df, text_col, id_col, n_hashes, shingle_k)
+    cols = _xx_minhash_cols(df, "text", "doc_id", n_hashes, shingle_k)
     return cols.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.array(*[F.col(f"h{s}") for s in range(n_hashes)]).alias("sig"),
         "n_shingles",
     )
@@ -221,8 +214,6 @@ def minhash_signatures_xx(
 
 def lsh_candidate_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_hashes: int = 16,
     bands: int = 8,
     shingle_k: int = 3,
@@ -243,7 +234,7 @@ def lsh_candidate_pairs(
     assert n_hashes % bands == 0
     rows = n_hashes // bands
     if impl == "xxhash64":
-        cols = _xx_minhash_cols(df, text_col, id_col, n_hashes, shingle_k)
+        cols = _xx_minhash_cols(df, "text", "doc_id", n_hashes, shingle_k)
         band_structs = F.array(
             *[
                 F.struct(
@@ -256,12 +247,12 @@ def lsh_candidate_pairs(
             ]
         )
         banded = (
-            cols.select(F.col(id_col), F.explode(band_structs).alias("b"))
-            .select(id_col, "b.band_idx", "b.band_key")
+            cols.select(F.col("doc_id"), F.explode(band_structs).alias("b"))
+            .select("doc_id", "b.band_idx", "b.band_key")
             .localCheckpoint(eager=False)
         )
-        return _band_self_join(banded, id_col)
-    sigs = minhash_signatures(df, text_col, id_col, n_hashes, shingle_k, impl=impl)
+        return _band_self_join(banded, "doc_id")
+    sigs = minhash_signatures(df, n_hashes=n_hashes, shingle_k=shingle_k, impl=impl)
     band_keys = F.transform(
         F.sequence(F.lit(0), F.lit(bands - 1)),
         lambda j: F.md5(F.concat_ws(",", F.slice(F.col("sig"), j * rows + 1, rows))),
@@ -274,9 +265,9 @@ def lsh_candidate_pairs(
     # At cluster scale this is the point where signatures get written to
     # a table.
     banded = sigs.select(
-        F.col(id_col), F.posexplode(band_keys).alias("band_idx", "band_key")
+        F.col("doc_id"), F.posexplode(band_keys).alias("band_idx", "band_key")
     ).localCheckpoint(eager=False)
-    return _band_self_join(banded, id_col)
+    return _band_self_join(banded, "doc_id")
 
 
 def _band_self_join(banded: DataFrame, id_col: str) -> DataFrame:
@@ -317,8 +308,6 @@ def _shingle_sets(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     shingle_k: int = 3,
     threshold: float = 0.5,
     max_id: int = 200,
@@ -330,10 +319,10 @@ def ngram_jaccard_pairs(
     rounded to 4 dp.
     """
     docs = _shingle_sets(
-        df.filter(F.col(id_col) < max_id), text_col, id_col, shingle_k
+        df.filter(F.col("doc_id") < max_id), "text", "doc_id", shingle_k
     ).localCheckpoint(eager=False)
-    a = docs.select(F.col(id_col).alias("id1"), F.col("sh").alias("sh1"))
-    b = docs.select(F.col(id_col).alias("id2"), F.col("sh").alias("sh2"))
+    a = docs.select(F.col("doc_id").alias("id1"), F.col("sh").alias("sh1"))
+    b = docs.select(F.col("doc_id").alias("id2"), F.col("sh").alias("sh2"))
     inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
     union = F.size("sh1").cast("double") + F.size("sh2").cast("double") - inter
     return (
@@ -345,8 +334,6 @@ def ngram_jaccard_pairs(
 
 def verified_near_dups(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_hashes: int = 16,
     bands: int = 8,
     shingle_k: int = 3,
@@ -369,21 +356,21 @@ def verified_near_dups(
     Returns (id1, id2, jaccard) with jaccard ≥ threshold, 4 dp.
     """
     pairs = lsh_candidate_pairs(
-        df, text_col, id_col, n_hashes, bands, shingle_k, impl=impl
+        df, n_hashes=n_hashes, bands=bands, shingle_k=shingle_k, impl=impl
     ).localCheckpoint(eager=True)
     cand_ids = (
-        pairs.select(F.col("id1").alias(id_col))
-        .union(pairs.select(F.col("id2").alias(id_col)))
+        pairs.select(F.col("id1").alias("doc_id"))
+        .union(pairs.select(F.col("id2").alias("doc_id")))
         .distinct()
     )
     # shingle ONCE (Arrow UDF) and checkpoint: the a/b join branches
     # would otherwise each recompute the shingling of every candidate
     # doc (measured 4.5 s -> 0.25 s on the sf0.1 verify stage)
     docs = _shingle_sets(
-        df.join(cand_ids, id_col, "left_semi"), text_col, id_col, shingle_k
+        df.join(cand_ids, "doc_id", "left_semi"), "text", "doc_id", shingle_k
     ).localCheckpoint(eager=False)
-    a = docs.select(F.col(id_col).alias("id1"), F.col("sh").alias("sh1"))
-    b = docs.select(F.col(id_col).alias("id2"), F.col("sh").alias("sh2"))
+    a = docs.select(F.col("doc_id").alias("id1"), F.col("sh").alias("sh1"))
+    b = docs.select(F.col("doc_id").alias("id2"), F.col("sh").alias("sh2"))
     inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
     union = F.size("sh1").cast("double") + F.size("sh2").cast("double") - inter
     return (
@@ -394,13 +381,7 @@ def verified_near_dups(
     )
 
 
-def with_simhash(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = 16,
-    impl: str = "pandas",
-) -> DataFrame:
+def with_simhash(df: DataFrame, bits: int = 16, impl: str = "pandas") -> DataFrame:
     """16-bit SimHash per doc: bit j is the sign of the token-frequency-
     weighted sum of (2·bit_j(md5(token)) − 1).  Narrow, no shuffle.
 
@@ -412,7 +393,7 @@ def with_simhash(
     md5 family (different hash), same clustering semantics.
     """
     if impl == "xxhash64":
-        exploded = df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("t"))
+        exploded = df.select(F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("t"))
         xh = F.xxhash64(F.col("t"))
         aggs = [
             F.sum(
@@ -420,16 +401,16 @@ def with_simhash(
             ).alias(f"s{j}")
             for j in range(bits)
         ]
-        sums = exploded.groupBy(id_col).agg(*aggs)
+        sums = exploded.groupBy("doc_id").agg(*aggs)
         packed = None
         for j in range(bits):
             term = F.when(F.col(f"s{j}") >= 0, F.lit(1 << j).cast("long")).otherwise(
                 F.lit(0).cast("long")
             )
             packed = term if packed is None else packed + term
-        return sums.select(F.col(id_col), packed.alias("simhash"))
+        return sums.select(F.col("doc_id"), packed.alias("simhash"))
     if impl == "expr":
-        toks = tokens(F.col(text_col))
+        toks = tokens(F.col("text"))
         simhash = F.aggregate(
             F.sequence(F.lit(1), F.lit(bits)),
             F.lit(0).cast("long"),
@@ -443,14 +424,14 @@ def with_simhash(
             ).otherwise(F.lit(0).cast("long")),
         )
         return (
-            df.select(F.col(id_col), F.size(toks).alias("n_tokens"), simhash.alias("simhash"))
+            df.select(F.col("doc_id"), F.size(toks).alias("n_tokens"), simhash.alias("simhash"))
             .filter(F.col("n_tokens") > 0)
             .drop("n_tokens")
         )
 
     schema = StructType(
         [
-            StructField(id_col, LongType(), False),
+            StructField("doc_id", LongType(), False),
             StructField("simhash", LongType(), False),
         ]
     )
@@ -473,16 +454,13 @@ def with_simhash(
                 sh += 1 << j
         return [(doc_id, sh)]
 
-    return map_rows(df.select(id_col, text_col), schema, simhash)
+    return map_rows(df.select("doc_id", "text"), schema, simhash)
 
 
 def simhash_hamming_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     bits: int = 16,
     max_hamming: int = 2,
-    impl: str = "pandas",
 ) -> DataFrame:
     """Near-dup SimHash value pairs within hamming distance ``d`` via
     PIGEONHOLE banding: two b-bit hashes within distance d must agree
@@ -494,7 +472,7 @@ def simhash_hamming_pairs(
 
     Returns (h1, h2, hamming, n_docs1, n_docs2) with h1 < h2.
     """
-    groups = simhash_groups(df, text_col, id_col, bits, impl=impl)
+    groups = simhash_groups(df, bits=bits)
     nseg = max_hamming + 1
     seg_bits = bits // nseg
     segs = []
@@ -531,29 +509,17 @@ def simhash_hamming_pairs(
     )
 
 
-def simhash_groups(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = 16,
-    impl: str = "pandas",
-) -> DataFrame:
+def simhash_groups(df: DataFrame, bits: int = 16) -> DataFrame:
     """Near-dup clustering proxy: docs bucketed by identical SimHash."""
     return (
-        with_simhash(df, text_col, id_col, bits, impl=impl)
+        with_simhash(df, bits=bits)
         .groupBy("simhash")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min(id_col).alias("keep_id"))
+        .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("keep_id"))
     )
 
 
 # ------------------------------------------------------ duplicate spans
-def dup_spans(
-    df: DataFrame,
-    k: int = 16,
-    min_copies: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def dup_spans(df: DataFrame, k: int = 16, min_copies: int = 2) -> DataFrame:
     """Token-window duplicate-span detection — the substring-level
     member of the dedup family (exact doc dedup misses partial mirrors;
     paragraph dedup misses duplication not aligned to paragraph
@@ -577,21 +543,21 @@ def dup_spans(
     text).  Same plan family as para_dedup; at 100 TB the explode dies
     in-stage and the two shuffles carry ~|corpus_tokens|/k fingerprint
     rows."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     n_chunks = F.floor(F.size(toks) / k).cast("int")
     chunk_arr = F.transform(
         F.sequence(F.lit(0), n_chunks - 1),
         lambda i: F.concat_ws(" ", F.slice(toks, i * k + 1, k)),
     )
     chunks = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
             F.when(n_chunks >= 1, chunk_arr).otherwise(
                 F.array().cast("array<string>")
             )
         ).alias("chunk_idx", "chunk"),
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("chunk_idx").cast("int").alias("chunk_idx"),
         (F.col("chunk_idx") * k).cast("int").alias("start_tok"),
         h16(F.col("chunk")).alias("fp"),
@@ -601,7 +567,7 @@ def dup_spans(
         chunks.join(
             copies.filter(F.col("n_copies") >= min_copies), "fp", "inner"
         )
-        .select(id_col, "chunk_idx", "start_tok", "n_copies")
+        .select("doc_id", "chunk_idx", "start_tok", "n_copies")
     )
 
 
@@ -610,8 +576,6 @@ def strip_dup_spans(
     k: int = 16,
     min_copies: int = 2,
     keep_first: bool = True,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """The ACTION side of :func:`dup_spans`: rebuild each document with
     its corpus-duplicated k-token chunks removed — the substring-level
@@ -630,7 +594,7 @@ def strip_dup_spans(
     of kept indices back to the chunk text — the chunk text for the
     REBUILD crosses one shuffle keyed by id (unavoidable: the output IS
     text), everything else stays 16-byte keys."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     n_chunks = F.floor(F.size(toks) / k).cast("int")
     chunk_arr = F.transform(
         F.sequence(F.lit(0), n_chunks - 1),
@@ -640,7 +604,7 @@ def strip_dup_spans(
         " ", F.slice(toks, n_chunks * k + 1, F.size(toks) - n_chunks * k)
     )
     chunks = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         tail.alias("_tail"),
         F.posexplode_outer(
             F.when(n_chunks >= 1, chunk_arr).otherwise(
@@ -650,14 +614,14 @@ def strip_dup_spans(
     )
     fp = h16(F.col("chunk"))
     marked = chunks.select(
-        F.col(id_col), "_tail", "chunk_idx", "chunk", fp.alias("fp")
+        F.col("doc_id"), "_tail", "chunk_idx", "chunk", fp.alias("fp")
     )
     counts = (
         marked.filter(F.col("chunk").isNotNull())
         .groupBy("fp")
         .agg(F.count(F.lit(1)).alias("n_copies"))
     )
-    w = Window.partitionBy("fp").orderBy(id_col, "chunk_idx")
+    w = Window.partitionBy("fp").orderBy("doc_id", "chunk_idx")
     flagged = marked.join(
         counts.filter(F.col("n_copies") >= min_copies), "fp", "left"
     )
@@ -669,7 +633,7 @@ def strip_dup_spans(
     else:
         drop = F.col("n_copies").isNotNull()
     kept = flagged.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "_tail",
         "chunk_idx",
         "chunk",
@@ -687,7 +651,7 @@ def strip_dup_spans(
         lambda s: s["chunk"],
     )
     all_parts = F.concat(kept_parts, F.array(F.first("_tail")))
-    return kept.groupBy(id_col).agg(
+    return kept.groupBy("doc_id").agg(
         F.count("chunk").alias("n_chunks"),
         F.sum(F.when(F.col("_drop"), 1).otherwise(0)).cast("long").alias("n_dropped"),
         F.concat_ws(
@@ -696,12 +660,7 @@ def strip_dup_spans(
     )
 
 
-def cdc_chunks(
-    df: DataFrame,
-    min_copies: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def cdc_chunks(df: DataFrame, min_copies: int = 2) -> DataFrame:
     """Content-defined chunking dedup — the shift-robust member of the
     substring-dedup family.  ``dup_spans`` cuts at FIXED stride-k
     offsets, so inserting one token near a document's head shifts every
@@ -722,7 +681,7 @@ def cdc_chunks(
     chunk text reduces to a 16-byte fingerprint before both shuffles,
     which carry ~|corpus_tokens|/16 uniform fp rows — the dup_spans
     plan family with the explode replaced by an in-stage transform."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     n = F.size(toks)
     # 1-based positions of boundary tokens (md5 nibble gate)
     bpos = F.filter(
@@ -746,7 +705,7 @@ def cdc_chunks(
         ),
     )
     chunks = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
             F.when(n >= 1, chunk_arr).otherwise(
                 F.array().cast(
@@ -755,7 +714,7 @@ def cdc_chunks(
             )
         ).alias("chunk_idx", "c"),
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("chunk_idx").cast("int").alias("chunk_idx"),
         F.col("c.s").cast("int").alias("start_tok"),
         F.col("c.n_tok").cast("int").alias("n_tok"),
@@ -764,7 +723,7 @@ def cdc_chunks(
     copies = chunks.groupBy("fp").agg(F.count(F.lit(1)).alias("n_copies"))
     return chunks.join(
         copies.filter(F.col("n_copies") >= min_copies), "fp", "inner"
-    ).select(id_col, "chunk_idx", "start_tok", "n_tok", "n_copies")
+    ).select("doc_id", "chunk_idx", "start_tok", "n_tok", "n_copies")
 
 
 def _containment_postings_pandas(
@@ -794,8 +753,6 @@ def _containment_postings_pandas(
 
 def containment_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     shingle_k: int = 3,
     min_shared: int = 3,
     max_df: int = 100,
@@ -843,11 +800,11 @@ def containment_pairs(
     # the shingle-set size IS the doc's index row count) — the
     # denominator needs no second scan, no sizes aggregate, no join back
     if impl == "pandas":
-        post = _containment_postings_pandas(df, text_col, id_col, shingle_k)
+        post = _containment_postings_pandas(df, "text", "doc_id", shingle_k)
     else:
-        toks = tokens(F.col(text_col))
+        toks = tokens(F.col("text"))
         sh = F.array_distinct(word_shingles(toks, shingle_k))
-        docs = df.select(F.col(id_col), sh.alias("sh")).filter(
+        docs = df.select(F.col("doc_id"), sh.alias("sh")).filter(
             F.size("sh") > 0
         )
         fp = (
@@ -856,14 +813,14 @@ def containment_pairs(
             else h16(F.col("g"))
         )
         post = docs.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.size("sh").alias("n_sh"),
             F.explode("sh").alias("g"),
-        ).select(F.col(id_col), F.col("n_sh"), fp.alias("fp"))
+        ).select(F.col("doc_id"), F.col("n_sh"), fp.alias("fp"))
     postings = (
         post.groupBy("fp")
         .agg(
-            F.collect_list(F.struct(F.col(id_col), F.col("n_sh"))).alias(
+            F.collect_list(F.struct(F.col("doc_id"), F.col("n_sh"))).alias(
                 "ids"
             )
         )
@@ -875,11 +832,11 @@ def containment_pairs(
         F.transform(
             "ids",
             lambda x: F.transform(
-                F.filter("ids", lambda y: y[id_col] > x[id_col]),
+                F.filter("ids", lambda y: y["doc_id"] > x["doc_id"]),
                 lambda y: F.struct(
-                    x[id_col].alias("id1"),
+                    x["doc_id"].alias("id1"),
                     x["n_sh"].alias("n1"),
-                    y[id_col].alias("id2"),
+                    y["doc_id"].alias("id2"),
                     y["n_sh"].alias("n2"),
                 ),
             ),
@@ -912,8 +869,6 @@ def containment_pairs(
 
 def host_mirror_pairs(
     pages: DataFrame,
-    host_col: str = "host",
-    fp_col: str = "fp",
     min_shared: int = 2,
     max_hosts_per_fp: int = 50,
 ) -> DataFrame:
@@ -943,7 +898,7 @@ def host_mirror_pairs(
     containment with small jaccard is a subset mirror (one host carries
     extra content); both near 1 is a full mirror.
     """
-    hf = pages.select(F.col(host_col).alias("host"), F.col(fp_col).alias("fp")).distinct()
+    hf = pages.select(F.col("host"), F.col("fp")).distinct()
     per_host = hf.groupBy("host").agg(F.count(F.lit(1)).alias("n_fps"))
     postings = (
         hf.groupBy("fp")
@@ -987,22 +942,14 @@ def host_mirror_pairs(
     )
 
 
-def minhash_error_audit(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = 16,
-    bands: int = 8,
-    shingle_k: int = 3,
-    impl: str = "pandas",
-) -> DataFrame:
+def minhash_error_audit(df: DataFrame) -> DataFrame:
     """Sketch-quality audit: per LSH candidate pair, the MinHash
-    similarity ESTIMATE (matching signature positions / n_hashes)
-    against the EXACT shingle Jaccard, plus the absolute error.
+    similarity ESTIMATE (matching positions of the 16 signature hashes
+    / 16) against the EXACT shingle Jaccard, plus the absolute error.
 
-    The (n_hashes, bands) configuration is a budget decision — this
-    table is the evidence for it on YOUR corpus: E[abs_err] tracks
-    1/sqrt(n_hashes) (~0.25 at 16 hashes), so a dedup threshold at
+    The (hashes, bands) configuration (16, 8 here) is a budget decision
+    — this table is the evidence for it on YOUR corpus: E[abs_err]
+    tracks 1/sqrt(hashes) (~0.25 at 16 hashes), so a dedup threshold at
     0.5 needs either more hashes or the exact-verify stage
     (:func:`verified_near_dups`) this engine defaults to.  Auditing
     ONLY candidate pairs keeps the cost LSH-bounded — the estimator's
@@ -1014,29 +961,25 @@ def minhash_error_audit(
     array) and (id, shingle set) for candidates only.  Returns
     ``(id1, id2, est_jaccard, jaccard, abs_err)`` rounded to 4 dp.
     """
-    pairs = lsh_candidate_pairs(
-        df, text_col, id_col, n_hashes, bands, shingle_k, impl=impl
-    ).localCheckpoint(eager=True)
+    pairs = lsh_candidate_pairs(df).localCheckpoint(eager=True)
     cand_ids = (
-        pairs.select(F.col("id1").alias(id_col))
-        .union(pairs.select(F.col("id2").alias(id_col)))
+        pairs.select(F.col("id1").alias("doc_id"))
+        .union(pairs.select(F.col("id2").alias("doc_id")))
         .distinct()
     )
-    sub = df.join(cand_ids, id_col, "left_semi")
-    sigs = minhash_signatures(
-        sub, text_col, id_col, n_hashes, shingle_k, impl=impl
-    ).localCheckpoint(eager=False)
-    sh = _shingle_sets(sub, text_col, id_col, shingle_k).localCheckpoint(
+    sub = df.join(cand_ids, "doc_id", "left_semi")
+    sigs = minhash_signatures(sub).localCheckpoint(eager=False)
+    sh = _shingle_sets(sub, "text", "doc_id", 3).localCheckpoint(
         eager=False
     )
-    s1 = sigs.select(F.col(id_col).alias("id1"), F.col("sig").alias("sg1"))
-    s2 = sigs.select(F.col(id_col).alias("id2"), F.col("sig").alias("sg2"))
-    a = sh.select(F.col(id_col).alias("id1"), F.col("sh").alias("sh1"))
-    b = sh.select(F.col(id_col).alias("id2"), F.col("sh").alias("sh2"))
+    s1 = sigs.select(F.col("doc_id").alias("id1"), F.col("sig").alias("sg1"))
+    s2 = sigs.select(F.col("doc_id").alias("id2"), F.col("sig").alias("sg2"))
+    a = sh.select(F.col("doc_id").alias("id1"), F.col("sh").alias("sh1"))
+    b = sh.select(F.col("doc_id").alias("id2"), F.col("sh").alias("sh2"))
     matches = F.size(
         F.filter(F.zip_with("sg1", "sg2", lambda x, y: x == y), lambda m: m)
     )
-    est = matches / F.lit(float(n_hashes))
+    est = matches / F.lit(16.0)  # minhash_signatures' n_hashes
     inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
     union = F.size("sh1").cast("double") + F.size("sh2").cast("double") - inter
     jac = inter / union
@@ -1055,13 +998,7 @@ def minhash_error_audit(
     )
 
 
-def syndication_bursts(
-    pages: DataFrame,
-    host_col: str = "host",
-    fp_col: str = "fp",
-    min_hosts: int = 3,
-    sample_k: int = 5,
-) -> DataFrame:
+def syndication_bursts(pages: DataFrame, min_hosts: int = 3) -> DataFrame:
     """Content syndicated across many hosts — press releases, wire
     copy, scraped re-publications: one content fingerprint served by
     ≥ ``min_hosts`` distinct hosts.  :func:`host_mirror_pairs` asks
@@ -1076,13 +1013,13 @@ def syndication_bursts(
 
     Returns ``(fp, n_hosts, n_docs, sample_hosts)`` for bursts only.
     """
-    rows = pages.select(F.col(fp_col).alias("fp"), F.col(host_col).alias("host"))
+    rows = pages.select(F.col("fp"), F.col("host"))
     return (
         rows.groupBy("fp")
         .agg(
             F.countDistinct("host").alias("n_hosts"),
             F.count(F.lit(1)).alias("n_docs"),
-            F.slice(F.array_sort(F.collect_set("host")), 1, sample_k).alias(
+            F.slice(F.array_sort(F.collect_set("host")), 1, 5).alias(
                 "sample_hosts"
             ),
         )

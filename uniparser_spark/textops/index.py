@@ -32,16 +32,11 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from .exprs import tokens
 
+BM25_K1 = 1.2  # term-frequency saturation
+BM25_B = 0.75  # document-length normalization
 
-def bm25_index(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
-    topk: int = 5,
-    min_df: int = 2,
-) -> DataFrame:
+
+def bm25_index(df: DataFrame, topk: int = 5, min_df: int = 2) -> DataFrame:
     """BM25 postings index: for every term with document frequency
     ``>= min_df``, the ``topk`` best documents by BM25 score.
 
@@ -51,15 +46,15 @@ def bm25_index(
     ``top_score`` is the rank-1 BM25 score rounded to 4 dp.  Ties
     break on ascending doc_id so output is engine-independent.
     """
-    toks = tokens(F.col(text_col))
-    lens = df.select(F.col(id_col), F.size(toks).alias("dl"))
+    toks = tokens(F.col("text"))
+    lens = df.select(F.col("doc_id"), F.size(toks).alias("dl"))
     stats = lens.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
     )
     terms = df.select(
-        F.col(id_col), F.size(toks).alias("dl"), F.explode(toks).alias("term")
+        F.col("doc_id"), F.size(toks).alias("dl"), F.explode(toks).alias("term")
     )
-    tf = terms.groupBy(id_col, "term").agg(
+    tf = terms.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl")
     )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -68,31 +63,31 @@ def bm25_index(
         (F.col("n_docs") - F.col("df")).cast("double") + F.lit(0.5)
     ) / (F.col("df").cast("double") + F.lit(0.5))
     avgdl = F.col("sum_dl").cast("double") / F.col("n_docs").cast("double")
-    tfn = (F.col("tf").cast("double") * F.lit(k1 + 1.0)) / (
+    tfn = (F.col("tf").cast("double") * F.lit(BM25_K1 + 1.0)) / (
         F.col("tf").cast("double")
-        + F.lit(k1)
-        * (F.lit(1.0 - b) + F.lit(b) * (F.col("dl").cast("double") / avgdl))
+        + F.lit(BM25_K1)
+        * (F.lit(1.0 - BM25_B) + F.lit(BM25_B) * (F.col("dl").cast("double") / avgdl))
     )
     scored = (
         tf.join(dfreq, "term")
         .filter(F.col("df") >= min_df)
         .crossJoin(F.broadcast(stats))
         .select(
-            id_col,
+            "doc_id",
             "term",
             "df",
             F.round(idf * tfn, 4).alias("score"),
         )
     )
     w = Window.partitionBy("term").orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
+        F.col("score").desc(), F.col("doc_id").asc()
     )
     ranked = scored.withColumn("_rk", F.row_number().over(w)).filter(
         F.col("_rk") <= topk
     )
     return ranked.groupBy("term").agg(
         F.max("df").alias("df"),
-        F.max(F.when(F.col("_rk") == 1, F.col(id_col))).alias("top_doc"),
+        F.max(F.when(F.col("_rk") == 1, F.col("doc_id"))).alias("top_doc"),
         F.max(F.when(F.col("_rk") == 1, F.col("score"))).alias("top_score"),
         F.array_join(
             F.array_sort(
@@ -100,7 +95,7 @@ def bm25_index(
                     F.concat(
                         F.lpad(F.col("_rk").cast("string"), 2, "0"),
                         F.lit(":"),
-                        F.col(id_col),
+                        F.col("doc_id"),
                     )
                 )
             ),
@@ -109,12 +104,7 @@ def bm25_index(
     )
 
 
-def phrase_positions(
-    docs: DataFrame,
-    phrase: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def phrase_positions(docs: DataFrame, phrase: str) -> DataFrame:
     """Exact-phrase search — the positional twin of :func:`bm25_index`
     (bag-of-words ranking cannot distinguish "new york" from "york
     new"; deduplication forensics and quote-tracking need the exact
@@ -134,7 +124,7 @@ def phrase_positions(
     """
     p = phrase.lower().split()
     k = len(p)
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
+    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     toks = tokens(norm)
     window_eq = lambda i: (
         F.concat_ws(" ", F.slice(toks, i + 1, k)) == F.lit(" ".join(p))
@@ -144,7 +134,7 @@ def phrase_positions(
         F.filter(F.sequence(F.lit(0), F.size(toks) - k), window_eq),
     ).otherwise(F.array().cast("array<int>"))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(starts).cast("long").alias("n_occurrences"),
         # try_element_at: ANSI mode errors on out-of-bounds element_at,
         # and the empty (no-match) array must yield NULL positions
@@ -153,12 +143,7 @@ def phrase_positions(
     )
 
 
-def posting_gaps(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_df: int = 2,
-) -> DataFrame:
+def posting_gaps(df: DataFrame, min_df: int = 2) -> DataFrame:
     """Posting-list compression audit: per-term delta-gaps and their
     Elias-γ bit cost.
 
@@ -168,7 +153,7 @@ def posting_gaps(
     This audit prices the index before building it — the capacity-
     planning twin of :func:`bm25_index`, on the same postings shape.
 
-    Per term (document-presence postings, ascending ``id_col``): the
+    Per term (document-presence postings, ascending ``doc_id``): the
     first posting costs ``γ(doc_id + 1)`` and each subsequent one
     ``γ(gap)`` where ``γ(x) = 2·⌊log2 x⌋ + 1`` bits — computed exactly
     as ``2·length(bin(x)) - 1`` (integer, no float log), so the DuckDB
@@ -183,17 +168,17 @@ def posting_gaps(
     compression_ratio)`` — ratio vs raw 64-bit ids, rounded to 4 dp.
     """
     post = (
-        df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("term"))
+        df.select(F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("term"))
         .distinct()
     )
-    w = Window.partitionBy("term").orderBy(F.col(id_col).asc())
+    w = Window.partitionBy("term").orderBy(F.col("doc_id").asc())
     gamma = lambda x: F.lit(2) * F.length(F.bin(x)) - F.lit(1)  # noqa: E731
-    prev = F.lag(id_col).over(w)
-    cost = F.when(prev.isNull(), gamma(F.col(id_col) + 1)).otherwise(
-        gamma(F.col(id_col) - prev)
+    prev = F.lag("doc_id").over(w)
+    cost = F.when(prev.isNull(), gamma(F.col("doc_id") + 1)).otherwise(
+        gamma(F.col("doc_id") - prev)
     )
     per = (
-        post.select("term", F.col(id_col), cost.alias("_bits"))
+        post.select("term", F.col("doc_id"), cost.alias("_bits"))
         .groupBy("term")
         .agg(
             F.count(F.lit(1)).alias("df"),

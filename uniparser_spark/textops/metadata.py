@@ -145,11 +145,7 @@ def harvest_page_metadata(
     )
 
 
-def harvest_hreflang(
-    df: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-) -> DataFrame:
+def harvest_hreflang(df: DataFrame) -> DataFrame:
     """Explode every ``<link rel="alternate" hreflang=...>`` into an edge
     table ``(url, hreflang, href)`` — href resolved against the page URL
     — one DOM parse per page, one Arrow crossing, edges in document
@@ -166,7 +162,7 @@ def harvest_hreflang(
                 continue
             yield base, lang, urljoin(base, href) if base else href
 
-    return map_rows(df.select(url_col, html_col), schema, edges)
+    return map_rows(df.select("url", "html"), schema, edges)
 
 
 def hreflang_audit(edges: DataFrame) -> DataFrame:
@@ -214,9 +210,7 @@ def hreflang_audit(edges: DataFrame) -> DataFrame:
     )
 
 
-def harvest_microdata(
-    df: DataFrame, html_col: str = "html", id_col: str = "doc_id"
-) -> DataFrame:
+def harvest_microdata(df: DataFrame) -> DataFrame:
     """schema.org microdata census per page — the pre-JSON-LD
     structured-data dialect still carried by a large share of the web.
 
@@ -230,7 +224,7 @@ def harvest_microdata(
     - ``n_props``: elements carrying an ``itemprop`` attribute.
 
     One DOM parse, one pre-order walk, one Arrow crossing."""
-    schema = f"{id_col} long, n_scopes int, itemtypes string, n_props int"
+    schema = "doc_id long, n_scopes int, itemtypes string, n_props int"
 
     def census(doc_id, html):
         n_s = n_p = 0
@@ -245,27 +239,22 @@ def harvest_microdata(
                 n_p += 1
         return [(doc_id, n_s, ",".join(sorted(set(ts))) if ts else None, n_p)]
 
-    return map_rows(df.select(id_col, html_col), schema, census)
+    return map_rows(df.select("doc_id", "html"), schema, census)
 
 
-def harvest_metadata(
-    df: DataFrame,
-    html_col: str = "html",
-    id_col: str = "doc_id",
-    base_url_col: Optional[str] = None,
-) -> DataFrame:
+def harvest_metadata(df: DataFrame, base_url_col: Optional[str] = None) -> DataFrame:
     """Page-metadata harvest as one Arrow crossing.
 
     Returns (id, title, description, og_title, og_url, canonical,
     n_hreflang, jsonld_types, n_jsonld_bad, published) per page.
     """
     schema = (
-        f"{id_col} long, title string, description string, "
+        "doc_id long, title string, description string, "
         "og_title string, og_url string, canonical string, "
         "n_hreflang int, jsonld_types string, n_jsonld_bad int, "
         "published string"
     )
-    cols = [id_col, html_col] + ([base_url_col] if base_url_col else [])
+    cols = ["doc_id", "html"] + ([base_url_col] if base_url_col else [])
     return map_rows(
         df.select(*cols),
         schema,

@@ -39,6 +39,8 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .exprs import tokens, word_shingles
 
+DSIR_DIM = 4096  # hashed feature buckets of dsir_weights
+
 
 # ------------------------------------------------------------ hash buckets
 def hex_bucket(col: Column, salt: str, nibbles: int = 2) -> Column:
@@ -61,13 +63,11 @@ def hex_bucket(col: Column, salt: str, nibbles: int = 2) -> Column:
 
 
 # -------------------------------------------------------- decontamination
-def eval_ngrams(
-    eval_df: DataFrame, n: int = 4, text_col: str = "text"
-) -> DataFrame:
+def eval_ngrams(eval_df: DataFrame, n: int = 4) -> DataFrame:
     """Distinct word n-grams of an eval/benchmark set — one ``gram``
     column.  Benchmarks are tiny next to a crawl corpus (MBs vs TBs),
     so the output is built to be broadcast."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     return (
         eval_df.select(
             F.explode(F.array_distinct(word_shingles(toks, n))).alias("gram")
@@ -76,13 +76,7 @@ def eval_ngrams(
     )
 
 
-def decontaminate(
-    docs: DataFrame,
-    eval_grams: DataFrame,
-    n: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def decontaminate(docs: DataFrame, eval_grams: DataFrame, n: int = 4) -> DataFrame:
     """Benchmark decontamination via word n-gram overlap (the GPT-3
     appendix-C procedure): per document, how many of its distinct
     n-grams appear in the eval set.
@@ -97,9 +91,9 @@ def decontaminate(
     so the one shuffle carries (id, partial-count) rows — document text
     itself never leaves the scan stage.  At 100 TB the explode fan-out
     is ~|tokens| rows per doc but they die in-stage at the join."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     grams = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(F.array_distinct(word_shingles(toks, n))).alias("gram"),
     )
     hits = grams.join(
@@ -107,12 +101,12 @@ def decontaminate(
         "gram",
         "left",
     )
-    per = hits.groupBy(id_col).agg(
+    per = hits.groupBy("doc_id").agg(
         F.count("gram").alias("n_grams"),
         F.count("_hit").alias("n_hit"),
     )
     return per.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "n_grams",
         "n_hit",
         F.round(
@@ -123,36 +117,26 @@ def decontaminate(
 
 
 # ---------------------------------------------------- reproducible sampling
-def sample_gate(
-    rates: Mapping[str, int],
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
-    salt: str = "sample",
-    default_rate: int = 0,
-) -> Column:
+def sample_gate(rates: Mapping[str, int], default_rate: int = 0) -> Column:
     """The sampling predicate alone, as a reusable boolean Column —
     bucket(id) < rate(stratum).  Because it depends only on the row
     itself, it COMMUTES with every other filter/join in a pipeline:
     apply it as early as the plan allows (it prunes before expensive
     stages) without changing the final kept set."""
-    bucket = hex_bucket(F.col(id_col), salt)
+    bucket = hex_bucket(F.col("doc_id"), "sample")
     rate: Column = F.lit(default_rate)
     for k in sorted(rates, reverse=True):
-        rate = F.when(F.col(stratum_col) == k, F.lit(rates[k])).otherwise(rate)
+        rate = F.when(F.col("lang") == k, F.lit(rates[k])).otherwise(rate)
     return bucket < rate
 
 
 def stratified_sample(
     df: DataFrame,
     rates: Mapping[str, int],
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
-    salt: str = "sample",
     default_rate: int = 0,
-    denom: int = 256,
 ) -> DataFrame:
     """Deterministic stratified sampling: keep a row iff its hash bucket
-    (uniform in [0, denom)) is below its stratum's rate numerator —
+    (uniform in [0, 256)) is below its stratum's rate numerator —
     e.g. ``{"en": 96}`` keeps 96/256 of English docs.
 
     Why not ``df.sample()``: Spark's sampler is seeded per-partition,
@@ -164,14 +148,14 @@ def stratified_sample(
 
     Scale: zero shuffles — this is a filter.  Output keeps the bucket
     and rate columns for audit (lineage: WHY did this row survive)."""
-    bucket = hex_bucket(F.col(id_col), salt)
+    bucket = hex_bucket(F.col("doc_id"), "sample")
     rate: Column = F.lit(default_rate)
     for k in sorted(rates, reverse=True):
-        rate = F.when(F.col(stratum_col) == k, F.lit(rates[k])).otherwise(rate)
+        rate = F.when(F.col("lang") == k, F.lit(rates[k])).otherwise(rate)
     return (
         df.select(
-            F.col(id_col),
-            F.col(stratum_col).alias("stratum"),
+            F.col("doc_id"),
+            F.col("lang").alias("stratum"),
             bucket.cast("int").alias("bucket"),
             rate.cast("int").alias("rate"),
         )
@@ -184,8 +168,6 @@ def pack_sequences(
     docs: DataFrame,
     seq_len: int = 128,
     n_buckets: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Concat-and-chunk sequence packing (the GPT pretraining layout):
     documents are concatenated in a deterministic order and the token
@@ -203,19 +185,19 @@ def pack_sequences(
     narrow rows; text itself is tokenized in the scan stage and never
     shuffled (the trainer re-reads text by id, range-partitioned on
     (bucket, seq_first), to materialize the actual sequences)."""
-    n_tok = F.size(tokens(F.col(text_col)))
+    n_tok = F.size(tokens(F.col("text")))
     d = docs.select(
-        F.col(id_col),
-        (F.col(id_col) % n_buckets).cast("int").alias("bucket"),
+        F.col("doc_id"),
+        (F.col("doc_id") % n_buckets).cast("int").alias("bucket"),
         n_tok.cast("long").alias("n_tokens"),
     )
     w = (
         Window.partitionBy("bucket")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     d = d.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "bucket",
         "n_tokens",
         F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
@@ -223,7 +205,7 @@ def pack_sequences(
         .alias("tok_offset"),
     )
     return d.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "bucket",
         "n_tokens",
         "tok_offset",
@@ -234,13 +216,7 @@ def pack_sequences(
     )
 
 
-def chunk_text(
-    docs: DataFrame,
-    max_tokens: int = 64,
-    overlap: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def chunk_text(docs: DataFrame, max_tokens: int = 64, overlap: int = 16) -> DataFrame:
     """Sliding-window chunking — the long-document layout for context-
     bounded consumers (RAG indexing, embedding models, fixed-window
     pretraining): each document is cut into windows of ``max_tokens``
@@ -263,21 +239,21 @@ def chunk_text(
     if not 0 <= overlap < max_tokens:
         raise ValueError("need 0 <= overlap < max_tokens")
     stride = max_tokens - overlap
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     n = F.size(toks)
     starts = F.sequence(
         F.lit(0), F.greatest(n - overlap - 1, F.lit(0)), F.lit(stride)
     )
-    base = docs.filter(F.trim(F.col(text_col)) != "").select(
-        F.col(id_col), toks.alias("_t"), n.alias("_n"), starts.alias("_s")
+    base = docs.filter(F.trim(F.col("text")) != "").select(
+        F.col("doc_id"), toks.alias("_t"), n.alias("_n"), starts.alias("_s")
     )
     return base.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode("_s").alias("_start"),
         F.col("_t"),
         F.col("_n"),
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         (F.col("_start") / stride).cast("int").alias("chunk_idx"),
         F.least(F.lit(max_tokens), F.col("_n") - F.col("_start"))
         .cast("int")
@@ -288,16 +264,9 @@ def chunk_text(
     )
 
 
-def host_quota_sample(
-    docs: DataFrame,
-    cap: int,
-    host_col: str = "host",
-    id_col: str = "doc_id",
-    quality_col: str = "n_tokens",
-    salt_buckets: int = 16,
-) -> DataFrame:
+def host_quota_sample(docs: DataFrame, cap: int, salt_buckets: int = 16) -> DataFrame:
     """Per-host document quota — corpus diversity control: no host
-    contributes more than ``cap`` documents, best-first (``quality_col``
+    contributes more than ``cap`` documents, best-first (``quality``
     desc, id asc as the deterministic tiebreak).  Every row is kept
     with a verdict: (id, host, quality, rk, kept).
 
@@ -313,28 +282,28 @@ def host_quota_sample(
     kept = 0 (rk is NULL for them: their exact rank was never
     computed, and the verdict does not need it).
     """
-    q = F.col(quality_col)
-    order = [q.desc(), F.col(id_col).asc()]
+    q = F.col("n_tokens")
+    order = [q.desc(), F.col("doc_id").asc()]
     pre = Window.partitionBy(
-        host_col, (F.col(id_col) % salt_buckets).cast("int")
+        "host", (F.col("doc_id") % salt_buckets).cast("int")
     ).orderBy(*order)
-    exact = Window.partitionBy(host_col).orderBy(*order)
+    exact = Window.partitionBy("host").orderBy(*order)
     survivors = (
-        docs.select(id_col, host_col, quality_col)
+        docs.select("doc_id", "host", "n_tokens")
         .withColumn("_pre", F.row_number().over(pre))
         .filter(F.col("_pre") <= cap)
         .drop("_pre")
         .withColumn("rk", F.row_number().over(exact))
     )
     ranked = survivors.select(
-        id_col, host_col, quality_col, "rk",
+        "doc_id", "host", "n_tokens", "rk",
         (F.col("rk") <= cap).cast("int").alias("kept"),
     )
     trimmed = (
-        docs.select(id_col, host_col, quality_col)
-        .join(survivors.select(id_col), id_col, "left_anti")
+        docs.select("doc_id", "host", "n_tokens")
+        .join(survivors.select("doc_id"), "doc_id", "left_anti")
         .select(
-            id_col, host_col, quality_col,
+            "doc_id", "host", "n_tokens",
             F.lit(None).cast("int").alias("rk"),
             F.lit(0).alias("kept"),
         )
@@ -343,12 +312,7 @@ def host_quota_sample(
 
 
 # ------------------------------------------------------- unigram LM scores
-def unigram_scores(
-    docs: DataFrame,
-    vocab_size: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def unigram_scores(docs: DataFrame, vocab_size: int = 16) -> DataFrame:
     """Corpus-LM document scoring (the CCNet device, unigram order):
     build a top-``vocab_size`` unigram vocabulary over the corpus, then
     score each document by how much of the corpus's probability mass
@@ -370,14 +334,14 @@ def unigram_scores(
     instances; at web scale that is the zipf head after combine, and V
     caps the broadcast."""
     toks = docs.select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok")
+        F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("tok")
     )
     counts = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     vocab = counts.orderBy(F.col("cnt").desc(), F.col("tok")).limit(vocab_size)
     total = counts.agg(F.sum("cnt").cast("long").alias("total"))
     per = (
         toks.join(F.broadcast(vocab), "tok", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_tokens"),
             F.sum(F.coalesce(F.col("cnt"), F.lit(0))).cast("long").alias("mass"),
@@ -387,7 +351,7 @@ def unigram_scores(
         )
     )
     return per.crossJoin(F.broadcast(total)).select(
-        F.col(id_col),
+        F.col("doc_id"),
         "n_tokens",
         "n_oov",
         F.round(
@@ -402,12 +366,7 @@ def unigram_scores(
 
 
 # --------------------------------------------------------- tokenizer prep
-def bpe_merge_pairs(
-    docs: DataFrame,
-    top_k: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_merge_pairs(docs: DataFrame, top_k: int = 50) -> DataFrame:
     """One BPE merge iteration at corpus scale: count every ADJACENT
     token pair and rank the merge candidates — the inner loop of
     training a BPE/WordPiece tokenizer on the corpus the pipeline just
@@ -424,7 +383,7 @@ def bpe_merge_pairs(
     Iterating merges re-runs this with a re-tokenized corpus; each
     iteration is one job of the same shape.
     """
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     n = F.size(toks)
     pairs = F.zip_with(
         F.slice(toks, 1, n - 1),
@@ -441,12 +400,7 @@ def bpe_merge_pairs(
     )
 
 
-def ngram_lm_counts(
-    docs: DataFrame,
-    top_k: int = 100,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def ngram_lm_counts(docs: DataFrame, top_k: int = 100) -> DataFrame:
     """Kneser-Ney count tables for a corpus bigram LM: per bigram
     ``(w1, w2)`` the raw count plus both CONTINUATION type counts —
     ``n_left_types(w2)`` = how many distinct words precede w2 (the KN
@@ -467,7 +421,7 @@ def ngram_lm_counts(
     narrow Exchange of (w1, w2, cnt) triples).  Distinctness is free:
     the pair relation is already one row per (w1, w2).
     """
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     n = F.size(toks)
     grams = F.zip_with(
         F.slice(toks, 1, n - 1),
@@ -496,13 +450,7 @@ def ngram_lm_counts(
     )
 
 
-def quality_buckets(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str = "lang",
-    vocab_size: int = 16,
-) -> DataFrame:
+def quality_buckets(docs: DataFrame, vocab_size: int = 16) -> DataFrame:
     """CCNet's head/middle/tail device: bucket documents by corpus-LM
     score WITHIN each language at the terciles — 'head' is the
     best-scoring third, 'tail' the worst.  Per-language bucketing is
@@ -520,20 +468,18 @@ def quality_buckets(
     length_distribution already pins) broadcast back over the scored
     relation.  Nothing wide shuffles twice.
     """
-    scores = unigram_scores(
-        docs, vocab_size=vocab_size, id_col=id_col, text_col=text_col
+    scores = unigram_scores(docs, vocab_size=vocab_size)
+    scored = scores.join(docs.select("doc_id", "lang"), "doc_id").select(
+        "doc_id", "lang", "avg_tok_prob"
     )
-    scored = scores.join(docs.select(id_col, lang_col), id_col).select(
-        id_col, lang_col, "avg_tok_prob"
-    )
-    thr = scored.groupBy(lang_col).agg(
+    thr = scored.groupBy("lang").agg(
         F.percentile("avg_tok_prob", F.lit(1.0 / 3)).alias("t1"),
         F.percentile("avg_tok_prob", F.lit(2.0 / 3)).alias("t2"),
     )
     s = F.col("avg_tok_prob")
-    return scored.join(F.broadcast(thr), lang_col).select(
-        id_col,
-        lang_col,
+    return scored.join(F.broadcast(thr), "lang").select(
+        "doc_id",
+        "lang",
         "avg_tok_prob",
         F.when(s <= F.col("t1"), F.lit("tail"))
         .when(s <= F.col("t2"), F.lit("middle"))
@@ -542,13 +488,7 @@ def quality_buckets(
     )
 
 
-def temperature_mix(
-    docs: DataFrame,
-    alpha: float = 0.3,
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def temperature_mix(docs: DataFrame, alpha: float = 0.3) -> DataFrame:
     """Temperature-based multilingual sampling rates (the XLM-R /
     mBERT device): given per-stratum token mass p_s, sample with
     q_s ∝ p_s^α — α < 1 flattens the distribution so head languages
@@ -567,9 +507,9 @@ def temperature_mix(
     counts taken in the scan projection; the normalization constants
     fold in a 1-row cross join.  Output is O(strata) rows.
     """
-    n_tokens = F.size(tokens(F.col(text_col)))
+    n_tokens = F.size(tokens(F.col("text")))
     per = (
-        docs.select(F.col(stratum_col).alias("stratum"), n_tokens.alias("n"))
+        docs.select(F.col("lang").alias("stratum"), n_tokens.alias("n"))
         .groupBy("stratum")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -605,13 +545,7 @@ def temperature_mix(
     )
 
 
-def corpus_mix_report(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str = "lang",
-    vocab_size: int = 16,
-) -> DataFrame:
+def corpus_mix_report(docs: DataFrame, vocab_size: int = 16) -> DataFrame:
     """The 'what did we build' table: corpus composition per
     (language, quality bucket) — docs, tokens, and each cell's share
     of total tokens.  This is the report a training run's data card
@@ -623,16 +557,13 @@ def corpus_mix_report(
     n_tokens) rows plus a broadcast 1-row total.  Token counts rejoin
     from the scan projection by id — narrow columns only.
     """
-    buckets = quality_buckets(
-        docs, id_col=id_col, text_col=text_col, lang_col=lang_col,
-        vocab_size=vocab_size,
-    ).select(id_col, lang_col, "bucket")
+    buckets = quality_buckets(docs, vocab_size=vocab_size).select("doc_id", "lang", "bucket")
     toks = docs.select(
-        F.col(id_col), F.size(tokens(F.col(text_col))).alias("n")
+        F.col("doc_id"), F.size(tokens(F.col("text"))).alias("n")
     )
     per = (
-        buckets.join(toks, id_col)
-        .groupBy(lang_col, "bucket")
+        buckets.join(toks, "doc_id")
+        .groupBy("lang", "bucket")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n").cast("long").alias("n_tokens"),
@@ -640,7 +571,7 @@ def corpus_mix_report(
     )
     total = per.agg(F.sum("n_tokens").cast("long").alias("total"))
     return per.crossJoin(F.broadcast(total)).select(
-        lang_col,
+        "lang",
         "bucket",
         "n_docs",
         "n_tokens",
@@ -652,9 +583,7 @@ def corpus_mix_report(
 
 
 # ------------------------------------------------------------- epoch mixing
-def host_language_profile(
-    docs: DataFrame, host_col: str = "host", lang_col: str = "lang"
-) -> DataFrame:
+def host_language_profile(docs: DataFrame) -> DataFrame:
     """Per-host language composition — the crawl-steering signal that
     decides which hosts feed which language buckets (CCNet keeps
     per-snapshot language stats at exactly this granularity).
@@ -669,7 +598,7 @@ def host_language_profile(
     language has entropy 0; mixed CDN/aggregator hosts rank high and
     get language-ID'd per page instead of per host."""
     hl = docs.groupBy(
-        F.col(host_col).alias("host"), F.col(lang_col).alias("lang")
+        F.col("host"), F.col("lang")
     ).agg(F.count(F.lit(1)).alias("n"))
     tot = hl.groupBy("host").agg(
         F.sum("n").alias("n_docs"),
@@ -696,14 +625,7 @@ def host_language_profile(
     )
 
 
-def epoch_mix(
-    df: DataFrame,
-    weights: Mapping[str, int],
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
-    salt: str = "epoch",
-    denom: int = 256,
-) -> DataFrame:
+def epoch_mix(df: DataFrame, weights: Mapping[str, int]) -> DataFrame:
     """Training-mix UPSAMPLING — the counterpart of
     :func:`stratified_sample`'s downsampling: given integer mix weights
     per stratum (e.g. ``{"en": 2, "code": 5}``), emit how many epochs
@@ -716,10 +638,10 @@ def epoch_mix(
     probability frac(f_s), decided by the same md5 hash gate as
     stratified_sample — a per-doc Bernoulli, so the realized stratum
     total lands within O(sqrt(n_s)) of target (exact when f_s is an
-    integer; the /denom quantization of frac adds at most n_s/denom
+    integer; the 1/256 quantization of frac adds at most n_s/256
     bias), and the whole assignment is deterministic and reproducible
     under retries.  The computation is integer arithmetic end-to-end
-    (the fractional part is compared in /denom units): no float ever
+    (the fractional part is compared in 1/256 units): no float ever
     enters, so the DuckDB oracle reproduces every count exactly.
 
     Output: (id, stratum, n_copies) with n_copies >= 0 (an unlisted or
@@ -732,45 +654,40 @@ def epoch_mix(
     (|strata| rows), broadcast back, then a pure per-row expression —
     the corpus never shuffles."""
     W = sum(weights.values())
-    counts = df.groupBy(F.col(stratum_col).alias("_s")).agg(
+    counts = df.groupBy(F.col("lang").alias("_s")).agg(
         F.count(F.lit(1)).cast("long").alias("_ns")
     )
     totals = counts.agg(F.sum("_ns").cast("long").alias("_n"))
     out = (
-        df.select(F.col(id_col), F.col(stratum_col).alias("stratum"))
+        df.select(F.col("doc_id"), F.col("lang").alias("stratum"))
         .join(F.broadcast(counts), F.col("stratum") == F.col("_s"))
         .crossJoin(F.broadcast(totals))
     )
     wj: Column = F.lit(0).cast("long")
     for k in sorted(weights, reverse=True):
         wj = F.when(F.col("stratum") == k, F.lit(weights[k])).otherwise(wj)
-    # integer floor and fractional part in /denom units:
+    # integer floor and fractional part in 1/256 units (the hex bucket's
+    # range):
     #   f_s = N*w_s/(W*n_s); base = floor(f_s);
-    #   frac_d = floor(f_s*denom) - base*denom
+    #   frac_d = floor(f_s*256) - base*256
     staged = out.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "stratum",
         (F.col("_n") * wj).cast("long").alias("_num"),
         (F.lit(W) * F.col("_ns")).cast("long").alias("_den"),
     )
     base = F.expr("CAST(_num DIV _den AS BIGINT)")
-    fracd = F.expr(f"CAST((_num * {int(denom)}) DIV _den AS BIGINT)") - base * denom
-    bucket = hex_bucket(F.col(id_col), salt)
+    fracd = F.expr("CAST((_num * 256) DIV _den AS BIGINT)") - base * 256
+    bucket = hex_bucket(F.col("doc_id"), "epoch")
     n_copies = (base + F.when(bucket < fracd, 1).otherwise(0)).cast("long")
     return staged.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "stratum",
         n_copies.alias("n_copies"),
     )
 
 
-def dsir_weights(
-    docs: DataFrame,
-    target: Column,
-    dim: int = 4096,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def dsir_weights(docs: DataFrame, target: Column) -> DataFrame:
     """DSIR hashed importance weights (Xie et al. 2023, "Data Selection
     for Language Models via Importance Resampling"): score every raw
     document by how much more likely its hashed n-gram features are
@@ -781,16 +698,16 @@ def dsir_weights(
     exemplar docs (in production: the curated corpus the training mix
     should imitate; callers plug any predicate or a join-derived flag).
 
-    Features are unigrams + word bigrams hashed into ``dim`` buckets
+    Features are unigrams + word bigrams hashed into ``DSIR_DIM`` buckets
     (same md5 bucketing as the hashed linear classifier).  Both bucket
     distributions get add-1 smoothing.  Per-bucket weight
-    w_b = ln( ((t_b+1)*(R+dim)) / ((r_b+1)*(T+dim)) ), where t/r are
+    w_b = ln( ((t_b+1)*(R+DSIR_DIM)) / ((r_b+1)*(T+DSIR_DIM)) ), where t/r are
     target/raw bucket counts and T/R the totals.
 
     Cross-engine determinism: this module's doctrine is integer
     arithmetic until one final division, but an importance LOG-ratio is
     inherently transcendental.  The design contains the hazard to one
-    ln() per BUCKET (<= dim calls on exact integer ratios — the two
+    ln() per BUCKET (<= DSIR_DIM calls on exact integer ratios — the two
     products stay below 2^53 up to ~10^7 features a side, and the one
     division is IEEE-exact-rounded, so both engines hand ln the
     IDENTICAL double), quantized immediately to integer micro-nats
@@ -802,10 +719,10 @@ def dsir_weights(
 
     Scale: text is tokenized and exploded in the scan stage (crosses
     the wire zero times); bucket counting is one map-side-combined
-    groupBy on <= dim keys; the dim-row weight table broadcasts back;
+    groupBy on <= DSIR_DIM keys; the DSIR_DIM-row weight table broadcasts back;
     scoring shuffles only (id, long) partials.  The explode feeds both
     the count and score aggregates from one projection.  At 100 TB the
-    weight table is still dim rows — the broadcast never grows.
+    weight table is still DSIR_DIM rows — the broadcast never grows.
 
     Output: (id, is_target, n_feats, llr_q, dsir_weight, leans_target)
     where llr_q is the exact integer micro-nat sum (the reproducible
@@ -815,35 +732,35 @@ def dsir_weights(
     acceptance monotone in llr_q — kept out of this operator so the
     weights stay inspectable.
     """
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
+    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     toks = tokens(norm)
     feats = F.concat(toks, word_shingles(toks, 2))
     bucket = (
         F.conv(F.substring(F.md5(F.col("_f")), 1, 8), 16, 10).cast("long")
-        % dim
+        % DSIR_DIM
     )
     bf = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         target.alias("_t"),
         F.explode(
             F.when(norm == "", F.array().cast("array<string>")).otherwise(feats)
         ).alias("_f"),
-    ).select(F.col(id_col), "_t", bucket.alias("_b"))
+    ).select(F.col("doc_id"), "_t", bucket.alias("_b"))
     counts = bf.groupBy("_b").agg(
         F.count(F.lit(1)).cast("long").alias("_r"),
         F.sum(F.when(F.col("_t"), 1).otherwise(0)).cast("long").alias("_tc"),
     )
-    # totals as an unpartitioned window over the <= dim count rows: a
+    # totals as an unpartitioned window over the <= DSIR_DIM count rows: a
     # separate .agg() would re-run the whole explode+count lineage (a
-    # third pass over the corpus); the window moves only dim rows to
+    # third pass over the corpus); the window moves only DSIR_DIM rows to
     # one task.  Net: the canonical two DSIR passes — fit, then score.
     wtot = Window.partitionBy()
     rtot = F.sum("_r").over(wtot).cast("long")
     ttot = F.sum("_tc").over(wtot).cast("long")
     w_q = F.round(
         F.log(
-            ((F.col("_tc") + 1) * (rtot + dim)).cast("double")
-            / ((F.col("_r") + 1) * (ttot + dim)).cast("double")
+            ((F.col("_tc") + 1) * (rtot + DSIR_DIM)).cast("double")
+            / ((F.col("_r") + 1) * (ttot + DSIR_DIM)).cast("double")
         )
         * 1000000.0,
         0,
@@ -851,15 +768,15 @@ def dsir_weights(
     weights = counts.select("_b", w_q.alias("_wq"))
     scored = (
         bf.join(F.broadcast(weights), "_b")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_feats"),
             F.sum("_wq").cast("long").alias("llr_q"),
         )
     )
-    base = docs.select(F.col(id_col), target.cast("int").alias("is_target"))
-    return base.join(scored, id_col, "left").select(
-        F.col(id_col),
+    base = docs.select(F.col("doc_id"), target.cast("int").alias("is_target"))
+    return base.join(scored, "doc_id", "left").select(
+        F.col("doc_id"),
         "is_target",
         F.coalesce("n_feats", F.lit(0)).cast("long").alias("n_feats"),
         F.coalesce("llr_q", F.lit(0)).cast("long").alias("llr_q"),
@@ -880,12 +797,7 @@ def dsir_weights(
     )
 
 
-def training_order(
-    df: DataFrame,
-    n_shards: int = 64,
-    salt: str = "order",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def training_order(df: DataFrame, n_shards: int = 64, salt: str = "order") -> DataFrame:
     """Deterministic global training-order shuffle — the step between a
     packed corpus and the trainer's data loader.  ``df.orderBy(rand())``
     re-draws under task retries and cannot be reproduced across reruns;
@@ -903,12 +815,12 @@ def training_order(
     global sort, no single-partition stage.
     """
     key = F.substring(
-        F.md5(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string"))), 1, 16
+        F.md5(F.concat(F.lit(f"{salt}:"), F.col("doc_id").cast("string"))), 1, 16
     )
     shard = (
         F.conv(
             F.substring(
-                F.md5(F.concat(F.lit(f"{salt}/shard:"), F.col(id_col).cast("string"))),
+                F.md5(F.concat(F.lit(f"{salt}/shard:"), F.col("doc_id").cast("string"))),
                 1,
                 8,
             ),
@@ -920,29 +832,22 @@ def training_order(
     w = Window.partitionBy("shard").orderBy("order_key")
     return (
         df.select(
-            F.col(id_col), shard.alias("shard"), key.alias("order_key")
+            F.col("doc_id"), shard.alias("shard"), key.alias("order_key")
         )
         .withColumn("pos", F.row_number().over(w).cast("long"))
-        .select(id_col, "shard", "pos", "order_key")
+        .select("doc_id", "shard", "pos", "order_key")
     )
 
 
-def weighted_sample(
-    df: DataFrame,
-    k: int,
-    weight: Column | None = None,
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
-    salt: str = "wsamp",
-) -> DataFrame:
+def weighted_sample(df: DataFrame, k: int) -> DataFrame:
     """Exact weighted sampling without replacement: k docs per stratum,
     inclusion odds proportional to an integer weight — deterministic.
 
     Scheme (integer Efraimidis–Spirakis): each doc casts `weight`
-    independent md5 draws and keeps the minimum; the k smallest keys
+    (``doc_id % 4 + 1``) independent md5 draws and keeps the minimum; the k smallest keys
     per stratum win.  For two docs the winner odds are exactly
     w_i/(w_i+w_j) in the continuous limit, and because every draw is a
-    24-bit integer from md5(salt:id:replica), the kept set is identical
+    24-bit integer from md5('wsamp':id:replica), the kept set is identical
     from any engine, partitioning or retry — unlike df.sample(), and
     unlike float u^(1/w) keys whose ln/pow round-trips differ across
     engines.  Integer weights are the corpus-quality contract upstream
@@ -956,48 +861,40 @@ def weighted_sample(
 
     Output: (doc_id, stratum, weight, draw_key, rk) for the winners.
     """
-    w_col = (weight if weight is not None else (F.col(id_col) % 4 + 1)).cast(
-        "int"
-    )
+    w_col = (F.col("doc_id") % 4 + 1).cast("int")
     replicas = df.select(
-        F.col(id_col),
-        F.col(stratum_col).alias("stratum"),
+        F.col("doc_id"),
+        F.col("lang").alias("stratum"),
         w_col.alias("weight"),
         F.explode(F.sequence(F.lit(0), w_col - 1)).alias("r"),
     )
     h = F.md5(
         F.concat(
-            F.lit(salt),
+            F.lit("wsamp"),
             F.lit(":"),
-            F.col(id_col).cast("string"),
+            F.col("doc_id").cast("string"),
             F.lit(":"),
             F.col("r").cast("string"),
         )
     )
     draws = replicas.select(
-        id_col,
+        "doc_id",
         "stratum",
         "weight",
         F.conv(F.substring(h, 1, 6), 16, 10).cast("long").alias("draw"),
     )
-    keyed = draws.groupBy(id_col, "stratum", "weight").agg(
+    keyed = draws.groupBy("doc_id", "stratum", "weight").agg(
         F.min("draw").alias("draw_key")
     )
     rk = F.row_number().over(
-        Window.partitionBy("stratum").orderBy("draw_key", id_col)
+        Window.partitionBy("stratum").orderBy("draw_key", "doc_id")
     )
     return keyed.select(
-        id_col, "stratum", "weight", "draw_key", rk.alias("rk")
+        "doc_id", "stratum", "weight", "draw_key", rk.alias("rk")
     ).filter(F.col("rk") <= k)
 
 
-def leakage_split(
-    docs: DataFrame,
-    ratios: tuple = (80, 10, 10),
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    salt: str = "split",
-) -> DataFrame:
+def leakage_split(docs: DataFrame, ratios: tuple = (80, 10, 10)) -> DataFrame:
     """Leakage-safe train/val/test assignment: the split is drawn per
     DEDUP CLUSTER, not per document, so two copies of the same content
     can never land on opposite sides of the train/eval boundary — the
@@ -1005,7 +902,7 @@ def leakage_split(
 
     Cluster = min doc id over the exact-content fingerprint (callers
     with a near-dup closure should pre-join their cluster id and use
-    it as ``text_col``'s stand-in upstream; the gate logic is
+    it as ``text``'s stand-in upstream; the gate logic is
     identical).  Bucket = leading-16-bit :func:`hex_bucket` of the
     CLUSTER id mod 100 against cumulative ``ratios`` (train/val/test
     percents summing to 100).
@@ -1015,19 +912,19 @@ def leakage_split(
     Scale shape: fingerprints reduce map-side; only (id, fp) rows
     shuffle (text never crosses the wire); the cluster draw is a hash,
     not a rand() — stable under task retry and reproducible from
-    (salt, ratios) alone, epoch-reshuffleable by changing the salt.
+    ('split' salt, ratios) alone.
     The 16-bit-mod-100 bucket has a <0.2% uniformity bias, irrelevant
     for split ratios.
     """
     if len(ratios) != 3 or sum(ratios) != 100:
         raise ValueError(f"ratios must be 3 percents summing to 100: {ratios}")
     t_train, t_val = ratios[0], ratios[0] + ratios[1]
-    base = docs.select(F.col(id_col), F.md5(F.col(text_col)).alias("fp"))
-    clusters = base.groupBy("fp").agg(F.min(id_col).alias("cluster_id"))
-    bucket = (hex_bucket(F.col("cluster_id"), salt, 4) % 100).cast("int")
+    base = docs.select(F.col("doc_id"), F.md5(F.col("text")).alias("fp"))
+    clusters = base.groupBy("fp").agg(F.min("doc_id").alias("cluster_id"))
+    bucket = (hex_bucket(F.col("cluster_id"), "split", 4) % 100).cast("int")
     return (
         base.join(clusters, "fp")
-        .select(id_col, "cluster_id", bucket.alias("bucket"))
+        .select("doc_id", "cluster_id", bucket.alias("bucket"))
         .withColumn(
             "split",
             F.when(F.col("bucket") < t_train, F.lit("train"))
@@ -1037,11 +934,7 @@ def leakage_split(
     )
 
 
-def lang_fertility(
-    df: DataFrame,
-    lang_col: str = "lang",
-    text_col: str = "text",
-) -> DataFrame:
+def lang_fertility(df: DataFrame) -> DataFrame:
     """Per-language tokenizer-fertility profile: characters, UTF-8
     bytes, and whitespace tokens per language, with chars/token and
     bytes/token ratios.
@@ -1067,8 +960,8 @@ def lang_fertility(
     """
     from .exprs import tokens
 
-    txt = F.col(text_col)
-    per = df.groupBy(F.col(lang_col).alias("lang")).agg(
+    txt = F.col("text")
+    per = df.groupBy(F.col("lang")).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size(tokens(txt))).cast("long").alias("n_tokens"),
         F.sum(F.length(txt)).cast("long").alias("n_chars"),
@@ -1094,7 +987,6 @@ def pmi_collocations(
     docs: DataFrame,
     min_count: int = 5,
     top_k: int = 200,
-    text_col: str = "text",
 ) -> DataFrame:
     """Pointwise mutual information over adjacent token bigrams —
     collocation mining: ``pmi = ln(p(w1,w2) / (p(w1)·p(w2)))`` with
@@ -1118,7 +1010,7 @@ def pmi_collocations(
     Returns ``(w1, w2, cnt, pmi, rank)`` — rank by count desc then
     (w1, w2) asc.
     """
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     n = F.size(toks)
     grams = F.zip_with(
         F.slice(toks, 1, n - 1),

@@ -379,13 +379,13 @@ def make_jpeg(w: int, h: int) -> bytes:
     )
 
 
-def make_wav(n_samples: int, rate: int = 8000) -> bytes:
+def make_wav(n_samples: int) -> bytes:
     """A real (stdlib ``wave``-written) mono 8-bit PCM file of silence."""
     buf = io.BytesIO()
     with wave.open(buf, "wb") as wf:
         wf.setnchannels(1)
         wf.setsampwidth(1)
-        wf.setframerate(rate)
+        wf.setframerate(8000)
         wf.writeframes(b"\x80" * n_samples)
     return buf.getvalue()
 
@@ -454,7 +454,7 @@ def make_webp(w: int, h: int) -> bytes:
     return b"RIFF" + struct.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk
 
 
-def synth_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_media(docs: DataFrame) -> DataFrame:
     """documents → media table of VALID container binaries whose dims
     derive from the id (``id%10`` picks
     png/gif/jpeg/wav/bmp/tiff/mp3/flac/ico/webp; width ``16+id%240``,
@@ -506,7 +506,7 @@ def synth_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
             blob = make_mp3(10 + mid % 20)
         return [(mid, types[fmt], blob, mimes[fmt])]
 
-    return map_rows(docs.select(F.col(id_col).alias("media_id")), MEDIA_SCHEMA, media)
+    return map_rows(docs.select(F.col("doc_id").alias("media_id")), MEDIA_SCHEMA, media)
 
 
 # ---------------------------------------------------------------- decode
@@ -518,9 +518,7 @@ def _fake_dims(digest: bytes) -> tuple:
     return w, h, frames
 
 
-def decode_media(
-    df: DataFrame, mode: str = "header", fake: Optional[bool] = None
-) -> DataFrame:
+def decode_media(df: DataFrame, mode: str = "header") -> DataFrame:
     """binary media table → per-item features via mapInPandas.
 
     One Arrow batch crosses the boundary per
@@ -528,10 +526,8 @@ def decode_media(
     payloads stay in executor memory, never on the driver.  ``mode``
     selects header (real stdlib container parse), fake (hash-derived
     pseudo-features), or codec (the NotImplementedError seam for pixel
-    decode).  The legacy ``fake=`` bool maps True→fake, False→codec.
+    decode).
     """
-    if fake is not None:  # legacy signature
-        mode = "fake" if fake else "codec"
     if mode not in ("header", "fake", "codec"):
         raise ValueError(f"unknown decode mode {mode!r}")
     schema = HEADER_SCHEMA if mode == "header" else FEATURE_SCHEMA
@@ -565,15 +561,15 @@ def decode_media(
     return map_rows(projected, schema, features)
 
 
-def docs_as_media(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def docs_as_media(docs: DataFrame) -> DataFrame:
     """Adapter: treat document text bytes as opaque media payloads (the
     deterministic stand-in corpus for the decode plumbing)."""
     return docs.select(
-        F.col(id_col).alias("media_id"),
+        F.col("doc_id").alias("media_id"),
         F.element_at(
             F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-            (F.col(id_col) % 3 + 1).cast("int"),
+            (F.col("doc_id") % 3 + 1).cast("int"),
         ).alias("media_type"),
-        F.encode(F.col(text_col), "utf-8").alias("content"),
+        F.encode(F.col("text"), "utf-8").alias("content"),
         F.lit("application/octet-stream").alias("mime"),
     )

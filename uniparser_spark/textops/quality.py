@@ -35,15 +35,15 @@ def _sw_count(toks: Column, words) -> Column:
     return F.size(F.filter(toks, lambda t: t.isin(*words)))
 
 
-def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def token_stats(df: DataFrame) -> DataFrame:
     """Per-document token counting: whitespace tokens, distinct tokens,
     BPE-ish regex tokens, mean token length (4-dp)."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(toks).alias("n_tokens"),
         F.size(F.array_distinct(toks)).alias("n_distinct_tokens"),
-        F.size(F.regexp_extract_all(F.col(text_col), F.lit(BPE_RE), F.lit(0))).alias(
+        F.size(F.regexp_extract_all(F.col("text"), F.lit(BPE_RE), F.lit(0))).alias(
             "n_bpe_tokens"
         ),
         F.round(
@@ -54,9 +54,7 @@ def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def sentence_stats(
-    df: DataFrame, text_col: str = "page", id_col: str = "doc_id"
-) -> DataFrame:
+def sentence_stats(df: DataFrame) -> DataFrame:
     """Per-document sentence segmentation stats: sequence packers and
     quality filters read these (a doc whose 'sentences' average 3
     tokens is a menu, not prose; one 4,000-token 'sentence' is
@@ -69,7 +67,7 @@ def sentence_stats(
     integer token-count fold is order-independent by construction.
     """
     segs = F.filter(
-        F.split(F.col(text_col), r"[.!?]+"),
+        F.split(F.col("page"), r"[.!?]+"),
         lambda s: F.trim(s) != F.lit(""),
     )
     tok_counts = F.transform(
@@ -78,7 +76,7 @@ def sentence_stats(
     n = F.size(segs)
     total = F.aggregate(tok_counts, F.lit(0), lambda a, x: a + x)
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n.alias("n_sentences"),
         F.when(
             n > 0, F.round(total.cast("double") / n.cast("double"), 4)
@@ -121,9 +119,9 @@ def quality_expr(text_col: str = "text") -> Column:
     )
 
 
-def pred_lang_expr(text_col: str = "text") -> Column:
+def pred_lang_expr() -> Column:
     """Stopword-vote language prediction as one Column expression."""
-    toks = tokens(F.lower(F.col(text_col)))
+    toks = tokens(F.lower(F.col("text")))
     votes = {lang: _sw_count(toks, words) for lang, words in STOPWORDS.items()}
     best = F.greatest(*votes.values())
     return (
@@ -135,27 +133,27 @@ def pred_lang_expr(text_col: str = "text") -> Column:
     )
 
 
-def quality_scores(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def quality_scores(df: DataFrame) -> DataFrame:
     """Heuristic document quality: length score, stopword ratio,
     punctuation ratio, repetition ratio → weighted 0-1 score.
 
     Mirrors the shape of C4/Gopher-style quality rules; every term is a
     built-in expression so the whole score evaluates inside codegen.
     """
-    toks = tokens(F.col(text_col))
-    n_chars = F.length(F.col(text_col)).cast("double")
+    toks = tokens(F.col("text"))
+    n_chars = F.length(F.col("text")).cast("double")
     n_tok = F.size(toks).cast("double")
     sw = _sw_count(toks, STOPWORDS["en"]).cast("double")
     punct = (
         n_chars
-        - F.length(F.regexp_replace(F.col(text_col), r"[^\w\s]", "")).cast("double")
+        - F.length(F.regexp_replace(F.col("text"), r"[^\w\s]", "")).cast("double")
     )
     distinct_ratio = F.size(F.array_distinct(toks)).cast("double") / n_tok
     sw_ratio = sw / n_tok
     punct_ratio = punct / n_chars
-    quality = quality_expr(text_col)
+    quality = quality_expr()
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_chars.cast("long").alias("n_chars"),
         n_tok.cast("long").alias("n_tokens"),
         F.round(sw_ratio, 4).alias("stopword_ratio"),
@@ -165,28 +163,22 @@ def quality_scores(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     )
 
 
-def langid(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def langid(df: DataFrame) -> DataFrame:
     """Stopword-vote language ID (deterministic heuristic).
 
     Vote = count of language-specific stopwords among tokens; prediction
     = argmax with fixed tie-break order en > de > fr > es > und.
     """
-    toks = tokens(F.lower(F.col(text_col)))
+    toks = tokens(F.lower(F.col("text")))
     votes = {lang: _sw_count(toks, words) for lang, words in STOPWORDS.items()}
     return df.select(
-        F.col(id_col),
-        pred_lang_expr(text_col).alias("pred_lang"),
+        F.col("doc_id"),
+        pred_lang_expr().alias("pred_lang"),
         *[votes[lang].alias(f"votes_{lang}") for lang in STOPWORDS],
     )
 
 
-def corpus_filter(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    langs=("en",),
-    min_quality: float = 0.5,
-) -> DataFrame:
+def corpus_filter(df: DataFrame, langs=("en",), min_quality: float = 0.5) -> DataFrame:
     """The composed training-data admission pipeline: language filter +
     quality threshold + exact keep-first dedup, in ONE scan of the
     corpus and ONE shuffle.
@@ -200,39 +192,33 @@ def corpus_filter(
     """
     from pyspark.sql import Window
 
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
+    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     enriched = df.select(
-        F.col(id_col),
-        pred_lang_expr(text_col).alias("pred_lang"),
-        quality_expr(text_col).alias("quality"),
+        F.col("doc_id"),
+        pred_lang_expr().alias("pred_lang"),
+        quality_expr().alias("quality"),
         h16(norm).alias("content_fp"),
     ).filter(F.col("pred_lang").isin(*langs) & (F.col("quality") >= min_quality))
-    keep_first = Window.partitionBy("content_fp").orderBy(id_col)
+    keep_first = Window.partitionBy("content_fp").orderBy("doc_id")
     return (
         enriched.withColumn("_rn", F.row_number().over(keep_first))
         .filter(F.col("_rn") == 1)
-        .select(id_col, "pred_lang", "quality")
+        .select("doc_id", "pred_lang", "quality")
     )
 
 
-def hashed_linear_scores(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    dim: int = 4096,
-    weight_seed: str = "w",
-) -> DataFrame:
+def hashed_linear_scores(df: DataFrame) -> DataFrame:
     """fastText-style hashed linear classifier scoring — the admission
     filter real webtext pipelines run (CCNet/RefinedWeb gate documents
     on a linear model over hashed token/bigram features).
 
     Computation shape (the part that matters at 100 TB): unigram +
-    bigram features hash into ``dim`` buckets, each bucket's weight is
+    bigram features hash into 4096 buckets, each bucket's weight is
     DERIVED IN-LINE from a hash of the bucket index — so scoring is
     explode → map-side-combined groupBy(id), all whole-stage codegen:
     no Python worker, no weight-table join, no shuffle wider than
     (id, int).  Swapping the derived weights for trained ones is a
-    broadcast join against a ``dim``-row table — the plan otherwise
+    broadcast join against a 4096-row table — the plan otherwise
     unchanged.
 
     Weights here are hash-derived integers in [-1000, 1000] (a frozen
@@ -246,21 +232,21 @@ def hashed_linear_scores(
 
     Returns (id, n_feats, w_sum, mean_w, admitted).
     """
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
+    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     toks = tokens(norm)
     feats = F.concat(toks, word_shingles(toks, 2))
     base = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(F.when(norm == "", F.array().cast("array<string>")).otherwise(feats)).alias("_f"),
     )
     bucket = (
         F.conv(F.substring(F.md5(F.col("_f")), 1, 8), 16, 10).cast("long")
-        % dim
+        % 4096
     )
     w = (
         F.conv(
             F.substring(
-                F.md5(F.concat(F.lit(weight_seed), bucket.cast("string"))), 1, 8
+                F.md5(F.concat(F.lit("w"), bucket.cast("string"))), 1, 8
             ),
             16,
             10,
@@ -268,16 +254,16 @@ def hashed_linear_scores(
         % 2001
         - 1000
     )
-    scored = base.select(F.col(id_col), w.alias("_w")).groupBy(id_col).agg(
+    scored = base.select(F.col("doc_id"), w.alias("_w")).groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_feats"),
         F.sum("_w").alias("w_sum"),
     )
-    out = df.select(id_col).join(scored, id_col, "left")
+    out = df.select("doc_id").join(scored, "doc_id", "left")
     mean_w = F.round(
         F.col("w_sum") / (1000.0 * F.col("n_feats")), 6
     )
     return out.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.coalesce(F.col("n_feats"), F.lit(0)).alias("n_feats"),
         F.coalesce(F.col("w_sum"), F.lit(0)).alias("w_sum"),
         mean_w.alias("mean_w"),
@@ -285,12 +271,7 @@ def hashed_linear_scores(
     )
 
 
-def host_quality_stats(
-    df: DataFrame,
-    host_col: str = "host",
-    text_col: str = "text",
-    approx: bool = False,
-) -> DataFrame:
+def host_quality_stats(df: DataFrame, approx: bool = False) -> DataFrame:
     """Per-host reputation: the crawl-side aggregate of the document
     quality signals (docs, decimal-exact summed/mean quality, exact-dup
     fraction).  A frontier scheduler consumes this as a budget/priority
@@ -307,14 +288,14 @@ def host_quality_stats(
     Quality is summed as DECIMAL(18,4) so the double is bit-stable
     across engines (same device as corpus_stats).
     """
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
+    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     base = df.select(
-        F.col(host_col),
-        quality_expr(text_col).cast("decimal(18,4)").alias("q"),
+        F.col("host"),
+        quality_expr().cast("decimal(18,4)").alias("q"),
         h16(norm).alias("fp"),
     )
     return (
-        base.groupBy(host_col)
+        base.groupBy("host")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("q").cast("double").alias("sum_quality"),
@@ -326,7 +307,7 @@ def host_quality_stats(
         # clamp the sketch so dup_frac keeps its documented [0,1) bound.
         .withColumn("n_unique", F.least(F.col("n_docs"), F.col("_n_unique_raw")))
         .select(
-            host_col,
+            "host",
             "n_docs",
             "sum_quality",
             F.round(
@@ -339,13 +320,7 @@ def host_quality_stats(
     )
 
 
-def doc_fingerprints(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 4,
-    impl: str = "pandas",
-) -> DataFrame:
+def doc_fingerprints(df: DataFrame, k: int = 4, impl: str = "pandas") -> DataFrame:
     """Document fingerprinting: whole-doc content hash over normalized
     text plus a winnowing-style min-gram fingerprint (min of word
     k-gram hashes — stable under local edits).
@@ -356,18 +331,18 @@ def doc_fingerprints(
     values are identical either way.
     """
     if impl == "expr":
-        norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
+        norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
         toks = tokens(norm)
         grams = word_shingles(toks, k)
         return df.select(
-            F.col(id_col),
+            F.col("doc_id"),
             h16(norm).alias("content_fp"),
             F.array_min(F.transform(grams, h16)).alias("min_gram_fp"),
         )
 
     schema = StructType(
         [
-            StructField(id_col, LongType(), False),
+            StructField("doc_id", LongType(), False),
             StructField("content_fp", StringType(), True),
             StructField("min_gram_fp", StringType(), True),
         ]
@@ -383,16 +358,10 @@ def doc_fingerprints(
         mfp = min(md5(g.encode()).hexdigest()[:16] for g in grams) if grams else None
         return [(doc_id, md5(norm.encode()).hexdigest()[:16], mfp)]
 
-    return map_rows(df.select(id_col, text_col), schema, fingerprints)
+    return map_rows(df.select("doc_id", "text"), schema, fingerprints)
 
 
-def winnow_fingerprints(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 4,
-    w: int = 4,
-) -> DataFrame:
+def winnow_fingerprints(df: DataFrame, k: int = 4, w: int = 4) -> DataFrame:
     """Winnowing fingerprint selection (Schleimer/Wilkerson/Aiken, the
     MOSS algorithm): from each doc's word ``k``-gram hash sequence,
     every window of ``w`` consecutive hashes contributes its minimum
@@ -419,7 +388,7 @@ def winnow_fingerprints(
     """
     schema = StructType(
         [
-            StructField(id_col, LongType(), False),
+            StructField("doc_id", LongType(), False),
             StructField("pos", IntegerType(), False),
             StructField("fp", StringType(), False),
         ]
@@ -444,15 +413,10 @@ def winnow_fingerprints(
             sel.add((best_pos, hs[best_pos]))
         return [(doc_id, pos, fp) for pos, fp in sel]
 
-    return map_rows(df.select(id_col, text_col), schema, winnow)
+    return map_rows(df.select("doc_id", "text"), schema, winnow)
 
 
-def doc_keywords(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-) -> DataFrame:
+def doc_keywords(df: DataFrame, k: int = 3) -> DataFrame:
     """TF-IDF keyword extraction per document — the training-data
     pipeline's cheap topical signal (corpus mixing, domain filters,
     retrieval labels) without any model.
@@ -469,16 +433,16 @@ def doc_keywords(
     engine's standard whitespace tokens (case-sensitive, same as every
     other textops operator).
     """
-    toks = tokens(F.col(text_col))
-    terms = df.select(F.col(id_col), F.explode(toks).alias("term"))
-    tf = terms.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    toks = tokens(F.col("text"))
+    terms = df.select(F.col("doc_id"), F.explode(toks).alias("term"))
+    tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n_docs = df.select(F.countDistinct(id_col).alias("n_docs"))
+    n_docs = df.select(F.countDistinct("doc_id").alias("n_docs"))
     scored = (
         tf.join(dfreq, "term")
         .crossJoin(F.broadcast(n_docs))
         .select(
-            id_col,
+            "doc_id",
             "term",
             F.round(
                 F.col("tf").cast("double")
@@ -490,10 +454,10 @@ def doc_keywords(
             ).alias("score"),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(F.col("score").desc(), F.col("term").asc())
+    w = Window.partitionBy("doc_id").orderBy(F.col("score").desc(), F.col("term").asc())
     topk = scored.withColumn("_rk", F.row_number().over(w)).filter(F.col("_rk") <= k)
     return (
-        topk.groupBy(id_col)
+        topk.groupBy("doc_id")
         .agg(
             F.max(F.when(F.col("_rk") == 1, F.col("score"))).alias("top_score"),
             F.array_join(
@@ -512,11 +476,7 @@ def doc_keywords(
     )
 
 
-def readability_scores(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def readability_scores(df: DataFrame) -> DataFrame:
     """Flesch reading-ease as a webtext quality feature — rational
     arithmetic end-to-end (206.835 − 1.015·words/sentences −
     84.6·syllables/words), so the doubles hash-match the DuckDB twin.
@@ -532,8 +492,8 @@ def readability_scores(
     coarse band (easy ≥ 60 / medium ≥ 30 / hard) a corpus filter can
     cut on directly.
     """
-    t = F.lower(F.col(text_col))
-    n_words = F.greatest(F.size(tokens(F.col(text_col))), F.lit(1)).cast("double")
+    t = F.lower(F.col("text"))
+    n_words = F.greatest(F.size(tokens(F.col("text"))), F.lit(1)).cast("double")
     n_sents = F.greatest(
         F.size(F.regexp_extract_all(t, F.lit(r"[.!?]+"), F.lit(0))), F.lit(1)
     ).cast("double")
@@ -547,7 +507,7 @@ def readability_scores(
         - F.lit(84.6) * (n_syll / n_words)
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_words.cast("long").alias("n_words"),
         n_sents.cast("long").alias("n_sentences"),
         n_syll.cast("long").alias("n_syllables"),
@@ -568,12 +528,7 @@ _SCRIPTS = [
 ]
 
 
-def script_profile(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    keep_cols: tuple = (),
-) -> DataFrame:
+def script_profile(df: DataFrame, keep_cols: tuple = ()) -> DataFrame:
     """Unicode-script character profile — the writing-system signal the
     n-gram ``langid`` can't give (langid's stopword vote only separates
     languages that SHARE a script; routing a multilingual crawl first
@@ -587,7 +542,7 @@ def script_profile(
     and RE2/DuckDB's ``Latin`` classes resolve to the same Unicode
     script property, verified value-identical on mixed-script fixtures.
     One projected scan, no shuffle."""
-    text = F.col(text_col)
+    text = F.col("text")
     n = F.length(text)
     counts = {
         name: (
@@ -604,7 +559,7 @@ def script_profile(
         .otherwise("other")
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.col(c) for c in keep_cols],
         n.cast("long").alias("n_chars"),
         counts["latin"].alias("latin"),
@@ -616,12 +571,7 @@ def script_profile(
     )
 
 
-def length_distribution(
-    df: DataFrame,
-    by=("lang", "source"),
-    text_col: str = "text",
-    approx: bool = False,
-) -> DataFrame:
+def length_distribution(df: DataFrame, approx: bool = False) -> DataFrame:
     """Sequence-length distribution per corpus stratum — the sizing
     report every training-data mix decision starts from (context-window
     fit, packing efficiency, per-source token budgets).
@@ -641,9 +591,9 @@ def length_distribution(
     One scan: token counts are codegen; the groupBy shuffles one
     ``(lang, source, n)`` row per doc.
     """
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     staged = df.select(
-        *[F.col(c) for c in by], F.size(toks).cast("long").alias("n")
+        "lang", "source", F.size(toks).cast("long").alias("n")
     )
     if approx:
         pct = F.approx_percentile(
@@ -653,14 +603,15 @@ def length_distribution(
         pct = F.percentile(
             F.col("n"), F.array(F.lit(0.1), F.lit(0.5), F.lit(0.9))
         )
-    agg = staged.groupBy(*by).agg(
+    agg = staged.groupBy("lang", "source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n").alias("total_tokens"),
         pct.alias("_p"),
     )
     p = lambda i: F.col("_p").getItem(i).cast("double")
     return agg.select(
-        *by,
+        "lang",
+        "source",
         "n_docs",
         "total_tokens",
         F.round(p(0), 4).alias("p10_tokens"),
@@ -674,11 +625,7 @@ def length_distribution(
     )
 
 
-def zipf_fit(
-    df: DataFrame,
-    text_col: str = "text",
-    top_n: int = 256,
-) -> DataFrame:
+def zipf_fit(df: DataFrame, top_n: int = 256) -> DataFrame:
     """Corpus-level Zipf audit: least-squares slope of
     ``ln(frequency) ~ ln(rank)`` over the top-``top_n`` vocabulary.
 
@@ -704,7 +651,7 @@ def zipf_fit(
     cross-engine float contract).
     """
     counts = (
-        df.select(F.explode(tokens(F.col(text_col))).alias("token"))
+        df.select(F.explode(tokens(F.col("text"))).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -745,12 +692,7 @@ LANG_SCRIPT_EXPECTATIONS = {
 }
 
 
-def lang_script_check(
-    df: DataFrame,
-    lang_col: str = "lang",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def lang_script_check(df: DataFrame) -> DataFrame:
     """Declared-language vs dominant-script consistency check — the
     cheapest high-precision mislabel detector in a cleaning stack: a
     page tagged ``zh`` whose characters are overwhelmingly Latin is
@@ -765,16 +707,16 @@ def lang_script_check(
     verdict ∈ {ok, mismatch, no_expectation}.
     """
     base = df.select(
-        F.col(id_col), F.col(lang_col).alias("lang"), F.col(text_col)
+        F.col("doc_id"), F.col("lang"), F.col("text")
     )
-    prof = script_profile(base, text_col, id_col, keep_cols=("lang",))
+    prof = script_profile(base, keep_cols=("lang",))
     expected = F.lit(None).cast("string")
     for code, script in sorted(LANG_SCRIPT_EXPECTATIONS.items()):
         expected = F.when(F.col("lang") == code, F.lit(script)).otherwise(
             expected
         )
     return prof.select(
-        id_col,
+        "doc_id",
         "lang",
         "main_script",
         expected.alias("expected_script"),
@@ -785,12 +727,7 @@ def lang_script_check(
     )
 
 
-def host_yield(
-    pages: DataFrame,
-    host_col: str = "host",
-    html_col: str = "html",
-    text_col: str = "text",
-) -> DataFrame:
+def host_yield(pages: DataFrame) -> DataFrame:
     """Crawl economics per host: tokens of USABLE text produced per
     megabyte of HTML fetched.  Two hosts with identical page counts
     can differ 100× in yield (markup-heavy template sites vs article
@@ -807,13 +744,13 @@ def host_yield(
     """
     from .exprs import tokens
 
-    html_b = F.octet_length(F.col(html_col))
-    text_b = F.octet_length(F.col(text_col))
-    per = pages.groupBy(F.col(host_col).alias("host")).agg(
+    html_b = F.octet_length(F.col("html"))
+    text_b = F.octet_length(F.col("text"))
+    per = pages.groupBy(F.col("host")).agg(
         F.count(F.lit(1)).alias("n_pages"),
         F.sum(html_b).cast("long").alias("fetched_bytes"),
         F.sum(text_b).cast("long").alias("_text_bytes"),
-        F.sum(F.size(tokens(F.col(text_col)))).cast("long").alias("n_tokens"),
+        F.sum(F.size(tokens(F.col("text")))).cast("long").alias("n_tokens"),
     )
     return per.select(
         "host",
@@ -829,14 +766,7 @@ def host_yield(
     )
 
 
-def stopword_candidates(
-    df: DataFrame,
-    lang_col: str = "lang",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_df_ratio: float = 0.5,
-    top_k: int = 20,
-) -> DataFrame:
+def stopword_candidates(df: DataFrame, min_df_ratio: float = 0.5) -> DataFrame:
     """Empirical per-language stopword discovery: tokens present in at
     least ``min_df_ratio`` of a language's documents, ranked by
     document frequency.  Hand-curated stopword lists don't exist for
@@ -849,23 +779,23 @@ def stopword_candidates(
     broadcast; the rank window runs over the already-thresholded
     head (≤ vocabulary passing 50% df — dozens of rows per language).
 
-    Returns ``(lang, token, df, df_ratio, rank)`` — top ``top_k`` per
+    Returns ``(lang, token, df, df_ratio, rank)`` — top 20 per
     language, ties by token asc; ratio rounded to 4 dp.
     """
     from .exprs import tokens
 
     post = (
         df.select(
-            F.col(lang_col).alias("lang"),
-            F.col(id_col),
-            F.explode(tokens(F.col(text_col))).alias("token"),
+            F.col("lang"),
+            F.col("doc_id"),
+            F.explode(tokens(F.col("text"))).alias("token"),
         )
         .distinct()
         .groupBy("lang", "token")
         .agg(F.count(F.lit(1)).alias("df"))
     )
-    ndocs = df.groupBy(F.col(lang_col).alias("lang")).agg(
-        F.countDistinct(id_col).alias("_n")
+    ndocs = df.groupBy(F.col("lang")).agg(
+        F.countDistinct("doc_id").alias("_n")
     )
     ranked = (
         post.join(F.broadcast(ndocs), "lang")
@@ -878,7 +808,7 @@ def stopword_candidates(
                 )
             ),
         )
-        .filter(F.col("rank") <= top_k)
+        .filter(F.col("rank") <= 20)
     )
     return ranked.select(
         "lang",

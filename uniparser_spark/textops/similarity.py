@@ -42,37 +42,31 @@ def _as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def cosine_topk(
-    emb: DataFrame,
-    n_queries: int = 8,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_topk(emb: DataFrame, n_queries: int = 8, k: int = 5) -> DataFrame:
     """Exact brute-force cosine top-k: for each query vector (id <
     n_queries) the k nearest corpus vectors (self excluded).
 
     Returns (qid, vec_id, sim) with sim rounded to 6 dp; ordering ties
     broken by vec_id so results are deterministic.
     """
-    base = emb.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-    q = base.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("qid"), F.col("v").alias("qv")
+    base = emb.select(F.col("vec_id"), _as_double(F.col("embedding")).alias("v"))
+    q = base.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
     )
     sims = (
         base.crossJoin(F.broadcast(q))
-        .where(F.col(id_col) != F.col("qid"))
+        .where(F.col("vec_id") != F.col("qid"))
         .select(
             "qid",
-            F.col(id_col),
+            F.col("vec_id"),
             F.round(cosine(F.col("qv"), F.col("v")), 6).alias("sim"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.col(id_col))
+    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.col("vec_id"))
     return (
         sims.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
-        .select("qid", id_col, "sim")
+        .select("qid", "vec_id", "sim")
     )
 
 
@@ -80,17 +74,15 @@ def embedding_dup_pairs(
     emb: DataFrame,
     threshold: float = 0.9,
     max_id: int = 300,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs (id1 < id2, sim ≥ threshold) over
     the capped id range — the quadratic verifier; the scale composition
     is ``embedding_verified_pairs`` (LSH candidates → exact verify)."""
-    base = emb.filter(F.col(id_col) < max_id).select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("v")
+    base = emb.filter(F.col("vec_id") < max_id).select(
+        F.col("vec_id"), _as_double(F.col("embedding")).alias("v")
     )
-    a = base.select(F.col(id_col).alias("id1"), F.col("v").alias("v1"))
-    b = base.select(F.col(id_col).alias("id2"), F.col("v").alias("v2"))
+    a = base.select(F.col("vec_id").alias("id1"), F.col("v").alias("v1"))
+    b = base.select(F.col("vec_id").alias("id2"), F.col("v").alias("v2"))
     return (
         a.join(b, F.col("id1") < F.col("id2"))
         .select(
@@ -134,8 +126,6 @@ def rhp_signatures(
     n_planes: int = 6,
     dims: int = 64,
     n_tables: Optional[int] = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Per-vector RHP-LSH bucket(s) via an Arrow pandas UDF.
 
@@ -168,7 +158,7 @@ def rhp_signatures(
     )
     schema = StructType(
         [
-            StructField(id_col, LongType(), False),
+            StructField("vec_id", LongType(), False),
             StructField("v", ArrayType(DoubleType()), False),
             bucket_field,
         ]
@@ -193,7 +183,7 @@ def rhp_signatures(
                     bucket += (acc >= 0).astype(np.int64) << p
                 per_table.append(bucket)
             out = {
-                id_col: batch[id_col].astype("int64"),
+                "vec_id": batch["vec_id"].astype("int64"),
                 "v": batch["v"],
             }
             if multi:
@@ -203,7 +193,7 @@ def rhp_signatures(
                 out["bucket"] = pd.Series(per_table[0])
             yield pd.DataFrame(out)
 
-    base = emb.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
+    base = emb.select(F.col("vec_id"), _as_double(F.col("embedding")).alias("v"))
     return base.mapInPandas(run, schema=schema)
 
 
@@ -213,8 +203,6 @@ def rhp_lsh_topk(
     k: int = 5,
     n_planes: int = 6,
     dims: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: single-table LSH-bucket candidate generation +
     exact cosine rerank within the query's bucket.
@@ -225,29 +213,29 @@ def rhp_lsh_topk(
     recall-hardened variant.
     """
     sig = rhp_signatures(
-        emb, n_planes=n_planes, dims=dims, id_col=id_col, vec_col=vec_col
+        emb, n_planes=n_planes, dims=dims
     )
     # filter BEFORE the signature UDF on the query branch: Catalyst
     # cannot push a filter through mapInPandas, so building q from sig
     # would re-sign the whole corpus just to keep n_queries rows
     q = rhp_signatures(
-        emb.filter(F.col(id_col) < n_queries),
-        n_planes=n_planes, dims=dims, id_col=id_col, vec_col=vec_col,
-    ).select(F.col(id_col).alias("qid"), F.col("v").alias("qv"), F.col("bucket"))
+        emb.filter(F.col("vec_id") < n_queries),
+        n_planes=n_planes, dims=dims,
+    ).select(F.col("vec_id").alias("qid"), F.col("v").alias("qv"), F.col("bucket"))
     cands = (
         sig.join(F.broadcast(q), "bucket")
-        .where(F.col(id_col) != F.col("qid"))
+        .where(F.col("vec_id") != F.col("qid"))
         .select(
             "qid",
-            F.col(id_col),
+            F.col("vec_id"),
             F.round(cosine(F.col("qv"), F.col("v")), 6).alias("sim"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.col(id_col))
+    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.col("vec_id"))
     return (
         cands.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
-        .select("qid", id_col, "sim")
+        .select("qid", "vec_id", "sim")
     )
 
 
@@ -258,8 +246,6 @@ def rhp_multiprobe_topk(
     n_planes: int = 6,
     dims: int = 64,
     n_tables: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Recall-hardened ANN: candidates are the UNION over ``n_tables``
     independent hash tables of same-bucket vectors (classic OR'd-table
@@ -274,37 +260,34 @@ def rhp_multiprobe_topk(
         n_planes=n_planes,
         dims=dims,
         n_tables=n_tables,
-        id_col=id_col,
-        vec_col=vec_col,
     )
     e = sig.select(
-        F.col(id_col), F.col("v"), F.posexplode("buckets").alias("t", "bucket")
+        F.col("vec_id"), F.col("v"), F.posexplode("buckets").alias("t", "bucket")
     )
     # query branch: filter below the signature UDF (see rhp_lsh_topk)
     q = rhp_signatures(
-        emb.filter(F.col(id_col) < n_queries),
+        emb.filter(F.col("vec_id") < n_queries),
         n_planes=n_planes, dims=dims, n_tables=n_tables,
-        id_col=id_col, vec_col=vec_col,
     ).select(
-        F.col(id_col).alias("qid"),
+        F.col("vec_id").alias("qid"),
         F.col("v").alias("qv"),
         F.posexplode("buckets").alias("t", "bucket"),
     )
     cands = (
         e.join(F.broadcast(q), ["t", "bucket"])
-        .where(F.col(id_col) != F.col("qid"))
+        .where(F.col("vec_id") != F.col("qid"))
         .select(
             "qid",
-            F.col(id_col),
+            F.col("vec_id"),
             F.round(cosine(F.col("qv"), F.col("v")), 6).alias("sim"),
         )
-        .dropDuplicates(["qid", id_col])
+        .dropDuplicates(["qid", "vec_id"])
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.col(id_col))
+    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.col("vec_id"))
     return (
         cands.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
-        .select("qid", id_col, "sim")
+        .select("qid", "vec_id", "sim")
     )
 
 
@@ -316,8 +299,6 @@ def rhp_candidate_pairs(
     n_planes: int = 10,
     dims: int = 64,
     n_tables: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """LSH near-dup candidate pairs (id1 < id2, distinct): two vectors
     are candidates iff they share a bucket in ANY of the OR'd tables.
@@ -331,19 +312,17 @@ def rhp_candidate_pairs(
         n_planes=n_planes,
         dims=dims,
         n_tables=n_tables,
-        id_col=id_col,
-        vec_col=vec_col,
     )
     narrow = sig.select(
-        F.col(id_col), F.posexplode("buckets").alias("t", "bucket")
+        F.col("vec_id"), F.posexplode("buckets").alias("t", "bucket")
     ).localCheckpoint(eager=False)
     a, b = narrow.alias("a"), narrow.alias("b")
     return (
         a.join(b, ["t", "bucket"])
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .where(F.col("a.vec_id") < F.col("b.vec_id"))
         .select(
-            F.col(f"a.{id_col}").alias("id1"),
-            F.col(f"b.{id_col}").alias("id2"),
+            F.col("a.vec_id").alias("id1"),
+            F.col("b.vec_id").alias("id2"),
         )
         .distinct()
     )
@@ -355,8 +334,6 @@ def embedding_verified_pairs(
     n_planes: int = 10,
     dims: int = 64,
     n_tables: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """The production embedding near-dup pipeline: RHP-LSH candidate
     generation followed by exact cosine verification of ONLY the
@@ -380,20 +357,18 @@ def embedding_verified_pairs(
         n_planes=n_planes,
         dims=dims,
         n_tables=n_tables,
-        id_col=id_col,
-        vec_col=vec_col,
     ).localCheckpoint(eager=True)
     cand_ids = (
-        pairs.select(F.col("id1").alias(id_col))
-        .union(pairs.select(F.col("id2").alias(id_col)))
+        pairs.select(F.col("id1").alias("vec_id"))
+        .union(pairs.select(F.col("id2").alias("vec_id")))
         .distinct()
     )
     vecs = (
-        emb.join(cand_ids, id_col, "left_semi")
-        .select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
+        emb.join(cand_ids, "vec_id", "left_semi")
+        .select(F.col("vec_id"), _as_double(F.col("embedding")).alias("v"))
     )
-    a = vecs.select(F.col(id_col).alias("id1"), F.col("v").alias("v1"))
-    b = vecs.select(F.col(id_col).alias("id2"), F.col("v").alias("v2"))
+    a = vecs.select(F.col("vec_id").alias("id1"), F.col("v").alias("v1"))
+    b = vecs.select(F.col("vec_id").alias("id2"), F.col("v").alias("v2"))
     joined = pairs.join(a, "id1").join(b, "id2")
 
     schema = StructType(
@@ -442,8 +417,6 @@ def ivf_topk(
     nprobe: int = 4,
     n_queries: int = 8,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-flat approximate nearest neighbor: the inverted-file scale
     path next to the RHP-LSH family (``rhp_lsh_topk``).
@@ -465,9 +438,9 @@ def ivf_topk(
     the cell id — corpus embeddings never shuffle, and the exact-rerank
     work is |probed cells| / n_cells of brute force.  Recall/cost vs
     the exact baseline is pinned in tests/test_textops.py."""
-    base = emb.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-    cents = base.filter(F.col(id_col) < n_cells).select(
-        F.col(id_col).alias("cell"), F.col("v").alias("cv")
+    base = emb.select(F.col("vec_id"), _as_double(F.col("embedding")).alias("v"))
+    cents = base.filter(F.col("vec_id") < n_cells).select(
+        F.col("vec_id").alias("cell"), F.col("v").alias("cv")
     )
     # cell index: one broadcast pass, argmax over n_cells sims.  The
     # argmax is a max_by-style struct aggregation, NOT a window: all
@@ -479,12 +452,12 @@ def ivf_topk(
     cells = (
         base.crossJoin(F.broadcast(cents))
         .select(
-            id_col,
+            "vec_id",
             "v",
             "cell",
             F.round(cosine(F.col("cv"), F.col("v")), 6).alias("csim"),
         )
-        .groupBy(id_col)
+        .groupBy("vec_id")
         .agg(
             F.max(
                 F.struct(
@@ -495,11 +468,11 @@ def ivf_topk(
             ).alias("m"),
             F.first("v").alias("v"),
         )
-        .select(id_col, "v", F.col("m.cell").alias("cell"))
+        .select("vec_id", "v", F.col("m.cell").alias("cell"))
     )
     # probe list: per query the nprobe nearest cells (tiny, broadcast)
-    q = base.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("qid"), F.col("v").alias("qv")
+    q = base.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
     )
     pw = Window.partitionBy("qid").orderBy(F.desc("psim"), F.col("cell"))
     probes = (
@@ -517,27 +490,22 @@ def ivf_topk(
     # exact rerank restricted to probed cells
     sims = (
         cells.join(F.broadcast(probes), "cell")
-        .where(F.col(id_col) != F.col("qid"))
+        .where(F.col("vec_id") != F.col("qid"))
         .select(
             "qid",
-            F.col(id_col),
+            F.col("vec_id"),
             F.round(cosine(F.col("qv"), F.col("v")), 6).alias("sim"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.col(id_col))
+    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.col("vec_id"))
     return (
         sims.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
-        .select("qid", id_col, "sim")
+        .select("qid", "vec_id", "sim")
     )
 
 
-def centroid_assign(
-    emb: DataFrame,
-    k: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def centroid_assign(emb: DataFrame, k: int = 8) -> DataFrame:
     """Nearest-centroid assignment — the E-step of spherical k-means,
     used standalone for corpus diversity bucketing (balance a training
     mix across semantic clusters, or cap per-cluster contributions the
@@ -556,18 +524,18 @@ def centroid_assign(
     co-located so the partial aggregate combines map-side and the
     Exchange carries one narrow (id, centroid, sim) row per vector; no
     wide shuffle of embeddings, no window sort."""
-    base = emb.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-    cents = base.filter(F.col(id_col) < k).select(
-        F.col(id_col).alias("centroid_id"), F.col("v").alias("cv")
+    base = emb.select(F.col("vec_id"), _as_double(F.col("embedding")).alias("v"))
+    cents = base.filter(F.col("vec_id") < k).select(
+        F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv")
     )
     sims = base.crossJoin(F.broadcast(cents)).select(
-        id_col,
+        "vec_id",
         "centroid_id",
         F.round(cosine(F.col("cv"), F.col("v")), 6).alias("sim"),
     )
     # tie-break (desc sim, asc centroid_id) == max of (sim, -centroid_id)
     return (
-        sims.groupBy(id_col)
+        sims.groupBy("vec_id")
         .agg(
             F.max(
                 F.struct(
@@ -577,15 +545,11 @@ def centroid_assign(
                 )
             ).alias("m")
         )
-        .select(id_col, F.col("m.centroid_id").alias("centroid_id"), F.col("m.sim").alias("sim"))
+        .select("vec_id", F.col("m.centroid_id").alias("centroid_id"), F.col("m.sim").alias("sim"))
     )
 
 
-def quantize_audit(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def quantize_audit(emb: DataFrame) -> DataFrame:
     """Symmetric-absmax int8 quantization audit — the fidelity check run
     before an ANN deployment swaps float32 vectors for int8 (4x smaller
     index, SIMD int dot products).  Per vector: quantize with
@@ -604,19 +568,19 @@ def quantize_audit(
     left-fold the DuckDB oracle reproduces exactly (see .exprs.dot),
     and round() on positives agrees across both engines.
     """
-    v = _as_double(F.col(vec_col))
-    base = emb.select(F.col(id_col), v.alias("v"))
+    v = _as_double(F.col("embedding"))
+    base = emb.select(F.col("vec_id"), v.alias("v"))
     absmax = F.array_max(F.transform(F.col("v"), F.abs))
     scale = absmax / F.lit(127.0)
     dq = F.transform(
         F.col("v"), lambda x: F.round(x / F.col("_scale"), 0) * F.col("_scale")
     )
     staged = base.select(
-        F.col(id_col),
+        F.col("vec_id"),
         "v",
         scale.alias("_scale"),
     ).select(
-        F.col(id_col),
+        F.col("vec_id"),
         "v",
         "_scale",
         F.when(F.col("_scale") == 0.0, F.col("v")).otherwise(dq).alias("_dq"),
@@ -635,7 +599,7 @@ def quantize_audit(
         )
     )
     return staged.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.size("v").alias("n_dims"),
         F.round("_scale", 10).alias("scale"),
         F.round(F.array_max(F.transform(err, F.abs)), 8).alias("max_abs_err"),
@@ -650,8 +614,6 @@ def hard_negatives(
     k: int = 3,
     dup_threshold: float = 0.9,
     floor: float = 0.0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Hard-negative mining for contrastive / bi-encoder training: per
     anchor (id < ``n_queries``), the ``k`` most-similar corpus vectors
@@ -675,34 +637,29 @@ def hard_negatives(
     Returns ``(qid, vec_id, rank, sim)`` — rank 1 = hardest negative;
     sim rounded to 6 dp before ranking, ties broken by ``vec_id``.
     """
-    base = emb.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-    q = base.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("qid"), F.col("v").alias("qv")
+    base = emb.select(F.col("vec_id"), _as_double(F.col("embedding")).alias("v"))
+    q = base.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
     )
     sims = (
         base.crossJoin(F.broadcast(q))
-        .where(F.col(id_col) != F.col("qid"))
+        .where(F.col("vec_id") != F.col("qid"))
         .select(
             "qid",
-            F.col(id_col),
+            F.col("vec_id"),
             F.round(cosine(F.col("qv"), F.col("v")), 6).alias("sim"),
         )
         .filter((F.col("sim") < dup_threshold) & (F.col("sim") >= floor))
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.col(id_col))
+    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.col("vec_id"))
     return (
         sims.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("qid", id_col, "rank", "sim")
+        .select("qid", "vec_id", "rank", "sim")
     )
 
 
-def centroid_update(
-    emb: DataFrame,
-    k: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def centroid_update(emb: DataFrame, k: int = 8) -> DataFrame:
     """One full Lloyd iteration (E+M step) of spherical k-means:
     assign every vector to its nearest centroid (:func:`centroid_assign`
     semantics — deterministic id<k init, broadcast centroids, max_by
@@ -727,14 +684,14 @@ def centroid_update(
     (cohesion), and the L2 distance the centroid moved (convergence
     signal), both rounded.
     """
-    base = emb.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-    assigned = centroid_assign(emb, k, id_col, vec_col)
+    base = emb.select(F.col("vec_id"), _as_double(F.col("embedding")).alias("v"))
+    assigned = centroid_assign(emb, k)
     # barrier: members is referenced by BOTH the M-step sums and the
     # cohesion aggregate — unchecked, the assignment cross-product runs
     # twice (measured 17 Exchanges -> 5).  Caching assignment+vector is
     # the canonical k-means trade (every implementation persists the
     # dataset between iterations); it is |corpus| x dim doubles.
-    members = assigned.join(base, id_col).localCheckpoint(eager=False)
+    members = assigned.join(base, "vec_id").localCheckpoint(eager=False)
     sums = (
         members.select(
             "centroid_id", "sim", F.posexplode("v").alias("dim", "x")
@@ -751,8 +708,8 @@ def centroid_update(
     cohesion = members.groupBy("centroid_id").agg(
         F.round(F.avg("sim"), 6).alias("mean_sim")
     )
-    old_c = base.filter(F.col(id_col) < k).select(
-        F.col(id_col).alias("centroid_id"), F.col("v").alias("_oc")
+    old_c = base.filter(F.col("vec_id") < k).select(
+        F.col("vec_id").alias("centroid_id"), F.col("v").alias("_oc")
     )
     diff2 = F.aggregate(
         F.zip_with(
@@ -775,12 +732,7 @@ def centroid_update(
     )
 
 
-def embedding_health(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    expected_dim: int = 64,
-) -> DataFrame:
+def embedding_health(emb: DataFrame, expected_dim: int = 64) -> DataFrame:
     """Index-health audit an ANN build should run BEFORE spending a
     cluster-day on it: one row summarizing everything that silently
     breaks similarity search — NULL vectors, wrong dimensionality,
@@ -796,7 +748,7 @@ def embedding_health(
     Returns ``(n_vecs, n_null, n_wrong_dim, n_nonfinite, n_zero_norm,
     norm_p10, norm_p50, norm_p90)``, norms rounded to 4 dp.
     """
-    v = F.col(vec_col)
+    v = F.col("embedding")
     dv = F.transform(v, lambda x: x.cast("double"))
     nonfinite = F.exists(dv, lambda x: x.isNaN() | (F.abs(x) > 1e308))
     norm2 = F.aggregate(dv, F.lit(0.0), lambda a, x: a + x * x)

@@ -73,9 +73,7 @@ def page_structure(html: str) -> Tuple[str, int, int, Optional[str], int]:
     )
 
 
-def template_stats(
-    struct: DataFrame, host_col: str = "host", fp_col: str = "template_fp"
-) -> DataFrame:
+def template_stats(struct: DataFrame) -> DataFrame:
     """Per-host template census over :func:`dom_structure` output:
     ``(host, n_pages, n_templates, top_fp, top_share)``.  Top template
     under a (count desc, fp asc) total order; share rounded to 4 dp.
@@ -83,7 +81,7 @@ def template_stats(
     from pyspark.sql import functions as F
 
     per = struct.groupBy(
-        F.col(host_col).alias("host"), F.col(fp_col).alias("fp")
+        F.col("host"), F.col("template_fp").alias("fp")
     ).agg(F.count(F.lit(1)).alias("n"))
     return (
         per.groupBy("host")
@@ -105,16 +103,14 @@ def template_stats(
     )
 
 
-def dom_structure(
-    df: DataFrame, html_col: str = "html", id_col: str = "doc_id"
-) -> DataFrame:
+def dom_structure(df: DataFrame) -> DataFrame:
     """Structural fingerprint per page as one Arrow crossing."""
     schema = (
-        f"{id_col} long, template_fp string, n_nodes int, max_depth int, "
+        "doc_id long, template_fp string, n_nodes int, max_depth int, "
         "heading_seq string, n_headings int"
     )
     return map_rows(
-        df.select(id_col, html_col), schema, lambda i, h: [(i, *page_structure(h))]
+        df.select("doc_id", "html"), schema, lambda i, h: [(i, *page_structure(h))]
     )
 
 
@@ -166,9 +162,7 @@ def page_tables(html: str) -> list:
     return out
 
 
-def extract_tables(
-    df: DataFrame, html_col: str = "html", id_col: str = "doc_id"
-) -> DataFrame:
+def extract_tables(df: DataFrame) -> DataFrame:
     """HTML table extraction: one output row per ``<tr>`` across every
     page — the batch Spark form of the table-scraping rules users write
     against the reference engine one CSS selector at a time.
@@ -181,11 +175,11 @@ def extract_tables(
     are ordinary DataFrame ops on this flat relation.
     """
     schema = (
-        f"{id_col} long, table_idx int, row_idx int, is_header int, "
+        "doc_id long, table_idx int, row_idx int, is_header int, "
         "n_cells int, cells string"
     )
     return map_rows(
-        df.select(id_col, html_col),
+        df.select("doc_id", "html"),
         schema,
         lambda i, h: [(i, *row) for row in page_tables(h)],
     )
