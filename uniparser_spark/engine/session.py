@@ -18,10 +18,13 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import weakref
 from pathlib import Path
 from typing import Optional
 
 from pyspark.sql import SparkSession
+
+_SHIPPED = weakref.WeakSet()  # SparkContexts that already hold the package archive
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -29,17 +32,18 @@ def ship_package(spark: SparkSession) -> None:
     driver's cwd — the local-mode equivalent of
     ``spark-submit --py-files uniparser_spark.zip``.  Once per
     SparkContext: a context that already holds the archive keeps it."""
+    sc = spark.sparkContext
+    if sc in _SHIPPED:
+        return
     pkg_dir = Path(__file__).resolve().parent.parent
     if not pkg_dir.is_dir():
         # imported from a --py-files zip: the package is already shipped
         # (and there is no directory tree to re-archive)
         return
-    sc = spark.sparkContext
     zip_base = Path(tempfile.gettempdir()) / f"uniparser_spark_pyfiles_{os.getpid()}"
-    if any(f.endswith(f"/{zip_base.name}.zip") for f in sc.listFiles):
-        return
     archive = shutil.make_archive(str(zip_base), "zip", root_dir=pkg_dir.parent, base_dir=pkg_dir.name)
     sc.addPyFile(archive)
+    _SHIPPED.add(sc)
 
 
 def get_spark(
