@@ -152,11 +152,12 @@ def _crawl_state(eng, seeds) -> dict:
 # ("udf", url) runs the crashing step on pages that fail in a pandas UDF
 # at url, so the round's records job fails.  The uncrashed reference
 # runs the steps before and next only.  On the fixture crawl round 0
-# fetches the seeds, round 1 the details, and round 2 finds the
-# frontier empty.
+# fetches the seeds and writes frontier/r1, round 1 fetches the details
+# and leaves nothing pending (so it writes no frontier), and round 2
+# finds n_pending = 0.
 CRASH_CASES = {
     "a-records": (["round"], "run", ("records", 1), ["run"], 64),
-    "b-frontier": (["round"], "run", ("frontier", 2), ["run"], 64),
+    "b-frontier": ([], "run", ("frontier", 1), ["run"], 64),
     "c-compaction-snapshot": (["round"], "run", ("seen", 2), ["run"], 2),
     "d-expire-seen": (["run"], ("expire", 0), ("seen", 3), [("expire", 0), "run"], 64),
     "e-records-then-expire": (["round"], "run", ("records", 1), [("expire", 100), "run"], 64),
@@ -243,8 +244,8 @@ def test_crawl_jobs_per_round_pinned(spark, corpus, tmp_path):
     """Spark jobs each working round of the fixture crawl runs, counted
     in a job group: the round's two actions plus the broadcasts and AQE
     stages they split into.  Round 1 fetches detail pages only, so it is
-    a leaf round and writes the (empty) backlog without the expansion
-    and seen dedup.  A change to the round's plan shows here as a
+    a leaf round; it defers nothing, so it writes no frontier and runs
+    only the records action.  A change to the round's plan shows here as a
     count."""
     pages, storage_json, _ = corpus
     seeds = [testgen.list_url(testgen.host_name(i)) for i in range(3)]
@@ -263,7 +264,7 @@ def test_crawl_jobs_per_round_pinned(spark, corpus, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert jobs == [7, 5]
+    assert jobs == [7, 4]
 
 
 def _sim_children(seeds, results) -> dict:
@@ -322,8 +323,9 @@ def _budget_rounds(children: dict, seeds, budget: int) -> list:
 def test_crawl_leaf_rounds_write_the_backlog(spark, corpus, tmp_path):
     """A budget of 2 URLs a host with the Bloom on: round 1 fetches 6 of
     the 8 detail pages and defers 2, round 2 (budget short-circuit: the
-    backlog fits) fetches those 2.  Neither discovers a link, so each
-    leaf round's next frontier is its frontier minus its records.
+    backlog fits) fetches those 2.  Neither discovers a link, so round
+    1's next frontier is its frontier minus its records, and round 2,
+    which defers nothing, writes no frontier.
     Records, seen set, the manifest's counters after every round and the
     nested results equal the simulator's crawl."""
     pages, storage_json, store = corpus
@@ -355,9 +357,10 @@ def test_crawl_leaf_rounds_write_the_backlog(spark, corpus, tmp_path):
         schema = crawl_engine.FRONTIER_SCHEMA if kind == "frontier" else "url string"
         return {r["url"] for r in spark.read.schema(schema).parquet(eng._p(kind, k)).collect()}
 
-    for k in (1, 2):
-        assert urls("frontier", k + 1) == urls("frontier", k) - urls("records", k)
-    assert len(urls("frontier", 2)) == 2 and not urls("frontier", 3)
+    assert urls("frontier", 2) == urls("frontier", 1) - urls("records", 1)
+    assert len(urls("frontier", 2)) == 2 and urls("records", 2) == urls("frontier", 2)
+    # round 2 deferred nothing: it wrote no frontier and left none pending
+    assert not Path(eng._p("frontier", 3)).exists() and counters[-1] == (11, 0)
 
 
 def test_crawl_round_decisions(spark, corpus, tmp_path):
@@ -743,8 +746,10 @@ def test_state_write_protocol(spark, corpus, tmp_path, monkeypatch):
         # (step, parquet writes, (round, seen_base, seen_total) after it)
         (lambda: eng.seed(seeds), {"frontier": 1}, (0, 0, 0)),
         (eng.run_round, {"records": 1, "frontier": 1}, (1, 0, 3)),
-        (compacting_round, {"records": 1, "seen": 1, "frontier": 1}, (2, 2, 11)),
-        (eng.run_round, {}, (2, 2, 11)),  # empty frontier: done
+        # a leaf round that defers nothing writes no frontier
+        (compacting_round, {"records": 1, "seen": 1}, (2, 2, 11)),
+        (eng.run_round, {}, (2, 2, 11)),  # n_pending = 0: done
+        # starts from an empty pending set: frontier/r2 was never written
         (lambda: eng.expire_and_requeue(max_age_rounds=100), {"seen": 1, "frontier": 1}, (3, 3, 11)),
         (lambda: eng.expire_and_requeue(max_age_rounds=0), {"seen": 1, "frontier": 1}, (4, 4, 0)),
         (eng.run_round, {"records": 1, "frontier": 1}, (5, 4, 11)),
@@ -966,7 +971,7 @@ def test_sessionize_gaps_and_ties(spark):
     )
     out = {
         (r["user_id"], r["session_id"]): r
-        for r in sessionize(df, gap_sec=1800).collect()
+        for r in sessionize(df).collect()
     }
     assert set(out) == {(1, 1), (1, 2), (2, 1), (2, 2)}
     a = out[(1, 1)]
@@ -1039,7 +1044,7 @@ def test_failure_episodes_islands_and_recovery(spark):
     )
     out = [
         r.asDict()
-        for r in failure_episodes(df, min_failures=2)
+        for r in failure_episodes(df)
         .orderBy("host", "start_us")
         .collect()
     ]

@@ -46,6 +46,39 @@ def test_extract_binary_decode_path(spark):
     assert any(r["rule_name"] == "detail" for r in rows)
 
 
+def test_extract_passthrough_exact_and_typed(spark):
+    """Passthrough columns come back one per page, exact and typed:
+    longs at both ends of the 64-bit range, a NULL int, and the values
+    of a page whose html fails to decode."""
+    host = testgen.host_name(0)
+    ok_url, bad_url = testgen.detail_url(host, 0), testgen.detail_url(host, 1)
+    texts = {
+        r["url"]: r["text"]
+        for r in testgen.generate_pages(spark, n_hosts=1, n_details=2).collect()
+    }
+    pages = spark.createDataFrame(
+        [
+            (ok_url, texts[ok_url], None, 2**63 - 1, None),
+            (bad_url, None, bytearray(b"\xff\xfe"), -(2**63), 7),
+        ],
+        "url string, text string, html binary, big long, small int",
+    )
+    out = extract_pages(
+        pages, testgen.storage_json(1), html_col="html", passthrough=("big", "small")
+    )
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields[-2:]] == [
+        ("big", "bigint"),
+        ("small", "int"),
+    ]
+    rows = {r["url"]: r for r in out.collect()}
+    assert len(rows) == 2
+    ok, bad = rows[ok_url], rows[bad_url]
+    assert ok["error"] is None and ok["rule_name"] == "detail"
+    assert (ok["big"], ok["small"]) == (2**63 - 1, None)
+    assert bad["error"].startswith("DecodeError") and bad["rule_name"] is None
+    assert (bad["big"], bad["small"]) == (-(2**63), 7)
+
+
 def test_extract_rule_not_found(spark):
     pages = testgen.generate_pages(spark, n_hosts=1, n_details=2)
     out = extract_pages(pages, testgen.storage_json(0))  # empty storage

@@ -275,7 +275,7 @@ def test_retry_state_fold_and_backoff(spark):
         [("dead", 4, 1, 5, "boom")],
         "url_canon string, attempts long, first_round int, last_round int, last_error string",
     )
-    assert retry_candidates(s_many, now_round=100, max_retries=3).count() == 0
+    assert retry_candidates(s_many, now_round=100).count() == 0
 
 
 def test_priority_algebra_across_signal_sources(spark):
@@ -505,7 +505,7 @@ def test_adaptive_delays_clamp_and_scheduler_feed(spark):
         "url_canon string, host string, priority double, depth int, "
         "discovered_round int, parent_url string, list_index int",
     )
-    budgets = adaptive_delays(log, round_seconds=1, multiplier=2).select(
+    budgets = adaptive_delays(log, round_seconds=1).select(
         "host", "budget"
     )  # 1s round: fast -> 5 slots, slow -> 0... floor(1000/10000)=0
     out = schedule_batch(pending, budgets=budgets).collect()
@@ -843,7 +843,7 @@ def test_effective_budgets_compose_into_scheduler(spark):
         ],
         "host string, ts timestamp, event_id long, ok int",
     )
-    outages = failure_episodes(log, min_failures=2)
+    outages = failure_episodes(log)
     robots_log = spark.createDataFrame(
         [("blocked.example", t0, 503), ("ok.example", t0, 200)],
         "host string, ts timestamp, status int",

@@ -43,7 +43,7 @@ def _py_pagerank(edges, n, iters=3, d=0.85):
 def test_pagerank_matches_python_reference(spark):
     edges, nodes = _graph(spark)
     expected = _py_pagerank([(0, 1), (0, 2), (1, 2), (2, 0), (3, 2)], 4)
-    got = {r["node"]: r["rank"] for r in pagerank(edges, nodes, 4, iters=3).collect()}
+    got = {r["node"]: r["rank"] for r in pagerank(edges, nodes, 4).collect()}
     for v in range(4):
         assert got[v] == pytest.approx(round(expected[v], 6), abs=1e-9)
     # rank mass is conserved (no dangling nodes except 3's sink-free case)
@@ -376,7 +376,7 @@ def test_hits_hand_computed(spark):
         [(1, 3), (1, 4), (2, 3), (2, 4), (3, 4)], "src long, dst long"
     )
     nodes = spark.createDataFrame([(i,) for i in range(1, 5)], "node long")
-    out = {r["node"]: r for r in hits(edges, nodes, iters=2).collect()}
+    out = {r["node"]: r for r in hits(edges, nodes).collect()}
     # iter1: a1 = indeg: a(3)=2, a(4)=3; h1: h(1)=5, h(2)=5, h(3)=3
     # iter2: a2(3)=h1(1)+h1(2)=10, a2(4)=5+5+3=13
     #        h2(1)=a2(3)+a2(4)=23, h2(2)=23, h2(3)=13
@@ -454,7 +454,7 @@ def test_spam_mass_composes_published_signals(spark):
     seeds = spark.createDataFrame([(1,)], "node long")
     got = {
         r["node"]: r.asDict()
-        for r in spam_mass(edges, nodes, 3, seeds, iters=3).collect()
+        for r in spam_mass(edges, nodes, 3, seeds).collect()
     }
     assert got[1]["is_seed"] == 1
     assert got[2]["is_seed"] == 0 and got[3]["is_seed"] == 0
@@ -715,7 +715,7 @@ def test_seed_attribution_min_hops_then_min_seed(spark):
     seeds = spark.createDataFrame([(1,), (9,)], "node long")
     got = {
         r["node"]: (r["hops"], r["seed"])
-        for r in seed_attribution(edges, seeds, max_hops=2).collect()
+        for r in seed_attribution(edges, seeds).collect()
     }
     assert got == {
         1: (0, 1), 9: (0, 9),

@@ -35,7 +35,7 @@ def test_hosting_model_deterministic_and_cohorted(spark):
 
 
 def test_asn_ranges_partition_the_space(spark):
-    rows = asn_ranges(spark, 64).orderBy("asn_id").collect()
+    rows = asn_ranges(spark).orderBy("asn_id").collect()
     assert rows[0]["ip_lo"] == 0
     assert rows[-1]["ip_hi"] == IP_SPACE
     for a, b in zip(rows, rows[1:]):
@@ -48,7 +48,7 @@ def test_asn_ranges_partition_the_space(spark):
 
 def test_bucketed_range_join_matches_naive_between(spark):
     hosts = assign_hosting_ips(_hosts(spark))
-    ranges = asn_ranges(spark, 64)
+    ranges = asn_ranges(spark)
     tagged = tag_hosts_with_asn(hosts, ranges).collect()
     assert len(tagged) == 200  # exactly one range per host
     naive = {
@@ -66,7 +66,7 @@ def test_bucketed_range_join_matches_naive_between(spark):
 def test_bucketed_join_explodes_buckets_not_cross_product(spark):
     from uniparser_spark.crawl.ipnet import asn_ranges
 
-    ranges = asn_ranges(spark, 64)
+    ranges = asn_ranges(spark)
     n_ranges = ranges.count()
     exploded = ranges.select(
         F.explode(
@@ -82,7 +82,7 @@ def test_bucketed_join_explodes_buckets_not_cross_product(spark):
 
 def test_shared_ip_budget_sums_exactly(spark):
     hosts = assign_hosting_ips(_hosts(spark)).drop("shared")
-    out = shared_ip_budget(hosts, ip_budget=60).collect()
+    out = shared_ip_budget(hosts).collect()
     assert len(out) == 200
     by_ip = {}
     for r in out:

@@ -12,8 +12,7 @@ def _docs(spark):
 
 def test_clustered_layout_prunes_point_predicate(spark):
     out = pruning_audit(
-        _docs(spark), sort_cols=["lang"], stat_col="lang",
-        predicate_value="b", file_rows=2,
+        _docs(spark), predicate_value="b", file_rows=2,
     ).collect()
     by_layout = {}
     for r in out:
@@ -38,8 +37,7 @@ def test_layout_file_stats_last_file_partial(spark):
 
     df = _docs(spark).limit(7)
     files = layout_file_stats(
-        df, [F.col("lang"), F.col("doc_id")], "clustered", "lang",
-        file_rows=3,
+        df, [F.col("lang"), F.col("doc_id")], "clustered", file_rows=3,
     ).orderBy("file_id").collect()
     assert [f["n_rows"] for f in files] == [3, 3, 1]
     assert sum(f["n_rows"] for f in files) == 7

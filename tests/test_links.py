@@ -75,7 +75,7 @@ def test_links_feed_pagerank(spark):
     )
     pr = {
         r["node"]: r["rank"]
-        for r in pagerank(edges, nodes, n_nodes=3, iters=3).collect()
+        for r in pagerank(edges, nodes, n_nodes=3).collect()
     }
     assert len(pr) == 3 and abs(sum(pr.values()) - 1.0) < 1e-9
 
@@ -93,7 +93,7 @@ def test_anchor_text_index_topk(spark):
     links = spark.createDataFrame(
         rows, "src string, dst string, anchor string, link_idx int, nofollow int, internal int"
     )
-    [row] = anchor_text_index(links, top_k=2).collect()
+    [row] = anchor_text_index(links).collect()
     assert row["dst"] == "https://t.org/a"
     assert row["top_anchor_links"] == 5  # 3 + 2, 'rare' trimmed at k=2
     assert row["top_anchors"] == "01:buy now|02:cheap pills"
@@ -145,7 +145,7 @@ def test_host_reciprocity_hand_case(spark):
               "nofollow int, internal int",
     )
     out = {(r["host_a"], r["host_b"]): r
-           for r in host_reciprocity(host_graph(df), min_links=2).collect()}
+           for r in host_reciprocity(host_graph(df)).collect()}
     assert out[("a.org", "b.org")]["reciprocity"] == 1.0
     assert out[("a.org", "b.org")]["n_mutual"] == 3
     assert out[("c.org", "d.org")]["reciprocity"] == 0.0

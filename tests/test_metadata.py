@@ -70,7 +70,7 @@ def test_spark_surface(spark):
     )
     out = {
         r["doc_id"]: r
-        for r in harvest_metadata(df, base_url_col="base_url").collect()
+        for r in harvest_metadata(df).collect()
     }
     assert out[1]["canonical"] == "https://h.example.com/canon"
     assert out[1]["n_hreflang"] == 2 and out[1]["n_jsonld_bad"] == 1

@@ -37,7 +37,7 @@ def test_decontaminate_counts_overlapping_grams(spark):
     )
     got = {
         r["doc_id"]: r.asDict()
-        for r in decontaminate(docs, eval_ngrams(ev, n=4), n=4).collect()
+        for r in decontaminate(docs, eval_ngrams(ev)).collect()
     }
     assert set(got) == {1, 2, 3}
     assert (got[1]["n_grams"], got[1]["n_hit"], got[1]["contaminated"]) == (2, 1, 1)
@@ -49,7 +49,7 @@ def test_decontaminate_counts_overlapping_grams(spark):
 def test_decontaminate_counts_distinct_grams_once(spark):
     ev = _docs(spark, [(0, "a a a a a")])  # one distinct gram 'a a a a'
     docs = _docs(spark, [(1, "a a a a a a a a")])  # 5 positions, 1 distinct
-    row = decontaminate(docs, eval_ngrams(ev, n=4), n=4).collect()[0]
+    row = decontaminate(docs, eval_ngrams(ev)).collect()[0]
     assert (row["n_grams"], row["n_hit"]) == (1, 1)
 
 
@@ -191,7 +191,7 @@ def test_dup_spans_flags_shared_and_internal_repeats(spark):
             (4, "short text"),             # < k tokens: no chunks
         ],
     )
-    rows = dup_spans(docs, k=4, min_copies=2).collect()
+    rows = dup_spans(docs, k=4).collect()
     got = {(r["doc_id"], r["chunk_idx"]): r for r in rows}
     # A occurs twice (docs 1, 2); B once (unflagged); C three times (2, 3, 3)
     assert set(got) == {(1, 0), (2, 0), (2, 1), (3, 0), (3, 1)}
@@ -205,7 +205,7 @@ def test_dup_spans_disjoint_chunking_ignores_unaligned(spark):
 
     # same 4 tokens but offset by one in doc 2 -> different aligned chunks
     docs = _docs(spark, [(1, "a b c d"), (2, "x a b c d x y z")])
-    assert dup_spans(docs, k=4, min_copies=2).count() == 0
+    assert dup_spans(docs, k=4).count() == 0
 
 
 def test_sample_gate_commutes_with_stratified_sample(spark):
@@ -731,7 +731,7 @@ def test_pmi_collocations_hand_values(spark):
         [(i, "new york " + ("a b " * 5).strip()) for i in range(6)],
         "doc_id long, text string",
     )
-    got = {(r["w1"], r["w2"]): r for r in pmi_collocations(docs, min_count=5, top_k=10).collect()}
+    got = {(r["w1"], r["w2"]): r for r in pmi_collocations(docs, top_k=10).collect()}
     # per doc: tokens = [new, york, a, b, a, b, ...] (12 tokens, 11 bigrams)
     # c(new,york)=6, N_big=66, c(new)=c(york)=6, N_uni=72
     expect = math.log((6 / 66) / ((6 / 72) * (6 / 72)))

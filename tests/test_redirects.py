@@ -62,7 +62,7 @@ def test_soft404_scores_verdicts(spark):
     ]
     df = spark.createDataFrame(rows, "url string, text string, n_links int")
     out = {r["url"]: r for r in
-           soft404_scores(df, min_tokens=20, max_link_ratio=0.5).collect()}
+           soft404_scores(df).collect()}
     assert out["tiny-marker"]["soft404"] == 1
     # marker fired but the page is long and link-light -> keep
     assert out["long-marker-low-links"]["soft404"] == 0

@@ -39,13 +39,13 @@ def test_hll_merge_equals_whole(spark):
     sketch of the union — the property that lets shards/rounds/days
     compose without re-reading URLs."""
     df = _vals(spark)
-    a = hll_register_arrays(df.filter(F.col("id") < 2000), "host", "url", p=6)
-    b = hll_register_arrays(df.filter(F.col("id") >= 2000), "host", "url", p=6)
+    a = hll_register_arrays(df.filter(F.col("id") < 2000), p=6)
+    b = hll_register_arrays(df.filter(F.col("id") >= 2000), p=6)
     merged = hll_estimate_from_registers(
         hll_merge(a.unionByName(b))
     ).orderBy("key").collect()
     whole = hll_estimate_from_registers(
-        hll_register_arrays(df, "host", "url", p=6)
+        hll_register_arrays(df, p=6)
     ).orderBy("key").collect()
     assert merged == whole
 
@@ -58,7 +58,7 @@ def test_hll_two_formulations_agree(spark):
     for p in (4, 6, 10):
         counts = hll_counts(df, "host", "url", p=p, exact=False).orderBy("key")
         regs = hll_estimate_from_registers(
-            hll_register_arrays(df, "host", "url", p=p)
+            hll_register_arrays(df, p=p)
         ).orderBy("key")
         assert counts.collect() == regs.collect()
 
@@ -87,10 +87,10 @@ def test_cms_point_estimates_and_merge(spark):
 
     rows = [("hot",)] * 50 + [(f"cold{i}",) for i in range(20)]
     df = spark.createDataFrame(rows, "host string")
-    sketch = cms_counts(df, "host", depth=4, width=64)
+    sketch = cms_counts(df, width=64)
     est = {
         r["key"]: r["est"]
-        for r in cms_estimate(sketch, df, "host", depth=4, width=64).collect()
+        for r in cms_estimate(sketch, df, width=64).collect()
     }
     assert est["hot"] >= 50
     assert all(est[f"cold{i}"] >= 1 for i in range(20))
@@ -98,8 +98,8 @@ def test_cms_point_estimates_and_merge(spark):
     idx = spark.createDataFrame(
         [(i, h) for i, (h,) in enumerate(rows)], "i int, host string"
     )
-    h1 = cms_counts(idx.filter("i < 35"), "host", depth=4, width=64)
-    h2 = cms_counts(idx.filter("i >= 35"), "host", depth=4, width=64)
+    h1 = cms_counts(idx.filter("i < 35"), width=64)
+    h2 = cms_counts(idx.filter("i >= 35"), width=64)
     merged = (
         h1.unionByName(h2)
         .groupBy("row_idx", "bucket")
@@ -107,6 +107,6 @@ def test_cms_point_estimates_and_merge(spark):
     )
     est_m = {
         r["key"]: r["est"]
-        for r in cms_estimate(merged, df, "host", depth=4, width=64).collect()
+        for r in cms_estimate(merged, df, width=64).collect()
     }
     assert est_m == est

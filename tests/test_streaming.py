@@ -59,7 +59,7 @@ def test_host_rate_metrics_stream(spark, tmp_path):
     pages_dir = str(tmp_path / "pages")
     _land_pages(spark, pages_dir, n_hosts=3, n_details=12)
 
-    metrics = host_rate_metrics(read_pages_stream(spark, pages_dir), window="1 hour")
+    metrics = host_rate_metrics(read_pages_stream(spark, pages_dir))
     # complete mode to a memory sink: append would hold back the final
     # (still-open) watermark windows, which is all our tiny fixture has
     q = (
@@ -134,7 +134,7 @@ def test_session_stream_cross_batch_and_flush(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(in_dir)
     )
-    q = run_to_parquet(session_stream(stream, gap_sec=1800), out_dir, ck)
+    q = run_to_parquet(session_stream(stream), out_dir, ck)
     assert q.awaitTermination(120)
     got = sorted(
         (r["session_id"], r["n_events"], r["first_event"], r["duration_sec"])

@@ -77,7 +77,7 @@ def test_simhash_deterministic(spark):
 def test_ngram_jaccard_value(spark):
     # doc0: bigrams {a b, b c, c d}; doc1: {a b, b c, c e} -> |∩|=2 |∪|=4
     df = docs_df(spark, [(0, "a b c d"), (1, "a b c e")])
-    rows = ngram_jaccard_pairs(df, shingle_k=2, threshold=0.0, max_id=10).collect()
+    rows = ngram_jaccard_pairs(df, threshold=0.0, max_id=10).collect()
     assert len(rows) == 1
     assert rows[0]["jaccard"] == pytest.approx(0.5)
 
@@ -330,7 +330,7 @@ def test_rhp_multiprobe_recall_beats_single_table(spark):
 
     r1 = recall(rhp_lsh_topk(emb, n_queries=4, k=3, n_planes=5, dims=8))
     r3 = recall(
-        rhp_multiprobe_topk(emb, n_queries=4, k=3, n_planes=5, dims=8, n_tables=3)
+        rhp_multiprobe_topk(emb, n_queries=4, k=3, n_planes=5, dims=8)
     )
     assert r3 >= r1  # OR'd tables can only add candidates
     assert r3 >= 0.5
@@ -370,7 +370,7 @@ def test_embedding_verified_pairs_finds_planted_dup(spark):
     pairs = {
         (r["id1"], r["id2"]): r["sim"]
         for r in embedding_verified_pairs(
-            emb, threshold=0.999, n_planes=6, dims=8, n_tables=2
+            emb, threshold=0.999, n_planes=6, dims=8
         ).collect()
     }
     assert (0, 6) in pairs
@@ -404,9 +404,7 @@ def test_xxhash64_impl_pair_set_parity(spark):
     for impl in ("pandas", "xxhash64"):
         by_impl[impl] = {
             (r["id1"], r["id2"])
-            for r in verified_near_dups(
-                docs, n_hashes=16, bands=8, shingle_k=3, threshold=0.9, impl=impl
-            ).collect()
+            for r in verified_near_dups(docs, threshold=0.9, impl=impl).collect()
         }
         assert planted <= by_impl[impl], (impl, planted - by_impl[impl])
     # the two hash families emit the SAME verified pair set
@@ -417,7 +415,7 @@ def test_xxhash64_impl_pair_set_parity(spark):
         r["doc_id"]: r["n_shingles"]
         for r in minhash_signatures(docs, n_hashes=4, shingle_k=3).collect()
     }
-    xx = minhash_signatures_xx(docs, n_hashes=4, shingle_k=3).collect()
+    xx = minhash_signatures_xx(docs).collect()
     assert {r["doc_id"]: r["n_shingles"] for r in xx} == md5_counts
     assert all(len(r["sig"]) == 4 for r in xx)
 
@@ -448,7 +446,7 @@ def test_simhash_hamming_pairs_pigeonhole_complete(spark):
     }
     got = {
         (r["h1"], r["h2"], r["hamming"])
-        for r in simhash_hamming_pairs(docs, bits=16, max_hamming=2).collect()
+        for r in simhash_hamming_pairs(docs).collect()
     }
     assert got == brute
 
@@ -669,13 +667,13 @@ def test_cdc_chunks_survive_insertion_where_fixed_stride_fails(spark):
     shifted = "zzz " + body  # one-token head insertion
     df = docs_df(spark, [(0, body), (1, shifted)])
 
-    cdc = cdc_chunks(df, min_copies=2).collect()
+    cdc = cdc_chunks(df).collect()
     # CDC re-synchronizes: most of doc 0's chunks still match doc 1's
     per_doc = {d: sum(1 for r in cdc if r["doc_id"] == d) for d in (0, 1)}
     n_chunks0 = per_doc[0]
     assert n_chunks0 >= 5  # enough boundaries fired to be meaningful
     # fixed-stride chunking finds NO cross-doc duplicates after the shift
-    fixed = dup_spans(df, k=16, min_copies=2).collect()
+    fixed = dup_spans(df, k=16).collect()
     assert not fixed
     # ...but CDC flags (almost) the entire shared body in both docs
     assert per_doc[1] >= n_chunks0 - 1
@@ -686,7 +684,7 @@ def test_cdc_chunks_offsets_reconstruct_chunks(spark):
 
     text = "a b c " * 30
     df = docs_df(spark, [(0, text), (1, text)])
-    rows = [r for r in cdc_chunks(df, min_copies=2).collect() if r["doc_id"] == 0]
+    rows = [r for r in cdc_chunks(df).collect() if r["doc_id"] == 0]
     toks = text.split()
     # start_tok is 1-based; spans tile the document with no gaps/overlap
     rows.sort(key=lambda r: r["chunk_idx"])
@@ -734,7 +732,7 @@ def test_bm25_index_hand_computed(spark):
     ]
     out = {
         r["term"]: r
-        for r in bm25_index(docs_df(spark, rows), topk=2, min_df=2)
+        for r in bm25_index(docs_df(spark, rows), topk=2)
         .collect()
     }
     # corpus: N=4, dl = [3,2,4,1], avgdl = 10/4
@@ -761,7 +759,7 @@ def test_bm25_index_min_df_and_topk(spark):
     from uniparser_spark.textops.index import bm25_index
 
     rows = [(i, "common unique%d" % i) for i in range(6)]
-    out = bm25_index(docs_df(spark, rows), topk=3, min_df=2).collect()
+    out = bm25_index(docs_df(spark, rows), topk=3).collect()
     # only 'common' survives min_df=2; postings truncated to 3 of 6
     assert len(out) == 1
     r = out[0]
@@ -869,7 +867,7 @@ def test_containment_pairs_quote_case(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = containment_pairs(
-        df, shingle_k=3, min_shared=3, max_df=100, threshold=0.5
+        df, shingle_k=3, min_shared=3, threshold=0.5
     ).collect()
     pairs = {(r["id1"], r["id2"]): r for r in out}
     assert (1, 2) in pairs and len(pairs) == 1
@@ -944,7 +942,7 @@ def test_boilerplate_lines_host_scoped(spark):
     for i in range(2):  # tiny host: shared line but too few pages
         rows.append((10 + i, "tiny.example", "nav home login\nother"))
     df = spark.createDataFrame(rows, "doc_id long, host string, page string")
-    out = boilerplate_lines(df, min_docs=5, min_frac=0.5).collect()
+    out = boilerplate_lines(df).collect()
     got = {(r["host"], r["line"]): r for r in out}
     assert got[("big.example", "nav home login")]["boilerplate"] == 1
     assert got[("big.example", "nav home login")]["n_docs"] == 6
@@ -1186,7 +1184,7 @@ def test_syndication_bursts_and_yield(spark):
          ("h1", "solo"), ("h2", "pair"), ("h3", "pair")],
         "host string, fp string",
     )
-    got = {r["fp"]: r for r in syndication_bursts(pages, min_hosts=3).collect()}
+    got = {r["fp"]: r for r in syndication_bursts(pages).collect()}
     assert list(got) == ["wire"]
     assert (got["wire"]["n_hosts"], got["wire"]["n_docs"]) == (3, 4)
     assert got["wire"]["sample_hosts"] == ["h1", "h2", "h3"]
@@ -1214,7 +1212,7 @@ def test_stopword_candidates_df_gate(spark):
     df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
     got = {
         r["token"]: r
-        for r in stopword_candidates(df, min_df_ratio=0.5).collect()
+        for r in stopword_candidates(df).collect()
     }
     assert set(got) == {"the", "cat"}
     assert (got["the"]["rank"], got["the"]["df_ratio"]) == (1, 0.75)

@@ -273,11 +273,10 @@ def url_templates(pages: DataFrame) -> DataFrame:
 
 def path_prefix_stats(
     pages: DataFrame,
-    max_depth: int = 3,
     min_urls: int = 2,
 ) -> DataFrame:
     """Browse-space rollup: aggregate URLs onto every path prefix up
-    to ``max_depth`` segments and measure, per (host, prefix), how
+    to 3 segments and measure, per (host, prefix), how
     much DISTINCT content the subtree actually serves.
 
     This is the hierarchical view the flat per-host trap score
@@ -292,7 +291,7 @@ def path_prefix_stats(
     max_seen_depth (deepest segment count observed below the prefix
     — trap subtrees grow deep as well as wide).
 
-    Scale shape: prefixes explode in the scan stage (<= max_depth
+    Scale shape: prefixes explode in the scan stage (<= 3
     narrow rows per URL — bounded fan-out, unlike per-segment
     explosion), then ONE map-side-combinable groupBy; fingerprints
     are 16-hex strings, page text never crosses the Exchange.
@@ -303,7 +302,7 @@ def path_prefix_stats(
     host = F.regexp_extract(F.col("url"), _HOST_RE, 1)
     path = F.regexp_extract(F.col("url"), _PATH_RE, 1)
     segs = F.filter(F.split(path, "/"), lambda s: s != "")
-    depth = F.least(F.lit(max_depth), F.size(segs))
+    depth = F.least(F.lit(3), F.size(segs))
     # guard depth = 0 (root URL): sequence(1, 0) DESCENDS in Spark,
     # which would mint two phantom '/' prefixes per root page —
     # subtree rollups start at one segment, the host row belongs to

@@ -1,11 +1,11 @@
 """Round-based distributed crawl: frontier → schedule → fetch → extract.
 
-Each scheduling round runs two Spark actions over checkpointed parquet
-state: the records and frontier writes (SURVEY.md §3 EP1 mapping).
-Broadcasts and AQE stages split those actions into more Spark jobs.
+Each scheduling round runs at most two Spark actions over checkpointed
+parquet state: the records and frontier writes (SURVEY.md §3 EP1
+mapping).  Broadcasts and AQE stages split those actions into more Spark jobs.
 A leaf round (its pages request no children) writes only its deferred
 backlog as the next frontier: no expansion, seen view, Bloom or
-anti-join.
+anti-join; with nothing deferred it writes no frontier at all.
 The reference's recursive thread fan-out (crawler.py:156-189) becomes
 breadth-first rounds; result nesting is restored from (parent_url,
 list_index) so the final output is order-identical to the reference's
@@ -15,7 +15,10 @@ State layout under ``state_dir`` (Iceberg-style: immutable per-round
 dirs + an atomically swapped manifest):
 
     manifest.json                    {"round": k, "done": bool, "seen_base": b, ...}
-    frontier/r{k}/  (parquet)        pending URLs entering round k
+    frontier/r{k}/  (parquet)        pending URLs entering round k;
+                                     not written when round k-1 left
+                                     nothing pending as a leaf round
+                                     (the manifest says n_pending = 0)
     records/r{k}/   (parquet)        extraction outputs of round k, one
                                      row per scheduled URL — also the
                                      seen log: the live seen set is
@@ -28,7 +31,8 @@ dirs + an atomically swapped manifest):
                                      inline compaction and TTL
                                      maintenance, which advance
                                      seen_base to b; none while b = 0)
-    metrics/r{k}.json                per-round counters + per-partition lineage
+    metrics/r{k}.json                round k's stats and ``decisions``
+                                     (lineage is the records' part_id)
 
 Resume = read manifest, continue from round k; a crashed round leaves
 the previous manifest intact (write new dirs first, swap manifest last).
@@ -382,7 +386,7 @@ class CrawlEngine:
 
     # --------------------------------------------------------------- rounds
     def run_round(self) -> Dict[str, int]:
-        """One scheduling round in exactly TWO Spark actions (records
+        """One scheduling round in at most TWO Spark actions (records
         write, frontier write; an inline compaction adds a seen snapshot
         write) — per-round stats ride on the writes via ``Observation``
         instead of separate count() jobs, frontier metadata is carried
@@ -392,9 +396,9 @@ class CrawlEngine:
         a broadcast join of the batch against the streamed pages scan
         while the batch fits (``BROADCAST_FETCH_MAX``), else a shuffle
         join.  A leaf round — one whose pages request no children —
-        writes the deferred backlog as the next frontier and skips the
-        expansion and seen dedup.  The stats' ``decisions`` name the
-        plan each choice took."""
+        writes the deferred backlog as the next frontier (nothing when
+        none was deferred) and skips the expansion and seen dedup.  The
+        stats' ``decisions`` name the plan each choice took."""
         manifest = self.read_manifest()
         rnd = manifest["round"]
         if manifest.get("done"):
@@ -527,9 +531,10 @@ class CrawlEngine:
         # count the records write observed:
         # - a LEAF round (no __request__ children; the reference ends a
         #   branch there, crawler.py:156-189) discovered nothing, so the
-        #   next frontier is the deferred backlog alone (empty when the
-        #   budget short-circuit deferred nothing): no records read-back,
-        #   no filters, no seen view, no Bloom, no anti-join;
+        #   next frontier is the deferred backlog alone, and is not
+        #   written when the budget short-circuit deferred nothing: no
+        #   records read-back, no filters, no seen view, no Bloom, no
+        #   anti-join;
         # - otherwise the candidates are deduped (bloom pre-filter +
         #   exact anti-join vs seen, then vs the deferred backlog).  The
         #   bloom is sized from the observed seen_total (no count() job)
@@ -540,11 +545,7 @@ class CrawlEngine:
         use_bloom = expand and seen_total >= self.bloom_min_seen
         flagged = None
         if not expand:
-            next_frontier = (
-                deferred
-                if deferred is not None
-                else self.spark.createDataFrame([], FRONTIER_SCHEMA)
-            )
+            next_frontier = deferred
         else:
             seen_next = self._seen_view({"seen_base": seen_base}, rnd)
             candidates = self._candidates(rnd, fetched)
@@ -561,17 +562,19 @@ class CrawlEngine:
                 next_frontier = deferred.unionByName(fresh.select(*_META_COLS))
             else:
                 next_frontier = fresh.select(*_META_COLS)
-        obs_front = Observation()
-        next_frontier = next_frontier.observe(
-            obs_front,
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.when(F.col("discovered_round") == rnd + 1, 1).otherwise(0)
-            ).alias("fresh"),
-        )
-        next_frontier.write.mode("overwrite").parquet(self._p("frontier", rnd + 1))
-        n_pending_next = int(obs_front.get["n"])
-        n_fresh = int(obs_front.get["fresh"] or 0)
+        n_pending_next = n_fresh = 0
+        if next_frontier is not None:
+            obs_front = Observation()
+            next_frontier = next_frontier.observe(
+                obs_front,
+                F.count(F.lit(1)).alias("n"),
+                F.sum(
+                    F.when(F.col("discovered_round") == rnd + 1, 1).otherwise(0)
+                ).alias("fresh"),
+            )
+            next_frontier.write.mode("overwrite").parquet(self._p("frontier", rnd + 1))
+            n_pending_next = int(obs_front.get["n"])
+            n_fresh = int(obs_front.get["fresh"] or 0)
         if flagged is not None:
             flagged.unpersist()
 
@@ -638,7 +641,12 @@ class CrawlEngine:
         seen = self._seen_view(manifest, rnd - 1)
         if Path(self._p("records", rnd)).exists():
             shutil.rmtree(self._p("records", rnd))
-        pending = self.spark.read.schema(FRONTIER_SCHEMA).parquet(self._p("frontier", rnd))
+        # a round that left nothing pending wrote no frontier
+        pending = (
+            self.spark.createDataFrame([], FRONTIER_SCHEMA)
+            if manifest.get("n_pending") == 0
+            else self.spark.read.schema(FRONTIER_SCHEMA).parquet(self._p("frontier", rnd))
+        )
 
         cutoff = rnd - max_age_rounds
         kept = seen.filter(F.col("crawled_round") > cutoff)

@@ -52,6 +52,9 @@ IP_SPACE = 1 << 24
 SHARED_CUTOFF = 192
 N_PROVIDERS = 24
 
+#: fetches per IP per politeness window, split by shared_ip_budget.
+IP_BUDGET = 60
+
 
 def _hex24(prefix: str, col: Column) -> Column:
     """First 6 hex nibbles of md5('<prefix>:' || col) as a 24-bit int.
@@ -63,9 +66,9 @@ def _hex24(prefix: str, col: Column) -> Column:
     return F.conv(F.substring(h, 1, 6), 16, 10).cast("long")
 
 
-def _hex_byte(prefix: str, col: Column) -> Column:
-    """First hex byte (2 nibbles) of md5('<prefix>:' || col), in [0,256)."""
-    h = F.md5(F.concat(F.lit(prefix), F.lit(":"), col.cast("string")))
+def _hex_byte(col: Column) -> Column:
+    """First hex byte (2 nibbles) of md5('prov:' || col), in [0,256)."""
+    h = F.md5(F.concat(F.lit("prov:"), col.cast("string")))
     return F.conv(F.substring(h, 1, 2), 16, 10).cast("int")
 
 
@@ -81,7 +84,7 @@ def assign_hosting_ips(hosts: DataFrame) -> DataFrame:
     downstream scan pushdown.
     """
     host = F.col("host")
-    p = _hex_byte("prov", host)
+    p = _hex_byte(host)
     provider_ip = _hex24("provip", (p % N_PROVIDERS).cast("string"))
     dedicated_ip = _hex24("hostip", host)
     return hosts.select(
@@ -95,10 +98,10 @@ def assign_hosting_ips(hosts: DataFrame) -> DataFrame:
     )
 
 
-def asn_ranges(spark: SparkSession, n_boundaries: int = 64) -> DataFrame:
+def asn_ranges(spark: SparkSession) -> DataFrame:
     """Deterministic non-uniform ASN prefix table covering [0, IP_SPACE).
 
-    n_boundaries md5-derived 24-bit cut points (plus 0) are sorted and
+    64 md5-derived 24-bit cut points (plus 0) are sorted and
     paired into half-open ranges [ip_lo, ip_hi); asn_id is the rank of
     the range.  Non-uniform widths are the point — a range join must
     not be allowed to degenerate into ``ip // constant``.
@@ -107,7 +110,7 @@ def asn_ranges(spark: SparkSession, n_boundaries: int = 64) -> DataFrame:
     rows in production — still broadcast-size next to a frontier).
     """
     bounds = (
-        spark.range(n_boundaries)
+        spark.range(64)
         .select(_hex24("asnb", F.col("id")).alias("ip_lo"))
         .union(spark.range(1).select(F.lit(0).cast("long").alias("ip_lo")))
         .distinct()
@@ -157,15 +160,13 @@ def tag_hosts_with_asn(hosts_with_ip: DataFrame, ranges: DataFrame) -> DataFrame
     )
 
 
-def shared_ip_budget(
-    hosts_with_ip: DataFrame, ip_budget: int = 60
-) -> DataFrame:
+def shared_ip_budget(hosts_with_ip: DataFrame) -> DataFrame:
     """Split a per-IP fetch budget exactly across its co-hosted hosts.
 
-    Each IP gets ip_budget fetches per politeness window, shared by its
+    Each IP gets IP_BUDGET fetches per politeness window, shared by its
     n_cohosted hosts: every host gets the integer quotient and the
     first (budget % n) hosts in host order get one extra — sum over
-    the cohort == min(ip_budget, ...) == ip_budget exactly, no float
+    the cohort == IP_BUDGET exactly, no float
     rounding to audit.  Hosts that would round to 0 still get their
     quotient (0) — the scheduler skips them this window, which is the
     correct behavior against a saturated server.
@@ -181,8 +182,8 @@ def shared_ip_budget(
         "ip24",
         n.cast("int").alias("n_cohosted"),
         (
-            F.floor(F.lit(ip_budget) / n)
-            + F.when(rk <= F.lit(ip_budget) % n, 1).otherwise(0)
+            F.floor(F.lit(IP_BUDGET) / n)
+            + F.when(rk <= F.lit(IP_BUDGET) % n, 1).otherwise(0)
         )
         .cast("int")
         .alias("host_rate"),

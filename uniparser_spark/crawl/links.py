@@ -98,17 +98,14 @@ def link_edges(
     )
 
 
-def anchor_text_index(
-    links: DataFrame,
-    top_k: int = 3,
-) -> DataFrame:
+def anchor_text_index(links: DataFrame) -> DataFrame:
     """The classic anchor-text index: what the web SAYS about each URL
     (anchor text is the strongest relevance signal a crawler owns —
     it describes the target, not the source).
 
     Per target: total in-link count (``in_links``), distinct source
     count (``n_src``), the link count covered by the top anchors
-    (``top_anchor_links``), and the ``top_k`` most common non-empty
+    (``top_anchor_links``), and the 2 most common non-empty
     anchors (count desc, text asc — fully deterministic).  Two-phase
     count on (dst, anchor) → per-dst top-k via min-heap-shaped window
     (Spark plans a map-side WindowGroupLimit under rank ≤ k, so the
@@ -130,7 +127,7 @@ def anchor_text_index(
         F.col("n").desc(), F.col("anchor").asc()
     )
     topk = counts.withColumn("_rk", F.row_number().over(w)).filter(
-        F.col("_rk") <= top_k
+        F.col("_rk") <= 2
     )
     folded = (
         topk.groupBy("dst")
@@ -181,7 +178,7 @@ def host_graph(links: DataFrame) -> DataFrame:
     )
 
 
-def host_reciprocity(hg: DataFrame, min_links: int = 2) -> DataFrame:
+def host_reciprocity(hg: DataFrame) -> DataFrame:
     """Link-farm signal over the host graph: reciprocal link density
     per unordered host pair.  Organic linking is mostly one-way;
     link-exchange schemes produce dense MUTUAL edges, so pairs with
@@ -191,7 +188,7 @@ def host_reciprocity(hg: DataFrame, min_links: int = 2) -> DataFrame:
 
     Input: :func:`host_graph` output.  External pairs only (self-edges
     are internal navigation, not exchange).  Output one row per
-    unordered pair with ``n_ab >= min_links`` or ``n_ba >= min_links``:
+    unordered pair with ``n_ab >= 2`` or ``n_ba >= 2``:
     ``(host_a, host_b, n_ab, n_ba, n_mutual, reciprocity)`` where
     hosts are ordered ``host_a < host_b``, ``n_mutual = min`` of the
     two directions (0 when one-way) and ``reciprocity =
@@ -221,7 +218,7 @@ def host_reciprocity(hg: DataFrame, min_links: int = 2) -> DataFrame:
     mutual = F.least(F.col("n_ab"), F.col("n_ba"))
     return (
         agg.filter(
-            (F.col("n_ab") >= min_links) | (F.col("n_ba") >= min_links)
+            (F.col("n_ab") >= 2) | (F.col("n_ba") >= 2)
         )
         .select(
             "host_a",

@@ -133,18 +133,15 @@ _SOFT404_RE = (
 )
 
 
-def soft404_scores(
-    pages: DataFrame,
-    min_tokens: int = 20,
-    max_link_ratio: float = 0.5,
-) -> DataFrame:
+def soft404_scores(pages: DataFrame) -> DataFrame:
     """Soft-404 classification from page content: ``200 OK`` error
     pages carry error phrasing, very little text, and a high
     link-to-token ratio (pure chrome).  Emits the evidence plus a
     verdict — error-as-data, the admission filter composes on it.
 
     Output: (url, n_markers, n_tokens, link_ratio, soft404) where
-    soft404 = 1 iff a marker fired AND (few tokens OR link-heavy).
+    soft404 = 1 iff a marker fired AND (fewer than 20 tokens OR at
+    least 0.5 links per token).
     Pure codegen projection: one regexp_count, one size(split), one
     division — composes into the extraction scan, shuffles nothing.
     """
@@ -158,14 +155,14 @@ def soft404_scores(
     # verdict compares the UNROUNDED ratio (n_links >= r * max(n,1)
     # avoids both the rounding and a lateral-alias reference)
     link_heavy = (
-        F.col("n_links").cast("double") >= F.lit(max_link_ratio) * denom
+        F.col("n_links").cast("double") >= F.lit(0.5) * denom
     )
     return pages.select(
         F.col("url"),
         n_markers.alias("n_markers"),
         n_tokens.alias("n_tokens"),
         link_ratio.alias("link_ratio"),
-        ((n_markers > 0) & ((n_tokens < min_tokens) | link_heavy))
+        ((n_markers > 0) & ((n_tokens < 20) | link_heavy))
         .cast("int")
         .alias("soft404"),
     )

@@ -30,9 +30,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+#: a gap longer than this closes a session (sessionize, session_stream)
+SESSION_GAP_SEC = 1800
 
-def sessionize(df: DataFrame, gap_sec: int = 1800) -> DataFrame:
-    """Cut each key's event stream into sessions at > ``gap_sec`` gaps.
+
+def sessionize(df: DataFrame) -> DataFrame:
+    """Cut each key's event stream into sessions at > SESSION_GAP_SEC gaps.
 
     Output one row per session: ``(key, session_id, n_events,
     first_event, start_us, end_us, duration_sec)`` with 1-based
@@ -43,7 +46,7 @@ def sessionize(df: DataFrame, gap_sec: int = 1800) -> DataFrame:
     # DuckDB's epoch_us over the same naive values.
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     w = Window.partitionBy("user_id").orderBy(us.asc(), F.col("event_id").asc())
-    gap_us = int(gap_sec) * 1_000_000
+    gap_us = SESSION_GAP_SEC * 1_000_000
     prev = F.lag(us).over(w)
     new_session = (
         prev.isNull() | ((us - prev) > F.lit(gap_us))
@@ -76,13 +79,7 @@ def sessionize(df: DataFrame, gap_sec: int = 1800) -> DataFrame:
     )
 
 
-def failure_episodes(
-    df: DataFrame,
-    key_col: str = "host",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    min_failures: int = 2,
-) -> DataFrame:
+def failure_episodes(df: DataFrame) -> DataFrame:
     """Host-outage detection: maximal runs of consecutive FAILED
     fetches per host (gaps-and-islands over the fetch log).
 
@@ -100,40 +97,41 @@ def failure_episodes(
     of the window partitioning — same ONE-Exchange shape as
     :func:`sessionize` (the grouping runs in place).
 
-    Output, one row per failure episode of ≥ ``min_failures``:
-    ``(key, start_us, end_us, n_failures, first_event, recovered)``
-    where ``recovered=1`` iff the host logged ANY event after the
-    episode (islands are maximal, so that event is a success);
+    Input rows are ``(host, ts, event_id, ok)``.  Output, one row per
+    failure episode of ≥ 2 failures: ``(host, start_us, end_us,
+    n_failures, first_event, recovered)`` where ``recovered=1`` iff the
+    host logged ANY event after the episode (islands are maximal, so
+    that event is a success);
     ``recovered=0`` marks hosts still dark at the end of the log.
     """
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    w = Window.partitionBy(key_col).orderBy(us.asc(), F.col(id_col).asc())
-    w_ok = Window.partitionBy(key_col, "ok").orderBy(
-        us.asc(), F.col(id_col).asc()
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    w = Window.partitionBy("host").orderBy(us.asc(), F.col("event_id").asc())
+    w_ok = Window.partitionBy("host", "ok").orderBy(
+        us.asc(), F.col("event_id").asc()
     )
     numbered = df.select(
-        F.col(key_col),
-        F.col(id_col),
+        F.col("host"),
+        F.col("event_id"),
         F.col("ok"),
         us.alias("_us"),
         F.row_number().over(w).alias("_rn"),
         (F.row_number().over(w) - F.row_number().over(w_ok)).alias("_island"),
-        F.count(F.lit(1)).over(Window.partitionBy(key_col)).alias("_total"),
+        F.count(F.lit(1)).over(Window.partitionBy("host")).alias("_total"),
     )
     return (
         numbered.filter(~F.col("ok").cast("boolean"))
-        .groupBy(key_col, "_island")
+        .groupBy("host", "_island")
         .agg(
             F.min("_us").alias("start_us"),
             F.max("_us").alias("end_us"),
             F.count(F.lit(1)).alias("n_failures"),
-            F.min(id_col).alias("first_event"),
+            F.min("event_id").alias("first_event"),
             F.max("_rn").alias("_last_rn"),
             F.max("_total").alias("_tot"),
         )
-        .filter(F.col("n_failures") >= min_failures)
+        .filter(F.col("n_failures") >= 2)
         .select(
-            key_col,
+            "host",
             "start_us",
             "end_us",
             "n_failures",

@@ -9,10 +9,10 @@
   process** via a module-level memo — the CompiledString analogue
   (parsers.py:980-1003);
 - the whole per-page pipeline (rule dispatch → input_callback DOM/JSON
-  build → every parse_rule chain) is fused into ONE ``mapInPandas``
-  stage, so each page crosses the JVM↔Python boundary exactly once as
-  an Arrow batch and its DOM is parsed exactly once (the reference's
-  parse-once CSE, utils.py:745-803);
+  build → every parse_rule chain) is fused into ONE ``map_rows`` kernel
+  (engine/rows.py), so each page crosses the JVM↔Python boundary
+  exactly once as an Arrow batch and its DOM is parsed exactly once
+  (the reference's parse-once CSE, utils.py:745-803);
 - errors are data: a failed page yields an ``error`` column value,
   never a task failure.
 
@@ -26,9 +26,8 @@ from __future__ import annotations
 
 import json
 import re
-from typing import Any, Dict, Iterator, List, Optional, Tuple
+from typing import Any, Dict, List, Optional, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
@@ -36,6 +35,7 @@ from .. import config
 from ..chains import apply_input_callback, run_crawler_rule
 from ..rules import CrawlerRule, HostRule
 from ..urls import get_host
+from .rows import map_rows
 
 RESULT_SCHEMA = StructType(
     [
@@ -147,9 +147,10 @@ def extract_pages(
     encoding override (reference utils.py:229-240).  Column pruning: only
     the referenced columns are touched, so the parquet scan stays narrow.
 
-    ``passthrough`` columns are carried through the UDF one-to-one
-    (every input row yields exactly one output row), which lets callers
-    keep frontier metadata attached without a post-extraction join.
+    ``passthrough`` columns are carried through the kernel one-to-one
+    (every input row yields exactly one output row, a ``DecodeError``
+    row included), which lets callers keep frontier metadata attached
+    without a post-extraction join.
     """
     storage_json = storage if isinstance(storage, str) else config.json_dumps(storage)
     extra = [
@@ -162,34 +163,13 @@ def extract_pages(
         + [projected.schema[c] for c in extra]
     )
 
-    def run_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ruleset = compile_ruleset(storage_json)
-        for batch in batches:
-            urls = batch[url_col].tolist()
-            texts = batch[text_col].tolist()
-            htmls = batch[html_col].tolist() if html_col else [None] * len(urls)
-            out = {"url": [], "rule_name": [], "result": [], "error": [], "requests": []}
-            for url, text, html in zip(urls, texts, htmls):
-                body = text
-                if body is None and html is not None:
-                    try:
-                        body = bytes(html).decode(encoding)
-                    except (UnicodeDecodeError, TypeError) as err:
-                        out["url"].append(url)
-                        out["rule_name"].append(None)
-                        out["result"].append(None)
-                        out["error"].append(f"DecodeError: {err}")
-                        out["requests"].append(None)
-                        continue
-                name, result_json, error, requests = parse_one(ruleset, url, body)
-                out["url"].append(url)
-                out["rule_name"].append(name)
-                out["result"].append(result_json)
-                out["error"].append(error)
-                out["requests"].append(requests)
-            result = pd.DataFrame(out)
-            for c in extra:
-                result[c] = batch[c].values
-            yield result
+    def page(url, text, *rest):
+        html, passed = (rest[0], rest[1:]) if html_col else (None, rest)
+        if text is None and html is not None:
+            try:
+                text = bytes(html).decode(encoding)
+            except (UnicodeDecodeError, TypeError) as err:
+                return [(url, None, None, f"DecodeError: {err}", None, *passed)]
+        return [(url, *parse_one(compile_ruleset(storage_json), url, text), *passed)]
 
-    return projected.mapInPandas(run_batches, schema=out_schema)
+    return map_rows(projected, out_schema, page)

@@ -140,14 +140,13 @@ def update_fetch_history(
 def snapshot_asof(
     snaps: DataFrame,
     probes: DataFrame,
-    key: str = "url",
     ts: str = "warc_ts",
     probe_ts: str = "as_of_ts",
 ) -> DataFrame:
     """As-of join over a versioned page-snapshot table: for each probe
-    (key, probe_ts) return the snapshot row with the LARGEST ts <=
+    (url, probe_ts) return the snapshot row with the LARGEST ts <=
     probe_ts — "the page as it stood at time T".  Inner semantics:
-    probes older than the key's first snapshot drop (DuckDB's ASOF JOIN
+    probes older than the url's first snapshot drop (DuckDB's ASOF JOIN
     default, which the oracle uses verbatim).
 
     The reference engine re-fetches live pages, so "as of" never
@@ -158,9 +157,9 @@ def snapshot_asof(
     Scale shape: Spark has no native as-of join, and the naive form
     (range join then per-probe window over the FULL payload) shuffles
     page bodies.  Instead: (1) the inequality join + max aggregation
-    runs on a (key, ts)-only projection — map-side combinable, narrow
-    rows; (2) one equi-join on (key, ts) fetches the winning payload —
-    co-partitioned with the snapshot table's natural (key-bucketed)
+    runs on a (url, ts)-only projection — map-side combinable, narrow
+    rows; (2) one equi-join on (url, ts) fetches the winning payload —
+    co-partitioned with the snapshot table's natural (url-bucketed)
     layout, so html/text cross the wire once, for winners only.
     Identical probe rows collapse (groupBy) — as-of is idempotent.
 
@@ -169,16 +168,16 @@ def snapshot_asof(
     """
     if ts == probe_ts:
         raise ValueError("ts and probe_ts must have distinct column names")
-    narrow = snaps.select(key, ts)
+    narrow = snaps.select("url", ts)
     best = (
-        probes.select(key, probe_ts)
-        .join(narrow, key)
+        probes.select("url", probe_ts)
+        .join(narrow, "url")
         .where(F.col(ts) <= F.col(probe_ts))
-        .groupBy(key, probe_ts)
+        .groupBy("url", probe_ts)
         .agg(F.max(ts).alias(ts))
     )
-    return best.join(snaps, [key, ts]).select(
-        key, probe_ts, ts, *[c for c in snaps.columns if c not in (key, ts)]
+    return best.join(snaps, ["url", ts]).select(
+        "url", probe_ts, ts, *[c for c in snaps.columns if c not in ("url", ts)]
     )
 
 
@@ -254,7 +253,6 @@ def revalidation_plan(history: DataFrame, now_round: int) -> DataFrame:
 def scd2_history(
     snapshots: DataFrame,
     url_col: str = "url_canon",
-    round_col: str = "round",
 ) -> DataFrame:
     """Fold per-round fetch snapshots into SCD-2 validity intervals.
 
@@ -279,8 +277,8 @@ def scd2_history(
     adjacency, so a url fetched at rounds {0,1,5} still folds correctly
     (the interval's valid_to is the last round the version was SEEN).
     """
-    url, rnd, fp = F.col(url_col), F.col(round_col), F.col("content_fp")
-    w = Window.partitionBy(url_col).orderBy(round_col)
+    url, rnd, fp = F.col(url_col), F.col("round"), F.col("content_fp")
+    w = Window.partitionBy(url_col).orderBy("round")
     chg = F.when(
         F.lag("content_fp", 1).over(w).isNull()
         | (F.lag("content_fp", 1).over(w) != fp),

@@ -85,7 +85,6 @@ def schedule_batch(
 def adaptive_delays(
     fetch_log: DataFrame,
     round_seconds: int = 60,
-    multiplier: int = 2,
 ) -> DataFrame:
     """Latency-adaptive politeness: derive each host's crawl delay from
     its OBSERVED response times instead of a fixed default — the
@@ -95,7 +94,7 @@ def adaptive_delays(
     slows down under load automatically sheds crawl pressure next
     round.
 
-    delay_ms  = clamp(multiplier × p50(latency), min, max)
+    delay_ms  = clamp(2 × p50(latency), min, max)
     budget    = round_seconds·1000 DIV delay_ms   (token-bucket refill
                 per scheduling round — feeds ``schedule_batch`` as its
                 budgets side, the same seam robots crawl-delay uses)
@@ -121,7 +120,7 @@ def adaptive_delays(
             "p50_ms",
             F.least(
                 F.greatest(
-                    F.round(F.col("p50_ms") * multiplier, 4),
+                    F.round(F.col("p50_ms") * 2, 4),
                     F.lit(200.0),
                 ),
                 F.lit(10_000.0),

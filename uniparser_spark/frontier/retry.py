@@ -77,16 +77,15 @@ def fold_retry_state(
 def retry_candidates(
     state: DataFrame,
     now_round: int,
-    max_retries: int = 3,
 ) -> DataFrame:
     """Retry rows whose backoff has elapsed: after the k-th failure the
-    URL waits ``2^(k-1)`` rounds; URLs past ``max_retries`` are dead
+    URL waits ``2^(k-1)`` rounds; URLs past 3 attempts are dead
     (filter them into a quarantine table via the complement).  Returns
     (url, priority, attempts) with priority ``-1 - attempts``."""
     backoff = F.pow(F.lit(2.0), (F.col("attempts") - 1).cast("double"))
     due = (F.lit(now_round) - F.col("last_round")).cast("double") >= backoff
     return (
-        state.filter((F.col("attempts") <= max_retries) & due)
+        state.filter((F.col("attempts") <= 3) & due)
         .select(
             F.col("url_canon").alias("url"),
             (F.lit(-1.0) - F.col("attempts").cast("double")).alias("priority"),

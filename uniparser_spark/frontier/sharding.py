@@ -63,12 +63,12 @@ def rendezvous_shards(hosts: DataFrame, n_shards: int, impl: str = "expr") -> Da
     )
 
 
-def shard_loads(assigned: DataFrame, weight_col: str | None = None) -> DataFrame:
-    """Shard load report over an assignment: host count (and optional
-    weighted load, e.g. expected pages per host) per shard — the
+def shard_loads(assigned: DataFrame) -> DataFrame:
+    """Shard load report over an assignment: host count and load (the
+    summed ``est_pages``, expected pages per host) per shard — the
     balance check a resize decision reads.  One map-side-combined
     groupBy on the shard id."""
-    aggs = [F.count(F.lit(1)).alias("n_hosts")]
-    if weight_col is not None:
-        aggs.append(F.sum(weight_col).cast("long").alias("load"))
-    return assigned.groupBy("shard").agg(*aggs)
+    return assigned.groupBy("shard").agg(
+        F.count(F.lit(1)).alias("n_hosts"),
+        F.sum("est_pages").cast("long").alias("load"),
+    )

@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 _HASH_BITS = 60  # 15 hex chars of md5: fits signed 64-bit everywhere
+CMS_DEPTH = 4  # hash rows of a count-min sketch
 
 
 def _alpha(m: int) -> float:
@@ -142,19 +143,18 @@ def hll_counts(
     return per_key.select(*cols)
 
 
-def hll_register_arrays(
-    df: DataFrame, key_col: str, val_col: str, p: int = 6
-) -> DataFrame:
-    """Per-key dense register array (length m, zeros for empty
-    registers) — the MERGEABLE representation: store one row per
-    (shard, key) and union shards with :func:`hll_merge`.
+def hll_register_arrays(df: DataFrame, p: int = 6) -> DataFrame:
+    """Per-host dense register array over distinct ``url`` values
+    (length m, zeros for empty registers) — the MERGEABLE
+    representation: store one row per (shard, host) and union shards
+    with :func:`hll_merge`.
     """
     m = 1 << p
     width = _HASH_BITS - p
-    h = _hash60(F.col(val_col))
+    h = _hash60(F.col("url"))
     sparse = (
         df.select(
-            F.col(key_col).alias("key"),
+            F.col("host").alias("key"),
             (h % m).cast("int").alias("reg"),
             _rho(F.shiftright(h, p), width).alias("rho"),
         )
@@ -228,14 +228,9 @@ def hll_estimate_from_registers(sketches: DataFrame) -> DataFrame:
 
 # ----------------------------------------------------- count-min sketch
 
-def cms_counts(
-    df: DataFrame,
-    key_col: str,
-    depth: int = 4,
-    width: int = 256,
-) -> DataFrame:
-    """Mergeable count-min sketch (Cormode & Muthukrishnan '05) of a
-    key's frequency distribution: ``depth`` independent hash rows of
+def cms_counts(df: DataFrame, width: int = 256) -> DataFrame:
+    """Mergeable count-min sketch (Cormode & Muthukrishnan '05) of the
+    ``host`` frequency distribution: CMS_DEPTH independent hash rows of
     ``width`` counters; each occurrence increments one counter per
     row; two sketches MERGE by element-wise sum — the HLL's additive
     twin, for "how often" instead of "how many distinct".
@@ -243,8 +238,8 @@ def cms_counts(
     The frontier use is hot-key detection without a full groupBy: a
     10^10-row fetch log's per-URL/per-host counts are needle-in-
     haystack (a few hot keys, a huge cold tail), and the CMS answers
-    point queries with ε = e/width overestimate at δ = e^-depth
-    confidence while shuffling at most depth × width counter rows per
+    point queries with ε = e/width overestimate at δ = e^-CMS_DEPTH
+    confidence while shuffling at most CMS_DEPTH × width counter rows per
     group — per-partition sketches compose across executors, rounds,
     and days exactly like the HLL registers.
 
@@ -257,12 +252,12 @@ def cms_counts(
     """
     rows = F.explode(
         F.transform(
-            F.sequence(F.lit(0), F.lit(depth - 1)),
+            F.sequence(F.lit(0), F.lit(CMS_DEPTH - 1)),
             lambda i: F.struct(
                 i.cast("int").alias("row_idx"),
                 F.pmod(
                     _hash60(
-                        F.concat_ws(":", i.cast("string"), F.col(key_col))
+                        F.concat_ws(":", i.cast("string"), F.col("host"))
                     ),
                     F.lit(width),
                 ).cast("int").alias("bucket"),
@@ -280,27 +275,25 @@ def cms_counts(
 def cms_estimate(
     sketch: DataFrame,
     keys: DataFrame,
-    key_col: str,
-    depth: int = 4,
     width: int = 256,
 ) -> DataFrame:
-    """Point-query a :func:`cms_counts` sketch: for each key in
-    ``keys``, est = MIN over the depth rows of its counter (absent
+    """Point-query a :func:`cms_counts` sketch: for each ``host`` in
+    ``keys``, est = MIN over the CMS_DEPTH rows of its counter (absent
     counter = 0) — an upper bound on the true count, tight for heavy
     hitters (what the sketch exists to find).
 
-    Shape: keys expand to depth narrow probe rows, LEFT join the
+    Shape: keys expand to CMS_DEPTH narrow probe rows, LEFT join the
     sparse sketch on (row_idx, bucket), one min-groupBy per key.  The
-    sketch side is ≤ depth × width rows per group — broadcastable at
+    sketch side is ≤ CMS_DEPTH × width rows per group — broadcastable at
     any corpus size.
 
     Returns ``(key, est)``.
     """
-    probes = keys.select(F.col(key_col).alias("key")).distinct().select(
+    probes = keys.select(F.col("host").alias("key")).distinct().select(
         "key",
         F.explode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(depth - 1)),
+                F.sequence(F.lit(0), F.lit(CMS_DEPTH - 1)),
                 lambda i: F.struct(
                     i.cast("int").alias("row_idx"),
                     F.pmod(

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 # 10^6, where the union-find worker grows by ~80 MB.
 SMALL_GRAPH_EDGES = 1_000_000
 DAMPING = 0.85  # PageRank / TrustRank link-follow probability
+RANK_ITERS = 3  # PageRank / TrustRank synchronous iterations
 
 
 def synth_edges(df: DataFrame, n_nodes: int, fanout: int = 3) -> DataFrame:
@@ -68,9 +69,8 @@ def pagerank(
     edges: DataFrame,
     nodes: DataFrame,
     n_nodes: int,
-    iters: int = 3,
 ) -> DataFrame:
-    """PageRank after ``iters`` synchronous iterations (uniform init,
+    """PageRank after RANK_ITERS synchronous iterations (uniform init,
     no dangling nodes in the synthesized graph — every v has out-links).
 
     Scale shape per iteration: contributions = edges ⋈ ranks on src
@@ -84,7 +84,7 @@ def pagerank(
     edges_deg = edges.join(deg, "src")
     ranks = nodes.select("node", (F.lit(1.0) / n).alias("rank"))
     teleport = (1.0 - DAMPING) / n
-    for _ in range(iters):
+    for _ in range(RANK_ITERS):
         # explicit aliases: ranks' lineage includes edges_deg/nodes after
         # the first iteration, and unaliased self-joins are ambiguous
         contribs = (
@@ -115,7 +115,6 @@ def trustrank(
     edges: DataFrame,
     nodes: DataFrame,
     seeds: DataFrame,
-    iters: int = 3,
 ) -> DataFrame:
     """TrustRank (Gyongyi, Garcia-Molina & Pedersen, VLDB'04):
     personalized PageRank whose teleport mass returns ONLY to a
@@ -131,7 +130,7 @@ def trustrank(
     distribution d (1/|seeds| on seeds, 0 elsewhere) and iterates
     t = (1-DAMPING)*d + DAMPING*M't.  Like :func:`pagerank`, dangling
     mass is dropped, not redistributed (the synthesized suite graph
-    has no dangling nodes); a fixed ``iters`` keeps the whole thing
+    has no dangling nodes); a fixed RANK_ITERS keeps the whole thing
     SQL-expressible for the oracle.
 
     ``seeds`` is a one-column (node) DataFrame.  Returns (node, trust)
@@ -150,7 +149,7 @@ def trustrank(
     deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
     edges_deg = edges.join(deg, "src")
     trust = base.select("node", F.col("d").alias("trust"))
-    for _ in range(iters):
+    for _ in range(RANK_ITERS):
         contribs = (
             edges_deg.alias("e")
             .join(trust.alias("t"), F.col("e.src") == F.col("t.node"))
@@ -502,7 +501,7 @@ def connected_components_star(
     )
 
 
-def hits(edges: DataFrame, nodes: DataFrame, iters: int = 2) -> DataFrame:
+def hits(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     """HITS (Kleinberg, JACM'99) hub/authority scores — the
     link-analysis complement to PageRank/TrustRank: authorities are
     pages good hubs point to, hubs are pages that point to good
@@ -516,21 +515,20 @@ def hits(edges: DataFrame, nodes: DataFrame, iters: int = 2) -> DataFrame:
 
     Bit-stability: the textbook algorithm L2-normalizes each step,
     which would put order-sensitive float sums in the loop.  With a
-    fixed iteration count the normalization is only a display scale,
+    fixed iteration count (2) the normalization is only a display scale,
     so the recurrence runs in EXACT INTEGER arithmetic (h0 = 1;
     a = Σ_in h; h = Σ_out a — sums of longs, associative, engine-
     independent) and a single max-scaled double is emitted at the end
     (one division + ROUND, both correctly rounded).  Score growth is
-    ~(avg degree)^(2·iters) per step — bounded for the small fixed
-    ``iters`` a scheduler actually uses; overflow would need
-    degree^(2·iters) ≈ 2^63.
+    ~(avg degree)^4 over the 2 iterations; overflow would need
+    degree^4 ≈ 2^63.
 
     Returns (node, hub_score, auth_score, hub_norm, auth_norm);
     nodes with no out-links (in-links) score 0 as hubs (authorities).
     """
     h = nodes.select("node", F.lit(1).cast("long").alias("s"))
     a = None
-    for _ in range(iters):
+    for _ in range(2):
         a = (
             edges.join(h, edges["src"] == h["node"])
             .groupBy(edges["dst"].alias("node"))
@@ -649,7 +647,6 @@ def spam_mass(
     nodes: DataFrame,
     n_nodes: int,
     seeds: DataFrame,
-    iters: int = 3,
 ) -> DataFrame:
     """Spam mass (Gyongyi et al., 'Link Spam Detection Based on Mass
     Estimation', VLDB'06, simplified): the fraction of a page's
@@ -670,8 +667,8 @@ def spam_mass(
     :func:`spam_mass_from_signals` — two node-keyed joins, nothing
     iterative — which this function delegates to.
     """
-    pr = pagerank(edges, nodes, n_nodes, iters=iters)
-    tr = trustrank(edges, nodes, seeds, iters=iters)
+    pr = pagerank(edges, nodes, n_nodes)
+    tr = trustrank(edges, nodes, seeds)
     return spam_mass_from_signals(pr, tr, seeds)
 
 
@@ -1073,11 +1070,7 @@ def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 3) -> DataFrame:
     )
 
 
-def bibcoupling_pairs(
-    edges: DataFrame,
-    min_common: int = 1,
-    max_in: int = 100,
-) -> DataFrame:
+def bibcoupling_pairs(edges: DataFrame) -> DataFrame:
     """Bibliographic coupling (Kessler '63; the out-link twin of
     :func:`cocitation_pairs`): pairs of nodes that LINK TO the same
     targets — pages citing the same sources are topical siblings even
@@ -1087,7 +1080,7 @@ def bibcoupling_pairs(
 
     Same quadratic guard, mirrored: the self-join explodes on
     high-IN-degree targets (everyone links the homepage), so targets
-    with in-degree > ``max_in`` are dropped before the join and
+    with in-degree > 100 are dropped before the join and
     ``n_common`` is a documented lower bound; jaccard is over the
     UNCAPPED out-neighbor sets.  Implemented by running the
     co-citation plan on the reversed edge list — one relation, both
@@ -1097,16 +1090,13 @@ def bibcoupling_pairs(
     node_b.
     """
     return cocitation_pairs(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
-        min_common=min_common,
-        max_out=max_in,
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
 
 
 def seed_attribution(
     edges: DataFrame,
     seeds: DataFrame,
-    max_hops: int = 2,
 ) -> DataFrame:
     """Crawl provenance: attribute every reachable node to the seed
     that discovers it — at its minimum hop distance, tie-broken by
@@ -1118,25 +1108,22 @@ def seed_attribution(
     pruning ("seed 12 contributed 3 admitted docs in 90 days — drop
     it"), and vertical-corpus attribution reports need.
 
-    Same bounded-round shape as the BFS (``max_hops`` a small
-    constant, frontier shrinks, per-round lineage barrier); state is
-    one narrow (node, hops, seed) row per reached node, and each round
-    resolves ties with one map-side-combined min-struct aggregate —
-    never a window sort.
+    Same bounded-round shape as the BFS (2 hops, frontier shrinks,
+    per-round lineage barrier); state is one narrow (node, hops, seed)
+    row per reached node, and each round resolves ties with one
+    map-side-combined min-struct aggregate — never a window sort.
 
-    Returns ``(node, hops, seed)`` for every node within ``max_hops``
+    Returns ``(node, hops, seed)`` for every node within 2 hops
     of some seed (seeds themselves at hops 0, seed = own id).
     """
     from .engine.ckpt import step_checkpoint
 
-    if max_hops < 1:
-        raise ValueError(f"max_hops must be >= 1, got {max_hops}")
     e = edges.select("src", "dst")
     assigned = seeds.select("node").distinct().select(
         "node", F.lit(0).alias("hops"), F.col("node").alias("seed")
     )
     frontier = assigned
-    for h in range(1, max_hops + 1):
+    for h in (1, 2):
         nxt = (
             e.join(
                 frontier.select(F.col("node").alias("src"), "seed"), "src"

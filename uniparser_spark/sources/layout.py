@@ -38,10 +38,9 @@ def layout_file_stats(
     df: DataFrame,
     order_by: Sequence[Column],
     layout: str,
-    stat_col: str,
     file_rows: int = 64,
 ) -> DataFrame:
-    """Per-file min/max envelope of ``stat_col`` under a simulated
+    """Per-file min/max envelope of ``lang`` under a simulated
     layout: rows are globally ordered by ``order_by`` and cut into
     files of ``file_rows`` rows.
 
@@ -57,7 +56,7 @@ def layout_file_stats(
     """
     rn = F.row_number().over(Window.orderBy(*order_by))
     return (
-        df.select(F.col(stat_col).alias("_v"), rn.alias("_rn"))
+        df.select(F.col("lang").alias("_v"), rn.alias("_rn"))
         .select(
             "_v",
             ((F.col("_rn") - 1) / file_rows).cast("int").alias("file_id"),
@@ -74,15 +73,13 @@ def layout_file_stats(
 
 def pruning_audit(
     df: DataFrame,
-    sort_cols: Sequence[str],
-    stat_col: str,
     predicate_value,
     file_rows: int = 64,
 ) -> DataFrame:
     """Compare footer-stats pruning for a point predicate
-    ``stat_col = predicate_value`` under two write layouts:
+    ``lang = predicate_value`` under two write layouts:
 
-    - ``clustered``: sorted by (sort_cols..., id) — the layout
+    - ``clustered``: sorted by (lang, id) — the layout
       ``df.sort(...).write`` produces;
     - ``hashed``: ordered by md5(id) — what an unsorted shuffled
       write effectively produces (worst-case smear, and exactly
@@ -94,12 +91,10 @@ def pruning_audit(
     skips on stats alone.  Aggregate ``1 - avg(contains)`` per layout
     is the prune fraction the rewrite buys.
     """
-    ordered = [F.col(c) for c in sort_cols] + [F.col("doc_id")]
+    ordered = [F.col("lang"), F.col("doc_id")]
     hashed = [F.md5(F.col("doc_id").cast("string")), F.col("doc_id")]
-    stats = layout_file_stats(
-        df, ordered, "clustered", stat_col, file_rows
-    ).unionByName(
-        layout_file_stats(df, hashed, "hashed", stat_col, file_rows)
+    stats = layout_file_stats(df, ordered, "clustered", file_rows).unionByName(
+        layout_file_stats(df, hashed, "hashed", file_rows)
     )
     v = F.lit(predicate_value)
     return stats.select(

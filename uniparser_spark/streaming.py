@@ -24,6 +24,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .crawl.sessions import SESSION_GAP_SEC
 from .testgen import PAGES_SCHEMA
 
 
@@ -33,12 +34,9 @@ def read_pages_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     return spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir)
 
 
-def host_rate_metrics(
-    pages: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Per-host page-rate over event-time windows with late-data bound.
+def host_rate_metrics(pages: DataFrame) -> DataFrame:
+    """Per-host page-rate over 1-hour event-time windows with a 2-hour
+    late-data bound.
 
     Streaming aggregation state is keyed by (window, host); the
     watermark lets Spark drop state for closed windows, so the query
@@ -46,8 +44,8 @@ def host_rate_metrics(
     """
     host = F.regexp_extract(F.col("url"), r"^https?://([^/:]+)", 1)
     return (
-        pages.withWatermark("warc_ts", watermark)
-        .groupBy(F.window(F.col("warc_ts"), window).alias("win"), host.alias("host"))
+        pages.withWatermark("warc_ts", "2 hours")
+        .groupBy(F.window(F.col("warc_ts"), "1 hour").alias("win"), host.alias("host"))
         .agg(
             F.count(F.lit(1)).alias("n_pages"),
             F.sum(F.length(F.col("text"))).alias("bytes_text"),
@@ -117,11 +115,11 @@ def run_to_parquet(result: DataFrame, out_dir: str, checkpoint_dir: str):
     return writer.trigger(availableNow=True).start()
 
 
-def session_stream(events: DataFrame, gap_sec: int = 1800) -> DataFrame:
+def session_stream(events: DataFrame) -> DataFrame:
     """Streaming twin of :func:`~uniparser_spark.crawl.sessions.
     sessionize`: gap-based sessionization as a custom stateful operator
     (``applyInPandasWithState``), emitting each session exactly once —
-    when it CLOSES (a later event arrives past ``gap_sec``, or a
+    when it CLOSES (a later event arrives past SESSION_GAP_SEC, or a
     flush sentinel lands).
 
     State per key is O(1): ``(session_id, start_us, last_us, n_events,
@@ -145,7 +143,7 @@ def session_stream(events: DataFrame, gap_sec: int = 1800) -> DataFrame:
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    gap_us = int(gap_sec) * 1_000_000
+    gap_us = SESSION_GAP_SEC * 1_000_000
     out_schema = (
         "host string, session_id long, n_events long, "
         "first_event long, start_us long, end_us long, duration_sec long"

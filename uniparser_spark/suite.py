@@ -145,8 +145,8 @@ def tp(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def _dec(col: str, p: int, s: int) -> F.Column:
-    return F.col(col).cast(f"decimal({p},{s})")
+def _dec(col: str, p: int) -> F.Column:
+    return F.col(col).cast(f"decimal({p},2)")
 
 
 # ------------------------------------------------ shared oracle SQL fragments
@@ -246,10 +246,10 @@ def q_pricing_summary(spark, sf_dir):
     """TPC-H Q1 shape: single-shuffle groupBy with map-side partial
     aggregation; exact decimal sums so the oracle matches bit-for-bit."""
     li = t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-    price = _dec("l_extendedprice", 18, 2)
-    disc = _dec("l_discount", 4, 2)
-    tax = _dec("l_tax", 4, 2)
-    qty = _dec("l_quantity", 8, 2)
+    price = _dec("l_extendedprice", 18)
+    disc = _dec("l_discount", 4)
+    tax = _dec("l_tax", 4)
+    qty = _dec("l_quantity", 8)
     out = (
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -281,8 +281,8 @@ def q_revenue_by_brand(spark, sf_dir):
     of lineitem for the join; only the final groupBy shuffles."""
     li = t(spark, sf_dir, "lineitem")
     part = t(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    price = _dec("l_extendedprice", 18, 2)
-    disc = _dec("l_discount", 4, 2)
+    price = _dec("l_extendedprice", 18)
+    disc = _dec("l_discount", 4)
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy("p_brand")
@@ -2069,7 +2069,7 @@ def q_pagerank3(spark, sf_dir):
     from .graph import pagerank
 
     edges, nodes, n = _graph_inputs(spark, sf_dir)
-    return pagerank(edges, nodes, n, iters=3)
+    return pagerank(edges, nodes, n)
 
 
 # URL classification: fixture classes are fixed per doc_id%8, so the
@@ -2436,7 +2436,7 @@ def q_page_metadata(spark, sf_dir):
         F.lit("</head><body><p>body</p>"), trail, F.lit("</body></html>"),
     )
     pages = docs.select("doc_id", html.alias("html"), base.alias("base_url"))
-    return harvest_metadata(pages, base_url_col="base_url")
+    return harvest_metadata(pages)
 
 
 def _equiv_url(x):
@@ -3073,10 +3073,9 @@ def q_template_stats(spark, sf_dir):
     return template_stats(s)
 
 
-# The DuckDB twin of lsh_candidate_pairs(n_hashes=16, bands=8,
-# shingle_k=3): word 3-gram shingles (sh), the md5-MinHash signature
-# (sig), 8 bands of 2 rows (bands) and the doc pairs sharing a band
-# key (cand).  Every MinHash-LSH oracle splices these CTEs.
+# The DuckDB twin of lsh_candidate_pairs: word 3-gram shingles (sh),
+# the md5-MinHash signature (sig), 8 bands of 2 rows (bands) and the
+# doc pairs sharing a band key (cand).  Every MinHash-LSH oracle splices these CTEs.
 _LSH_CTES = rf"""toks AS (
           SELECT doc_id, {_TOKS} AS tk FROM documents
         ),
@@ -3123,9 +3122,9 @@ _CLOSURE_CTES = """e AS (
 
 def _lsh_graph(docs: DataFrame):
     """The near-dup graph of the dedup_clusters* and canonical_docs
-    queries: lsh_candidate_pairs(16, 8, 3) as (src, dst) edges, and
+    queries: lsh_candidate_pairs as (src, dst) edges, and
     every document as a node (singletons are their own cluster)."""
-    pairs = lsh_candidate_pairs(docs, n_hashes=16, bands=8, shingle_k=3)
+    pairs = lsh_candidate_pairs(docs)
     edges = pairs.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
     return edges, docs.select(F.col("doc_id").alias("node"))
 
@@ -3226,7 +3225,7 @@ def q_canonical_docs(spark, sf_dir):
 
     docs = tp(spark, sf_dir, "documents")
     clusters = dedup_clusters(*_lsh_graph(docs))
-    quality = docs.select("doc_id", quality_expr("text").alias("quality"))
+    quality = docs.select("doc_id", quality_expr().alias("quality"))
     return select_canonical(clusters, quality)
 
 
@@ -3316,7 +3315,7 @@ def q_corpus_filter(spark, sf_dir):
     keep-first exact dedup) in one scan + one window shuffle."""
     from .textops.quality import corpus_filter
 
-    return corpus_filter(tp(spark, sf_dir, "documents"), langs=("en", "und"), min_quality=0.4)
+    return corpus_filter(tp(spark, sf_dir, "documents"))
 
 
 @query(rf"""
@@ -3349,7 +3348,7 @@ def q_corpus_stats(spark, sf_dir):
         F.sum(F.size(toks)).cast("long").alias("n_tokens"),
         F.sum(F.length("text")).cast("long").alias("n_chars"),
         F.round(
-            F.sum(quality_expr("text").cast("decimal(18,4)")).cast("double"), 4
+            F.sum(quality_expr().cast("decimal(18,4)")).cast("double"), 4
         ).alias("sum_quality"),
     )
 
@@ -3658,7 +3657,7 @@ def q_anchor_index(spark, sf_dir):
     partition)."""
     from .crawl.links import anchor_text_index
 
-    return anchor_text_index(_synth_links(spark, sf_dir), top_k=2)
+    return anchor_text_index(_synth_links(spark, sf_dir))
 
 
 @query("""
@@ -3781,7 +3780,7 @@ def q_adaptive_delays(spark, sf_dir):
         .alias("host"),
         ((d % 17) * (d % 17) * 40 + d % 7 + 25).cast("long").alias("latency_ms"),
     )
-    return adaptive_delays(log, round_seconds=60, multiplier=2)
+    return adaptive_delays(log, round_seconds=60)
 
 
 @query("""
@@ -3892,9 +3891,7 @@ def q_snapshot_asof(spark, sf_dir):
             + F.when(d % 7 == 0, F.lit(-200)).otherwise(F.lit(0))
         ).cast("long").alias("as_of_epoch"),
     )
-    return snapshot_asof(
-        snaps, probes, key="url", ts="snap_epoch", probe_ts="as_of_epoch"
-    )
+    return snapshot_asof(snaps, probes, ts="snap_epoch", probe_ts="as_of_epoch")
 
 
 @query("""
@@ -3951,7 +3948,7 @@ def q_retry_schedule(spark, sf_dir):
         url.alias("url_canon")
     )
     folded = fold_retry_state(state, errors, successes, now_round=6)
-    return retry_candidates(folded, now_round=9, max_retries=3)
+    return retry_candidates(folded, now_round=9)
 
 
 @query("""
@@ -4117,8 +4114,8 @@ def q_decontaminate(spark, sf_dir):
     from .textops.mix import decontaminate, eval_ngrams
 
     docs = tp(spark, sf_dir, "documents")
-    ev = eval_ngrams(docs.filter(F.col("doc_id") % 17 == 0), n=4)
-    return decontaminate(docs.filter(F.col("doc_id") % 17 != 0), ev, n=4)
+    ev = eval_ngrams(docs.filter(F.col("doc_id") % 17 == 0))
+    return decontaminate(docs.filter(F.col("doc_id") % 17 != 0), ev)
 
 
 @query(rf"""
@@ -4513,7 +4510,7 @@ def q_cdc_chunks(spark, sf_dir):
     both shuffles carry 16-byte fingerprints."""
     from .textops.dedup import cdc_chunks
 
-    return cdc_chunks(tp(spark, sf_dir, "documents"), min_copies=2)
+    return cdc_chunks(tp(spark, sf_dir, "documents"))
 
 
 @query(rf"""
@@ -4542,7 +4539,7 @@ def q_dup_spans(spark, sf_dir):
     dedup the doc-level and paragraph-level ops both miss."""
     from .textops.dedup import dup_spans
 
-    return dup_spans(tp(spark, sf_dir, "documents"), k=16, min_copies=2)
+    return dup_spans(tp(spark, sf_dir, "documents"), k=16)
 
 
 @query(rf"""
@@ -4593,7 +4590,7 @@ def q_strip_spans(spark, sf_dir):
     election and rebuild in SQL."""
     from .textops.dedup import strip_dup_spans
 
-    return strip_dup_spans(tp(spark, sf_dir, "documents"), k=16, min_copies=2)
+    return strip_dup_spans(tp(spark, sf_dir, "documents"), k=16)
 
 
 @query(r"""
@@ -4758,9 +4755,9 @@ def q_corpus_pipeline(spark, sf_dir):
 
     # stage 2: decontamination (eval grams from ALL blocklist-surviving
     # eval docs; contaminated ids are a small set: broadcast anti-join)
-    ev = eval_ngrams(surv1.filter(d % 17 == 0), n=4).localCheckpoint(eager=False)
+    ev = eval_ngrams(surv1.filter(d % 17 == 0)).localCheckpoint(eager=False)
     hits = (
-        decontaminate(train, ev, n=4)
+        decontaminate(train, ev)
         .filter(F.col("contaminated") == 1)
         .select("doc_id")
         .localCheckpoint(eager=False)
@@ -4786,9 +4783,7 @@ def q_dedup_exact(spark, sf_dir):
         SELECT id1, id2 FROM cand
     """)
 def q_minhash_lsh_pairs(spark, sf_dir):
-    return lsh_candidate_pairs(
-        tp(spark, sf_dir, "documents"), n_hashes=16, bands=8, shingle_k=3
-    )
+    return lsh_candidate_pairs(tp(spark, sf_dir, "documents"))
 
 
 _VERIFIED_PAIRS_SQL = f"""
@@ -4807,9 +4802,7 @@ _VERIFIED_PAIRS_SQL = f"""
 def q_dedup_verified_pairs(spark, sf_dir):
     """LSH candidates → exact Jaccard verification (the composed
     production near-dup pipeline; quadratic work bounded by LSH)."""
-    return verified_near_dups(
-        tp(spark, sf_dir, "documents"), n_hashes=16, bands=8, shingle_k=3, threshold=0.0
-    )
+    return verified_near_dups(tp(spark, sf_dir, "documents"), threshold=0.0)
 
 
 # The production-hash twins are value-paired on the recall set (exact
@@ -4832,8 +4825,7 @@ def q_minhash_lsh_pairs_xx(spark, sf_dir):
     pinned by tests/test_textops.py pair-set parity + no-Python-eval
     plan checks."""
     return verified_near_dups(
-        tp(spark, sf_dir, "documents"), n_hashes=16, bands=8, shingle_k=3,
-        threshold=0.5, impl="xxhash64",
+        tp(spark, sf_dir, "documents"), threshold=0.5, impl="xxhash64"
     ).select("id1", "id2")
 
 
@@ -4846,8 +4838,7 @@ def q_dedup_verified_pairs_xx(spark, sf_dir):
     q_minhash_lsh_pairs_xx for why sub-threshold collisions can't be
     cross-engine-paired)."""
     return verified_near_dups(
-        tp(spark, sf_dir, "documents"), n_hashes=16, bands=8, shingle_k=3,
-        threshold=0.5, impl="xxhash64",
+        tp(spark, sf_dir, "documents"), threshold=0.5, impl="xxhash64"
     )
 
 
@@ -4890,9 +4881,7 @@ def q_simhash_hamming_pairs(spark, sf_dir):
     exact-equality buckets can't express."""
     from .textops.dedup import simhash_hamming_pairs
 
-    return simhash_hamming_pairs(
-        tp(spark, sf_dir, "documents"), bits=16, max_hamming=2
-    )
+    return simhash_hamming_pairs(tp(spark, sf_dir, "documents"))
 
 
 @query(rf"""
@@ -4914,7 +4903,7 @@ def q_simhash_hamming_pairs(spark, sf_dir):
     """)
 def q_ngram_jaccard_pairs(spark, sf_dir):
     return ngram_jaccard_pairs(
-        tp(spark, sf_dir, "documents"), shingle_k=2, threshold=0.2, max_id=200
+        tp(spark, sf_dir, "documents"), threshold=0.2, max_id=200
     )
 
 
@@ -4998,9 +4987,7 @@ def q_quantize_audit(spark, sf_dir):
         SELECT id1, id2, sim FROM p WHERE sim >= 0.35
     """)
 def q_embedding_dup_pairs(spark, sf_dir):
-    return embedding_dup_pairs(
-        tp(spark, sf_dir, "embeddings"), threshold=0.35, max_id=300
-    )
+    return embedding_dup_pairs(tp(spark, sf_dir, "embeddings"))
 
 
 @query("""
@@ -5066,7 +5053,7 @@ def q_ann_multiprobe_topk(spark, sf_dir):
     the candidate set — the recall-at-scale variant of ann_lsh_topk."""
     return rhp_multiprobe_topk(
         tp(spark, sf_dir, "embeddings"),
-        n_queries=8, k=5, n_planes=6, dims=64, n_tables=3,
+        n_queries=8, k=5, n_planes=6, dims=64,
     )
 
 
@@ -5163,7 +5150,7 @@ def q_embedding_verified_pairs(spark, sf_dir):
     fetched for candidate ids only)."""
     return embedding_verified_pairs(
         tp(spark, sf_dir, "embeddings"),
-        threshold=0.35, n_planes=10, dims=64, n_tables=2,
+        threshold=0.35, n_planes=10, dims=64,
     )
 
 
@@ -5313,7 +5300,7 @@ def q_trustrank(spark, sf_dir):
 
     edges, nodes, _n = _graph_inputs(spark, sf_dir)
     seeds = nodes.filter(F.col("node") % 97 == 0)
-    return trustrank(edges, nodes, seeds, iters=3)
+    return trustrank(edges, nodes, seeds)
 
 
 @query(rf"""
@@ -5567,7 +5554,7 @@ def q_bm25_index(spark, sf_dir):
     the retrieval-side twin of doc_keywords, rational-idf bit-stable."""
     from .textops.index import bm25_index
 
-    return bm25_index(tp(spark, sf_dir, "documents"), topk=5, min_df=2)
+    return bm25_index(tp(spark, sf_dir, "documents"), topk=5)
 
 
 @query(r"""
@@ -5605,7 +5592,7 @@ def q_fetch_sessions(spark, sf_dir):
     fetch-log stand-in.  Integer-microsecond arithmetic end-to-end."""
     from .crawl.sessions import sessionize
 
-    return sessionize(t(spark, sf_dir, "events"), gap_sec=1800)
+    return sessionize(t(spark, sf_dir, "events"))
 
 
 @query(r"""
@@ -5749,7 +5736,7 @@ def q_containment_pairs(spark, sf_dir):
 
     return containment_pairs(
         tp(spark, sf_dir, "documents"),
-        shingle_k=3, min_shared=3, max_df=100, threshold=0.5,
+        shingle_k=3, min_shared=3, threshold=0.5,
     )
 
 
@@ -5812,7 +5799,7 @@ def q_hits_scores(spark, sf_dir):
     from .graph import hits
 
     edges, nodes, _n = _graph_inputs(spark, sf_dir)
-    return hits(edges, nodes, iters=2)
+    return hits(edges, nodes)
 
 
 @query(rf"""
@@ -6076,7 +6063,7 @@ def q_boilerplate_lines(spark, sf_dir):
             synth_page_expr(),
         ).alias("page"),
     )
-    return boilerplate_lines(pages, min_docs=5, min_frac=0.5)
+    return boilerplate_lines(pages)
 
 
 @query(rf"""
@@ -6245,7 +6232,7 @@ def q_soft404(spark, sf_dir):
         text.alias("text"),
         F.when(m == 2, F.lit(50)).otherwise((d * 3) % 40).alias("n_links"),
     )
-    return soft404_scores(pages, min_tokens=20, max_link_ratio=0.5)
+    return soft404_scores(pages)
 
 
 @query(r"""
@@ -6487,7 +6474,7 @@ def q_shard_loads(spark, sf_dir):
     assigned = rendezvous_shards(hosts.select("host"), n_shards=16).join(
         hosts, "host"
     )
-    return shard_loads(assigned, weight_col="est_pages")
+    return shard_loads(assigned)
 
 
 @query(r"""
@@ -6545,7 +6532,7 @@ def q_host_reciprocity(spark, sf_dir):
         F.lit(0).alias("nofollow"),
         F.lit(0).alias("internal"),
     )
-    return host_reciprocity(host_graph(links), min_links=2)
+    return host_reciprocity(host_graph(links))
 
 
 @query(rf"""
@@ -6837,7 +6824,7 @@ def q_stream_host_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = _docs_stream(spark, sf_dir).select(
         _doc_url(host).alias("url"), ts.alias("warc_ts"), F.col("text")
     )
-    metrics = host_rate_metrics(pages, window="1 hour", watermark="2 hours")
+    metrics = host_rate_metrics(pages)
     name = f"stream_host_rates_{uuid.uuid4().hex[:8]}"
     q = (
         metrics.writeStream.format("memory")
@@ -7061,7 +7048,7 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _await(
         run_to_parquet(
-            session_stream(stream, gap_sec=1800), out_dir, ck
+            session_stream(stream), out_dir, ck
         )
     )
     return spark.read.parquet(out_dir)
@@ -7183,7 +7170,7 @@ def q_asn_tag(spark, sf_dir):
     from .crawl.ipnet import asn_ranges, assign_hosting_ips, tag_hosts_with_asn
 
     hosts = assign_hosting_ips(_synth_hosts(spark, sf_dir))
-    return tag_hosts_with_asn(hosts, asn_ranges(spark, 64))
+    return tag_hosts_with_asn(hosts, asn_ranges(spark))
 
 
 @query(_IPS_SQL + r"""
@@ -7203,7 +7190,7 @@ def q_ip_politeness(spark, sf_dir):
     from .crawl.ipnet import assign_hosting_ips, shared_ip_budget
 
     hosts = assign_hosting_ips(_synth_hosts(spark, sf_dir))
-    return shared_ip_budget(hosts.drop("shared"), ip_budget=60)
+    return shared_ip_budget(hosts.drop("shared"))
 
 
 @query(r"""
@@ -7341,7 +7328,7 @@ def q_scd2_pages(spark, sf_dir):
             ).alias("content_fp"),
         )
     )
-    return scd2_history(snap, url_col="url", round_col="round")
+    return scd2_history(snap, url_col="url")
 
 
 # spam mass: the pagerank3 and trustrank closed forms side by side on
@@ -7417,7 +7404,7 @@ def q_spam_mass(spark, sf_dir):
 
     edges, nodes, n = _graph_inputs(spark, sf_dir)
     seeds = nodes.filter(F.col("node") % 97 == 0)
-    return spam_mass(edges, nodes, n, seeds, iters=3)
+    return spam_mass(edges, nodes, n, seeds)
 
 
 @query(r"""
@@ -7507,8 +7494,6 @@ def q_layout_pruning(spark, sf_dir):
 
     return pruning_audit(
         tp(spark, sf_dir, "documents"),
-        sort_cols=["lang"],
-        stat_col="lang",
         predicate_value="en",
         file_rows=64,
     )
@@ -7634,7 +7619,7 @@ def q_path_prefixes(spark, sf_dir):
             F.col("text")
         ).alias("text"),
     )
-    return path_prefix_stats(pages, max_depth=3, min_urls=2)
+    return path_prefix_stats(pages, min_urls=2)
 
 
 @query(r"""
@@ -8109,9 +8094,7 @@ def q_host_mirrors(spark, sf_dir):
         ).alias("host"),
         F.md5("text").alias("fp"),
     )
-    return host_mirror_pairs(
-        base.unionByName(mirrors), min_shared=1, max_hosts_per_fp=6
-    )
+    return host_mirror_pairs(base.unionByName(mirrors))
 
 
 @query(r"""
@@ -8156,9 +8139,7 @@ def q_host_outages(spark, sf_dir):
         d.alias("event_id"),
         ok.cast("int").alias("ok"),
     )
-    return failure_episodes(
-        logs, key_col="host", ts_col="ts", id_col="event_id", min_failures=2
-    )
+    return failure_episodes(logs)
 
 
 @query(r"""
@@ -8186,7 +8167,7 @@ def q_zipf_fit(spark, sf_dir):
     deterministic tie-break so both engines regress identical inputs."""
     from .textops.quality import zipf_fit
 
-    return zipf_fit(tp(spark, sf_dir, "documents"), top_n=200)
+    return zipf_fit(tp(spark, sf_dir, "documents"))
 
 
 @query(r"""
@@ -8220,7 +8201,7 @@ def q_posting_gaps(spark, sf_dir):
     Exchange."""
     from .textops.index import posting_gaps
 
-    return posting_gaps(tp(spark, sf_dir, "documents"), min_df=3)
+    return posting_gaps(tp(spark, sf_dir, "documents"))
 
 
 def _tufted_edges(spark, sf_dir):
@@ -8566,7 +8547,7 @@ def q_bibcoupling(spark, sf_dir):
     from .graph import bibcoupling_pairs
 
     edges, _nodes, _n = _graph_inputs(spark, sf_dir)
-    return bibcoupling_pairs(edges, min_common=1, max_in=100)
+    return bibcoupling_pairs(edges)
 
 
 @query(r"""
@@ -8717,8 +8698,8 @@ def q_cms_hot_hosts(spark, sf_dir):
         .select("host", F.explode(F.sequence(F.lit(1), F.col("_w"))).alias("_i"))
         .select("host")
     )
-    sketch = cms_counts(log, "host", depth=4, width=256)
-    est = cms_estimate(sketch, log, "host", depth=4, width=256)
+    sketch = cms_counts(log, width=256)
+    est = cms_estimate(sketch, log, width=256)
     true = log.groupBy(F.col("host").alias("key")).agg(
         F.count(F.lit(1)).alias("true_n")
     )
@@ -9044,7 +9025,7 @@ def q_pmi_bigrams(spark, sf_dir):
     multiword-unit / tokenizer-merge evidence next to zipf_fit."""
     from .textops.mix import pmi_collocations
 
-    return pmi_collocations(tp(spark, sf_dir, "documents"), min_count=5, top_k=200)
+    return pmi_collocations(tp(spark, sf_dir, "documents"), top_k=200)
 
 
 @query(r"""
@@ -9188,7 +9169,7 @@ def q_seed_attribution(spark, sf_dir):
 
     edges, nodes, _n = _graph_inputs(spark, sf_dir)
     seeds = nodes.filter(F.col("node") % 89 == 0)
-    return seed_attribution(edges, seeds, max_hops=2)
+    return seed_attribution(edges, seeds)
 
 
 @query(r"""
@@ -9231,7 +9212,7 @@ def q_syndication(spark, sf_dir):
             F.md5("text").alias("fp"),
         )
     )
-    return syndication_bursts(syndicated, min_hosts=3)
+    return syndication_bursts(syndicated)
 
 
 @query(r"""

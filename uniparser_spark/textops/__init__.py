@@ -1,10 +1,13 @@
 """Training-data pipeline operators over document / embedding tables.
 
-Everything here is built from JVM-side `pyspark.sql.functions` (incl.
-higher-order array lambdas) — no Python UDFs in the hot path — so plans
-stay inside whole-stage codegen and scale to 100 TB inputs.  Every
-operator has a DuckDB-expressible twin (see ``__spark_entry__.py``
-``oracle_sql``) built on the same md5-based deterministic hashing, which
+Most operators are built from JVM-side `pyspark.sql.functions` (incl.
+higher-order array lambdas), so their plans stay inside whole-stage
+codegen.  Work no JVM expression can do — DOM parses, charset decodes,
+md5 over a document's shingles — runs as a row-wise Python kernel on
+the one Arrow row runner, ``engine/rows.map_rows`` (charset, content,
+dedup, metadata, multimodal, quality and structure).  Every operator
+has a DuckDB twin: the ``@query`` oracle SQL beside its suite query in
+``suite.py``, built on the same md5-based deterministic hashing, which
 is how correctness is checked end-to-end.
 """
 

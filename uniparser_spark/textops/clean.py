@@ -200,17 +200,13 @@ def para_dedup(df: DataFrame) -> DataFrame:
     )
 
 
-def boilerplate_lines(
-    df: DataFrame,
-    min_docs: int = 5,
-    min_frac: float = 0.5,
-) -> DataFrame:
+def boilerplate_lines(df: DataFrame) -> DataFrame:
     """HOST-scoped boilerplate line discovery (the CC-Net move): a line
-    that appears on at least ``min_frac`` of a host's pages is chrome —
+    that appears on at least half of a host's pages is chrome —
     nav, footer, cookie banner — not content, and should be stripped
     from EVERY page of that host (unlike corpus-wide keep-first
     paragraph dedup, which wrongly keeps the first copy of chrome).
-    Hosts with fewer than ``min_docs`` pages are never classified
+    Hosts with fewer than 5 pages are never classified
     (frac is meaningless at tiny n).
 
     Returns one row per (host, distinct line): ``(host, fp, line,
@@ -251,10 +247,10 @@ def boilerplate_lines(
         "host_docs",
         frac.alias("frac"),
         (
-            (F.col("host_docs") >= min_docs)
+            (F.col("host_docs") >= 5)
             & (
                 F.col("n_docs").cast("double")
-                >= F.lit(min_frac) * F.col("host_docs").cast("double")
+                >= F.lit(0.5) * F.col("host_docs").cast("double")
             )
         )
         .cast("int")

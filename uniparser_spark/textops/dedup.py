@@ -53,6 +53,12 @@ from .exprs import (
     word_shingles,
 )
 
+# MinHash-LSH: LSH_HASHES minima over word 3-shingles, cut into LSH_BANDS
+# bands of LSH_HASHES // LSH_BANDS rows.  SimHash: SIMHASH_BITS bits.
+LSH_HASHES, LSH_BANDS = 16, 8
+SIMHASH_BITS = 16
+MIN_COPIES = 2  # a chunk is duplicated when it occurs this often
+
 
 def exact_dup_groups(df: DataFrame) -> DataFrame:
     """Exact duplicate groups by normalized content hash.
@@ -178,50 +184,39 @@ def minhash_signatures(
     return map_rows(df.select(id_col, text_col), schema, signature)
 
 
-def _xx_minhash_cols(
-    df: DataFrame, text_col: str, id_col: str, n_hashes: int, shingle_k: int
-) -> DataFrame:
+def _xx_minhash_cols(df: DataFrame, n_hashes: int) -> DataFrame:
     """Native MinHash: one row per (doc, shingle) via explode, then
     ``min(xxhash64(seed, shingle))`` per seed in ONE map-side-combined
     groupBy — every hash evaluates inside whole-stage codegen, and the
     shuffle carries one partially-aggregated row per (doc, partition),
     never the shingles.  This is the 100 TB shape: no Python, no
     interpreted lambdas, shuffle volume O(docs), not O(shingles)."""
-    sh = word_shingles(tokens(F.col(text_col)), shingle_k)
-    exploded = df.select(F.col(id_col), F.explode(sh).alias("g"))
+    sh = word_shingles(tokens(F.col("text")), 3)
+    exploded = df.select(F.col("doc_id"), F.explode(sh).alias("g"))
     aggs = [
         F.min(F.xxhash64(F.lit(s), F.col("g"))).alias(f"h{s}")
         for s in range(n_hashes)
     ]
-    return exploded.groupBy(id_col).agg(
+    return exploded.groupBy("doc_id").agg(
         *aggs, F.count(F.lit(1)).cast("int").alias("n_shingles")
     )
 
 
-def minhash_signatures_xx(
-    df: DataFrame,
-    n_hashes: int = 16,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """xxhash64 MinHash signatures: (id, sig array<long>, n_shingles)."""
-    cols = _xx_minhash_cols(df, "text", "doc_id", n_hashes, shingle_k)
+def minhash_signatures_xx(df: DataFrame) -> DataFrame:
+    """xxhash64 MinHash signatures over word 3-shingles: (id, sig
+    array<long> of 4 seeds, n_shingles)."""
+    cols = _xx_minhash_cols(df, 4)
     return cols.select(
         F.col("doc_id"),
-        F.array(*[F.col(f"h{s}") for s in range(n_hashes)]).alias("sig"),
+        F.array(*[F.col(f"h{s}") for s in range(4)]).alias("sig"),
         "n_shingles",
     )
 
 
-def lsh_candidate_pairs(
-    df: DataFrame,
-    n_hashes: int = 16,
-    bands: int = 8,
-    shingle_k: int = 3,
-    impl: str = "pandas",
-) -> DataFrame:
+def lsh_candidate_pairs(df: DataFrame, impl: str = "pandas") -> DataFrame:
     """MinHash-LSH near-dup candidate pairs (id1 < id2, distinct).
 
-    bands × rows = n_hashes; a pair is a candidate iff all `rows`
+    LSH_BANDS × rows = LSH_HASHES; a pair is a candidate iff all `rows`
     signature entries of some band agree (band key = a hash of the band
     slice).  The join key is (band_idx, band_key) — high-entropy, no
     skew; the doc text never crosses the shuffle.
@@ -231,10 +226,9 @@ def lsh_candidate_pairs(
     are ``xxhash64(band_idx, h_i..h_j)`` computed directly over the
     per-seed min columns — zero Python, zero interpreted lambdas.
     """
-    assert n_hashes % bands == 0
-    rows = n_hashes // bands
+    rows = LSH_HASHES // LSH_BANDS
     if impl == "xxhash64":
-        cols = _xx_minhash_cols(df, "text", "doc_id", n_hashes, shingle_k)
+        cols = _xx_minhash_cols(df, LSH_HASHES)
         band_structs = F.array(
             *[
                 F.struct(
@@ -243,7 +237,7 @@ def lsh_candidate_pairs(
                         F.lit(j), *[F.col(f"h{j * rows + r}") for r in range(rows)]
                     ).alias("band_key"),
                 )
-                for j in range(bands)
+                for j in range(LSH_BANDS)
             ]
         )
         banded = (
@@ -251,10 +245,10 @@ def lsh_candidate_pairs(
             .select("doc_id", "b.band_idx", "b.band_key")
             .localCheckpoint(eager=False)
         )
-        return _band_self_join(banded, "doc_id")
-    sigs = minhash_signatures(df, n_hashes=n_hashes, shingle_k=shingle_k, impl=impl)
+        return _band_self_join(banded)
+    sigs = minhash_signatures(df, impl=impl)
     band_keys = F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
+        F.sequence(F.lit(0), F.lit(LSH_BANDS - 1)),
         lambda j: F.md5(F.concat_ws(",", F.slice(F.col("sig"), j * rows + 1, rows))),
     )
     # Materialize before the self-join: without a barrier the signature
@@ -267,34 +261,32 @@ def lsh_candidate_pairs(
     banded = sigs.select(
         F.col("doc_id"), F.posexplode(band_keys).alias("band_idx", "band_key")
     ).localCheckpoint(eager=False)
-    return _band_self_join(banded, "doc_id")
+    return _band_self_join(banded)
 
 
-def _band_self_join(banded: DataFrame, id_col: str) -> DataFrame:
-    """(id, band_idx, band_key) self-equi-join → distinct id1<id2 pairs."""
+def _band_self_join(banded: DataFrame) -> DataFrame:
+    """(doc_id, band_idx, band_key) self-equi-join → distinct id1<id2 pairs."""
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(b, ["band_idx", "band_key"])
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .where(F.col("a.doc_id") < F.col("b.doc_id"))
         .select(
-            F.col(f"a.{id_col}").alias("id1"),
-            F.col(f"b.{id_col}").alias("id2"),
+            F.col("a.doc_id").alias("id1"),
+            F.col("b.doc_id").alias("id2"),
         )
         .distinct()
     )
 
 
-def _shingle_sets(
-    df: DataFrame, text_col: str, id_col: str, shingle_k: int
-) -> DataFrame:
-    """(id, sh) with sh = DISTINCT word k-shingles, via one Arrow batch —
+def _shingle_sets(df: DataFrame, shingle_k: int) -> DataFrame:
+    """(doc_id, sh) with sh = DISTINCT word k-shingles, via one Arrow batch —
     value-identical to ``array_distinct(word_shingles(tokens(text)))``
     (pure string slicing, no hashing) but ~20× faster than the
     interpreted array-lambda expression on long documents.  Rows with
     no shingles are dropped (the expression path's size>0 filter)."""
     schema = StructType(
         [
-            StructField(id_col, LongType(), False),
+            StructField("doc_id", LongType(), False),
             StructField("sh", ArrayType(StringType()), False),
         ]
     )
@@ -303,24 +295,23 @@ def _shingle_sets(
         grams = list(dict.fromkeys(word_grams(split_tokens(text), shingle_k)))
         return [(doc_id, grams)] if grams else []
 
-    return map_rows(df.select(id_col, text_col), schema, shingle_set)
+    return map_rows(df.select("doc_id", "text"), schema, shingle_set)
 
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    shingle_k: int = 3,
     threshold: float = 0.5,
     max_id: int = 200,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity over all pairs with id < max_id
     (the quadratic verifier — cap the id range or feed LSH candidates).
 
-    jaccard = |A∩B| / (|A|+|B|-|A∩B|) over distinct word shingles,
+    jaccard = |A∩B| / (|A|+|B|-|A∩B|) over distinct word 2-shingles,
     rounded to 4 dp.
     """
-    docs = _shingle_sets(
-        df.filter(F.col("doc_id") < max_id), "text", "doc_id", shingle_k
-    ).localCheckpoint(eager=False)
+    docs = _shingle_sets(df.filter(F.col("doc_id") < max_id), 2).localCheckpoint(
+        eager=False
+    )
     a = docs.select(F.col("doc_id").alias("id1"), F.col("sh").alias("sh1"))
     b = docs.select(F.col("doc_id").alias("id2"), F.col("sh").alias("sh2"))
     inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
@@ -334,15 +325,13 @@ def ngram_jaccard_pairs(
 
 def verified_near_dups(
     df: DataFrame,
-    n_hashes: int = 16,
-    bands: int = 8,
-    shingle_k: int = 3,
     threshold: float = 0.5,
     impl: str = "pandas",
 ) -> DataFrame:
     """The production near-dup pipeline: MinHash-LSH candidate
-    generation followed by exact n-gram-Jaccard verification of ONLY the
-    candidate pairs.  ``impl`` selects the signature hash (md5 for
+    generation (:func:`lsh_candidate_pairs`) followed by exact word
+    3-gram Jaccard verification of ONLY the candidate pairs.  ``impl``
+    selects the signature hash (md5 for
     oracle parity, xxhash64 for the all-codegen production path); the
     verification stage is hash-free exact Jaccard either way, so both
     impls emit the same verified pairs whenever LSH recalls them.
@@ -355,9 +344,7 @@ def verified_near_dups(
     shingle sets, not the whole corpus.
     Returns (id1, id2, jaccard) with jaccard ≥ threshold, 4 dp.
     """
-    pairs = lsh_candidate_pairs(
-        df, n_hashes=n_hashes, bands=bands, shingle_k=shingle_k, impl=impl
-    ).localCheckpoint(eager=True)
+    pairs = lsh_candidate_pairs(df, impl=impl).localCheckpoint(eager=True)
     cand_ids = (
         pairs.select(F.col("id1").alias("doc_id"))
         .union(pairs.select(F.col("id2").alias("doc_id")))
@@ -366,9 +353,9 @@ def verified_near_dups(
     # shingle ONCE (Arrow UDF) and checkpoint: the a/b join branches
     # would otherwise each recompute the shingling of every candidate
     # doc (measured 4.5 s -> 0.25 s on the sf0.1 verify stage)
-    docs = _shingle_sets(
-        df.join(cand_ids, "doc_id", "left_semi"), "text", "doc_id", shingle_k
-    ).localCheckpoint(eager=False)
+    docs = _shingle_sets(df.join(cand_ids, "doc_id", "left_semi"), 3).localCheckpoint(
+        eager=False
+    )
     a = docs.select(F.col("doc_id").alias("id1"), F.col("sh").alias("sh1"))
     b = docs.select(F.col("doc_id").alias("id2"), F.col("sh").alias("sh2"))
     inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
@@ -381,7 +368,7 @@ def verified_near_dups(
     )
 
 
-def with_simhash(df: DataFrame, bits: int = 16, impl: str = "pandas") -> DataFrame:
+def with_simhash(df: DataFrame, impl: str = "pandas") -> DataFrame:
     """16-bit SimHash per doc: bit j is the sign of the token-frequency-
     weighted sum of (2·bit_j(md5(token)) − 1).  Narrow, no shuffle.
 
@@ -399,11 +386,11 @@ def with_simhash(df: DataFrame, bits: int = 16, impl: str = "pandas") -> DataFra
             F.sum(
                 (F.shiftright(xh, j).bitwiseAND(F.lit(1)) * 2 - 1).cast("long")
             ).alias(f"s{j}")
-            for j in range(bits)
+            for j in range(SIMHASH_BITS)
         ]
         sums = exploded.groupBy("doc_id").agg(*aggs)
         packed = None
-        for j in range(bits):
+        for j in range(SIMHASH_BITS):
             term = F.when(F.col(f"s{j}") >= 0, F.lit(1 << j).cast("long")).otherwise(
                 F.lit(0).cast("long")
             )
@@ -412,7 +399,7 @@ def with_simhash(df: DataFrame, bits: int = 16, impl: str = "pandas") -> DataFra
     if impl == "expr":
         toks = tokens(F.col("text"))
         simhash = F.aggregate(
-            F.sequence(F.lit(1), F.lit(bits)),
+            F.sequence(F.lit(1), F.lit(SIMHASH_BITS)),
             F.lit(0).cast("long"),
             lambda acc, j: acc
             + F.when(
@@ -441,15 +428,15 @@ def with_simhash(df: DataFrame, bits: int = 16, impl: str = "pandas") -> DataFra
         toks = split_tokens(text)
         if not toks:
             return []
-        sums = [0] * bits
+        sums = [0] * SIMHASH_BITS
         for t in toks:
             hexd = md5(t.encode()).hexdigest()
-            for j in range(bits):
+            for j in range(SIMHASH_BITS):
                 # same pseudo-random bit as exprs.md5_bit:
                 # parity of the (j+1)-th hex char's codepoint
                 sums[j] += (ord(hexd[j]) % 2) * 2 - 1
         sh = 0
-        for j in range(bits):
+        for j in range(SIMHASH_BITS):
             if sums[j] >= 0:
                 sh += 1 << j
         return [(doc_id, sh)]
@@ -457,28 +444,26 @@ def with_simhash(df: DataFrame, bits: int = 16, impl: str = "pandas") -> DataFra
     return map_rows(df.select("doc_id", "text"), schema, simhash)
 
 
-def simhash_hamming_pairs(
-    df: DataFrame,
-    bits: int = 16,
-    max_hamming: int = 2,
-) -> DataFrame:
-    """Near-dup SimHash value pairs within hamming distance ``d`` via
+def simhash_hamming_pairs(df: DataFrame) -> DataFrame:
+    """Near-dup SimHash value pairs within hamming distance 2 via
     PIGEONHOLE banding: two b-bit hashes within distance d must agree
     exactly on at least one of d+1 disjoint bit segments, so candidate
     pairs come from d+1 equi-joins on (segment_idx, segment_bits) over
     the DISTINCT-hash relation — never an all-pairs product.  The join
-    input is one row per distinct simhash (≤ 2^bits), so this stays
-    tiny however large the corpus; exact ``bit_count(xor)`` verifies.
+    input is one row per distinct simhash (≤ 2^SIMHASH_BITS), so this
+    stays tiny however large the corpus; exact ``bit_count(xor)``
+    verifies.
 
     Returns (h1, h2, hamming, n_docs1, n_docs2) with h1 < h2.
     """
-    groups = simhash_groups(df, bits=bits)
+    groups = simhash_groups(df)
+    max_hamming = 2
     nseg = max_hamming + 1
-    seg_bits = bits // nseg
+    seg_bits = SIMHASH_BITS // nseg
     segs = []
     for i in range(nseg):
         lo = i * seg_bits
-        width = (bits - lo) if i == nseg - 1 else seg_bits
+        width = (SIMHASH_BITS - lo) if i == nseg - 1 else seg_bits
         segs.append(
             F.struct(
                 F.lit(i).alias("seg"),
@@ -509,17 +494,17 @@ def simhash_hamming_pairs(
     )
 
 
-def simhash_groups(df: DataFrame, bits: int = 16) -> DataFrame:
+def simhash_groups(df: DataFrame) -> DataFrame:
     """Near-dup clustering proxy: docs bucketed by identical SimHash."""
     return (
-        with_simhash(df, bits=bits)
+        with_simhash(df)
         .groupBy("simhash")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("keep_id"))
     )
 
 
 # ------------------------------------------------------ duplicate spans
-def dup_spans(df: DataFrame, k: int = 16, min_copies: int = 2) -> DataFrame:
+def dup_spans(df: DataFrame, k: int = 16) -> DataFrame:
     """Token-window duplicate-span detection — the substring-level
     member of the dedup family (exact doc dedup misses partial mirrors;
     paragraph dedup misses duplication not aligned to paragraph
@@ -531,7 +516,7 @@ def dup_spans(df: DataFrame, k: int = 16, min_copies: int = 2) -> DataFrame:
     >= 2k-1 tokens is guaranteed to contain a duplicated aligned chunk,
     shorter repeats may be missed — that recall/cost trade is the
     point; stride-1 shingling would multiply the explode by k).  A
-    chunk whose exact text occurs >= min_copies times anywhere in the
+    chunk whose exact text occurs >= MIN_COPIES times anywhere in the
     corpus (across or within docs) is flagged.  Output: one row per
     flagged chunk — (id, chunk_idx, start_tok, n_copies) — ready to
     merge into trim spans or aggregate into a per-doc duplication
@@ -565,7 +550,7 @@ def dup_spans(df: DataFrame, k: int = 16, min_copies: int = 2) -> DataFrame:
     copies = chunks.groupBy("fp").agg(F.count(F.lit(1)).alias("n_copies"))
     return (
         chunks.join(
-            copies.filter(F.col("n_copies") >= min_copies), "fp", "inner"
+            copies.filter(F.col("n_copies") >= MIN_COPIES), "fp", "inner"
         )
         .select("doc_id", "chunk_idx", "start_tok", "n_copies")
     )
@@ -574,7 +559,6 @@ def dup_spans(df: DataFrame, k: int = 16, min_copies: int = 2) -> DataFrame:
 def strip_dup_spans(
     df: DataFrame,
     k: int = 16,
-    min_copies: int = 2,
     keep_first: bool = True,
 ) -> DataFrame:
     """The ACTION side of :func:`dup_spans`: rebuild each document with
@@ -623,7 +607,7 @@ def strip_dup_spans(
     )
     w = Window.partitionBy("fp").orderBy("doc_id", "chunk_idx")
     flagged = marked.join(
-        counts.filter(F.col("n_copies") >= min_copies), "fp", "left"
+        counts.filter(F.col("n_copies") >= MIN_COPIES), "fp", "left"
     )
     if keep_first:
         rank = F.when(
@@ -660,7 +644,7 @@ def strip_dup_spans(
     )
 
 
-def cdc_chunks(df: DataFrame, min_copies: int = 2) -> DataFrame:
+def cdc_chunks(df: DataFrame) -> DataFrame:
     """Content-defined chunking dedup — the shift-robust member of the
     substring-dedup family.  ``dup_spans`` cuts at FIXED stride-k
     offsets, so inserting one token near a document's head shifts every
@@ -722,14 +706,12 @@ def cdc_chunks(df: DataFrame, min_copies: int = 2) -> DataFrame:
     )
     copies = chunks.groupBy("fp").agg(F.count(F.lit(1)).alias("n_copies"))
     return chunks.join(
-        copies.filter(F.col("n_copies") >= min_copies), "fp", "inner"
+        copies.filter(F.col("n_copies") >= MIN_COPIES), "fp", "inner"
     ).select("doc_id", "chunk_idx", "start_tok", "n_tok", "n_copies")
 
 
-def _containment_postings_pandas(
-    df: DataFrame, text_col: str, id_col: str, shingle_k: int
-) -> DataFrame:
-    """Distinct-shingle posting rows ``(id, n_sh, fp)`` in one Arrow
+def _containment_postings_pandas(df: DataFrame, shingle_k: int) -> DataFrame:
+    """Distinct-shingle posting rows ``(doc_id, n_sh, fp)`` in one Arrow
     crossing: tokenize, k-gram, set-dedupe and md5[:16] per shingle in
     Python — byte-identical to ``substr(md5(g), 1, 16)`` over
     ``list_distinct`` grams in the oracle, and ~20× cheaper than the
@@ -737,7 +719,7 @@ def _containment_postings_pandas(
     lambdas are CodegenFallback; see :func:`minhash_signatures`)."""
     schema = StructType(
         [
-            StructField(id_col, LongType(), False),
+            StructField("doc_id", LongType(), False),
             StructField("n_sh", IntegerType(), False),
             StructField("fp", StringType(), False),
         ]
@@ -748,14 +730,13 @@ def _containment_postings_pandas(
         grams = set(word_grams(split_tokens(text), shingle_k))
         return [(doc_id, len(grams), md5(g.encode()).hexdigest()[:16]) for g in grams]
 
-    return map_rows(df.select(id_col, text_col), schema, postings)
+    return map_rows(df.select("doc_id", "text"), schema, postings)
 
 
 def containment_pairs(
     df: DataFrame,
     shingle_k: int = 3,
     min_shared: int = 3,
-    max_df: int = 100,
     threshold: float = 0.5,
     impl: str = "pandas",
 ) -> DataFrame:
@@ -770,15 +751,15 @@ def containment_pairs(
     no Arrow crossing), explode to a 16-byte-fingerprint inverted
     index that CARRIES each doc's shingle count alongside its id, ONE
     groupBy(fp) that collects each fingerprint's postings list and
-    drops stop-shingles by document frequency (df ∉ [2, max_df]),
+    drops stop-shingles by document frequency (df ∉ [2, 100]),
     then pair generation as an in-array combination explode (nested
     higher-order transform, id1 < id2) — no fingerprint self-join and
     no sizes join at all: the denominators ride the postings structs,
     so the text is scanned once and the whole job is exactly two
     shuffles (index → fp, pairs → (id1, id2)).  The df cap bounds the
-    combination fan-out to C(max_df, 2) per postings list — the
+    combination fan-out to C(100, 2) per postings list — the
     standard precision/recall trade: shingles shared by more than
-    ``max_df`` docs are boilerplate, and dropping them slightly
+    100 docs are boilerplate, and dropping them slightly
     UNDER-counts the true intersection (documented; the
     verified-Jaccard path is the symmetric complement).
 
@@ -800,7 +781,7 @@ def containment_pairs(
     # the shingle-set size IS the doc's index row count) — the
     # denominator needs no second scan, no sizes aggregate, no join back
     if impl == "pandas":
-        post = _containment_postings_pandas(df, "text", "doc_id", shingle_k)
+        post = _containment_postings_pandas(df, shingle_k)
     else:
         toks = tokens(F.col("text"))
         sh = F.array_distinct(word_shingles(toks, shingle_k))
@@ -824,7 +805,7 @@ def containment_pairs(
                 "ids"
             )
         )
-        .filter((F.size("ids") >= 2) & (F.size("ids") <= max_df))
+        .filter((F.size("ids") >= 2) & (F.size("ids") <= 100))
     )
     # ordered pairs from each postings list, in codegen: for every id x,
     # pair it with every LARGER id in the same list, denominators attached
@@ -867,11 +848,7 @@ def containment_pairs(
     )
 
 
-def host_mirror_pairs(
-    pages: DataFrame,
-    min_shared: int = 2,
-    max_hosts_per_fp: int = 50,
-) -> DataFrame:
+def host_mirror_pairs(pages: DataFrame) -> DataFrame:
     """Mirror-host detection: pairs of hosts serving the same content.
 
     Web-scale crawls burn fetch budget on mirrors (www/non-www splits,
@@ -887,7 +864,7 @@ def host_mirror_pairs(
     Shape (same scale pattern as :func:`containment_pairs`): distinct
     (host, fp), ONE groupBy(fp) collecting each fingerprint's host
     list, a document-frequency cap that drops boilerplate fingerprints
-    shared by more than ``max_hosts_per_fp`` hosts (empty pages, parked
+    shared by more than 6 hosts (empty pages, parked
     templates — quadratic fan-out with no mirror signal), pair
     generation as an in-array combination explode (host_a < host_b),
     then one narrow groupBy on the pair key.  Per-host distinct-fp
@@ -903,7 +880,7 @@ def host_mirror_pairs(
     postings = (
         hf.groupBy("fp")
         .agg(F.collect_list("host").alias("hosts"))
-        .filter((F.size("hosts") >= 2) & (F.size("hosts") <= max_hosts_per_fp))
+        .filter((F.size("hosts") >= 2) & (F.size("hosts") <= 6))
     )
     comb = F.flatten(
         F.transform(
@@ -919,7 +896,6 @@ def host_mirror_pairs(
         .select("pr.host_a", "pr.host_b")
         .groupBy("host_a", "host_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
     )
     a = per_host.select(
         F.col("host").alias("host_a"), F.col("n_fps").alias("n_a")
@@ -969,7 +945,7 @@ def minhash_error_audit(df: DataFrame) -> DataFrame:
     )
     sub = df.join(cand_ids, "doc_id", "left_semi")
     sigs = minhash_signatures(sub).localCheckpoint(eager=False)
-    sh = _shingle_sets(sub, "text", "doc_id", 3).localCheckpoint(
+    sh = _shingle_sets(sub, 3).localCheckpoint(
         eager=False
     )
     s1 = sigs.select(F.col("doc_id").alias("id1"), F.col("sig").alias("sg1"))
@@ -998,10 +974,10 @@ def minhash_error_audit(df: DataFrame) -> DataFrame:
     )
 
 
-def syndication_bursts(pages: DataFrame, min_hosts: int = 3) -> DataFrame:
+def syndication_bursts(pages: DataFrame) -> DataFrame:
     """Content syndicated across many hosts — press releases, wire
     copy, scraped re-publications: one content fingerprint served by
-    ≥ ``min_hosts`` distinct hosts.  :func:`host_mirror_pairs` asks
+    ≥ 3 distinct hosts.  :func:`host_mirror_pairs` asks
     "which host PAIRS share content"; this asks "which CONTENT
     spreads", which is the admission question (keep one canonical
     copy, down-weight the rest — syndicated text otherwise enters the
@@ -1023,5 +999,5 @@ def syndication_bursts(pages: DataFrame, min_hosts: int = 3) -> DataFrame:
                 "sample_hosts"
             ),
         )
-        .filter(F.col("n_hosts") >= min_hosts)
+        .filter(F.col("n_hosts") >= 3)
     )

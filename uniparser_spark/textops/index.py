@@ -36,9 +36,9 @@ BM25_K1 = 1.2  # term-frequency saturation
 BM25_B = 0.75  # document-length normalization
 
 
-def bm25_index(df: DataFrame, topk: int = 5, min_df: int = 2) -> DataFrame:
+def bm25_index(df: DataFrame, topk: int = 5) -> DataFrame:
     """BM25 postings index: for every term with document frequency
-    ``>= min_df``, the ``topk`` best documents by BM25 score.
+    ``>= 2``, the ``topk`` best documents by BM25 score.
 
     Output: ``(term, df, top_doc, top_score, postings)`` where
     ``postings`` is a '|'-joined ``rank:doc_id`` list (rank
@@ -70,7 +70,7 @@ def bm25_index(df: DataFrame, topk: int = 5, min_df: int = 2) -> DataFrame:
     )
     scored = (
         tf.join(dfreq, "term")
-        .filter(F.col("df") >= min_df)
+        .filter(F.col("df") >= 2)
         .crossJoin(F.broadcast(stats))
         .select(
             "doc_id",
@@ -143,7 +143,7 @@ def phrase_positions(docs: DataFrame, phrase: str) -> DataFrame:
     )
 
 
-def posting_gaps(df: DataFrame, min_df: int = 2) -> DataFrame:
+def posting_gaps(df: DataFrame) -> DataFrame:
     """Posting-list compression audit: per-term delta-gaps and their
     Elias-γ bit cost.
 
@@ -184,7 +184,7 @@ def posting_gaps(df: DataFrame, min_df: int = 2) -> DataFrame:
             F.count(F.lit(1)).alias("df"),
             F.sum("_bits").alias("gamma_bits"),
         )
-        .filter(F.col("df") >= min_df)
+        .filter(F.col("df") >= 3)
     )
     return per.select(
         "term",

@@ -242,8 +242,9 @@ def harvest_microdata(df: DataFrame) -> DataFrame:
     return map_rows(df.select("doc_id", "html"), schema, census)
 
 
-def harvest_metadata(df: DataFrame, base_url_col: Optional[str] = None) -> DataFrame:
-    """Page-metadata harvest as one Arrow crossing.
+def harvest_metadata(df: DataFrame) -> DataFrame:
+    """Page-metadata harvest as one Arrow crossing; relative URLs
+    resolve against the ``base_url`` column.
 
     Returns (id, title, description, og_title, og_url, canonical,
     n_hreflang, jsonld_types, n_jsonld_bad, published) per page.
@@ -254,11 +255,10 @@ def harvest_metadata(df: DataFrame, base_url_col: Optional[str] = None) -> DataF
         "n_hreflang int, jsonld_types string, n_jsonld_bad int, "
         "published string"
     )
-    cols = ["doc_id", "html"] + ([base_url_col] if base_url_col else [])
     return map_rows(
-        df.select(*cols),
+        df.select("doc_id", "html", "base_url"),
         schema,
-        lambda i, h, base=None: [(i, *harvest_page_metadata(h, base))],
+        lambda i, h, base: [(i, *harvest_page_metadata(h, base))],
     )
 
 

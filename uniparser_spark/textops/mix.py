@@ -40,6 +40,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from .exprs import tokens, word_shingles
 
 DSIR_DIM = 4096  # hashed feature buckets of dsir_weights
+DECON_N = 4  # word n-gram order of eval_ngrams and decontaminate
 
 
 # ------------------------------------------------------------ hash buckets
@@ -63,26 +64,26 @@ def hex_bucket(col: Column, salt: str, nibbles: int = 2) -> Column:
 
 
 # -------------------------------------------------------- decontamination
-def eval_ngrams(eval_df: DataFrame, n: int = 4) -> DataFrame:
-    """Distinct word n-grams of an eval/benchmark set — one ``gram``
+def eval_ngrams(eval_df: DataFrame) -> DataFrame:
+    """Distinct word DECON_N-grams of an eval/benchmark set — one ``gram``
     column.  Benchmarks are tiny next to a crawl corpus (MBs vs TBs),
     so the output is built to be broadcast."""
     toks = tokens(F.col("text"))
     return (
         eval_df.select(
-            F.explode(F.array_distinct(word_shingles(toks, n))).alias("gram")
+            F.explode(F.array_distinct(word_shingles(toks, DECON_N))).alias("gram")
         )
         .distinct()
     )
 
 
-def decontaminate(docs: DataFrame, eval_grams: DataFrame, n: int = 4) -> DataFrame:
-    """Benchmark decontamination via word n-gram overlap (the GPT-3
-    appendix-C procedure): per document, how many of its distinct
+def decontaminate(docs: DataFrame, eval_grams: DataFrame) -> DataFrame:
+    """Benchmark decontamination via word DECON_N-gram overlap (the
+    GPT-3 appendix-C procedure): per document, how many of its distinct
     n-grams appear in the eval set.
 
     Output: (id, n_grams, n_hit, contamination 4-dp, contaminated 0/1).
-    Documents with fewer than ``n`` tokens have no n-grams and drop out
+    Documents with fewer than DECON_N tokens have no n-grams and drop out
     (nothing to test).  Callers quarantine rows with ``contaminated=1``
     (or threshold on ``contamination``) before training.
 
@@ -94,7 +95,7 @@ def decontaminate(docs: DataFrame, eval_grams: DataFrame, n: int = 4) -> DataFra
     toks = tokens(F.col("text"))
     grams = docs.select(
         F.col("doc_id"),
-        F.explode(F.array_distinct(word_shingles(toks, n))).alias("gram"),
+        F.explode(F.array_distinct(word_shingles(toks, DECON_N))).alias("gram"),
     )
     hits = grams.join(
         F.broadcast(eval_grams.select("gram", F.lit(1).alias("_hit"))),
@@ -985,7 +986,6 @@ def lang_fertility(df: DataFrame) -> DataFrame:
 
 def pmi_collocations(
     docs: DataFrame,
-    min_count: int = 5,
     top_k: int = 200,
 ) -> DataFrame:
     """Pointwise mutual information over adjacent token bigrams —
@@ -997,7 +997,7 @@ def pmi_collocations(
     implicitly chases), near-zero PMI across the corpus head is a
     machine-generated-text smell (independent token draws), and the
     top-k table is data-card material next to :func:`zipf_fit`.  The
-    ``min_count`` gate kills the classic PMI pathology (rare pairs
+    count >= 5 gate kills the classic PMI pathology (rare pairs
     scoring highest on noise).
 
     Scale shape: bigrams by per-doc tail-zip (narrow), ONE map-side-
@@ -1022,7 +1022,7 @@ def pmi_collocations(
         .select("g.w1", "g.w2")
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") >= min_count)
+        .filter(F.col("cnt") >= 5)
     )
     uni = (
         docs.select(F.explode(toks).alias("w"))

@@ -100,15 +100,16 @@ def round4_stable(col: Column) -> Column:
     return F.floor(col * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)
 
 
-def quality_expr(text_col: str = "text") -> Column:
-    """The 0-1 quality score as a single reusable Column expression."""
-    toks = tokens(F.col(text_col))
-    n_chars = F.length(F.col(text_col)).cast("double")
+def quality_expr() -> Column:
+    """The 0-1 quality score of ``text`` as a single reusable Column
+    expression."""
+    toks = tokens(F.col("text"))
+    n_chars = F.length(F.col("text")).cast("double")
     n_tok = F.size(toks).cast("double")
     sw_ratio = _sw_count(toks, STOPWORDS["en"]).cast("double") / n_tok
     punct = (
         n_chars
-        - F.length(F.regexp_replace(F.col(text_col), r"[^\w\s]", "")).cast("double")
+        - F.length(F.regexp_replace(F.col("text"), r"[^\w\s]", "")).cast("double")
     )
     distinct_ratio = F.size(F.array_distinct(toks)).cast("double") / n_tok
     return round4_stable(
@@ -178,10 +179,10 @@ def langid(df: DataFrame) -> DataFrame:
     )
 
 
-def corpus_filter(df: DataFrame, langs=("en",), min_quality: float = 0.5) -> DataFrame:
-    """The composed training-data admission pipeline: language filter +
-    quality threshold + exact keep-first dedup, in ONE scan of the
-    corpus and ONE shuffle.
+def corpus_filter(df: DataFrame) -> DataFrame:
+    """The composed training-data admission pipeline: language filter
+    (``en`` or ``und``) + quality threshold (>= 0.4) + exact keep-first
+    dedup, in ONE scan of the corpus and ONE shuffle.
 
     All predicates are column expressions computed in the same
     projection (the scan reads (id, text) once); keep-first dedup is a
@@ -198,7 +199,7 @@ def corpus_filter(df: DataFrame, langs=("en",), min_quality: float = 0.5) -> Dat
         pred_lang_expr().alias("pred_lang"),
         quality_expr().alias("quality"),
         h16(norm).alias("content_fp"),
-    ).filter(F.col("pred_lang").isin(*langs) & (F.col("quality") >= min_quality))
+    ).filter(F.col("pred_lang").isin("en", "und") & (F.col("quality") >= 0.4))
     keep_first = Window.partitionBy("content_fp").orderBy("doc_id")
     return (
         enriched.withColumn("_rn", F.row_number().over(keep_first))
@@ -625,9 +626,9 @@ def length_distribution(df: DataFrame, approx: bool = False) -> DataFrame:
     )
 
 
-def zipf_fit(df: DataFrame, top_n: int = 256) -> DataFrame:
+def zipf_fit(df: DataFrame) -> DataFrame:
     """Corpus-level Zipf audit: least-squares slope of
-    ``ln(frequency) ~ ln(rank)`` over the top-``top_n`` vocabulary.
+    ``ln(frequency) ~ ln(rank)`` over the top-200 vocabulary.
 
     Natural webtext follows Zipf's law with slope ≈ -1; a corpus slice
     whose slope collapses toward 0 (flat — machine-generated keyword
@@ -640,8 +641,8 @@ def zipf_fit(df: DataFrame, top_n: int = 256) -> DataFrame:
 
     Shape: ONE map-side-combined groupBy on the token (the only wide
     stage — same key as top_tokens), a full-vocab single aggregate for
-    the type/token totals, and a TakeOrdered top-``top_n`` (never a
-    global sort materialization) whose rank window runs over ≤ top_n
+    the type/token totals, and a TakeOrdered top-200 (never a
+    global sort materialization) whose rank window runs over ≤ 200
     rows on one partition.  Ties rank deterministically
     (count DESC, token ASC) so the DuckDB oracle reproduces the exact
     regression inputs.
@@ -659,7 +660,7 @@ def zipf_fit(df: DataFrame, top_n: int = 256) -> DataFrame:
         F.count(F.lit(1)).alias("n_types"),
         F.sum("n").alias("n_tokens"),
     )
-    top = counts.orderBy(F.col("n").desc(), F.col("token").asc()).limit(top_n)
+    top = counts.orderBy(F.col("n").desc(), F.col("token").asc()).limit(200)
     ranked = top.select(
         F.col("n"),
         F.row_number()
@@ -766,9 +767,9 @@ def host_yield(pages: DataFrame) -> DataFrame:
     )
 
 
-def stopword_candidates(df: DataFrame, min_df_ratio: float = 0.5) -> DataFrame:
+def stopword_candidates(df: DataFrame) -> DataFrame:
     """Empirical per-language stopword discovery: tokens present in at
-    least ``min_df_ratio`` of a language's documents, ranked by
+    least half of a language's documents, ranked by
     document frequency.  Hand-curated stopword lists don't exist for
     most of the web's languages and drift for the rest; the df-ratio
     definition is what langid votes and quality ratios actually want
@@ -799,7 +800,7 @@ def stopword_candidates(df: DataFrame, min_df_ratio: float = 0.5) -> DataFrame:
     )
     ranked = (
         post.join(F.broadcast(ndocs), "lang")
-        .filter(F.col("df") >= F.col("_n") * min_df_ratio)
+        .filter(F.col("df") >= F.col("_n") * 0.5)
         .withColumn(
             "rank",
             F.row_number().over(

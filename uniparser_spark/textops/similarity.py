@@ -70,15 +70,11 @@ def cosine_topk(emb: DataFrame, n_queries: int = 8, k: int = 5) -> DataFrame:
     )
 
 
-def embedding_dup_pairs(
-    emb: DataFrame,
-    threshold: float = 0.9,
-    max_id: int = 300,
-) -> DataFrame:
-    """Embedding-cosine near-dup pairs (id1 < id2, sim ≥ threshold) over
-    the capped id range — the quadratic verifier; the scale composition
-    is ``embedding_verified_pairs`` (LSH candidates → exact verify)."""
-    base = emb.filter(F.col("vec_id") < max_id).select(
+def embedding_dup_pairs(emb: DataFrame) -> DataFrame:
+    """Embedding-cosine near-dup pairs (id1 < id2, sim ≥ 0.35) over ids
+    below 300 — the quadratic verifier; the scale composition is
+    ``embedding_verified_pairs`` (LSH candidates → exact verify)."""
+    base = emb.filter(F.col("vec_id") < 300).select(
         F.col("vec_id"), _as_double(F.col("embedding")).alias("v")
     )
     a = base.select(F.col("vec_id").alias("id1"), F.col("v").alias("v1"))
@@ -90,7 +86,7 @@ def embedding_dup_pairs(
             "id2",
             F.round(cosine(F.col("v1"), F.col("v2")), 6).alias("sim"),
         )
-        .filter(F.col("sim") >= threshold)
+        .filter(F.col("sim") >= 0.35)
     )
 
 
@@ -245,9 +241,8 @@ def rhp_multiprobe_topk(
     k: int = 5,
     n_planes: int = 6,
     dims: int = 64,
-    n_tables: int = 3,
 ) -> DataFrame:
-    """Recall-hardened ANN: candidates are the UNION over ``n_tables``
+    """Recall-hardened ANN: candidates are the UNION over 3
     independent hash tables of same-bucket vectors (classic OR'd-table
     LSH), deduped before one exact cosine rerank per candidate.
 
@@ -255,19 +250,14 @@ def rhp_multiprobe_topk(
     all T tables decays exponentially with T — this is the knob that
     keeps recall up at corpus scale without widening any single bucket.
     """
-    sig = rhp_signatures(
-        emb,
-        n_planes=n_planes,
-        dims=dims,
-        n_tables=n_tables,
-    )
+    sig = rhp_signatures(emb, n_planes=n_planes, dims=dims, n_tables=3)
     e = sig.select(
         F.col("vec_id"), F.col("v"), F.posexplode("buckets").alias("t", "bucket")
     )
     # query branch: filter below the signature UDF (see rhp_lsh_topk)
     q = rhp_signatures(
         emb.filter(F.col("vec_id") < n_queries),
-        n_planes=n_planes, dims=dims, n_tables=n_tables,
+        n_planes=n_planes, dims=dims, n_tables=3,
     ).select(
         F.col("vec_id").alias("qid"),
         F.col("v").alias("qv"),
@@ -298,21 +288,15 @@ def rhp_candidate_pairs(
     emb: DataFrame,
     n_planes: int = 10,
     dims: int = 64,
-    n_tables: int = 2,
 ) -> DataFrame:
     """LSH near-dup candidate pairs (id1 < id2, distinct): two vectors
-    are candidates iff they share a bucket in ANY of the OR'd tables.
+    are candidates iff they share a bucket in EITHER of 2 OR'd tables.
 
     The self-join runs over the NARROW exploded (t, bucket, id) relation
     — vectors never cross this shuffle; candidate volume is tuned by
     n_planes (buckets = 2^n_planes per table).
     """
-    sig = rhp_signatures(
-        emb,
-        n_planes=n_planes,
-        dims=dims,
-        n_tables=n_tables,
-    )
+    sig = rhp_signatures(emb, n_planes=n_planes, dims=dims, n_tables=2)
     narrow = sig.select(
         F.col("vec_id"), F.posexplode("buckets").alias("t", "bucket")
     ).localCheckpoint(eager=False)
@@ -333,7 +317,6 @@ def embedding_verified_pairs(
     threshold: float = 0.35,
     n_planes: int = 10,
     dims: int = 64,
-    n_tables: int = 2,
 ) -> DataFrame:
     """The production embedding near-dup pipeline: RHP-LSH candidate
     generation followed by exact cosine verification of ONLY the
@@ -352,12 +335,9 @@ def embedding_verified_pairs(
     import pandas as pd
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-    pairs = rhp_candidate_pairs(
-        emb,
-        n_planes=n_planes,
-        dims=dims,
-        n_tables=n_tables,
-    ).localCheckpoint(eager=True)
+    pairs = rhp_candidate_pairs(emb, n_planes=n_planes, dims=dims).localCheckpoint(
+        eager=True
+    )
     cand_ids = (
         pairs.select(F.col("id1").alias("vec_id"))
         .union(pairs.select(F.col("id2").alias("vec_id")))
