@@ -148,7 +148,7 @@ def scan():
     """(unset, one_valued, allowed, stale, n_params, n_defaulted): the
     in-scope defaulted parameters no call sets; the in-scope parameters
     every call resolves to one literal, as ``(entry, has_default)``; the
-    entries ALLOWED keeps out of both lists; the ALLOWED keys that are
+    entry of each ALLOWED key kept out of both lists; the ALLOWED keys that are
     neither; and the counts of in-scope and of in-scope defaulted
     parameters."""
     by_name = calls()
@@ -165,15 +165,15 @@ def scan():
         key = (rel[:-3].replace("/", "."), qualname, param)
         where = f"uniparser_spark/{rel}:{line} {qualname}({param})"
         if default is not None and not any(passed for passed, _ in resolved):
-            found, entry = unset, where
+            found, text = unset, where
         elif len(values) == 1 and None not in values:
-            found, entry = one_valued, (f"{where} = {values.pop()}", default is not None)
+            found, text = one_valued, f"{where} = {values.pop()}"
         else:
             continue
         if key in ALLOWED:
-            allowed[key] = entry
+            allowed[key] = text
         else:
-            found.append(entry)
+            found.append(text if found is unset else (text, default is not None))
     return (unset, one_valued, allowed, sorted(set(ALLOWED) - set(allowed)),
             n_params, n_defaulted)
 
@@ -204,6 +204,6 @@ if __name__ == "__main__":
     with_default = sum(d for _, d in one_valued)
     print(f"{len(one_valued)} one-valued of {n_params} parameters "
           f"({with_default} with a default, {len(one_valued) - with_default} without)")
-    for key, entry in allowed.items():
-        print(f"allowed: {entry[0] if isinstance(entry, tuple) else entry} ({ALLOWED[key]})")
+    for key, text in allowed.items():
+        print(f"allowed: {text} ({ALLOWED[key]})")
     print(f"{len(allowed)} allowed; stale allowlist: {stale}")
