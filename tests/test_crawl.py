@@ -47,6 +47,10 @@ def test_crawl_matches_simulator(spark, corpus, tmp_path):
     engine_seen = {r["url_canon"] for r in engine.seen().collect()}
     assert engine_seen == set(seen_sim.keys())
 
+    # records() reads with RECORDS_SCHEMA: the schema inference would give
+    committed = [str(tmp_path / "state" / "records" / f"r{r}") for r in range(engine.read_manifest()["round"])]
+    assert engine.records().schema == spark.read.parquet(*committed).schema
+
     # spot-check shape: nested __result__ list with extracted titles in list order
     host0 = testgen.host_name(0)
     payload = got[0]["list"]

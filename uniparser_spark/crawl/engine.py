@@ -70,6 +70,7 @@ from pyspark.sql.types import (
 
 from .. import config
 from ..engine.extract import RESULT_SCHEMA, extract_pages
+from ..engine.rows import local_frame
 from ..frontier.politeness import schedule_batch
 from ..frontier.robots import apply_robots
 from ..frontier.seen import BloomSeenFilter, add_url_keys
@@ -95,6 +96,13 @@ _META_COLS = ["url", "url_canon", "url_hash", "host", "priority", "depth", "pare
 # never scales with cores
 SEEN_SCHEMA = "url_hash long, url_canon string, crawled_round int"
 _RECORDS_EXPAND_SCHEMA = "url string, depth int, requests array<string>"
+# a round's records: the extraction result, the frontier meta it carries
+# through, the round and the writing partition
+RECORDS_SCHEMA = StructType(
+    RESULT_SCHEMA.fields
+    + [f for f in FRONTIER_SCHEMA.fields if f.name != "url"]
+    + [StructField("round", IntegerType()), StructField("part_id", IntegerType())]
+)
 
 # seen-set Bloom filter width (buckets of the bit array)
 BLOOM_BUCKETS = 64
@@ -210,7 +218,7 @@ class CrawlEngine:
                 .withColumnRenamed("round", "crawled_round")
             )
         if not parts:
-            return self.spark.createDataFrame([], SEEN_SCHEMA)
+            return local_frame(self.spark, [], SEEN_SCHEMA)
         return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
     def _candidates(self, rnd: int, fetched: DataFrame) -> DataFrame:
@@ -302,7 +310,10 @@ class CrawlEngine:
         """Initialize frontier round 0 with the seed list (list order kept
         via list_index, matching reference seed iteration).  Seeds are
         deduplicated here so the frontier invariant (unique url_hash)
-        holds from round 0 — later rounds rely on it to skip re-dedup."""
+        holds from round 0 — later rounds rely on it to skip re-dedup.
+        The seed rows become a local relation (``engine.rows.local_frame``),
+        so the one frontier write is the only Spark work and no Python
+        task runs."""
         unique, seen_urls = [], set()
         for u in urls:
             if u not in seen_urls:
@@ -310,8 +321,10 @@ class CrawlEngine:
                 unique.append(u)
         urls = unique
         rows = [(u, 0.0, 0, None, i, 0) for i, u in enumerate(urls)]
-        df = self.spark.createDataFrame(
-            rows, "url string, priority double, depth int, parent_url string, list_index int, discovered_round int"
+        df = local_frame(
+            self.spark,
+            rows,
+            "url string, priority double, depth int, parent_url string, list_index int, discovered_round int",
         )
         frontier = add_url_keys(df).select(*_META_COLS)
         frontier.write.mode("overwrite").parquet(self._p("frontier", 0))
@@ -643,7 +656,7 @@ class CrawlEngine:
             shutil.rmtree(self._p("records", rnd))
         # a round that left nothing pending wrote no frontier
         pending = (
-            self.spark.createDataFrame([], FRONTIER_SCHEMA)
+            local_frame(self.spark, [], FRONTIER_SCHEMA)
             if manifest.get("n_pending") == 0
             else self.spark.read.schema(FRONTIER_SCHEMA).parquet(self._p("frontier", rnd))
         )
@@ -733,13 +746,8 @@ class CrawlEngine:
         rnd = self.read_manifest()["round"]
         paths = [self._p("records", r) for r in range(rnd) if Path(self._p("records", r)).exists()]
         if not paths:
-            schema = StructType(
-                RESULT_SCHEMA.fields
-                + [f for f in FRONTIER_SCHEMA.fields if f.name != "url"]
-                + [StructField("round", IntegerType()), StructField("part_id", IntegerType())]
-            )
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(*paths)
+            return local_frame(self.spark, [], RECORDS_SCHEMA)
+        return self.spark.read.schema(RECORDS_SCHEMA).parquet(*paths)
 
     def seen(self) -> DataFrame:
         manifest = self.read_manifest()

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..engine.rows import local_frame
 from .exprs import h16, tokens, word_shingles
 
 # ---------------------------------------------------------------- synthesis
@@ -529,9 +530,7 @@ def wordlist_filter(df: DataFrame, words: list) -> DataFrame:
     """
     spark = df.sparkSession
     wl = F.broadcast(
-        spark.createDataFrame(
-            [(w.lower(),) for w in sorted(set(words))], "_w string"
-        )
+        local_frame(spark, [(w.lower(),) for w in sorted(set(words))], "_w string")
     )
     norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     toks = tokens(norm)
